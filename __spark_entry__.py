@@ -3,6 +3,9 @@
 ``queries()`` maps operator names (SURVEY.md §2) to callables
 ``(spark, sf_dir) -> DataFrame``; ``oracle_sql()`` gives the DuckDB
 oracle for each.  Column names are aliased identically on both sides.
+
+Adding a gate: define ``q_<name>`` and its oracle (``ORACLE_<NAME>`` or
+``_oracle_<name>()``), then add ``"<name>"`` to ``GATES``.
 """
 
 from __future__ import annotations
@@ -15,7 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from csp_gateway_spark.session import load_tables
+from csp_gateway_spark.session import read_table
 from csp_gateway_spark.operators.state import keyed_last
 from csp_gateway_spark.query import Filter, Query, apply_query
 
@@ -59,29 +62,14 @@ _T_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os
-
     per_session = _T_CACHE.get(spark)
     if per_session is None:
         per_session = _T_CACHE[spark] = {}
     key = (sf_dir, name)
     hit = per_session.get(key)
-    if hit is not None:
-        return hit
-    # The driver builds its own SparkSession (not csp_gateway_spark.session),
-    # so the confs that pin the events.ts contract (epoch-ns long, UTC)
-    # must be set here, at runtime, on whatever session we get.  The
-    # testdata has shipped ts as both TIMESTAMP(NANOS) (long via this
-    # conf) and TIMESTAMP(MICROS) (converted by normalize_event_ts).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        from csp_gateway_spark.session import normalize_event_ts
-
-        df = normalize_event_ts(df)
-    per_session[key] = df
-    return df
+    if hit is None:
+        hit = per_session[key] = read_table(spark, sf_dir, name)
+    return hit
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -3739,7 +3727,7 @@ def q_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _km_oracle() -> str:
+def _oracle_kmeans_refine() -> str:
     """Two unrolled Lloyd rounds in DuckDB mirroring kmeans_refine:
     same argmax tie-break (cosine DESC, cent_id ASC), same
     floor(x·1e9) BIGINT sums, same double division."""
@@ -5357,7 +5345,7 @@ FROM s ORDER BY 1
 """
 
 
-def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_ntile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 10-tile equi-depth histogram of l_extendedprice — ANSI
     ntile reproduced by the two-phase rank (no unpartitioned
     window)."""
@@ -5375,7 +5363,7 @@ def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EQUI_DEPTH_HISTOGRAM = """
+ORACLE_NTILE_HISTOGRAM = """
 WITH t AS (
   SELECT l_extendedprice AS v,
     ntile(10) OVER (ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS bucket
@@ -15658,7 +15646,7 @@ def q_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-def _oracle_mattr() -> str:
+def _oracle_mattr_diversity() -> str:
     toks = _SQL_TOKS.replace("trim(lower(text))", _SQL_NORM)
     w = _MATTR_W
     return f"""
@@ -17837,810 +17825,387 @@ FROM c{_HUBER_STEPS}
 """
 
 
+#: Every gate, once, in driver order.  The driver's correctness harness
+#: checks only the first 50 entries, so the head is a rotation window:
+#: the eleven streaming replay shapes (the only gates that run
+#: Structured Streaming under the driver), then the round-14 operators
+#: with the least driver evidence, then the older TPC-H and curation
+#: shapes.  The rest follow in registration order.
+GATES = (
+    "state_stream_replay",
+    "window_stream_replay",
+    "dedup_stream_replay",
+    "join_stream_replay",
+    "session_stream_replay",
+    "enrich_stream_replay",
+    "replay_handoff",
+    "topk_stream_replay",
+    "argmax_stream_replay",
+    "outer_join_stream_replay",
+    "join_window_stream_replay",
+    "jonckheere",
+    "cochran_armitage",
+    "mattr_diversity",
+    "ordinal_assoc",
+    "dickey_fuller",
+    "hurst_rs",
+    "anderson_darling",
+    "quade_test",
+    "variance_ratio",
+    "granger_lag1",
+    "engle_granger",
+    "deming_fit",
+    "bland_altman",
+    "optimal_cutoff",
+    "lift_table",
+    "breusch_pagan",
+    "chow_test",
+    "arch_lm",
+    "kpss_test",
+    "cox_ph",
+    "schoenfeld_trend",
+    "harrell_c",
+    "fe_within",
+    "between_reg",
+    "cluster_se",
+    "diebold_mariano",
+    "pesaran_timmermann",
+    "theil_u2",
+    "rake_keywords",
+    "textrank_keywords",
+    "energy_distance",
+    "conover_squared_ranks",
+    "yuen_trimmed_t",
+    "huber_irls",
+    "volume_shipping",
+    "returned_items",
+    "promo_revenue",
+    "large_volume_orders",
+    "brand_discount_revenue",
+    # ---- the driver checks the 50 entries above ----
+    "market_share",
+    "product_type_profit",
+    "customer_distribution",
+    "top_supplier",
+    "small_quantity_revenue",
+    "sole_returned_supplier",
+    "global_sales_opportunity",
+    "min_cost_supplier",
+    "important_parts",
+    "linestatus_priority",
+    "parts_supplier_counts",
+    "promotion_candidates",
+    "multimodal_meta",
+    "multimodal_image_meta",
+    "multimodal_jpeg_meta",
+    "lm_perplexity",
+    "semantic_dedup",
+    "embedding_pool",
+    "temperature_mix",
+    "tf_hash",
+    "chunk_documents",
+    "cms_topk",
+    "bloom_decontaminate",
+    "embedding_pca",
+    "bpe_train",
+    "substring_spans",
+    "length_quantiles",
+    "dsir_weights",
+    "dsir_sample",
+    "pq_codes",
+    "pq_search",
+    "hdr_quantiles",
+    "lr_quality_weights",
+    # ---- end of the rotation window ----
+    "state_keyed_last",
+    "state_filter_query",
+    "perspective_view",
+    "perspective_pivot",
+    "table_index_limit",
+    "window_tumbling",
+    "window_session",
+    "asof_join",
+    "interval_join",
+    "union_merge",
+    "lookup_by_id",
+    "explode_embeddings",
+    "text_stats",
+    "dedup_exact",
+    "minhash_signature",
+    "ngram_jaccard",
+    "dedup_minhash_pairs",
+    "dedup_simhash",
+    "ann_cosine_topk",
+    "embedding_neardup",
+    "embedding_neardup_lsh",
+    "ann_lsh_topk",
+    "revenue_by_nation",
+    "top_customers",
+    "channel_processor",
+    "tick_counts",
+    "time_gate",
+    "identity_lookup",
+    "window_sliding",
+    "flatten_struct",
+    "replay_rewrite",
+    "text_clean",
+    "vocab_topk",
+    "tfidf",
+    "dedup_components",
+    "doc_fingerprints",
+    "sales_cube",
+    "topk_per_group",
+    "distinct_counts",
+    "quality_filter",
+    "ann_ivf_topk",
+    "pricing_summary",
+    "forecast_revenue",
+    "order_priority",
+    "near_dedup_pipeline",
+    "state_multikey",
+    "json_props",
+    "array_stats",
+    "approx_distinct",
+    "shipping_priority",
+    "local_supplier_volume",
+    "hypertable_rollup",
+    "decontaminate",
+    "stratified_sample",
+    "line_dedup",
+    "train_split",
+    "sequence_pack",
+    "repetition_stats",
+    "kmeans_refine",
+    "char_entropy",
+    "vocab_encode",
+    "embedding_quantize",
+    "fingerprint_pairs",
+    "lr_quality_scores",
+    "edit_distance_pairs",
+    "pagerank_docs",
+    "zipf_fit",
+    "pmi_collocations",
+    "epoch_upsample",
+    "contamination_report",
+    "dedup_incremental",
+    "cdc_chunks",
+    "encoding_quality",
+    "blocklist_screen",
+    "deterministic_shuffle",
+    "unicode_nfc",
+    "embedding_standardize",
+    "hard_negatives",
+    "vocab_coverage",
+    "bm25_topk",
+    "url_canonical",
+    "url_dedup",
+    "source_drift",
+    "gopher_quality",
+    "c4_quality",
+    "lm_backoff",
+    "budget_mix",
+    "bag_dedup",
+    "ngram_novelty",
+    "padding_report",
+    "pii_report",
+    "profile_table",
+    "winsorize_prices",
+    "exemplars",
+    "funnel",
+    "retention",
+    "rolling_value",
+    "gap_fill",
+    "hybrid_search",
+    "market_basket",
+    "mad_outliers",
+    "scd2",
+    "value_histogram",
+    "vwap",
+    "key_skew",
+    "calibration",
+    "lang_confusion",
+    "ctfidf",
+    "triangle_count",
+    "fk_audit",
+    "table_diff",
+    "window_topk",
+    "event_transitions",
+    "interarrival",
+    "asof_forward",
+    "asof_nearest",
+    "revenue_mom",
+    "pareto_revenue",
+    "benford",
+    "cep_pattern",
+    "ship_latency",
+    "churn",
+    "stickiness",
+    "new_vs_returning",
+    "sales_rollup",
+    "event_trigrams",
+    "rfm_segments",
+    "cohort_ltv",
+    "dup_invoices",
+    "incremental_agg",
+    "session_funnel",
+    "depth_histogram",
+    "cdc_merge",
+    "time_travel",
+    "ewma_forecast",
+    "cusum",
+    "ab_test",
+    "k_anonymity",
+    "label_propagation",
+    "exact_quantiles",
+    "weighted_median",
+    "seasonal_index",
+    "anomaly_days",
+    "windowed_funnel",
+    "cdc_diff",
+    "cluster_quality",
+    "chi_square",
+    "bounce_rate",
+    "tokenizer_fertility",
+    "source_overlap",
+    "pr_curve",
+    "grouped_weighted_median",
+    "psi_drift",
+    "order_reconciliation",
+    "hierarchy_share",
+    "dup_cluster_stats",
+    "top_movers",
+    "lsh_eval",
+    "mahalanobis",
+    "kcore",
+    "conversion_lag",
+    "weighted_sample",
+    "theil_sen",
+    "mann_kendall",
+    "pettitt_test",
+    "cronbach_alpha",
+    "icc_oneway",
+    "friedman_test",
+    "cochran_q",
+    "kendall_tau",
+    "cvm_test",
+    "macd_signal",
+    "hits_scores",
+    "distinct_ngrams",
+    "durbin_watson",
+    "ljung_box",
+    "mcnemar_test",
+    "page_trend",
+    "bartlett_test",
+    "hodges_lehmann",
+    "assortativity",
+    "source_diversity",
+    "bootstrap_mean_ci",
+    "signflip_test",
+    "jackknife_variance",
+    "wasserstein",
+    "partial_corr",
+    "clustering_coeff",
+    "transition_entropy",
+    "periodogram",
+    "kn_bigram_entropy",
+    "conformal_interval",
+    "doremi_weights",
+    "tukey_hsd",
+    "cumulative_incidence",
+    "levene_test",
+    "dedup_threshold_sweep",
+    "token_coverage",
+    "semantic_decontaminate",
+    "gini",
+    "mutual_information",
+    "user_streaks",
+    "first_seen_growth",
+    "active_orders",
+    "group_ols_trend",
+    "ntile_histogram",
+    "containment_pairs",
+    "vocab_growth",
+    "prefix_dup_groups",
+    "boilerplate_ngrams",
+    "kaplan_meier",
+    "correlation_matrix",
+    "welch_ttest",
+    "lag_corr",
+    "nelson_aalen",
+    "burstiness",
+    "ks_test",
+    "holt_forecast",
+    "mann_whitney",
+    "changepoint",
+    "kruskal_wallis",
+    "logrank_test",
+    "runs_test",
+    "max_drawdown",
+    "hhi_concentration",
+    "cramers_v",
+    "rmst",
+    "quadratic_trend",
+    "spearman_corr",
+    "jarque_bera",
+    "grubbs_test",
+    "diff_in_diff",
+    "holt_winters",
+    "adamic_adar",
+    "topk_overlap",
+    "cuped",
+    "croston",
+    "wilcoxon",
+    "anova_f",
+    "roc_auc",
+    "cohen_kappa",
+    "fleiss_kappa",
+    "l_diversity",
+    "sprt_monitor",
+    "bollinger_breaches",
+    "rsi_signal",
+    "realized_vol",
+    "attribution",
+    "info_gain",
+    "isotonic_calibration",
+    "readability",
+    "rouge_overlap",
+    "retrieval_metrics",
+    "quantile_normalize",
+    "stl_decompose",
+    "seasonal_anomaly",
+    "pacf",
+    "burrows_delta",
+    "hill_tail",
+    "code_switch",
+    "expectations_report",
+    "fdr_bh",
+    "ar_forecast",
+    "identity_stitch",
+    "mmr_rerank",
+    "t_closeness",
+    "brier_decomposition",
+    "kcenter_sample",
+    "mood_median",
+    "brunner_munzel",
+    "theil_sen_daily",
+    "mase_backtest",
+    "embedding_drift",
+    "quantiles_probe",
+    "iqr_outliers",
+    "ansari_bradley",
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    raw = {
-        "state_keyed_last": q_state_keyed_last,
-        "state_stream_replay": q_state_stream_replay,
-        "window_stream_replay": q_window_stream_replay,
-        "dedup_stream_replay": q_dedup_stream_replay,
-        "join_stream_replay": q_join_stream_replay,
-        "session_stream_replay": q_session_stream_replay,
-        "enrich_stream_replay": q_enrich_stream_replay,
-        "state_filter_query": q_state_filter_query,
-        "perspective_view": q_perspective_view,
-        "perspective_pivot": q_perspective_pivot,
-        "table_index_limit": q_table_index_limit,
-        "window_tumbling": q_window_tumbling,
-        "window_session": q_window_session,
-        "asof_join": q_asof_join,
-        "interval_join": q_interval_join,
-        "union_merge": q_union_merge,
-        "lookup_by_id": q_lookup_by_id,
-        "explode_embeddings": q_explode_embeddings,
-        "text_stats": q_text_stats,
-        "dedup_exact": q_dedup_exact,
-        "minhash_signature": q_minhash_signature,
-        "ngram_jaccard": q_ngram_jaccard,
-        "dedup_minhash_pairs": q_dedup_minhash_pairs,
-        "dedup_simhash": q_dedup_simhash,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "embedding_neardup": q_embedding_neardup,
-        "embedding_neardup_lsh": q_embedding_neardup_lsh,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "revenue_by_nation": q_revenue_by_nation,
-        "top_customers": q_top_customers,
-        "channel_processor": q_channel_processor,
-        "tick_counts": q_tick_counts,
-        "time_gate": q_time_gate,
-        "identity_lookup": q_identity_lookup,
-        "window_sliding": q_window_sliding,
-        "flatten_struct": q_flatten_struct,
-        "replay_rewrite": q_replay_rewrite,
-        "replay_handoff": q_replay_handoff,
-        "text_clean": q_text_clean,
-        "vocab_topk": q_vocab_topk,
-        "tfidf": q_tfidf,
-        "dedup_components": q_dedup_components,
-        "doc_fingerprints": q_doc_fingerprints,
-        "sales_cube": q_sales_cube,
-        "topk_per_group": q_topk_per_group,
-        "distinct_counts": q_distinct_counts,
-        "quality_filter": q_quality_filter,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "pricing_summary": q_pricing_summary,
-        "forecast_revenue": q_forecast_revenue,
-        "order_priority": q_order_priority,
-        "near_dedup_pipeline": q_near_dedup_pipeline,
-        "state_multikey": q_state_multikey,
-        "json_props": q_json_props,
-        "array_stats": q_array_stats,
-        "approx_distinct": q_approx_distinct,
-        "shipping_priority": q_shipping_priority,
-        "local_supplier_volume": q_local_supplier_volume,
-        "volume_shipping": q_volume_shipping,
-        "returned_items": q_returned_items,
-        "promo_revenue": q_promo_revenue,
-        "large_volume_orders": q_large_volume_orders,
-        "brand_discount_revenue": q_brand_discount_revenue,
-        "market_share": q_market_share,
-        "product_type_profit": q_product_type_profit,
-        "customer_distribution": q_customer_distribution,
-        "top_supplier": q_top_supplier,
-        "small_quantity_revenue": q_small_quantity_revenue,
-        "sole_returned_supplier": q_sole_returned_supplier,
-        "global_sales_opportunity": q_global_sales_opportunity,
-        "min_cost_supplier": q_min_cost_supplier,
-        "important_parts": q_important_parts,
-        "linestatus_priority": q_linestatus_priority,
-        "parts_supplier_counts": q_parts_supplier_counts,
-        "promotion_candidates": q_promotion_candidates,
-        "multimodal_meta": q_multimodal_meta,
-        "multimodal_image_meta": q_multimodal_image_meta,
-        "multimodal_jpeg_meta": q_multimodal_jpeg_meta,
-        "hypertable_rollup": q_hypertable_rollup,
-        "decontaminate": q_decontaminate,
-        "stratified_sample": q_stratified_sample,
-        "line_dedup": q_line_dedup,
-        "train_split": q_train_split,
-        "sequence_pack": q_sequence_pack,
-        "repetition_stats": q_repetition_stats,
-        "kmeans_refine": q_kmeans_refine,
-        "char_entropy": q_char_entropy,
-        "vocab_encode": q_vocab_encode,
-        "lm_perplexity": q_lm_perplexity,
-        "embedding_quantize": q_embedding_quantize,
-        "semantic_dedup": q_semantic_dedup,
-        "embedding_pool": q_embedding_pool,
-        "temperature_mix": q_temperature_mix,
-        "tf_hash": q_tf_hash,
-        "chunk_documents": q_chunk_documents,
-        "fingerprint_pairs": q_fingerprint_pairs,
-        "cms_topk": q_cms_topk,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "embedding_pca": q_embedding_pca,
-        "bpe_train": q_bpe_train,
-        "substring_spans": q_substring_spans,
-        "length_quantiles": q_length_quantiles,
-        "dsir_weights": q_dsir_weights,
-        "dsir_sample": q_dsir_sample,
-        "pq_codes": q_pq_codes,
-        "pq_search": q_pq_search,
-        "hdr_quantiles": q_hdr_quantiles,
-        "lr_quality_weights": q_lr_quality_weights,
-        "lr_quality_scores": q_lr_quality_scores,
-        "edit_distance_pairs": q_edit_distance_pairs,
-        "pagerank_docs": q_pagerank_docs,
-        "zipf_fit": q_zipf_fit,
-        "pmi_collocations": q_pmi_collocations,
-        "epoch_upsample": q_epoch_upsample,
-        "contamination_report": q_contamination_report,
-        "dedup_incremental": q_dedup_incremental,
-        "cdc_chunks": q_cdc_chunks,
-        "encoding_quality": q_encoding_quality,
-        "blocklist_screen": q_blocklist_screen,
-        "deterministic_shuffle": q_deterministic_shuffle,
-        "unicode_nfc": q_unicode_nfc,
-        "embedding_standardize": q_embedding_standardize,
-        "hard_negatives": q_hard_negatives,
-        "vocab_coverage": q_vocab_coverage,
-        "bm25_topk": q_bm25_topk,
-        "url_canonical": q_url_canonical,
-        "url_dedup": q_url_dedup,
-        "source_drift": q_source_drift,
-        "gopher_quality": q_gopher_quality,
-        "c4_quality": q_c4_quality,
-        "lm_backoff": q_lm_backoff,
-        "budget_mix": q_budget_mix,
-        "bag_dedup": q_bag_dedup,
-        "ngram_novelty": q_ngram_novelty,
-        "padding_report": q_padding_report,
-        "pii_report": q_pii_report,
-        "profile_table": q_profile_table,
-        "winsorize_prices": q_winsorize_prices,
-        "exemplars": q_exemplars,
-        "funnel": q_funnel,
-        "retention": q_retention,
-        "rolling_value": q_rolling_value,
-        "gap_fill": q_gap_fill,
-        "hybrid_search": q_hybrid_search,
-        "market_basket": q_market_basket,
-        "mad_outliers": q_mad_outliers,
-        "scd2": q_scd2,
-        "value_histogram": q_value_histogram,
-        "vwap": q_vwap,
-        "key_skew": q_key_skew,
-        "calibration": q_calibration,
-        "lang_confusion": q_lang_confusion,
-        "ctfidf": q_ctfidf,
-        "triangle_count": q_triangle_count,
-        "fk_audit": q_fk_audit,
-        "table_diff": q_table_diff,
-        "window_topk": q_window_topk,
-        "event_transitions": q_event_transitions,
-        "interarrival": q_interarrival,
-        "asof_forward": q_asof_forward,
-        "asof_nearest": q_asof_nearest,
-        "revenue_mom": q_revenue_mom,
-        "pareto_revenue": q_pareto_revenue,
-        "benford": q_benford,
-        "cep_pattern": q_cep_pattern,
-        "ship_latency": q_ship_latency,
-        "churn": q_churn,
-        "stickiness": q_stickiness,
-        "new_vs_returning": q_new_vs_returning,
-        "sales_rollup": q_sales_rollup,
-        "event_trigrams": q_event_trigrams,
-        "rfm_segments": q_rfm_segments,
-        "cohort_ltv": q_cohort_ltv,
-        "dup_invoices": q_dup_invoices,
-        "incremental_agg": q_incremental_agg,
-        "session_funnel": q_session_funnel,
-        "depth_histogram": q_depth_histogram,
-        "cdc_merge": q_cdc_merge,
-        "time_travel": q_time_travel,
-        "ewma_forecast": q_ewma_forecast,
-        "cusum": q_cusum,
-        "ab_test": q_ab_test,
-        "k_anonymity": q_k_anonymity,
-        "label_propagation": q_label_propagation,
-        "exact_quantiles": q_exact_quantiles,
-        "weighted_median": q_weighted_median,
-        "seasonal_index": q_seasonal_index,
-        "anomaly_days": q_anomaly_days,
-        "windowed_funnel": q_windowed_funnel,
-        "cdc_diff": q_cdc_diff,
-        "cluster_quality": q_cluster_quality,
-        "chi_square": q_chi_square,
-        "bounce_rate": q_bounce_rate,
-        "tokenizer_fertility": q_tokenizer_fertility,
-        "source_overlap": q_source_overlap,
-        "pr_curve": q_pr_curve,
-        "grouped_weighted_median": q_grouped_weighted_median,
-        "psi_drift": q_psi_drift,
-        "order_reconciliation": q_order_reconciliation,
-        "hierarchy_share": q_hierarchy_share,
-        "dup_cluster_stats": q_dup_cluster_stats,
-        "top_movers": q_top_movers,
-        "lsh_eval": q_lsh_eval,
-        "mahalanobis": q_mahalanobis,
-        "kcore": q_kcore,
-        "conversion_lag": q_conversion_lag,
-        "weighted_sample": q_weighted_sample,
-        "theil_sen": q_theil_sen,
-        "mann_kendall": q_mann_kendall,
-        "pettitt_test": q_pettitt_test,
-        "cronbach_alpha": q_cronbach_alpha,
-        "icc_oneway": q_icc_oneway,
-        "friedman_test": q_friedman_test,
-        "cochran_q": q_cochran_q,
-        "kendall_tau": q_kendall_tau,
-        "cvm_test": q_cvm_test,
-        "macd_signal": q_macd_signal,
-        "hits_scores": q_hits_scores,
-        "distinct_ngrams": q_distinct_ngrams,
-        "durbin_watson": q_durbin_watson,
-        "ljung_box": q_ljung_box,
-        "mcnemar_test": q_mcnemar_test,
-        "page_trend": q_page_trend,
-        "bartlett_test": q_bartlett_test,
-        "hodges_lehmann": q_hodges_lehmann,
-        "assortativity": q_assortativity,
-        "source_diversity": q_source_diversity,
-        "bootstrap_mean_ci": q_bootstrap_mean_ci,
-        "signflip_test": q_signflip_test,
-        "jackknife_variance": q_jackknife_variance,
-        "wasserstein": q_wasserstein,
-        "partial_corr": q_partial_corr,
-        "clustering_coeff": q_clustering_coeff,
-        "transition_entropy": q_transition_entropy,
-        "periodogram": q_periodogram,
-        "kn_bigram_entropy": q_kn_bigram_entropy,
-        "conformal_interval": q_conformal_interval,
-        "doremi_weights": q_doremi_weights,
-        "topk_stream_replay": q_topk_stream_replay,
-        "tukey_hsd": q_tukey_hsd,
-        "cumulative_incidence": q_cumulative_incidence,
-        "levene_test": q_levene_test,
-        "dedup_threshold_sweep": q_dedup_threshold_sweep,
-        "token_coverage": q_token_coverage,
-        "semantic_decontaminate": q_semantic_decontaminate,
-        "gini": q_gini,
-        "mutual_information": q_mutual_information,
-        "user_streaks": q_user_streaks,
-        "first_seen_growth": q_first_seen_growth,
-        "active_orders": q_active_orders,
-        "group_ols_trend": q_group_ols_trend,
-        "ntile_histogram": q_equi_depth_histogram,
-        "containment_pairs": q_containment_pairs,
-        "vocab_growth": q_vocab_growth,
-        "prefix_dup_groups": q_prefix_dup_groups,
-        "boilerplate_ngrams": q_boilerplate_ngrams,
-        "kaplan_meier": q_kaplan_meier,
-        "correlation_matrix": q_correlation_matrix,
-        "welch_ttest": q_welch_ttest,
-        "lag_corr": q_lag_corr,
-        "nelson_aalen": q_nelson_aalen,
-        "burstiness": q_burstiness,
-        "ks_test": q_ks_test,
-        "holt_forecast": q_holt_forecast,
-        "mann_whitney": q_mann_whitney,
-        "changepoint": q_changepoint,
-        "kruskal_wallis": q_kruskal_wallis,
-        "logrank_test": q_logrank_test,
-        "runs_test": q_runs_test,
-        "max_drawdown": q_max_drawdown,
-        "hhi_concentration": q_hhi_concentration,
-        "cramers_v": q_cramers_v,
-        "rmst": q_rmst,
-        "quadratic_trend": q_quadratic_trend,
-        "spearman_corr": q_spearman_corr,
-        "jarque_bera": q_jarque_bera,
-        "grubbs_test": q_grubbs_test,
-        "diff_in_diff": q_diff_in_diff,
-        "holt_winters": q_holt_winters,
-        "adamic_adar": q_adamic_adar,
-        "topk_overlap": q_topk_overlap,
-        "cuped": q_cuped,
-        "croston": q_croston,
-        "wilcoxon": q_wilcoxon,
-        "anova_f": q_anova_f,
-        "roc_auc": q_roc_auc,
-        "cohen_kappa": q_cohen_kappa,
-        "fleiss_kappa": q_fleiss_kappa,
-        "l_diversity": q_l_diversity,
-        "sprt_monitor": q_sprt_monitor,
-        "bollinger_breaches": q_bollinger_breaches,
-        "rsi_signal": q_rsi_signal,
-        "realized_vol": q_realized_vol,
-        "attribution": q_attribution,
-        "info_gain": q_info_gain,
-        "isotonic_calibration": q_isotonic_calibration,
-        "readability": q_readability,
-        "rouge_overlap": q_rouge_overlap,
-        "retrieval_metrics": q_retrieval_metrics,
-        "quantile_normalize": q_quantile_normalize,
-        "argmax_stream_replay": q_argmax_stream_replay,
-        "stl_decompose": q_stl_decompose,
-        "seasonal_anomaly": q_seasonal_anomaly,
-        "pacf": q_pacf,
-        "burrows_delta": q_burrows_delta,
-        "hill_tail": q_hill_tail,
-        "code_switch": q_code_switch,
-        "expectations_report": q_expectations_report,
-        "fdr_bh": q_fdr_bh,
-        "ar_forecast": q_ar_forecast,
-        "identity_stitch": q_identity_stitch,
-        "mmr_rerank": q_mmr_rerank,
-        "t_closeness": q_t_closeness,
-        "brier_decomposition": q_brier_decomposition,
-        "kcenter_sample": q_kcenter_sample,
-        # wave 30 (round 12)
-        "mood_median": q_mood_median,
-        "brunner_munzel": q_brunner_munzel,
-        "theil_sen_daily": q_theil_sen_daily,
-        "mase_backtest": q_mase_backtest,
-        "embedding_drift": q_embedding_drift,
-        "quantiles_probe": q_quantiles_probe,
-        "iqr_outliers": q_iqr_outliers,
-        "ansari_bradley": q_ansari_bradley,
-        # wave 31 (round 13)
-        "jonckheere": q_jonckheere,
-        "cochran_armitage": q_cochran_armitage,
-        "mattr_diversity": q_mattr_diversity,
-        # wave 32 (round 14)
-        "ordinal_assoc": q_ordinal_assoc,
-        "dickey_fuller": q_dickey_fuller,
-        "hurst_rs": q_hurst_rs,
-        "anderson_darling": q_anderson_darling,
-        # wave 33 (round 14)
-        "quade_test": q_quade_test,
-        "variance_ratio": q_variance_ratio,
-        "granger_lag1": q_granger_lag1,
-        "engle_granger": q_engle_granger,
-        # round-14: tenth streaming gate shape (left-outer watermark
-        # NULL-emission)
-        "outer_join_stream_replay": q_outer_join_stream_replay,
-        # round-14: eleventh streaming gate shape (chained stateful
-        # operators — stream-stream join → windowed aggregation)
-        "join_window_stream_replay": q_join_window_stream_replay,
-        # wave 34 (round 14): ML-eval / method-comparison family
-        "deming_fit": q_deming_fit,
-        "bland_altman": q_bland_altman,
-        "optimal_cutoff": q_optimal_cutoff,
-        "lift_table": q_lift_table,
-        # wave 35 (round 14): regression / stationarity diagnostics
-        "breusch_pagan": q_breusch_pagan,
-        "chow_test": q_chow_test,
-        "arch_lm": q_arch_lm,
-        "kpss_test": q_kpss_test,
-        # wave 36 (round 14): survival regression family
-        "cox_ph": q_cox_ph,
-        "schoenfeld_trend": q_schoenfeld_trend,
-        "harrell_c": q_harrell_c,
-        # wave 37 (round 14): panel / clustered regression family
-        "fe_within": q_fe_within,
-        "between_reg": q_between_reg,
-        "cluster_se": q_cluster_se,
-        # wave 38 (round 14): forecast-comparison family
-        "diebold_mariano": q_diebold_mariano,
-        "pesaran_timmermann": q_pesaran_timmermann,
-        "theil_u2": q_theil_u2,
-        # wave 39 (round 14): unsupervised keyword extraction
-        "rake_keywords": q_rake_keywords,
-        "textrank_keywords": q_textrank_keywords,
-        # wave 40 (round 14): distribution distance / scale tests
-        "energy_distance": q_energy_distance,
-        "conover_squared_ranks": q_conover_squared_ranks,
-        # wave 41 (round 14): robust estimation
-        "yuen_trimmed_t": q_yuen_trimmed_t,
-        "huber_irls": q_huber_irls,
-    }
-    # The driver's correctness harness checks exactly the FIRST 50
-    # entries (a budget, by all appearances), and dict order decides
-    # which face the oracle.  Round-14 rotation (VERDICT r13 ask #1):
-    # 230 of 326 registry entries had never faced a CORRECTNESS_r*
-    # window — two independent full replicas (tools/check.py, the
-    # judge's own) are green on all 326, but driver-side evidence
-    # accrued at only ~10 fresh seats/round.  Final r14 window: ALL
-    # ELEVEN streaming replay shapes (the only gate entries that
-    # exercise Structured Streaming under the driver harness;
-    # topk/argmax/outer-join/join-window are first-timers), then the
-    # round-14 waves 31-40 (29 brand-new batch operators, zero driver
-    # evidence), then the r4-era TPC-H shapes oldest-first.  43 of
-    # the 50 seats have never appeared in any CORRECTNESS_r* file.
-    # Every evicted entry carries banked driver-green evidence from
-    # CORRECTNESS_r02..r13 and stays in the full replica sweep run
-    # each round (tools/check.py; round_close prints the never-gated
-    # count).
-    priority = [
-        # ALL TEN streaming replay shapes — these are the only gate
-        # entries that exercise Structured Streaming under the driver
-        # harness (batch replicas can't), so they keep standing seats.
-        # topk/argmax/outer-join stream replays are first-timers.
-        "state_stream_replay", "window_stream_replay",
-        "dedup_stream_replay", "join_stream_replay",
-        "session_stream_replay", "enrich_stream_replay",
-        "replay_handoff", "topk_stream_replay", "argmax_stream_replay",
-        "outer_join_stream_replay", "join_window_stream_replay",
-        # wave 31 — brand new in round 13, zero driver evidence
-        "jonckheere", "cochran_armitage", "mattr_diversity",
-        # waves 32/33 — brand new this round (the last eight r4/r5
-        # curation seats below roll past 50, back to replica coverage)
-        "ordinal_assoc", "dickey_fuller", "hurst_rs", "anderson_darling",
-        "quade_test", "variance_ratio", "granger_lag1", "engle_granger",
-        "deming_fit", "bland_altman", "optimal_cutoff", "lift_table",
-        "breusch_pagan", "chow_test", "arch_lm", "kpss_test",
-        "cox_ph", "schoenfeld_trend", "harrell_c",
-        "fe_within", "between_reg", "cluster_se",
-        "diebold_mariano", "pesaran_timmermann", "theil_u2",
-        "rake_keywords", "textrank_keywords",
-        "energy_distance", "conover_squared_ranks",
-        "yuen_trimmed_t", "huber_irls",
-        # the 17 r4-era TPC-H join/agg shapes (Q6/Q10/Q14/... family):
-        # only ever replica-checked since round 4
-        "volume_shipping", "returned_items", "promo_revenue",
-        "large_volume_orders", "brand_discount_revenue", "market_share",
-        "product_type_profit", "customer_distribution", "top_supplier",
-        "small_quantity_revenue", "sole_returned_supplier",
-        "global_sales_opportunity", "min_cost_supplier", "important_parts",
-        "linestatus_priority", "parts_supplier_counts",
-        "promotion_candidates",
-        # multimodal metadata (binary-column header parsing)
-        "multimodal_meta", "multimodal_image_meta", "multimodal_jpeg_meta",
-        # r4/r5-era curation / embedding / sketch entries, oldest-first
-        "lm_perplexity", "semantic_dedup", "embedding_pool",
-        "temperature_mix", "tf_hash", "chunk_documents", "cms_topk",
-        "bloom_decontaminate", "embedding_pca", "bpe_train",
-        "substring_spans", "length_quantiles", "dsir_weights",
-        "dsir_sample", "pq_codes", "pq_search", "hdr_quantiles",
-        "lr_quality_weights",
-    ]
-    ordered = {name: raw[name] for name in priority}
-    ordered.update({name: fn for name, fn in raw.items() if name not in ordered})
-    assert set(ordered) == set(raw) and len(ordered) == len(raw)
-    return {name: _stable(fn) for name, fn in ordered.items()}
+    g = globals()
+    defined = {n[2:] for n in g if n.startswith("q_") and callable(g[n])}
+    assert defined == set(GATES) and len(GATES) == len(defined)
+    return {name: _stable(g["q_" + name]) for name in GATES}
 
 
 def oracle_sql() -> dict[str, str]:
+    g = globals()
     return {
-        "state_keyed_last": ORACLE_STATE_KEYED_LAST,
-        "state_stream_replay": ORACLE_STATE_STREAM_REPLAY,
-        "window_stream_replay": ORACLE_WINDOW_STREAM_REPLAY,
-        "dedup_stream_replay": ORACLE_DEDUP_STREAM_REPLAY,
-        "join_stream_replay": ORACLE_JOIN_STREAM_REPLAY,
-        "state_filter_query": ORACLE_STATE_FILTER_QUERY,
-        "perspective_view": ORACLE_PERSPECTIVE_VIEW,
-        "perspective_pivot": ORACLE_PERSPECTIVE_PIVOT,
-        "table_index_limit": ORACLE_TABLE_INDEX_LIMIT,
-        "window_tumbling": ORACLE_WINDOW_TUMBLING,
-        "window_session": ORACLE_WINDOW_SESSION,
-        "asof_join": ORACLE_ASOF_JOIN,
-        "interval_join": ORACLE_INTERVAL_JOIN,
-        "union_merge": ORACLE_UNION_MERGE,
-        "lookup_by_id": ORACLE_LOOKUP_BY_ID,
-        "explode_embeddings": ORACLE_EXPLODE_EMBEDDINGS,
-        "text_stats": ORACLE_TEXT_STATS,
-        "dedup_exact": ORACLE_DEDUP_EXACT,
-        "minhash_signature": ORACLE_MINHASH_SIGNATURE,
-        "ngram_jaccard": ORACLE_NGRAM_JACCARD,
-        "ann_cosine_topk": ORACLE_ANN_COSINE_TOPK,
-        "embedding_neardup": ORACLE_EMBEDDING_NEARDUP,
-        "embedding_neardup_lsh": ORACLE_EMBEDDING_NEARDUP_LSH,
-        "ann_lsh_topk": ORACLE_ANN_LSH_TOPK,
-        "dedup_minhash_pairs": ORACLE_DEDUP_MINHASH_PAIRS,
-        "dedup_simhash": ORACLE_DEDUP_SIMHASH,
-        "ann_ivf_topk": ORACLE_ANN_IVF_TOPK,
-        "revenue_by_nation": ORACLE_REVENUE_BY_NATION,
-        "top_customers": ORACLE_TOP_CUSTOMERS,
-        "channel_processor": ORACLE_CHANNEL_PROCESSOR,
-        "tick_counts": ORACLE_TICK_COUNTS,
-        "time_gate": ORACLE_TIME_GATE,
-        "identity_lookup": ORACLE_IDENTITY_LOOKUP,
-        "window_sliding": ORACLE_WINDOW_SLIDING,
-        "flatten_struct": ORACLE_FLATTEN_STRUCT,
-        "replay_rewrite": ORACLE_REPLAY_REWRITE,
-        "replay_handoff": ORACLE_REPLAY_HANDOFF,
-        "text_clean": ORACLE_TEXT_CLEAN,
-        "vocab_topk": ORACLE_VOCAB_TOPK,
-        "tfidf": ORACLE_TFIDF,
-        "dedup_components": ORACLE_DEDUP_COMPONENTS,
-        "doc_fingerprints": ORACLE_DOC_FINGERPRINTS,
-        "sales_cube": ORACLE_SALES_CUBE,
-        "topk_per_group": ORACLE_TOPK_PER_GROUP,
-        "distinct_counts": ORACLE_DISTINCT_COUNTS,
-        "quality_filter": ORACLE_QUALITY_FILTER,
-        "pricing_summary": ORACLE_PRICING_SUMMARY,
-        "near_dedup_pipeline": ORACLE_NEAR_DEDUP_PIPELINE,
-        "state_multikey": ORACLE_STATE_MULTIKEY,
-        "json_props": ORACLE_JSON_PROPS,
-        "array_stats": ORACLE_ARRAY_STATS,
-        "approx_distinct": _oracle_approx_distinct(),
-        "cms_topk": _oracle_cms_topk(),
-        "bloom_decontaminate": ORACLE_BLOOM_DECONTAMINATE,
-        "embedding_pca": ORACLE_EMBEDDING_PCA,
-        "bpe_train": _oracle_bpe_train(),
-        "substring_spans": ORACLE_SUBSTRING_SPANS,
-        "length_quantiles": ORACLE_LENGTH_QUANTILES,
-        "dsir_weights": ORACLE_DSIR_WEIGHTS,
-        "dsir_sample": ORACLE_DSIR_SAMPLE,
-        "pq_codes": ORACLE_PQ_CODES,
-        "pq_search": ORACLE_PQ_SEARCH,
-        "hdr_quantiles": _oracle_hdr_quantiles(),
-        "lr_quality_weights": _oracle_lr_quality_weights(),
-        "lr_quality_scores": _oracle_lr_quality_scores(),
-        "edit_distance_pairs": ORACLE_EDIT_DISTANCE_PAIRS,
-        "pagerank_docs": _oracle_pagerank_docs(),
-        "zipf_fit": ORACLE_ZIPF_FIT,
-        "pmi_collocations": ORACLE_PMI_COLLOCATIONS,
-        "epoch_upsample": ORACLE_EPOCH_UPSAMPLE,
-        "contamination_report": ORACLE_CONTAMINATION_REPORT,
-        "dedup_incremental": ORACLE_DEDUP_INCREMENTAL,
-        "cdc_chunks": ORACLE_CDC_CHUNKS,
-        "encoding_quality": _oracle_encoding_quality(),
-        "blocklist_screen": ORACLE_BLOCKLIST_SCREEN,
-        "deterministic_shuffle": ORACLE_DETERMINISTIC_SHUFFLE,
-        "unicode_nfc": ORACLE_UNICODE_NFC,
-        "embedding_standardize": ORACLE_EMBEDDING_STANDARDIZE,
-        "hard_negatives": ORACLE_HARD_NEGATIVES,
-        "vocab_coverage": ORACLE_VOCAB_COVERAGE,
-        "forecast_revenue": ORACLE_FORECAST_REVENUE,
-        "order_priority": ORACLE_ORDER_PRIORITY,
-        "shipping_priority": ORACLE_SHIPPING_PRIORITY,
-        "local_supplier_volume": ORACLE_LOCAL_SUPPLIER_VOLUME,
-        "volume_shipping": ORACLE_VOLUME_SHIPPING,
-        "returned_items": ORACLE_RETURNED_ITEMS,
-        "promo_revenue": ORACLE_PROMO_REVENUE,
-        "large_volume_orders": ORACLE_LARGE_VOLUME_ORDERS,
-        "brand_discount_revenue": ORACLE_BRAND_DISCOUNT_REVENUE,
-        "market_share": ORACLE_MARKET_SHARE,
-        "product_type_profit": ORACLE_PRODUCT_TYPE_PROFIT,
-        "customer_distribution": ORACLE_CUSTOMER_DISTRIBUTION,
-        "top_supplier": ORACLE_TOP_SUPPLIER,
-        "small_quantity_revenue": ORACLE_SMALL_QUANTITY_REVENUE,
-        "sole_returned_supplier": ORACLE_SOLE_RETURNED_SUPPLIER,
-        "global_sales_opportunity": ORACLE_GLOBAL_SALES_OPPORTUNITY,
-        "min_cost_supplier": ORACLE_MIN_COST_SUPPLIER,
-        "important_parts": ORACLE_IMPORTANT_PARTS,
-        "linestatus_priority": ORACLE_LINESTATUS_PRIORITY,
-        "parts_supplier_counts": ORACLE_PARTS_SUPPLIER_COUNTS,
-        "promotion_candidates": ORACLE_PROMOTION_CANDIDATES,
-        "multimodal_meta": ORACLE_MULTIMODAL_META,
-        "multimodal_image_meta": ORACLE_MULTIMODAL_IMAGE_META,
-        "multimodal_jpeg_meta": ORACLE_MULTIMODAL_JPEG_META,
-        "hypertable_rollup": ORACLE_HYPERTABLE_ROLLUP,
-        "decontaminate": ORACLE_DECONTAMINATE,
-        "stratified_sample": ORACLE_STRATIFIED_SAMPLE,
-        "line_dedup": ORACLE_LINE_DEDUP,
-        "train_split": ORACLE_TRAIN_SPLIT,
-        "sequence_pack": ORACLE_SEQUENCE_PACK,
-        "repetition_stats": ORACLE_REPETITION_STATS,
-        "kmeans_refine": _km_oracle(),
-        "char_entropy": ORACLE_CHAR_ENTROPY,
-        "vocab_encode": ORACLE_VOCAB_ENCODE,
-        "semantic_dedup": ORACLE_SEMANTIC_DEDUP,
-        "embedding_pool": ORACLE_EMBEDDING_POOL,
-        "temperature_mix": ORACLE_TEMPERATURE_MIX,
-        "tf_hash": ORACLE_TF_HASH,
-        "chunk_documents": ORACLE_CHUNK_DOCUMENTS,
-        "fingerprint_pairs": ORACLE_FINGERPRINT_PAIRS,
-        "lm_perplexity": ORACLE_LM_PERPLEXITY,
-        "embedding_quantize": ORACLE_EMBEDDING_QUANTIZE,
-        "bm25_topk": ORACLE_BM25_TOPK,
-        "url_canonical": ORACLE_URL_CANONICAL,
-        "url_dedup": ORACLE_URL_DEDUP,
-        "source_drift": ORACLE_SOURCE_DRIFT,
-        "gopher_quality": ORACLE_GOPHER_QUALITY,
-        "c4_quality": ORACLE_C4_QUALITY,
-        "lm_backoff": ORACLE_LM_BACKOFF,
-        "budget_mix": ORACLE_BUDGET_MIX,
-        "bag_dedup": ORACLE_BAG_DEDUP,
-        "ngram_novelty": ORACLE_NGRAM_NOVELTY,
-        "padding_report": ORACLE_PADDING_REPORT,
-        "pii_report": ORACLE_PII_REPORT,
-        "profile_table": ORACLE_PROFILE_TABLE,
-        "winsorize_prices": ORACLE_WINSORIZE_PRICES,
-        "exemplars": ORACLE_EXEMPLARS,
-        "funnel": ORACLE_FUNNEL,
-        "retention": ORACLE_RETENTION,
-        "rolling_value": ORACLE_ROLLING_VALUE,
-        "gap_fill": ORACLE_GAP_FILL,
-        "hybrid_search": ORACLE_HYBRID_SEARCH,
-        "market_basket": ORACLE_MARKET_BASKET,
-        "mad_outliers": ORACLE_MAD_OUTLIERS,
-        "scd2": ORACLE_SCD2,
-        "value_histogram": ORACLE_VALUE_HISTOGRAM,
-        "vwap": ORACLE_VWAP,
-        "key_skew": ORACLE_KEY_SKEW,
-        "calibration": _oracle_calibration(),
-        "lang_confusion": ORACLE_LANG_CONFUSION,
-        "ctfidf": ORACLE_CTFIDF,
-        "triangle_count": _oracle_triangle_count(),
-        "fk_audit": ORACLE_FK_AUDIT,
-        "table_diff": ORACLE_TABLE_DIFF,
-        "window_topk": ORACLE_WINDOW_TOPK,
-        "event_transitions": ORACLE_EVENT_TRANSITIONS,
-        "interarrival": ORACLE_INTERARRIVAL,
-        "asof_forward": ORACLE_ASOF_FORWARD,
-        "asof_nearest": ORACLE_ASOF_NEAREST,
-        "revenue_mom": ORACLE_REVENUE_MOM,
-        "pareto_revenue": ORACLE_PARETO_REVENUE,
-        "benford": ORACLE_BENFORD,
-        "cep_pattern": ORACLE_CEP_PATTERN,
-        "ship_latency": ORACLE_SHIP_LATENCY,
-        "churn": ORACLE_CHURN,
-        "stickiness": ORACLE_STICKINESS,
-        "new_vs_returning": ORACLE_NEW_VS_RETURNING,
-        "sales_rollup": ORACLE_SALES_ROLLUP,
-        "event_trigrams": ORACLE_EVENT_TRIGRAMS,
-        "rfm_segments": ORACLE_RFM_SEGMENTS,
-        "cohort_ltv": ORACLE_COHORT_LTV,
-        "dup_invoices": ORACLE_DUP_INVOICES,
-        "incremental_agg": ORACLE_INCREMENTAL_AGG,
-        "session_funnel": ORACLE_SESSION_FUNNEL,
-        "depth_histogram": _oracle_depth_histogram(),
-        "cdc_merge": ORACLE_CDC_MERGE,
-        "time_travel": ORACLE_TIME_TRAVEL,
-        "ewma_forecast": ORACLE_EWMA_FORECAST,
-        "cusum": ORACLE_CUSUM,
-        "ab_test": ORACLE_AB_TEST,
-        "k_anonymity": ORACLE_K_ANONYMITY,
-        "label_propagation": _oracle_label_propagation(),
-        "exact_quantiles": ORACLE_EXACT_QUANTILES,
-        "weighted_median": ORACLE_WEIGHTED_MEDIAN,
-        "seasonal_index": ORACLE_SEASONAL_INDEX,
-        "anomaly_days": ORACLE_ANOMALY_DAYS,
-        "windowed_funnel": ORACLE_WINDOWED_FUNNEL,
-        "cdc_diff": ORACLE_CDC_DIFF,
-        "cluster_quality": ORACLE_CLUSTER_QUALITY,
-        "chi_square": ORACLE_CHI_SQUARE,
-        "bounce_rate": ORACLE_BOUNCE_RATE,
-        "tokenizer_fertility": ORACLE_TOKENIZER_FERTILITY,
-        "source_overlap": _oracle_source_overlap(),
-        "pr_curve": _oracle_pr_curve(),
-        "grouped_weighted_median": ORACLE_GROUPED_WEIGHTED_MEDIAN,
-        "psi_drift": _oracle_psi_drift(),
-        "order_reconciliation": ORACLE_ORDER_RECONCILIATION,
-        "hierarchy_share": ORACLE_HIERARCHY_SHARE,
-        "dup_cluster_stats": _oracle_dup_cluster_stats(),
-        "top_movers": ORACLE_TOP_MOVERS,
-        "lsh_eval": _oracle_lsh_eval(),
-        "mahalanobis": _oracle_mahalanobis(),
-        "kcore": _oracle_kcore(),
-        "conversion_lag": ORACLE_CONVERSION_LAG,
-        "weighted_sample": ORACLE_WEIGHTED_SAMPLE,
-        "theil_sen": ORACLE_THEIL_SEN,
-        "mann_kendall": ORACLE_MANN_KENDALL,
-        "pettitt_test": ORACLE_PETTITT_TEST,
-        "cronbach_alpha": ORACLE_CRONBACH_ALPHA,
-        "icc_oneway": ORACLE_ICC_ONEWAY,
-        "friedman_test": ORACLE_FRIEDMAN_TEST,
-        "cochran_q": ORACLE_COCHRAN_Q,
-        "kendall_tau": ORACLE_KENDALL_TAU,
-        "cvm_test": ORACLE_CVM_TEST,
-        "macd_signal": ORACLE_MACD_SIGNAL,
-        "hits_scores": _oracle_hits_scores(),
-        "distinct_ngrams": _oracle_distinct_ngrams(),
-        "durbin_watson": ORACLE_DURBIN_WATSON,
-        "ljung_box": ORACLE_LJUNG_BOX,
-        "mcnemar_test": ORACLE_MCNEMAR_TEST,
-        "page_trend": ORACLE_PAGE_TREND,
-        "bartlett_test": ORACLE_BARTLETT_TEST,
-        "hodges_lehmann": ORACLE_HODGES_LEHMANN,
-        "assortativity": _oracle_assortativity(),
-        "source_diversity": ORACLE_SOURCE_DIVERSITY,
-        "bootstrap_mean_ci": _oracle_bootstrap_mean_ci(),
-        "signflip_test": _oracle_signflip_test(),
-        "jackknife_variance": ORACLE_JACKKNIFE_VARIANCE,
-        "wasserstein": ORACLE_WASSERSTEIN,
-        "partial_corr": ORACLE_PARTIAL_CORR,
-        "clustering_coeff": _oracle_clustering_coeff(),
-        "transition_entropy": ORACLE_TRANSITION_ENTROPY,
-        "periodogram": ORACLE_PERIODOGRAM,
-        "kn_bigram_entropy": _oracle_kn_bigram_entropy(),
-        "conformal_interval": _oracle_conformal_interval(),
-        "doremi_weights": _oracle_doremi_weights(),
-        # wave 30 (round 12)
-        "mood_median": ORACLE_MOOD_MEDIAN,
-        "brunner_munzel": ORACLE_BRUNNER_MUNZEL,
-        "theil_sen_daily": ORACLE_THEIL_SEN_DAILY,
-        "mase_backtest": ORACLE_MASE_BACKTEST,
-        "embedding_drift": ORACLE_EMBEDDING_DRIFT,
-        "quantiles_probe": ORACLE_QUANTILES_PROBE,
-        "iqr_outliers": ORACLE_IQR_OUTLIERS,
-        "ansari_bradley": ORACLE_ANSARI_BRADLEY,
-        "jonckheere": ORACLE_JONCKHEERE,
-        "cochran_armitage": ORACLE_COCHRAN_ARMITAGE,
-        "mattr_diversity": _oracle_mattr(),
-        "ordinal_assoc": ORACLE_ORDINAL_ASSOC,
-        "dickey_fuller": ORACLE_DICKEY_FULLER,
-        "hurst_rs": ORACLE_HURST_RS,
-        "anderson_darling": ORACLE_ANDERSON_DARLING,
-        "quade_test": ORACLE_QUADE_TEST,
-        "variance_ratio": ORACLE_VARIANCE_RATIO,
-        "granger_lag1": ORACLE_GRANGER_LAG1,
-        "engle_granger": ORACLE_ENGLE_GRANGER,
-        "outer_join_stream_replay": ORACLE_OUTER_JOIN_STREAM_REPLAY,
-        "join_window_stream_replay": ORACLE_JOIN_WINDOW_STREAM_REPLAY,
-        "deming_fit": ORACLE_DEMING_FIT,
-        "bland_altman": ORACLE_BLAND_ALTMAN,
-        "optimal_cutoff": ORACLE_OPTIMAL_CUTOFF,
-        "lift_table": ORACLE_LIFT_TABLE,
-        "breusch_pagan": ORACLE_BREUSCH_PAGAN,
-        "chow_test": ORACLE_CHOW_TEST,
-        "arch_lm": ORACLE_ARCH_LM,
-        "kpss_test": ORACLE_KPSS_TEST,
-        "cox_ph": ORACLE_COX_PH,
-        "schoenfeld_trend": ORACLE_SCHOENFELD_TREND,
-        "harrell_c": ORACLE_HARRELL_C,
-        "fe_within": ORACLE_FE_WITHIN,
-        "between_reg": ORACLE_BETWEEN_REG,
-        "cluster_se": ORACLE_CLUSTER_SE,
-        "diebold_mariano": ORACLE_DIEBOLD_MARIANO,
-        "pesaran_timmermann": ORACLE_PESARAN_TIMMERMANN,
-        "theil_u2": ORACLE_THEIL_U2,
-        "rake_keywords": ORACLE_RAKE_KEYWORDS,
-        "textrank_keywords": ORACLE_TEXTRANK_KEYWORDS,
-        "energy_distance": ORACLE_ENERGY_DISTANCE,
-        "conover_squared_ranks": ORACLE_CONOVER_SQUARED_RANKS,
-        "yuen_trimmed_t": ORACLE_YUEN_TRIMMED_T,
-        "huber_irls": ORACLE_HUBER_IRLS,
-        "topk_stream_replay": ORACLE_TOPK_STREAM_REPLAY,
-        "tukey_hsd": ORACLE_TUKEY_HSD,
-        "cumulative_incidence": ORACLE_CUMULATIVE_INCIDENCE,
-        "levene_test": ORACLE_LEVENE_TEST,
-        "dedup_threshold_sweep": ORACLE_DEDUP_THRESHOLD_SWEEP,
-        "token_coverage": ORACLE_TOKEN_COVERAGE,
-        "semantic_decontaminate": ORACLE_SEMANTIC_DECONTAMINATE,
-        "gini": ORACLE_GINI,
-        "mutual_information": ORACLE_MUTUAL_INFORMATION,
-        "user_streaks": ORACLE_USER_STREAKS,
-        "first_seen_growth": ORACLE_FIRST_SEEN_GROWTH,
-        "active_orders": ORACLE_ACTIVE_ORDERS,
-        "group_ols_trend": ORACLE_GROUP_OLS_TREND,
-        "ntile_histogram": ORACLE_EQUI_DEPTH_HISTOGRAM,
-        "containment_pairs": _oracle_containment_pairs(),
-        "vocab_growth": ORACLE_VOCAB_GROWTH,
-        "prefix_dup_groups": ORACLE_PREFIX_DUP_GROUPS,
-        "boilerplate_ngrams": _oracle_boilerplate_ngrams(),
-        "kaplan_meier": ORACLE_KAPLAN_MEIER,
-        "correlation_matrix": _oracle_correlation_matrix(),
-        "welch_ttest": _oracle_welch_ttest(),
-        "lag_corr": ORACLE_LAG_CORR,
-        "nelson_aalen": ORACLE_NELSON_AALEN,
-        "burstiness": ORACLE_BURSTINESS,
-        "ks_test": ORACLE_KS_TEST,
-        "holt_forecast": ORACLE_HOLT_FORECAST,
-        "mann_whitney": ORACLE_MANN_WHITNEY,
-        "changepoint": ORACLE_CHANGEPOINT,
-        "kruskal_wallis": ORACLE_KRUSKAL_WALLIS,
-        "logrank_test": ORACLE_LOGRANK_TEST,
-        "runs_test": ORACLE_RUNS_TEST,
-        "max_drawdown": ORACLE_MAX_DRAWDOWN,
-        "session_stream_replay": ORACLE_SESSION_STREAM_REPLAY,
-        "enrich_stream_replay": ORACLE_ENRICH_STREAM_REPLAY,
-        "hhi_concentration": ORACLE_HHI_CONCENTRATION,
-        "cramers_v": ORACLE_CRAMERS_V,
-        "rmst": ORACLE_RMST,
-        "quadratic_trend": ORACLE_QUADRATIC_TREND,
-        "spearman_corr": ORACLE_SPEARMAN_CORR,
-        "jarque_bera": ORACLE_JARQUE_BERA,
-        "grubbs_test": ORACLE_GRUBBS_TEST,
-        "diff_in_diff": ORACLE_DIFF_IN_DIFF,
-        "holt_winters": ORACLE_HOLT_WINTERS,
-        "adamic_adar": ORACLE_ADAMIC_ADAR,
-        "topk_overlap": ORACLE_TOPK_OVERLAP,
-        "cuped": ORACLE_CUPED,
-        "croston": ORACLE_CROSTON,
-        "wilcoxon": ORACLE_WILCOXON,
-        "anova_f": ORACLE_ANOVA_F,
-        "roc_auc": ORACLE_ROC_AUC,
-        "cohen_kappa": ORACLE_COHEN_KAPPA,
-        "fleiss_kappa": ORACLE_FLEISS_KAPPA,
-        "l_diversity": ORACLE_L_DIVERSITY,
-        "sprt_monitor": _oracle_sprt_monitor(),
-        "bollinger_breaches": ORACLE_BOLLINGER_BREACHES,
-        "rsi_signal": ORACLE_RSI_SIGNAL,
-        "realized_vol": ORACLE_REALIZED_VOL,
-        "attribution": ORACLE_ATTRIBUTION,
-        "info_gain": _oracle_info_gain(),
-        "isotonic_calibration": ORACLE_ISOTONIC_CALIBRATION,
-        "readability": ORACLE_READABILITY,
-        "rouge_overlap": _oracle_rouge_overlap(),
-        "retrieval_metrics": _oracle_retrieval_metrics(),
-        "quantile_normalize": ORACLE_QUANTILE_NORMALIZE,
-        "argmax_stream_replay": ORACLE_ARGMAX_STREAM_REPLAY,
-        "stl_decompose": ORACLE_STL_DECOMPOSE,
-        "seasonal_anomaly": ORACLE_SEASONAL_ANOMALY,
-        "pacf": ORACLE_PACF,
-        "burrows_delta": _oracle_burrows_delta(),
-        "hill_tail": ORACLE_HILL_TAIL,
-        "code_switch": _oracle_code_switch(),
-        "expectations_report": _oracle_expectations_report(),
-        "fdr_bh": ORACLE_FDR_BH,
-        "ar_forecast": ORACLE_AR_FORECAST,
-        "identity_stitch": ORACLE_IDENTITY_STITCH,
-        "mmr_rerank": _oracle_mmr_rerank(),
-        "t_closeness": ORACLE_T_CLOSENESS,
-        "brier_decomposition": ORACLE_BRIER_DECOMPOSITION,
-        "kcenter_sample": _oracle_kcenter_sample(),
+        n: g[f"ORACLE_{n.upper()}"] if f"ORACLE_{n.upper()}" in g else g[f"_oracle_{n}"]()
+        for n in GATES
     }

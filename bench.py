@@ -1,4 +1,5 @@
-"""Benchmark headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark every gate query, in ``queries()`` order, at
+$SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Prints ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.  Each query is materialized with
@@ -14,369 +15,30 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "cumulative_incidence",
-    "tukey_hsd",
-    "assortativity",
-    "bartlett_test",
-    "bootstrap_mean_ci",
-    "clustering_coeff",
-    "cochran_q",
-    "conformal_interval",
-    "cronbach_alpha",
-    "cvm_test",
-    "distinct_ngrams",
-    "doremi_weights",
-    "durbin_watson",
-    "friedman_test",
-    "hits_scores",
-    "hodges_lehmann",
-    "icc_oneway",
-    "jackknife_variance",
-    "kendall_tau",
-    "kn_bigram_entropy",
-    "ljung_box",
-    "macd_signal",
-    "mcnemar_test",
-    "page_trend",
-    "partial_corr",
-    "periodogram",
-    "signflip_test",
-    "source_diversity",
-    "topk_stream_replay",
-    "transition_entropy",
-    "wasserstein",
-    "bm25_topk",
-    "gopher_quality",
-    "c4_quality",
-    "lm_backoff",
-    "budget_mix",
-    "bag_dedup",
-    "ngram_novelty",
-    "padding_report",
-    "pii_report",
-    "profile_table",
-    "winsorize_prices",
-    "exemplars",
-    "funnel",
-    "retention",
-    "rolling_value",
-    "gap_fill",
-    "hybrid_search",
-    "market_basket",
-    "mad_outliers",
-    "scd2",
-    "value_histogram",
-    "vwap",
-    "key_skew",
-    "lang_confusion",
-    "calibration",
-    "ctfidf",
-    "triangle_count",
-    "fk_audit",
-    "table_diff",
-    "window_topk",
-    "event_transitions",
-    "interarrival",
-    "asof_forward",
-    "asof_nearest",
-    "revenue_mom",
-    "pareto_revenue",
-    "benford",
-    "cep_pattern",
-    "ship_latency",
-    "churn",
-    "stickiness",
-    "new_vs_returning",
-    "sales_rollup",
-    "event_trigrams",
-    "rfm_segments",
-    "cohort_ltv",
-    "dup_invoices",
-    "incremental_agg",
-    "session_funnel",
-    "depth_histogram",
-    "cdc_merge",
-    "time_travel",
-    "ewma_forecast",
-    "cusum",
-    "ab_test",
-    "k_anonymity",
-    "label_propagation",
-    "exact_quantiles",
-    "weighted_median",
-    "seasonal_index",
-    "anomaly_days",
-    "windowed_funnel",
-    "cdc_diff",
-    "cluster_quality",
-    "chi_square",
-    "bounce_rate",
-    "tokenizer_fertility",
-    "source_overlap",
-    "pr_curve",
-    "grouped_weighted_median",
-    "psi_drift",
-    "order_reconciliation",
-    "hierarchy_share",
-    "dup_cluster_stats",
-    "top_movers",
-    "lsh_eval",
-    "mahalanobis",
-    "kcore",
-    "conversion_lag",
-    "weighted_sample",
-    "theil_sen",
-    "gini",
-    "mutual_information",
-    "user_streaks",
-    "first_seen_growth",
-    "active_orders",
-    "group_ols_trend",
-    "ntile_histogram",
-    "containment_pairs",
-    "vocab_growth",
-    "prefix_dup_groups",
-    "boilerplate_ngrams",
-    "url_canonical",
-    "url_dedup",
-    "source_drift",
-    "state_keyed_last",
-    "state_stream_replay",
-    "window_stream_replay",
-    "dedup_stream_replay",
-    "join_stream_replay",
-    "state_filter_query",
-    "perspective_view",
-    "perspective_pivot",
-    "table_index_limit",
-    "window_tumbling",
-    "window_session",
-    "asof_join",
-    "interval_join",
-    "union_merge",
-    "lookup_by_id",
-    "explode_embeddings",
-    "text_stats",
-    "dedup_exact",
-    "dedup_minhash_pairs",
-    "dedup_simhash",
-    "ann_cosine_topk",
-    "ann_lsh_topk",
-    "embedding_neardup",
-    "revenue_by_nation",
-    "top_customers",
-    "channel_processor",
-    "tick_counts",
-    "time_gate",
-    "identity_lookup",
-    "window_sliding",
-    "flatten_struct",
-    "replay_rewrite",
-    "replay_handoff",
-    "minhash_signature",
-    "ngram_jaccard",
-    "text_clean",
-    "vocab_topk",
-    "tfidf",
-    "dedup_components",
-    "doc_fingerprints",
-    "sales_cube",
-    "topk_per_group",
-    "distinct_counts",
-    "quality_filter",
-    "ann_ivf_topk",
-    "pricing_summary",
-    "forecast_revenue",
-    "order_priority",
-    "near_dedup_pipeline",
-    "state_multikey",
-    "json_props",
-    "array_stats",
-    "approx_distinct",
-    "shipping_priority",
-    "local_supplier_volume",
-    "volume_shipping",
-    "returned_items",
-    "promo_revenue",
-    "large_volume_orders",
-    "brand_discount_revenue",
-    "market_share",
-    "product_type_profit",
-    "customer_distribution",
-    "top_supplier",
-    "small_quantity_revenue",
-    "sole_returned_supplier",
-    "global_sales_opportunity",
-    "min_cost_supplier",
-    "important_parts",
-    "linestatus_priority",
-    "parts_supplier_counts",
-    "promotion_candidates",
-    "multimodal_meta",
-    "embedding_neardup_lsh",
-    "multimodal_image_meta",
-    "multimodal_jpeg_meta",
-    "hypertable_rollup",
-    "decontaminate",
-    "stratified_sample",
-    "line_dedup",
-    "train_split",
-    "sequence_pack",
-    "repetition_stats",
-    "kmeans_refine",
-    "kcenter_sample",
-    "mood_median",
-    "brunner_munzel",
-    "theil_sen_daily",
-    "mase_backtest",
-    "embedding_drift",
-    "quantiles_probe",
-    "iqr_outliers",
-    "ansari_bradley",
-    "char_entropy",
-    "vocab_encode",
-    "lm_perplexity",
-    "embedding_quantize",
-    "semantic_dedup",
-    "embedding_pool",
-    "temperature_mix",
-    "tf_hash",
-    "chunk_documents",
-    "fingerprint_pairs",
-    "cms_topk",
-    "bloom_decontaminate",
-    "embedding_pca",
-    "bpe_train",
-    "substring_spans",
-    "length_quantiles",
-    "dsir_weights",
-    "dsir_sample",
-    "pq_codes",
-    "pq_search",
-    "hdr_quantiles",
-    "lr_quality_weights",
-    "lr_quality_scores",
-    "edit_distance_pairs",
-    "pagerank_docs",
-    "zipf_fit",
-    "pmi_collocations",
-    "epoch_upsample",
-    "contamination_report",
-    "dedup_incremental",
-    "cdc_chunks",
-    "encoding_quality",
-    "blocklist_screen",
-    "deterministic_shuffle",
-    "unicode_nfc",
-    "embedding_standardize",
-    "hard_negatives",
-    "vocab_coverage",
-    "kaplan_meier",
-    "correlation_matrix",
-    "welch_ttest",
-    "lag_corr",
-    "nelson_aalen",
-    "burstiness",
-    "ks_test",
-    "holt_forecast",
-    "mann_whitney",
-    "changepoint",
-    "session_stream_replay",
-    "spearman_corr",
-    "jarque_bera",
-    "grubbs_test",
-    "diff_in_diff",
-    "holt_winters",
-    "adamic_adar",
-    "topk_overlap",
-    "cuped",
-    "croston",
-    "wilcoxon",
-    "anova_f",
-    "kruskal_wallis",
-    "logrank_test",
-    "runs_test",
-    "max_drawdown",
-    "hhi_concentration",
-    "cramers_v",
-    "rmst",
-    "quadratic_trend",
-    "roc_auc",
-    "cohen_kappa",
-    "fleiss_kappa",
-    "l_diversity",
-    "sprt_monitor",
-    "bollinger_breaches",
-    "rsi_signal",
-    "realized_vol",
-    "attribution",
-    "info_gain",
-    "isotonic_calibration",
-    "readability",
-    "rouge_overlap",
-    "retrieval_metrics",
-    "quantile_normalize",
-    "argmax_stream_replay",
-    "stl_decompose",
-    "seasonal_anomaly",
-    "pacf",
-    "burrows_delta",
-    "hill_tail",
-    "code_switch",
-    "expectations_report",
-    "fdr_bh",
-    "ar_forecast",
-    "identity_stitch",
-    "mmr_rerank",
-    "t_closeness",
-    "brier_decomposition",
-    # round-11 additions
-    "mann_kendall",
-    "token_coverage",
-    "semantic_decontaminate",
-    "pettitt_test",
-    "levene_test",
-    "dedup_threshold_sweep",
-    "enrich_stream_replay",
-    # round-13 additions (wave 31)
-    "jonckheere",
-    "cochran_armitage",
-    "mattr_diversity",
-    "ordinal_assoc",
-    "dickey_fuller",
-    "hurst_rs",
-    "anderson_darling",
-    "quade_test",
-    "variance_ratio",
-    "granger_lag1",
-    "engle_granger",
-    "outer_join_stream_replay",
-    "join_window_stream_replay",
-    "deming_fit",
-    "bland_altman",
-    "optimal_cutoff",
-    "lift_table",
-    "breusch_pagan",
-    "chow_test",
-    "arch_lm",
-    "kpss_test",
-    "cox_ph",
-    "schoenfeld_trend",
-    "harrell_c",
-    "fe_within",
-    "between_reg",
-    "cluster_se",
-    "diebold_mariano",
-    "pesaran_timmermann",
-    "theil_u2",
-    "rake_keywords",
-    "textrank_keywords",
-    "energy_distance",
-    "conover_squared_ranks",
-    "yuen_trimmed_t",
-    "huber_irls",
-]
+# Noise robustness (VERDICT r12 #5): one-shot timings on a shared VM
+# carry +0.7-2.7 s spikes (scheduler/page-cache interference).  A query
+# whose first timed run exceeds RERUN_ABOVE_SEC of gross wall time
+# (shared builds included) runs once more and reports the MIN — the
+# steady-state time a production scheduler would see.  The DuckDB pair
+# tool (tools/bench_oracle.py) applies the same rule.
+RERUN_ABOVE_SEC = 1.0
+
+
+def time_query(run, build_sec) -> float:
+    """Seconds one query takes, net of the ``_shared`` builds its
+    first run triggers (``build_sec()`` is the running build total).
+    Builds are reported as their own line item, so the headline counts
+    each exactly once: value = Σ per-query + shared_build_sec."""
+    b0 = build_sec()
+    t0 = time.time()
+    run()
+    gross = time.time() - t0
+    took = max(round(gross - (build_sec() - b0), 3), 0.0)
+    if gross > RERUN_ABOVE_SEC:
+        t1 = time.time()
+        run()
+        took = min(took, round(time.time() - t1, 3))
+    return took
 
 
 def main() -> None:
@@ -391,7 +53,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warmup: touch every table, then one untimed pass over every
-    # headline query — each distinct query shape pays its own
+    # gate query — each distinct query shape pays its own
     # whole-stage-codegen/JIT compilation on first execution (measured
     # ~2× on small queries), so the timed pass reports steady-state
     # throughput, which is what repeated production queries see.
@@ -417,12 +79,9 @@ def main() -> None:
             pass
 
     qs = entry.queries()
-    for i, name in enumerate(HEADLINE):
+    for i, fn in enumerate(qs.values()):
         if i % 20 == 0:
             _cleanup()
-        fn = qs.get(name)
-        if fn is None:
-            continue
         try:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         except Exception:  # noqa: BLE001 — the timed pass reports it
@@ -453,41 +112,15 @@ def main() -> None:
         cal_runs.append(time.time() - t0)
     calibration = round(sorted(cal_runs)[len(cal_runs) // 2], 4)
 
-    # Noise robustness (VERDICT r12 #5): one-shot timings on a shared
-    # VM carry +0.7-2.7 s spikes (scheduler/page-cache interference)
-    # that re-litigate the same per-query latency bars every round.
-    # Queries whose first timed run exceeds RERUN_ABOVE_SEC run once
-    # more and report the MIN — the steady-state time a production
-    # scheduler would see.  Sub-threshold queries stay single-shot
-    # (noise there is bounded by the threshold itself).  The DuckDB
-    # pair tool (tools/bench_oracle.py) applies the IDENTICAL rule, so
-    # the Spark/oracle ratio stays like-for-like.
-    # Shared-build accounting (r15): each `_shared` build runs inside
-    # the timed region (first consumer triggers it) but is REPORTED as
-    # its own line item rather than inside that consumer's per-query
-    # number — per-query entries stay steady-state comparable across
-    # rounds and across the min-of-2 rerun (whose second run is
-    # memo-warm), while the headline `value` includes every build
-    # exactly once: value = Σ per-query + shared_build_sec.
-    RERUN_ABOVE_SEC = 1.0
     times: dict[str, float] = {}
-    for i, name in enumerate(HEADLINE):
-        fn = qs.get(name)
-        if fn is None:
-            continue
+    for i, (name, fn) in enumerate(qs.items()):
         if i % 20 == 0:
             _cleanup()
-        b0 = entry.shared_build_sec()
-        t0 = time.time()
         try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            built = entry.shared_build_sec() - b0
-            took = max(round(time.time() - t0 - built, 3), 0.0)
-            if took > RERUN_ABOVE_SEC:
-                t1 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                took = min(took, round(time.time() - t1, 3))
-            times[name] = took
+            times[name] = time_query(
+                lambda: fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+                entry.shared_build_sec,
+            )
         except Exception as e:  # noqa: BLE001
             print(f"bench error {name}: {e}", file=sys.stderr)
             times[name] = -1.0

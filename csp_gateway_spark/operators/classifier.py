@@ -62,6 +62,8 @@ def lr_train(
     rows; cost per round ≈ 2 shuffles bounded by (docs·min(dim,len))
     rows regardless of corpus size.
     """
+    if iters < 1:
+        raise ValueError(f"lr_train: iters must be >= 1, got {iters}")
     spark = features.sparkSession
     # every round runs actions over the feature table; without a
     # persist each action re-runs the upstream tokenize+hash scan

@@ -175,8 +175,8 @@ def normalize_event_ts(df, col: str = "ts"):
     TIMESTAMP(MICROS) (arrives as timestamp/timestamp_ntz; converted
     here).  NTZ values are naive UTC — same convention DuckDB's
     ``epoch_ns(ts)`` applies on the oracle side — so the session
-    timezone must be UTC when casting (get_spark and the entry-point
-    loader both pin it)."""
+    timezone must be UTC when casting (get_spark and read_table both
+    pin it)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -190,18 +190,24 @@ def normalize_event_ts(df, col: str = "ts"):
     return df
 
 
+def read_table(spark: SparkSession, sf_dir: str, name: str):
+    """Read one driver parquet table with ``events.ts`` as epoch-ns long.
+    The confs go on THIS session, which may be built elsewhere (the
+    driver's harness does): ``nanosAsLong`` reads TIMESTAMP(NANOS) as
+    the long, UTC keeps ``normalize_event_ts``'s MICROS path stable."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return normalize_event_ts(df) if name == "events" else df
+
+
 def load_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None = None):
-    """Load the driver's parquet tables and register them as temp views.
+    """Load the driver's parquet tables (``read_table``) and register
+    them as temp views.
 
     Returns ``dict[name, DataFrame]``.  Column pruning + predicate
     pushdown reach the scan because these are plain parquet reads.
     """
-    # the caller may hand us a session built elsewhere (the driver's
-    # harness does): if events.parquet is TIMESTAMP(NANOS) the conf
-    # must be on THIS session, not just get_spark()'s; the timezone
-    # pin keeps the MICROS→nanos conversion UTC-stable
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     names = tables or (
         "region",
         "nation",
@@ -216,11 +222,7 @@ def load_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None
     )
     out = {}
     for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            if name == "events":
-                df = normalize_event_ts(df)
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+            df = out[name] = read_table(spark, sf_dir, name)
             df.createOrReplaceTempView(name)
-            out[name] = df
     return out

@@ -17,9 +17,9 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def events(spark, sf_dir):
-    from csp_gateway_spark.session import normalize_event_ts
+    from csp_gateway_spark.session import read_table
 
-    return normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return read_table(spark, sf_dir, "events")
 
 
 @pytest.fixture(scope="session")

@@ -64,6 +64,12 @@ def test_lr_empty_labels_raise(spark, feats):
         lr_train(feats, empty, dim=64)
 
 
+def test_lr_zero_iters_raise(labeled_corpus, feats):
+    labels = labeled_corpus.select("doc_id", "y")
+    with pytest.raises(ValueError, match="iters"):
+        lr_train(feats, labels, dim=64, iters=0)
+
+
 def test_lr_score_expr_matches_sparse_face(labeled_corpus, feats):
     """The stateless expression face scores ≈ the sparse-join face
     (same value, different float fold order)."""

@@ -71,7 +71,7 @@ def readme_drift() -> int:
         if n_timed != n_actual:
             print(
                 f"BENCH_LOCAL times {n_timed} queries but the registry has "
-                f"{n_actual} — add the missing names to bench.py HEADLINE"
+                f"{n_actual} — rerun bench.py to refresh BENCH_LOCAL.json"
             )
             failures += 1
         else:
