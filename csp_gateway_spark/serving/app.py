@@ -267,7 +267,8 @@ class GatewayApi:
 
     def _collect_or_404(self, channel: str, df_fn) -> List[Row]:
         try:
-            return df_fn().collect()
+            with self.catalog.reading():
+                return df_fn().collect()
         except ApiError:
             raise
         except Exception as e:  # noqa: BLE001 — unwired: no ticks yet
@@ -407,10 +408,10 @@ class GatewayApi:
                 if field in row and row[field] != value:
                     raise ApiError(403, f"identity field {field!r} mismatch")
         try:
-            echoed = self.catalog.send(channel, rows)
+            echoed, _ = self.catalog.send_rows(channel, rows)
         except Exception as e:  # noqa: BLE001
             raise ApiError(422, f"send failed: {e}") from e
-        out = [_jsonable(r) for r in echoed.collect()]
+        out = [_jsonable(r) for r in echoed]
         self.broker.publish(channel, out)
         self.subs.publish(channel, out, key_field=self.key_field(channel))
         return out

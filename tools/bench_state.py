@@ -1,13 +1,17 @@
-"""State insert/query microbenchmark mirroring the reference's asv grid
-(`benchmarks/benchmarks/server/gateway/csp/state.py:57-193`):
+"""State insert/query microbenchmark on the serving path, mirroring the
+reference's asv grid (`benchmarks/benchmarks/server/gateway/csp/state.py:57-193`):
 
-- insert N rows (N ∈ {1_000, 10_000, 100_000}) with keyby unique and
-  keyby mod 100,
-- first (cold) query-all latency — includes the "bulk load" cost
-  (here: the first Spark job over the appended data),
-- warm repeated query-all and a 2-filter conjunctive query.
+- insert N rows (N ∈ {1_000, 10_000}) through ``GatewayApi.send`` in
+  50-row batches, with keyby unique and keyby mod 100;
+- the first (cold) ``GatewayApi.state`` query-all — it folds every
+  send made since the last read;
+- warm repeated query-all, and the 2-filter conjunctive query.
 
-Prints one JSON line: {"metric": "state_microbench", "cases": {...}}.
+Prints one JSON line: {"metric": "state_microbench", "cases": {...}},
+and exits non-zero when a warm ``/state`` at 10k is more than 2x its
+1k case with the same keyby (state size held fixed: mod 100).
+
+    SPARK_GRAFT_CPUS=4 python tools/bench_state.py
 """
 
 from __future__ import annotations
@@ -19,12 +23,47 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+BATCH = 50
+SIZES = (1_000, 10_000)
+WARM = 3
 
-def main() -> None:
+
+def run_case(spark, schema, n: int, key_mode: str) -> dict:
+    from csp_gateway_spark.catalog import ChannelCatalog
+    from csp_gateway_spark.serving.app import GatewayApi
+
+    q2 = json.dumps({"filters": [{"attr": "a", "op": "<=", "value": 1000}] * 2})
+    api = GatewayApi(ChannelCatalog(spark))
+    name = f"s_{n}_{key_mode}"
+    api.catalog.declare(name, schema)
+    api.catalog.declare_state(name, "a")
+    rows = [{"a": i if key_mode == "unique" else i % 100, "b": f"b{i}", "c": i * 0.5} for i in range(n)]
+    t0 = time.perf_counter()
+    for i in range(0, n, BATCH):
+        api.send(name, rows[i : i + BATCH])
+    send_ms = (time.perf_counter() - t0) * 1e3 / (n // BATCH)
+    t0 = time.perf_counter()
+    api.state(name)  # cold: folds every send so far
+    cold_ms = (time.perf_counter() - t0) * 1e3
+    t0 = time.perf_counter()
+    for _ in range(WARM):
+        served = api.state(name)
+    warm_ms = (time.perf_counter() - t0) * 1e3 / WARM
+    t0 = time.perf_counter()
+    api.state(name, query_json=q2)
+    filt_ms = (time.perf_counter() - t0) * 1e3
+    return {
+        "send_ms_per_batch": round(send_ms, 1),
+        "cold_state_ms": round(cold_ms, 1),
+        "warm_state_ms": round(warm_ms, 1),
+        "filtered_state_ms": round(filt_ms, 1),
+        "state_rows": len(served),
+    }
+
+
+def main() -> int:
     from pyspark.sql import types as T
 
-    from csp_gateway_spark.catalog import ChannelCatalog
-    from csp_gateway_spark.query import Filter, Query
     from csp_gateway_spark.session import get_spark
 
     spark = get_spark("bench_state")
@@ -36,41 +75,19 @@ def main() -> None:
             T.StructField("c", T.DoubleType()),
         ]
     )
-    q2 = Query(filters=[Filter(attr="a", op="<=", value=1000), Filter(attr="a", op="<=", value=1000)])
-    cases = {}
-    for n in (1_000, 10_000, 100_000):
-        for key_mode in ("unique", "mod100"):
-            cat = ChannelCatalog(spark)
-            name = f"s_{n}_{key_mode}"
-            cat.declare(name, schema)
-            cat.declare_state(name, "a")
-            rows = [
-                {"a": i if key_mode == "unique" else i % 100, "b": f"b{i}", "c": i * 0.5}
-                for i in range(n)
-            ]
-            t0 = time.time()
-            # bulk insert (the reference buffers then bulk-loads; one
-            # createDataFrame append is the same design point)
-            cat.send(name, rows)
-            insert_s = time.time() - t0
-            t0 = time.time()
-            cat.state(name).count()  # cold query-all
-            cold_s = time.time() - t0
-            t0 = time.time()
-            for _ in range(3):
-                cat.state(name).count()
-            warm_s = (time.time() - t0) / 3
-            t0 = time.time()
-            cat.query(name, q2).count()
-            filt_s = time.time() - t0
-            cases[f"n={n},key={key_mode}"] = {
-                "insert_s": round(insert_s, 3),
-                "cold_query_s": round(cold_s, 3),
-                "warm_query_s": round(warm_s, 3),
-                "filtered_query_s": round(filt_s, 3),
-            }
-    print(json.dumps({"metric": "state_microbench", "cases": cases}))
+    run_case(spark, schema, 2 * BATCH, "unique")  # untimed: JIT and codegen warm-up
+    cases = {
+        f"n={n},key={key_mode}": run_case(spark, schema, n, key_mode)
+        for n in SIZES
+        for key_mode in ("unique", "mod100")
+    }
+    print(json.dumps({"metric": "state_microbench", "batch": BATCH, "cases": cases}))
+    lo, hi = cases[f"n={SIZES[0]},key=mod100"], cases[f"n={SIZES[-1]},key=mod100"]
+    if hi["warm_state_ms"] > 2 * lo["warm_state_ms"]:
+        print(f"warm /state at n={SIZES[-1]} is more than 2x n={SIZES[0]}", file=sys.stderr)
+        return 1
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
