@@ -18,7 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from csp_gateway_spark.session import read_table
+from csp_gateway_spark.session import read_table, rebind_session, replay_session
 from csp_gateway_spark.operators.state import keyed_last
 from csp_gateway_spark.query import Filter, Query, apply_query
 
@@ -315,144 +315,216 @@ def _li_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared(spark, sf_dir, "li_moments4", build)
 
 
-from contextlib import contextmanager
+def _hash_split(df: DataFrame, n: int, key: str = "event_id"):
+    """Replay source stage: ``df`` as ``n`` parquet files split by
+    ``hash(key)``, so a ``maxFilesPerTrigger=1`` stream over them runs
+    ``n`` micro-batches.  Returns ``stage(root) -> source dir``."""
+
+    def stage(root: str) -> str:
+        src = os.path.join(root, "src")
+        df.withColumn("_b", F.pmod(F.hash(key), F.lit(n))).repartition(
+            n, "_b"
+        ).drop("_b").write.mode("overwrite").parquet(src)
+        return src
+
+    return stage
 
 
-#: replay-harness state partitions (env-overridable): each gate
-#: trigger streams a tiny bounded slice, so partitions here size the
-#: STATE-STORE instance count, not parallelism.  Measured at sf0.1
-#: (round 14): the dual-watermark stream-stream join replay runs
-#: ~2.4× faster at 2 partitions than at the former 8 (the chained
-#: join+window gate shipped at n=2 from the start for the same
-#: reason).  Production state sizing is config-driven at the first
-#: checkpoint write (spark.sql.shuffle.partitions on the real
-#: session); this knob scopes ONLY the replay harness.
-_REPLAY_PARTITIONS = int(os.environ.get("SPARK_GRAFT_REPLAY_PARTITIONS", "2"))
-
-
-@contextmanager
-def _replay_shuffle(spark: SparkSession, n: int | None = None):
-    """Replay-scoped shuffle-partition count for the streaming gate
-    queries: each trigger streams a tiny slice, so the dominant cost
-    is state-store open/commit per (trigger × partition × join side)
-    — at 32 partitions the replays pay ~4× their useful work in
-    store bookkeeping, and the round-14 re-measure showed another
-    ~2.4× on the stream-stream join gates going 8 → 2 (state is a
-    few thousand keys; two stores hold it comfortably).  Production
-    state sizing stays config-driven (spark.sql.shuffle.partitions at
-    first checkpoint write); this scopes ONLY the replay harness.
-    Values are partition-invariant, so the oracle hash is
-    unchanged."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(n if n is not None else _REPLAY_PARTITIONS),
+def _replay_stream(replay: SparkSession, src: str, schema) -> DataFrame:
+    """One micro-batch per source file, read on the replay session."""
+    return (
+        replay.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
     )
-    # The replay gates hold a few thousand state keys for ≤ 10
-    # triggers and then drop the checkpoint: the default in-memory
-    # provider is the right store for that shape (measured ~0.2 s per
-    # gate vs RocksDB's per-trigger native open/commit + changelog at
-    # sf0.1).  The SESSION default stays RocksDB (session.py) — the
-    # production choice for unbounded keyed state that outgrows the
-    # heap — and state values are provider-invariant, so the landed
-    # table hash is unchanged.  Env-overridable (r15) so the
-    # trigger-floor probe can produce RocksDB REFERENCE rows (VERDICT
-    # r14 #2): SPARK_GRAFT_REPLAY_STORE=rocksdb keeps the session
-    # default provider for the replay too.
-    if os.environ.get("SPARK_GRAFT_REPLAY_STORE", "memory") != "rocksdb":
-        spark.conf.set(
-            prov_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider",
-        )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_prov is not None:
-            spark.conf.set(prov_key, prev_prov)
-        else:
-            spark.conf.unset(prov_key)
 
 
-def _staged_interval_source(
+def _stream_replay(
     spark: SparkSession,
-    ev: DataFrame,
-    root: str,
-    n_buckets: int,
-    sentinel_offsets_ns: tuple[int, ...] = (),
-) -> str:
-    """Stage the time-ordered replay source for the stream-stream join
-    gates in TWO Spark jobs instead of ``n_buckets + len(sentinels)``
-    sequential ones (optimization r14, guide §2.4/§1):
+    name: str,
+    source: DataFrame,
+    stage: Callable[[str], str],
+    build: Callable[..., DataFrame],
+    finish: Callable[[DataFrame], DataFrame] = lambda t: t,
+    mode: str = "append",
+    static: tuple[DataFrame, ...] = (),
+) -> DataFrame:
+    """Run one streaming replay gate end to end.
 
-    - the n time-range buckets are written by ONE
-      ``repartitionByRange(n, "_b")`` job — range partition index ==
-      bucket index == output ``part-0000k`` index, so ascending part
-      order IS event-time order;
-    - each far-future sentinel pair (ids = −1, one click + one
-      purchase) is built JVM-side from ``spark.range(1)`` + explode.
-      The previous ``spark.createDataFrame([...]).coalesce(1)`` idiom
-      was pathological: the 2-row Python list parallelizes into 32
-      slices and ``coalesce(1)`` funnels all of them through ONE task
-      that cycles 32 Python workers sequentially — measured 4-5.5 s
-      PER SENTINEL vs 0.15-0.25 s for the JVM-built equivalent;
-    - the modification-time order the FileStreamSource sorts by
-      (previously implied by sequential write completion) is imposed
-      EXPLICITLY with ``os.utime`` at 2 s spacing — buckets first, then
-      sentinels in offset order.  Same file set, same per-trigger
-      arrival order, same landed table, so the oracle hash is
-      unchanged.
-    """
-    import os
+    ``stage(root)`` writes ``source``'s rows as replay files; a
+    ``maxFilesPerTrigger=1`` stream over them (on
+    ``session.replay_session``, with each ``static`` frame rebound
+    there) goes through ``build(stream, *static)`` into a memory sink
+    under ``availableNow``.  The sink table is rebound to ``spark``,
+    shaped by ``finish`` and landed as parquet, so the returned frame
+    is a clean scan of ``spark`` (the sink lineage chains back through
+    every micro-batch to the replay source, which is removed here).
+    Nothing sets conf on ``spark``."""
+    root = _gate_tmpdir(prefix=f"csp_gw_{name}_{os.getpid()}_")
+    table = f"gate_{name}_{os.getpid()}"
+    out = os.path.join(root, "state_out")
+    replay = replay_session(spark)
+    q, landed = None, False
+    try:
+        stream = _replay_stream(replay, stage(root), source.schema)
+        statics = [rebind_session(df, replay) for df in static]
+        q = (
+            build(stream, *statics)
+            .writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(table)
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        sink = rebind_session(replay.table(table), spark)
+        finish(sink).write.mode("overwrite").parquet(out)
+        landed = True
+    finally:
+        if q is not None:
+            q.stop()
+        replay.catalog.dropTempView(table)
+        _drop_replay_dirs(root, landed)
+    return spark.read.parquet(out)
+
+
+def _drop_replay_dirs(root: str, landed: bool) -> None:
+    """Remove a replay's scratch: everything but the landed
+    ``state_out`` (which the returned frame scans), or all of it when
+    the replay did not land."""
+    import shutil
+
+    if not landed:
+        shutil.rmtree(root, ignore_errors=True)
+        return
+    for d in os.listdir(root):
+        if d != "state_out":
+            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+
+
+def _time_split(ev: DataFrame, n: int, sentinels_ns: tuple[int, ...] = ()):
+    """Replay source stage for the stream-stream join gates: ``ev`` as
+    ``n`` time-range buckets whose file modification order (what the
+    FileStreamSource sorts by) is event-time order, then one sentinel
+    file per offset in ``sentinels_ns`` (one click + one purchase,
+    ids = −1, at max ts + offset).  Returns ``stage(root) -> source
+    dir``.  Two Spark jobs stage it (optimization r14):
+
+    - ONE ``repartitionByRange(n, "_b")`` job writes the buckets: range
+      partition index == bucket index == ``part-0000k`` index;
+    - each sentinel pair is built JVM-side from ``spark.range(1)`` +
+      explode (a 2-row ``createDataFrame`` list + ``coalesce(1)``
+      cycled 32 Python workers through one task: 4-5.5 s per
+      sentinel vs 0.15-0.25 s);
+    - ``os.utime`` at 2 s spacing imposes the order explicitly:
+      buckets first, then sentinels in offset order."""
     import time as _time
 
-    src_dir = os.path.join(root, "src")
-    bounds = ev.agg(F.min("ts").alias("_mn"), F.max("ts").alias("_mx")).collect()[0]
-    lo, hi = int(bounds._mn), int(bounds._mx)
-    span = max(1, hi - lo + 1)
-    (
-        ev.withColumn(
-            "_b",
-            ((F.col("ts") - F.lit(lo)) * n_buckets / F.lit(span)).cast("int"),
-        )
-        .repartitionByRange(n_buckets, "_b")
-        .drop("_b")
-        .write.mode("overwrite")
-        .parquet(src_dir)
-    )
-    files = sorted(f for f in os.listdir(src_dir) if f.startswith("part-"))
-    base = _time.time()
-    for i, f in enumerate(files):
-        t = base + 2.0 * i
-        os.utime(os.path.join(src_dir, f), (t, t))
-    for j, off in enumerate(sentinel_offsets_ns):
-        sent_dir = os.path.join(root, f"sent_{j}")
+    spark = ev.sparkSession
+
+    def stage(root: str) -> str:
+        src_dir = os.path.join(root, "src")
+        bounds = ev.agg(F.min("ts").alias("_mn"), F.max("ts").alias("_mx")).collect()[0]
+        lo, hi = int(bounds._mn), int(bounds._mx)
+        span = max(1, hi - lo + 1)
         (
-            # numPartitions=1: exactly ONE part file holding both rows
-            # (default-parallelism range scatters the row into one of 32
-            # parts and the rename below must not pick an empty one)
-            spark.range(0, 1, 1, 1)
-            .select(
-                F.lit(-1).cast("long").alias("event_id"),
-                F.lit(-1).cast("long").alias("user_id"),
-                F.explode(F.array(F.lit("click"), F.lit("purchase"))).alias(
-                    "event_type"
-                ),
-                F.lit(0.0).cast("double").alias("value"),
-                F.lit(hi + off).cast("long").alias("ts"),
+            ev.withColumn(
+                "_b", ((F.col("ts") - F.lit(lo)) * n / F.lit(span)).cast("int")
             )
+            .repartitionByRange(n, "_b")
+            .drop("_b")
             .write.mode("overwrite")
-            .parquet(sent_dir)
+            .parquet(src_dir)
         )
-        part = next(f for f in sorted(os.listdir(sent_dir)) if f.startswith("part-"))
-        dst = os.path.join(src_dir, f"sentinel-{j}-{part}")
-        os.rename(os.path.join(sent_dir, part), dst)
-        t = base + 2.0 * (len(files) + j)
-        os.utime(dst, (t, t))
-    return src_dir
+        files = sorted(f for f in os.listdir(src_dir) if f.startswith("part-"))
+        base = _time.time()
+        for i, f in enumerate(files):
+            t = base + 2.0 * i
+            os.utime(os.path.join(src_dir, f), (t, t))
+        for j, off in enumerate(sentinels_ns):
+            sent_dir = os.path.join(root, f"sent_{j}")
+            (
+                # numPartitions=1: exactly ONE part file holding both
+                # rows (default-parallelism range scatters the row into
+                # one of 32 parts and the rename below must not pick an
+                # empty one)
+                spark.range(0, 1, 1, 1)
+                .select(
+                    F.lit(-1).cast("long").alias("event_id"),
+                    F.lit(-1).cast("long").alias("user_id"),
+                    F.explode(F.array(F.lit("click"), F.lit("purchase"))).alias(
+                        "event_type"
+                    ),
+                    F.lit(0.0).cast("double").alias("value"),
+                    F.lit(hi + off).cast("long").alias("ts"),
+                )
+                .write.mode("overwrite")
+                .parquet(sent_dir)
+            )
+            part = next(f for f in sorted(os.listdir(sent_dir)) if f.startswith("part-"))
+            dst = os.path.join(src_dir, f"sentinel-{j}-{part}")
+            os.rename(os.path.join(sent_dir, part), dst)
+            t = base + 2.0 * (len(files) + j)
+            os.utime(dst, (t, t))
+        return src_dir
+
+    return stage
+
+
+def _click_purchase_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The click/purchase events the interval-join replays stream."""
+    return (
+        _t(spark, sf_dir, "events")
+        .select("event_id", "user_id", "event_type", "value", "ts")
+        .filter(F.col("event_type").isin("click", "purchase"))
+    )
+
+
+def _interval_join(stream: DataFrame, how: str) -> DataFrame:
+    """Clicks joined to the same user's purchases within
+    [click, click + 1 h], both sides under a 2-hour watermark on their
+    micros event time (bounded join state)."""
+
+    def side(ty: str, ts_name: str) -> DataFrame:
+        return (
+            stream.filter(F.col("event_type") == ty)
+            .withColumn(ts_name, F.expr("timestamp_micros(ts div 1000)"))
+            .withWatermark(ts_name, "2 hours")
+        )
+
+    clicks = side("click", "_cts").select(
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("_cu"),
+        "_cts",
+    )
+    purchases = side("purchase", "_pts").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("_pu"),
+        F.col("value").alias("_pv"),
+        "_pts",
+    )
+    return clicks.join(
+        purchases,
+        (F.col("_cu") == F.col("_pu"))
+        & (F.col("_pts") >= F.col("_cts"))
+        & (F.col("_pts") <= F.col("_cts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    )
+
+
+def _interval_join_rows(t: DataFrame) -> DataFrame:
+    """Landed attribution pairs of an interval-join replay; the
+    sentinel pair (ids = −1) is dropped."""
+    return t.filter(F.col("click_id") >= 0).select(
+        "click_id",
+        "purchase_id",
+        F.col("_cu").alias("user_id"),
+        # timestamp→long is epoch SECONDS in Spark (floored); the
+        # oracle mirrors with per-side `// 1000000` before the diff
+        (F.col("_pts").cast("long") - F.col("_cts").cast("long")).alias("lag_sec"),
+        (F.round("_pv", 6) + F.lit(0.0)).alias("purchase_value"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -489,30 +561,20 @@ def q_state_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     states MERGE incrementally through the foreachBatch upsert
     (streaming/state_stream.py) — and the final queryable state table
     must hash-equal the batch window oracle."""
-    import os
-    import shutil
-    import tempfile
-
     from csp_gateway_spark.streaming.state_stream import streaming_keyed_last
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     root = _gate_tmpdir(prefix=f"csp_gw_stream_replay_{os.getpid()}_")
-    src = os.path.join(root, "src")
-    # deterministic 8-way split -> 8 source files -> 8 engine cycles
-    ev.withColumn("_b", F.pmod(F.hash("event_id"), F.lit(8))).repartition(
-        8, "_b"
-    ).drop("_b").write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     table = f"gate_state_replay_{os.getpid()}"
-    with _replay_shuffle(spark):
+    state_out = os.path.join(root, "state_out")
+    q, landed = None, False
+    try:
+        # deterministic 8-way split -> 8 source files -> 8 engine cycles
+        src = _hash_split(ev, 8)(root)
         q = streaming_keyed_last(
-            stream,
+            _replay_stream(replay_session(spark), src, ev.schema),
             ["user_id"],
             state_table=table,
             order_by=["ts", "event_id"],
@@ -520,14 +582,18 @@ def q_state_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             trigger_available_now=True,
         )
         q.awaitTermination()
-    # land the final state in its own parquet so the returned frame is
-    # a clean scan (the global-temp lineage chains back through every
-    # micro-batch to the replay source, which is cleaned up below)
-    state_out = os.path.join(root, "state_out")
-    spark.table(f"global_temp.{table}").write.mode("overwrite").parquet(state_out)
-    spark.catalog.dropGlobalTempView(table)
-    shutil.rmtree(os.path.join(root, "src"), ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
+        # land the final state in its own parquet so the returned frame
+        # is a clean scan (the global-temp lineage chains back through
+        # every micro-batch to the replay source, removed below)
+        spark.table(f"global_temp.{table}").write.mode("overwrite").parquet(
+            state_out
+        )
+        landed = True
+    finally:
+        if q is not None:
+            q.stop()
+        spark.catalog.dropGlobalTempView(table)
+        _drop_replay_dirs(root, landed)
     return spark.read.parquet(state_out).select(
         "user_id",
         "event_id",
@@ -548,46 +614,21 @@ def q_enrich_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     running (segment × event_type) totals re-emit in COMPLETE output
     mode; the final memory-sink table must hash-equal the batch
     join+groupBy oracle."""
-    import os
-    import shutil
-
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    root = _gate_tmpdir(prefix=f"csp_gw_enrich_replay_{os.getpid()}_")
-    src = os.path.join(root, "src")
-    ev.withColumn("_b", F.pmod(F.hash("event_id"), F.lit(8))).repartition(
-        8, "_b"
-    ).drop("_b").write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    enriched = stream.join(
-        F.broadcast(cust), stream["user_id"] == cust["c_custkey"]
-    )
-    agg = enriched.groupBy("c_mktsegment", "event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
-    )
-    table = f"gate_enrich_replay_{os.getpid()}"
-    with _replay_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+
+    def build(stream, cust):
+        enriched = stream.join(
+            F.broadcast(cust), stream["user_id"] == cust["c_custkey"]
         )
-        q.awaitTermination()
-    out = os.path.join(root, "out")
-    spark.table(table).write.mode("overwrite").parquet(out)
-    spark.catalog.dropTempView(table)
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(out).select(
-        "c_mktsegment", "event_type", "n", "sum_value"
+        return enriched.groupBy("c_mktsegment", "event_type").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
+        )
+
+    return _stream_replay(
+        spark, "enrich_replay", ev, _hash_split(ev, 8), build,
+        mode="complete", static=(cust,),
     ).orderBy("c_mktsegment", "event_type")
 
 
@@ -1487,8 +1528,6 @@ SELECT event_id, user_id AS "meta.user_id", event_type AS "meta.event_type" FROM
 # ---------------------------------------------------------------------------
 
 def q_replay_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from csp_gateway_spark.sources.replay import read_changelog, replay_channel, write_changelog
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
@@ -1521,10 +1560,7 @@ def q_replay_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     run — per-type count / exact value sum / ts range hash-equal to
     the direct batch aggregate over events (nothing duplicated at the
     seam, nothing dropped)."""
-    import datetime as _dt
-    import os
     import shutil
-    import tempfile
 
     from csp_gateway_spark.catalog import ChannelCatalog
     from csp_gateway_spark.sources.engine_replay import EngineReplay, ReadWriteMode
@@ -4968,56 +5004,29 @@ def q_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     `F.window(1 hour)` groupBy with an incremental state store,
     outputMode(complete) into a memory sink — whose final table must
     hash-equal the batch tumbling SQL."""
-    import os
-    import shutil
-    import tempfile
-
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    root = _gate_tmpdir(prefix=f"csp_gw_wstream_{os.getpid()}_")
-    src_dir = os.path.join(root, "src")
-    ev.withColumn("_b", F.pmod(F.hash("event_id"), F.lit(6))).repartition(
-        6, "_b"
-    ).drop("_b").write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    agg = (
-        stream.withColumn("_ets", F.expr("timestamp_micros(ts div 1000)"))
-        .groupBy(F.window("_ets", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
+
+    def build(stream):
+        return (
+            stream.withColumn("_ets", F.expr("timestamp_micros(ts div 1000)"))
+            .groupBy(F.window("_ets", "1 hour"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
+            )
         )
-    )
-    table = f"gate_wstream_{os.getpid()}"
-    with _replay_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = (
-        spark.table(table)
-        .select(
+
+    def finish(t):
+        return t.select(
             F.col("window.start").cast("long").alias("bucket_start"),
             "event_type",
             "n",
             "sum_value",
-        )
-        .orderBy("bucket_start", "event_type")
-    )
-    # memory sink rows live on the driver: the replay dirs can go now
-    state_out = os.path.join(root, "state_out")
-    out.write.mode("overwrite").parquet(state_out)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(state_out).orderBy("bucket_start", "event_type")
+        ).orderBy("bucket_start", "event_type")
+
+    return _stream_replay(
+        spark, "wstream", ev, _hash_split(ev, 6), build, finish, mode="complete"
+    ).orderBy("bucket_start", "event_type")
 
 
 ORACLE_WINDOW_STREAM_REPLAY = """
@@ -5033,46 +5042,23 @@ def q_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-store dedup — with each first-seen row appended to a memory
     sink; per-source unique counts over the landed table must equal
     the batch COUNT(DISTINCT) oracle."""
-    import os
-    import shutil
-    import tempfile
-
     docs = _ts(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    root = _gate_tmpdir(prefix=f"csp_gw_dstream_{os.getpid()}_")
-    src_dir = os.path.join(root, "src")
-    docs.withColumn("_b", F.pmod(F.hash("doc_id"), F.lit(4))).repartition(
-        4, "_b"
-    ).drop("_b").write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    deduped = stream.select(
-        "source", F.md5(F.col("text")).alias("_h")
-    ).dropDuplicates(["source", "_h"])
-    table = f"gate_dstream_{os.getpid()}"
-    with _replay_shuffle(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+
+    def build(stream):
+        return stream.select(
+            "source", F.md5(F.col("text")).alias("_h")
+        ).dropDuplicates(["source", "_h"])
+
+    def finish(t):
+        return (
+            t.groupBy("source")
+            .agg(F.count(F.lit(1)).alias("n_unique"))
+            .orderBy("source")
         )
-        q.awaitTermination()
-    out = (
-        spark.table(table)
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_unique"))
-        .orderBy("source")
-    )
-    state_out = os.path.join(root, "state_out")
-    out.write.mode("overwrite").parquet(state_out)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(state_out).orderBy("source")
+
+    return _stream_replay(
+        spark, "dstream", docs, _hash_split(docs, 4, "doc_id"), build, finish
+    ).orderBy("source")
 
 
 ORACLE_DEDUP_STREAM_REPLAY = """
@@ -5089,56 +5075,30 @@ def q_session_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     as late micro-batches bridge gaps, outputMode(complete) into a
     memory sink — whose final table must hash-equal the batch
     gaps-and-islands SQL."""
-    import os
-    import shutil
-    import tempfile
-
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    root = _gate_tmpdir(prefix=f"csp_gw_sstream_{os.getpid()}_")
-    src_dir = os.path.join(root, "src")
-    ev.withColumn("_b", F.pmod(F.hash("event_id"), F.lit(6))).repartition(
-        6, "_b"
-    ).drop("_b").write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    agg = (
-        stream.withColumn("_ets", F.expr("timestamp_micros(ts div 1000)"))
-        .groupBy(F.session_window("_ets", "30 minutes"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
+
+    def build(stream):
+        return (
+            stream.withColumn("_ets", F.expr("timestamp_micros(ts div 1000)"))
+            .groupBy(F.session_window("_ets", "30 minutes"), "user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
+            )
         )
-    )
-    table = f"gate_sstream_{os.getpid()}"
-    with _replay_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = (
-        spark.table(table)
-        .select(
+
+    def finish(t):
+        return t.select(
             F.col("session_window.start").cast("long").alias("session_start"),
             F.col("session_window.end").cast("long").alias("session_end"),
             "user_id",
             "n",
             "sum_value",
-        )
-        .orderBy("user_id", "session_start")
-    )
-    state_out = os.path.join(root, "state_out")
-    out.write.mode("overwrite").parquet(state_out)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(state_out).orderBy("user_id", "session_start")
+        ).orderBy("user_id", "session_start")
+
+    return _stream_replay(
+        spark, "sstream", ev, _hash_split(ev, 6), build, finish, mode="complete"
+    ).orderBy("user_id", "session_start")
 
 
 ORACLE_SESSION_STREAM_REPLAY = """
@@ -9680,8 +9640,8 @@ def _oracle_correlation_matrix() -> str:
 
 def q_join_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING stream-stream interval join on the oracle gate:
-    click and purchase events replay as two file streams over a
-    TIME-ORDERED 6-file split (range-bucketed on ts, written in
+    click and purchase events replay as the two sides of one file
+    stream over a TIME-ORDERED 6-file split (range-bucketed on ts, written in
     order, `maxFilesPerTrigger=1` → monotone watermark), inner-joined
     on user within [click, click + 1 h] under REAL 2-hour watermarks
     on both sides (bounded join state — the production shape, unlike
@@ -9689,71 +9649,15 @@ def q_join_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed attribution pairs must hash-equal the batch self-join
     oracle.  Timestamps run at micros (ns div 1000 — mirrored by the
     oracle's `// 1000`)."""
-    import os
-    import shutil
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value", "ts"
-    ).filter(F.col("event_type").isin("click", "purchase"))
-    root = _gate_tmpdir(prefix=f"csp_gw_jstream_{os.getpid()}_")
-    # time-range buckets with modification-time order == event-time
-    # order (one staging job; see _staged_interval_source)
-    src_dir = _staged_interval_source(spark, ev, root, n_buckets=6)
-    schema = ev.schema
-
-    def side(ty: str, ts_name: str):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-            .filter(F.col("event_type") == ty)
-            .withColumn(ts_name, F.expr("timestamp_micros(ts div 1000)"))
-            .withWatermark(ts_name, "2 hours")
-        )
-
-    clicks = side("click", "_cts").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("_cu"),
-        "_cts",
-    )
-    purchases = side("purchase", "_pts").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("_pu"),
-        F.col("value").alias("_pv"),
-        "_pts",
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("_cu") == F.col("_pu"))
-        & (F.col("_pts") >= F.col("_cts"))
-        & (F.col("_pts") <= F.col("_cts") + F.expr("INTERVAL 1 HOUR")),
-        "inner",
-    )
-    table = f"gate_jstream_{os.getpid()}"
-    with _replay_shuffle(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(table).select(
-        "click_id",
-        "purchase_id",
-        F.col("_cu").alias("user_id"),
-        # timestamp→long is epoch SECONDS in Spark (floored); the
-        # oracle mirrors with per-side `// 1000000` before the diff
-        (F.col("_pts").cast("long") - F.col("_cts").cast("long")).alias("lag_sec"),
-        (F.round("_pv", 6) + F.lit(0.0)).alias("purchase_value"),
-    )
-    state_out = os.path.join(root, "state_out")
-    out.write.mode("overwrite").parquet(state_out)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(state_out).orderBy("click_id", "purchase_id")
+    ev = _click_purchase_events(spark, sf_dir)
+    return _stream_replay(
+        spark,
+        "jstream",
+        ev,
+        _time_split(ev, 6),
+        lambda stream: _interval_join(stream, "inner"),
+        _interval_join_rows,
+    ).orderBy("click_id", "purchase_id")
 
 
 ORACLE_JOIN_STREAM_REPLAY = """
@@ -9796,76 +9700,20 @@ def q_outer_join_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase still surfaces on its channel (csp_gateway/server/
     gateway/csp/channels.py ts wiring); this gate is that
     keep-the-unmatched-side semantics replayed event-time-complete."""
-    import os
-    import shutil
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value", "ts"
-    ).filter(F.col("event_type").isin("click", "purchase"))
-    root = _gate_tmpdir(prefix=f"csp_gw_ojstream_{os.getpid()}_")
+    ev = _click_purchase_events(spark, sf_dir)
     # sentinel file LAST in modification order: one click + one
     # purchase 4 h past the real maximum, so after the final trigger
     # both sides' watermarks (2 h delay) sit 2 h past max_ts — beyond
     # every real click's window end (max_ts + 1 h) — and the no-data
-    # flush batch emits every remaining unmatched click.  Staged in
-    # two jobs (see _staged_interval_source).
-    src_dir = _staged_interval_source(
-        spark, ev, root, n_buckets=6,
-        sentinel_offsets_ns=(4 * 3600 * 1_000_000_000,),
-    )
-    schema = ev.schema
-
-    def side(ty: str, ts_name: str):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-            .filter(F.col("event_type") == ty)
-            .withColumn(ts_name, F.expr("timestamp_micros(ts div 1000)"))
-            .withWatermark(ts_name, "2 hours")
-        )
-
-    clicks = side("click", "_cts").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("_cu"),
-        "_cts",
-    )
-    purchases = side("purchase", "_pts").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("_pu"),
-        F.col("value").alias("_pv"),
-        "_pts",
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("_cu") == F.col("_pu"))
-        & (F.col("_pts") >= F.col("_cts"))
-        & (F.col("_pts") <= F.col("_cts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    )
-    table = f"gate_ojstream_{os.getpid()}"
-    with _replay_shuffle(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(table).filter(F.col("click_id") >= 0).select(
-        "click_id",
-        "purchase_id",
-        F.col("_cu").alias("user_id"),
-        (F.col("_pts").cast("long") - F.col("_cts").cast("long")).alias("lag_sec"),
-        (F.round("_pv", 6) + F.lit(0.0)).alias("purchase_value"),
-    )
-    state_out = os.path.join(root, "state_out")
-    out.write.mode("overwrite").parquet(state_out)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(state_out).orderBy("click_id", "purchase_id")
+    # flush batch emits every remaining unmatched click.
+    return _stream_replay(
+        spark,
+        "ojstream",
+        ev,
+        _time_split(ev, 6, sentinels_ns=(4 * 3600 * 1_000_000_000,)),
+        lambda stream: _interval_join(stream, "left_outer"),
+        _interval_join_rows,
+    ).orderBy("click_id", "purchase_id")
 
 
 ORACLE_OUTER_JOIN_STREAM_REPLAY = """
@@ -9905,13 +9753,7 @@ def q_join_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference channel graph freely chains
     stateful nodes (csp_gateway/server/gateway/csp/channels.py) —
     this gate is that composition replayed event-time-complete."""
-    import os
-    import shutil
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value", "ts"
-    ).filter(F.col("event_type").isin("click", "purchase"))
-    root = _gate_tmpdir(prefix=f"csp_gw_jwstream_{os.getpid()}_")
+    ev = _click_purchase_events(spark, sf_dir)
     # 3 time-ordered buckets (not 6): per trigger this replay pays
     # FIVE state-store commits per partition (4 join stores + 1 agg
     # store), so batches are the dominant cost; three real triggers +
@@ -9932,94 +9774,44 @@ def q_join_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sentinel₃'s batch finally EXECUTES with watermark ≥ sentinel₁
     # − 2 h > every real window end.  Sentinel self-pairs land in
     # their own far-future windows and are filtered post-sink.
-    # Staged in two jobs (see _staged_interval_source).
     _DAY_NS = 24 * 3600 * 1_000_000_000
-    src_dir = _staged_interval_source(
-        spark, ev, root, n_buckets=3,
-        sentinel_offsets_ns=(3 * _DAY_NS, 6 * _DAY_NS, 9 * _DAY_NS),
-    )
-    schema = ev.schema
 
-    def side(ty: str, ts_name: str):
+    def build(stream):
+        # NO sentinel predicate inside the join: a deterministic
+        # single-sided filter is pushed BELOW the EventTimeWatermark
+        # node, so the sentinel rows would never reach the watermark
+        # collector and the windows would never close (measured:
+        # watermark frozen at real_max − 2 h with the predicate in
+        # place).  Sentinel self-pairs flow through and are dropped
+        # POST-SINK, the outer gate's idiom.
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-            .filter(F.col("event_type") == ty)
-            .withColumn(ts_name, F.expr("timestamp_micros(ts div 1000)"))
-            .withWatermark(ts_name, "2 hours")
+            _interval_join(stream, "inner")
+            .groupBy(
+                F.window("_cts", "1 day").alias("_w"),
+                F.col("_cu").alias("user_id"),
+            )
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_pairs"),
+                F.sum("_pv").alias("_sv"),
+            )
         )
 
-    clicks = side("click", "_cts").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("_cu"),
-        "_cts",
-    )
-    purchases = side("purchase", "_pts").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("_pu"),
-        F.col("value").alias("_pv"),
-        "_pts",
-    )
-    # NO sentinel predicate inside the join: a deterministic
-    # single-sided filter is pushed BELOW the EventTimeWatermark node,
-    # so the sentinel rows would never reach the watermark collector
-    # and the windows would never close (measured: watermark frozen at
-    # real_max − 2 h with the predicate in place).  Sentinel self-pairs
-    # flow through and are dropped POST-SINK, the outer gate's idiom.
-    joined = clicks.join(
-        purchases,
-        (F.col("_cu") == F.col("_pu"))
-        & (F.col("_pts") >= F.col("_cts"))
-        & (F.col("_pts") <= F.col("_cts") + F.expr("INTERVAL 1 HOUR")),
-        "inner",
-    )
-    agg = (
-        joined.groupBy(
-            F.window("_cts", "1 day").alias("_w"),
-            F.col("_cu").alias("user_id"),
+    def finish(t):
+        return t.filter(F.col("user_id") >= 0).select(
+            F.col("_w.start").cast("long").alias("window_start"),
+            "user_id",
+            "n_pairs",
+            (F.round("_sv", 6) + F.lit(0.0)).alias("purchase_sum"),
         )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            F.sum("_pv").alias("_sv"),
-        )
-    )
-    table = f"gate_jwstream_{os.getpid()}"
-    prev_multi = spark.conf.get(
-        "spark.sql.streaming.statefulOperator.allowMultipleStatefulOperators",
-        "false",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.statefulOperator.allowMultipleStatefulOperators",
-        "true",
-    )
-    try:
-        with _replay_shuffle(spark, n=2):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(table)
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set(
-            "spark.sql.streaming.statefulOperator.allowMultipleStatefulOperators",
-            prev_multi,
-        )
-    out = spark.table(table).filter(F.col("user_id") >= 0).select(
-        F.col("_w.start").cast("long").alias("window_start"),
-        "user_id",
-        "n_pairs",
-        (F.round("_sv", 6) + F.lit(0.0)).alias("purchase_sum"),
-    )
-    state_out = os.path.join(root, "state_out")
-    out.write.mode("overwrite").parquet(state_out)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(state_out).orderBy("window_start", "user_id")
+
+    return _stream_replay(
+        spark,
+        "jwstream",
+        ev,
+        _time_split(ev, 3, sentinels_ns=(3 * _DAY_NS, 6 * _DAY_NS, 9 * _DAY_NS)),
+        build,
+        finish,
+    ).orderBy("window_start", "user_id")
 
 
 ORACLE_JOIN_WINDOW_STREAM_REPLAY = """
@@ -12371,57 +12163,31 @@ def q_argmax_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode memory sink; hash-equal to the batch row_number
     oracle.  max/max_by are order-independent aggregates, so the
     replay is engine-exact with no decimal detour."""
-    import os
-    import shutil
-    import tempfile
-
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    root = _gate_tmpdir(prefix=f"csp_gw_astream_{os.getpid()}_")
-    src_dir = os.path.join(root, "src")
-    ev.withColumn("_b", F.pmod(F.hash("event_id"), F.lit(6))).repartition(
-        6, "_b"
-    ).drop("_b").write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    agg = (
-        stream.withColumn("_ets", F.expr("timestamp_micros(ts div 1000)"))
-        .groupBy(F.window("_ets", "1 hour"), "event_type")
-        .agg(
-            F.max("value").alias("max_value"),
-            F.max_by(
-                "event_id", F.struct(F.col("value"), F.col("event_id"))
-            ).alias("max_event_id"),
+
+    def build(stream):
+        return (
+            stream.withColumn("_ets", F.expr("timestamp_micros(ts div 1000)"))
+            .groupBy(F.window("_ets", "1 hour"), "event_type")
+            .agg(
+                F.max("value").alias("max_value"),
+                F.max_by(
+                    "event_id", F.struct(F.col("value"), F.col("event_id"))
+                ).alias("max_event_id"),
+            )
         )
-    )
-    table = f"gate_astream_{os.getpid()}"
-    with _replay_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = (
-        spark.table(table)
-        .select(
+
+    def finish(t):
+        return t.select(
             F.col("window.start").cast("long").alias("bucket_start"),
             "event_type",
             "max_value",
             "max_event_id",
-        )
-        .orderBy("bucket_start", "event_type")
-    )
-    state_out = os.path.join(root, "state_out")
-    out.write.mode("overwrite").parquet(state_out)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(state_out).orderBy("bucket_start", "event_type")
+        ).orderBy("bucket_start", "event_type")
+
+    return _stream_replay(
+        spark, "astream", ev, _hash_split(ev, 6), build, finish, mode="complete"
+    ).orderBy("bucket_start", "event_type")
 
 
 ORACLE_ARGMAX_STREAM_REPLAY = """
@@ -14835,60 +14601,38 @@ def q_topk_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (seen == the key's total) — deterministic because the merge
     order is (value, id) descending regardless of trigger slicing —
     and hash-checks it against the batch row_number oracle."""
-    import os
-    import shutil
-
     from csp_gateway_spark.streaming.stateful import apply_stateful, make_topk_hook
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    root = _gate_tmpdir(prefix=f"csp_gw_tkstream_{os.getpid()}_")
-    src_dir = os.path.join(root, "src")
-    ev.withColumn("_b", F.pmod(F.hash("event_id"), F.lit(6))).repartition(
-        6, "_b"
-    ).drop("_b").write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    boards = apply_stateful(
-        stream,
-        keys=["event_type"],
-        func=make_topk_hook(k=3),
-        state_schema="seen bigint, vs array<double>, ids array<bigint>",
-        output_schema="key string, rank int, value double, id bigint, seen bigint",
-    )
-    table = f"gate_tkstream_{os.getpid()}"
-    with _replay_shuffle(spark):
-        q = (
-            boards.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+
+    def build(stream):
+        return apply_stateful(
+            stream,
+            keys=["event_type"],
+            func=make_topk_hook(k=3),
+            state_schema="seen bigint, vs array<double>, ids array<bigint>",
+            output_schema="key string, rank int, value double, id bigint, seen bigint",
         )
-        q.awaitTermination()
-    totals = ev.groupBy(F.col("event_type").alias("key")).agg(
-        F.count(F.lit(1)).alias("_tot")
-    )
-    out = (
-        spark.table(table)
-        .join(F.broadcast(totals), "key")
-        .filter(F.col("seen") == F.col("_tot"))
-        .select(
-            F.col("key").alias("event_type"),
-            F.col("rank").cast("long").alias("rank"),
-            "value",
-            F.col("id").alias("event_id"),
+
+    def finish(t):
+        totals = ev.groupBy(F.col("event_type").alias("key")).agg(
+            F.count(F.lit(1)).alias("_tot")
         )
-        .orderBy("event_type", "rank")
-    )
-    state_out = os.path.join(root, "state_out")
-    out.write.mode("overwrite").parquet(state_out)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "ckpt"), ignore_errors=True)
-    return spark.read.parquet(state_out).orderBy("event_type", "rank")
+        return (
+            t.join(F.broadcast(totals), "key")
+            .filter(F.col("seen") == F.col("_tot"))
+            .select(
+                F.col("key").alias("event_type"),
+                F.col("rank").cast("long").alias("rank"),
+                "value",
+                F.col("id").alias("event_id"),
+            )
+            .orderBy("event_type", "rank")
+        )
+
+    return _stream_replay(
+        spark, "tkstream", ev, _hash_split(ev, 6), build, finish
+    ).orderBy("event_type", "rank")
 
 
 ORACLE_TOPK_STREAM_REPLAY = """

@@ -25,7 +25,7 @@ from __future__ import annotations
 import datetime
 import json
 import threading
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, List, Optional, Union
 
 from pyspark.sql import Row
 
@@ -71,6 +71,20 @@ class ApiError(Exception):
         super().__init__(detail)
         self.status = status
         self.detail = detail
+
+
+def parse_limit(limit: Optional[Union[int, str]]) -> Optional[int]:
+    """The ``limit`` param of `/state` and the Perspective routes: None,
+    or a non-negative integer (anything else is a 422)."""
+    if limit is None:
+        return None
+    try:
+        lim = int(limit)
+    except (TypeError, ValueError):
+        raise ApiError(422, f"limit must be an integer, got {limit!r}") from None
+    if lim < 0:
+        raise ApiError(422, f"limit must be >= 0, got {lim}")
+    return lim
 
 
 def _user_raised_detail(e: Exception):
@@ -182,20 +196,6 @@ class GatewayApi:
             auth = ApiKeyAuth(self.api_keys)
         self.auth = auth
 
-    def check_api_key(self, supplied: Optional[str]) -> None:
-        import hmac
-
-        # compare UTF-8 bytes: compare_digest on str raises TypeError
-        # for non-ASCII input, turning a clean 401 into a 500
-        if self.api_keys and not (
-            supplied
-            and any(
-                hmac.compare_digest(supplied.encode("utf-8"), k.encode("utf-8"))
-                for k in self.api_keys
-            )
-        ):
-            raise ApiError(401, "invalid or missing API key")
-
     def check_request(
         self,
         headers: Optional[Dict[str, str]] = None,
@@ -299,15 +299,14 @@ class GatewayApi:
         channel: str,
         query_json: Optional[str] = None,
         key: Optional[str] = None,
-        limit: Optional[int] = None,
+        limit: Optional[Union[int, str]] = None,
     ) -> List[dict]:
         self._channel_or_404(channel)
         try:
             query = parse_query(query_json)
         except Exception as e:  # noqa: BLE001
             raise ApiError(422, f"bad query param: {e}") from e
-        if limit is not None and limit < 0:
-            raise ApiError(422, f"limit must be >= 0, got {limit}")
+        limit = parse_limit(limit)
         rows = self._collect_or_404(
             channel,
             lambda: self._plan_filters(channel, self.catalog.query(channel, query), key=key, limit=limit),
@@ -580,7 +579,9 @@ class GatewayApi:
             self.default_layout = next(iter(self.layouts), None)
         return {"status": "ok", "name": name}
 
-    def perspective_arrow(self, channel: str, limit: Optional[int] = None) -> bytes:
+    def perspective_arrow(
+        self, channel: str, limit: Optional[Union[int, str]] = None
+    ) -> bytes:
         """State snapshot as an Arrow IPC stream (reference wire format:
         `perspective.py:71-100` builds pyarrow Tables and ships record
         batches to the Perspective client).  Row-level auth applies the
@@ -590,7 +591,7 @@ class GatewayApi:
         import pyarrow as pa
 
         self._channel_or_404(channel)
-        lim = None if limit is None else int(limit)
+        lim = parse_limit(limit)
         rows = self._collect_or_404(
             channel,
             lambda: self._plan_filters(channel, self.catalog.query(channel, None), limit=lim),
@@ -603,7 +604,7 @@ class GatewayApi:
 
     def perspective_view_compute(
         self, channel: str, config: Optional[Dict[str, Any]] = None,
-        limit: Optional[int] = None,
+        limit: Optional[Union[int, str]] = None,
     ) -> List[Dict[str, Any]]:
         """Server-side ViewConfig materialization over the table's
         state (reference `perspective.py:133-142` view configs run in
@@ -615,6 +616,7 @@ class GatewayApi:
         from csp_gateway_spark.operators.pivot import _AGGS, ViewConfig, perspective_view
 
         self._channel_or_404(channel)
+        lim = parse_limit(limit)
         try:
             cfg = ViewConfig(**(config or {}))
         except Exception as e:  # noqa: BLE001 — pydantic validation
@@ -674,7 +676,7 @@ class GatewayApi:
                         f"unknown column {c!r}; available columns: "
                         f"{sorted(known)}",
                     )
-        lim = 1000 if limit is None else int(limit)
+        lim = 1000 if lim is None else lim
         rows = self._collect_or_404(
             channel,
             lambda: perspective_view(
@@ -1209,15 +1211,6 @@ class GatewayHttpServer:
                 self.end_headers()
                 self.wfile.write(data)
 
-            def _api_key(self, qs) -> Optional[str]:
-                supplied = self.headers.get("X-API-Key") or qs.get("token", [None])[0]
-                if not supplied:
-                    cookie = self.headers.get("Cookie", "")
-                    for part in cookie.split(";"):
-                        if part.strip().startswith("token="):
-                            supplied = part.strip()[len("token="):]
-                return supplied
-
             def _req_ctx(self, qs):
                 from csp_gateway_spark.serving.auth import _cookie_dict
 
@@ -1303,11 +1296,7 @@ class GatewayHttpServer:
                         return self._reply(200, outer.api.last(rest[1], *rest[2:]))
                     if method == "GET" and rest[0] == "state" and len(rest) in (2, 3):
                         q = qs.get("query", [None])[0]
-                        lim_s = qs.get("limit", [None])[0]
-                        try:
-                            lim = int(lim_s) if lim_s is not None else None
-                        except ValueError:
-                            raise ApiError(422, f"limit must be an integer, got {lim_s!r}")
+                        lim = qs.get("limit", [None])[0]
                         return self._reply(200, outer.api.state(rest[1], q, *rest[2:], limit=lim))
                     if method == "GET" and rest == ["lookup"]:
                         return self._reply(200, outer.api.lookup_channels())
@@ -1368,7 +1357,7 @@ class GatewayHttpServer:
                         return self._reply(200, outer.api.perspective_layout_delete(rest[2]))
                     if method == "GET" and rest[:2] == ["perspective", "arrow"] and len(rest) == 3:
                         lim = qs.get("limit", [None])[0]
-                        data = outer.api.perspective_arrow(rest[2], int(lim) if lim else None)
+                        data = outer.api.perspective_arrow(rest[2], lim)
                         self.send_response(200)
                         self.send_header("Content-Type", "application/vnd.apache.arrow.stream")
                         self.send_header("Content-Length", str(len(data)))
@@ -1384,9 +1373,7 @@ class GatewayHttpServer:
                         lim = qs.get("limit", [None])[0]
                         return self._reply(
                             200,
-                            outer.api.perspective_view_compute(
-                                rest[2], payload, int(lim) if lim else None
-                            ),
+                            outer.api.perspective_view_compute(rest[2], payload, lim),
                         )
                     if method == "GET" and rest == ["perspective", "ui"]:
                         return self._reply_html(outer.api.perspective_ui_html())

@@ -21,28 +21,41 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-# --- bounded-finalize session ------------------------------------------------
-# The rank/ECDF/bootstrap family materializes BOUNDED results (one row /
-# a handful of rows) with AQE off: every stage is collapse-bounded with
-# known sizes, so per-stage runtime re-planning buys nothing and was
-# measured at up to half the operator wall clock on local[32].  Mutating
-# `spark.sql.adaptive.enabled` on the SHARED session for the scope of the
-# job is a concurrency race (a concurrent request plans with AQE silently
-# off; two overlapping scopes clobber each other's restore value), so the
-# bounded jobs run on a dedicated `newSession()` clone instead: same
-# SparkContext, same RDD/block state, same *global temp* view namespace,
-# its own SQLConf with AQE pre-disabled once at creation and never
-# mutated again.  DataFrames cross the session boundary through the
-# shared global-temp-view catalog (classic mode resolves `spark.table()`
+# --- session clones ----------------------------------------------------------
+# Two job families need conf that differs from the caller's session:
+#
+# - bounded finalize: the rank/ECDF/bootstrap family materializes BOUNDED
+#   results (one row / a handful of rows) with AQE off: every stage is
+#   collapse-bounded with known sizes, so per-stage runtime re-planning
+#   buys nothing and was measured at up to half the operator wall clock
+#   on local[32];
+# - streaming replay: each replay trigger streams a tiny slice, so the
+#   cost is state-store open/commit per (trigger x partition x join
+#   side).  Two shuffle partitions (measured ~2.4x faster than 8 on the
+#   stream-stream join replays at sf0.1) and the in-memory HDFS-backed
+#   provider (a few thousand keys for <= 10 triggers, then the checkpoint
+#   is dropped; ~0.2 s per gate cheaper than RocksDB's native
+#   open/commit) fit that shape.  The session default stays RocksDB, the
+#   production choice for unbounded keyed state.  State values are
+#   partition- and provider-invariant, so landed tables are unchanged.
+#
+# Mutating conf on the SHARED session for the scope of a job is a
+# concurrency race (a concurrent request plans under the wrong conf; two
+# overlapping scopes clobber each other's restore value), so each family
+# runs on a dedicated `newSession()` clone instead: same SparkContext,
+# same RDD/block state, same *global temp* view namespace, its own
+# SQLConf with the overlay set once at creation and never mutated again.
+# DataFrames cross the session boundary through the shared
+# global-temp-view catalog (classic mode resolves `spark.table()`
 # eagerly, so the short-lived view can be dropped immediately).
 
-_BOUNDED_SESSIONS: dict = {}
-_BOUNDED_LOCK = threading.Lock()
+_CLONES: dict = {}
+_CLONES_LOCK = threading.Lock()
 
-# runtime confs the clone inherits from its parent at creation so its
-# plans differ ONLY in AQE (`newSession()` starts from the builder conf,
-# not the parent's runtime conf)
-_BOUNDED_INHERIT = (
+# runtime confs a clone inherits from its parent at creation so its
+# plans differ ONLY in its overlay (`newSession()` starts from the
+# builder conf, not the parent's runtime conf)
+_CLONE_INHERIT = (
     "spark.sql.shuffle.partitions",
     "spark.sql.session.timeZone",
     "spark.sql.legacy.parquet.nanosAsLong",
@@ -50,26 +63,58 @@ _BOUNDED_INHERIT = (
     "spark.sql.execution.arrow.pyspark.enabled",
 )
 
+_BOUNDED_OVERLAY = (("spark.sql.adaptive.enabled", "false"),)
 
-def bounded_session(sess: SparkSession) -> SparkSession:
-    """The AQE-off `newSession()` clone for ``sess``'s SparkContext
-    (memoized per context; idempotent when handed a clone itself)."""
-    with _BOUNDED_LOCK:
-        for bs in _BOUNDED_SESSIONS.values():
-            if bs is sess:
+_REPLAY_OVERLAY = (
+    ("spark.sql.shuffle.partitions", "2"),
+    (
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    ),
+)
+
+
+def _clone(sess: SparkSession, overlay: tuple) -> SparkSession:
+    """The ``overlay`` clone for ``sess``'s SparkContext (memoized per
+    context and overlay; idempotent when handed that clone itself)."""
+    with _CLONES_LOCK:
+        for (_, ov), cs in _CLONES.items():
+            if ov is overlay and cs is sess:
                 return sess
         sc = sess.sparkContext
-        key = (sc.applicationId, sc.startTime)
-        bs = _BOUNDED_SESSIONS.get(key)
-        if bs is None:
-            bs = sess.newSession()
-            for k in _BOUNDED_INHERIT:
+        key = ((sc.applicationId, sc.startTime), overlay)
+        cs = _CLONES.get(key)
+        if cs is None:
+            cs = sess.newSession()
+            for k in _CLONE_INHERIT:
                 v = sess.conf.get(k, None)
                 if v is not None:
-                    bs.conf.set(k, v)
-            bs.conf.set("spark.sql.adaptive.enabled", "false")
-            _BOUNDED_SESSIONS[key] = bs
-        return bs
+                    cs.conf.set(k, v)
+            for k, v in overlay:
+                cs.conf.set(k, v)
+            _CLONES[key] = cs
+        return cs
+
+
+def bounded_session(sess: SparkSession) -> SparkSession:
+    """The AQE-off clone for ``sess``'s SparkContext."""
+    return _clone(sess, _BOUNDED_OVERLAY)
+
+
+def replay_session(sess: SparkSession) -> SparkSession:
+    """The streaming-replay clone for ``sess``'s SparkContext (two
+    shuffle partitions, HDFS-backed state store).  Streaming listeners
+    are per session, so every listener registered on ``sess`` is also
+    added to the clone: queries started there report their progress to
+    the listeners of each session that asked for the clone."""
+    rs = _clone(sess, _REPLAY_OVERLAY)
+    if rs is not sess:
+        with _CLONES_LOCK:
+            have = list(rs._jsparkSession.streams().listListeners())
+            for lis in sess._jsparkSession.streams().listListeners():
+                if lis not in have:
+                    rs._jsparkSession.streams().addListener(lis)
+    return rs
 
 
 def rebind_session(df, target: SparkSession):
@@ -190,13 +235,22 @@ def normalize_event_ts(df, col: str = "ts"):
     return df
 
 
+_READ_CONFS = (
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+)
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one driver parquet table with ``events.ts`` as epoch-ns long.
     The confs go on THIS session, which may be built elsewhere (the
     driver's harness does): ``nanosAsLong`` reads TIMESTAMP(NANOS) as
-    the long, UTC keeps ``normalize_event_ts``'s MICROS path stable."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    the long, UTC keeps ``normalize_event_ts``'s MICROS path stable.
+    A session that already carries them (``get_spark`` sets both) is
+    left untouched."""
+    for k, v in _READ_CONFS:
+        if spark.conf.get(k, None) != v:
+            spark.conf.set(k, v)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     return normalize_event_ts(df) if name == "events" else df
 

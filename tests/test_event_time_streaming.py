@@ -5,8 +5,11 @@ and a too-late row is dropped by the engine."""
 import json
 
 import pyspark.sql.functions as F
+import pytest
 
+import __spark_entry__ as entry
 from csp_gateway_spark.streaming.event_time import windowed_counts
+from tools.check import compare, duck_connect
 
 
 def _drop(src, name, rows):
@@ -493,46 +496,17 @@ def test_streaming_lsh_on_documents_with_foreachbatch_verify(spark, sf_dir, tmp_
         q.stop()
 
 
-def test_join_stream_replay_matches_batch(spark):
-    """The stream-stream interval join replay (4th streaming gate
-    shape) must land exactly the batch join's pairs — across multiple
-    micro-batches and with real watermarks on both sides."""
-    import __spark_entry__ as entry
-    from pyspark.sql import functions as F
+REPLAY_GATES = [
+    g for g in entry.GATES if g.endswith("_stream_replay") or g == "replay_handoff"
+]
 
-    sf_dir = "/root/testdata/sf0.001"
-    got = entry.q_join_stream_replay(spark, sf_dir)
-    ev = entry._t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value", "ts"
-    )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("u"),
-        F.expr("ts div 1000").alias("cus"),
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("pu"),
-        F.col("value").alias("pv"),
-        F.expr("ts div 1000").alias("pus"),
-    )
-    want = (
-        c.join(
-            p,
-            (F.col("u") == F.col("pu"))
-            & (F.col("pus") >= F.col("cus"))
-            & (F.col("pus") <= F.col("cus") + F.lit(3_600_000_000)),
-        )
-        .select(
-            "click_id",
-            "purchase_id",
-            F.col("u").alias("user_id"),
-            (
-                F.expr("pus div 1000000") - F.expr("cus div 1000000")
-            ).alias("lag_sec"),
-            (F.round("pv", 6) + F.lit(0.0)).alias("purchase_value"),
-        )
-    )
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    assert want.count() > 0
+
+@pytest.mark.parametrize("gate", REPLAY_GATES)
+def test_replay_gate_matches_oracle(spark, sf_dir, gate):
+    """Every streaming replay gate (the ten ``*_stream_replay`` plus
+    the EngineReplay handoff) lands exactly its DuckDB oracle's rows
+    at sf0.001, under the same compare the correctness gate uses."""
+    got = entry.queries()[gate](spark, sf_dir).toPandas()
+    want = duck_connect(sf_dir).execute(entry.oracle_sql()[gate]).fetchdf()
+    assert len(got) > 0
+    assert compare(gate, got, want)

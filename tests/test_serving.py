@@ -108,6 +108,17 @@ def test_state_limit_param(server):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(server.port, "/api/v1/state/quotes?limit=-1")
     assert e.value.code == 422
+    # the Perspective routes share the same limit check
+    for bad in ("abc", "-1"):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            urllib.request.urlopen(
+                f"http://127.0.0.1:{server.port}/api/v1/perspective/arrow/quotes?limit={bad}"
+            )
+        assert e.value.code == 422, bad
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _post(server.port, f"/api/v1/perspective/view/quotes?limit={bad}", {})
+        assert e.value.code == 422, bad
+    assert len(_post(server.port, "/api/v1/perspective/view/quotes?limit=1", {})) == 1
 
 
 def test_global_lookup_by_id(server):
