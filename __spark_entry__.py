@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import threading
 
 from collections.abc import Callable
 
@@ -124,28 +125,35 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # pays each build exactly once inside the timed region — and (b)
 # report the total as a `shared_build_sec` line item.  Nested builds
 # (e.g. _cox_fit → _cox_cells) log only the OUTERMOST wall time, so
-# the log total never double-counts a build.
+# the log total never double-counts a build.  Each key is built once,
+# under its own lock (a second caller waits for the first build), and
+# the nesting depth is counted per thread.
 _SHARED_MEMO: dict = {}
 _SHARED_BUILD_LOG: list = []  # (name, seconds) per outermost build
-_SHARED_BUILD_DEPTH = 0
+_SHARED_LOCKS: dict = {}  # key -> RLock, guarded by _SHARED_LOCKS_LOCK
+_SHARED_LOCKS_LOCK = threading.Lock()
+_SHARED_BUILDING = threading.local()  # .depth: builds open on this thread
 
 
 def _shared(spark: SparkSession, sf_dir: str, name: str, build):
-    global _SHARED_BUILD_DEPTH
     key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _SHARED_MEMO:
-        import time as _time
+    with _SHARED_LOCKS_LOCK:
+        lock = _SHARED_LOCKS.setdefault(key, threading.RLock())
+    with lock:
+        if key not in _SHARED_MEMO:
+            import time as _time
 
-        _SHARED_BUILD_DEPTH += 1
-        t0 = _time.perf_counter()
-        try:
-            val = build()
-        finally:
-            _SHARED_BUILD_DEPTH -= 1
-        _SHARED_MEMO[key] = val
-        if _SHARED_BUILD_DEPTH == 0:
-            _SHARED_BUILD_LOG.append((name, _time.perf_counter() - t0))
-    return _SHARED_MEMO[key]
+            depth = getattr(_SHARED_BUILDING, "depth", 0)
+            _SHARED_BUILDING.depth = depth + 1
+            t0 = _time.perf_counter()
+            try:
+                val = build()
+            finally:
+                _SHARED_BUILDING.depth = depth
+            _SHARED_MEMO[key] = val
+            if depth == 0:
+                _SHARED_BUILD_LOG.append((name, _time.perf_counter() - t0))
+        return _SHARED_MEMO[key]
 
 
 def reset_shared(keep_plans: bool = True) -> None:

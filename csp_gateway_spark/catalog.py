@@ -19,22 +19,27 @@ Reference semantics reproduced (file:line cites into /root/reference):
 
 Scale: a channel is just a DataFrame; unioning producers is a metadata
 operation (no shuffle).  A ``send`` is checked and stamped in Python and
-lands as a JVM-local Arrow relation, so re-reading it never starts a
-Python worker.  ``state``/``last`` never re-aggregate the channel: each
-keeps one materialized fold per channel (previous fold ∪ the producers
-added since, reduced with ``keyed_last``/``last_tick`` on one partition
-through ``session.run_bounded``), so a read costs O(|state| + |new
-ticks|), not O(history).  ``lookup``/``get_channel`` still read the
-per-send deltas.
+lands as a JVM-local Arrow relation, so a later read never starts a
+Python worker.  ``state``/``last`` never re-aggregate the channel: the
+driver holds one keyed-last snapshot per channel and state keys (one
+row for ``last``), key → stored row.  ``send`` merges the rows it stored
+into it, under the channel lock, by ``max_by``'s rule over
+``FOLD_ORDER``; a ``set_channel`` producer is reduced with
+``keyed_last``/``last_tick`` once, collected at the next read, and
+merged by the same rule.  A read serves the snapshot as an Arrow-built
+local relation, rebuilt only when the snapshot changed, so the serving
+filters run on the driver and ``/state``, ``/state?query=`` and
+``/last`` launch no Spark job.  Snapshot memory is O(keys).
+``lookup``/``get_channel`` still read the per-send deltas.
 """
 
 from __future__ import annotations
 
-import contextlib
+import dataclasses
 import datetime
 import decimal
 import threading
-from typing import Callable, Dict, List, Optional, Sequence, Tuple
+from typing import Callable, Dict, Iterable, List, Optional, Sequence, Tuple
 
 from pydantic import BaseModel, ConfigDict
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -44,7 +49,7 @@ from pyspark.sql import types as T
 from csp_gateway_spark.query import Query, apply_query
 from csp_gateway_spark.structs import TIMESTAMP_FIELD, day_epoch_seed
 
-# Recency of the serving folds: engine time, then the catalog id.  Rows
+# Recency of the serving snapshots: engine time, then the catalog id.  Rows
 # of one send share a timestamp, so the later row (higher id) wins —
 # the reference's ``last(duck_id)``.
 FOLD_ORDER = ("timestamp", "id")
@@ -59,14 +64,49 @@ def _reduce(df: DataFrame, keys: Optional[Tuple[str, ...]]) -> DataFrame:
     return ops.keyed_last(df, keys, order_by=FOLD_ORDER)
 
 
-def _unpersist(fold: DataFrame) -> None:
-    """Drop the local-checkpoint blocks behind a ``run_bounded`` frame
-    (its plan is one LogicalRDD over the checkpointed RDD)."""
-    leaves = fold._jdf.queryExecution().analyzed().collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.nodeName() == "LogicalRDD":
-            leaf.rdd().unpersist(False)
+def _rank(value):
+    """Spark's ascending order of one value as a hashable sort key: null
+    lowest, NaN highest, structs and arrays field by field."""
+    if value is None:
+        return (0,)
+    if isinstance(value, float) and value != value:
+        return (2,)
+    if isinstance(value, (tuple, list)):  # a struct ``Row`` is a tuple
+        return (1, tuple(map(_rank, value)))
+    return (1, value)
+
+
+def _recency(row: dict) -> tuple:
+    return tuple(_rank(row.get(c)) for c in FOLD_ORDER)
+
+
+def _merge(held: Dict[tuple, dict], rows: Iterable[dict], keys: Optional[Tuple[str, ...]]) -> None:
+    """``max_by``'s rule over FOLD_ORDER: a row replaces its key's held
+    row only when strictly more recent, so on an exact tie the earlier
+    row stays.  ``held`` maps the key values' ranks to a row."""
+    for row in rows:
+        key = tuple(_rank(row.get(k)) for k in keys or ())
+        if key not in held or _recency(row) > _recency(held[key]):
+            held[key] = row
+
+
+def _reduced_schema(schema: T.StructType, keys: Optional[Tuple[str, ...]]) -> T.StructType:
+    """The columns ``_reduce`` gives: keys first, then the rest, which
+    ``max_by`` makes nullable."""
+    keys = [k for k in keys or () if k in schema.names]
+    rest = [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema.fields if f.name not in keys]
+    return T.StructType([schema[k] for k in keys] + rest)
+
+
+@dataclasses.dataclass
+class _Snapshot:
+    """One channel's keyed-last rows by ``keys`` (None: its last tick)."""
+
+    keys: Optional[Tuple[str, ...]]
+    schema: Optional[T.StructType] = None  # None: no stream yet
+    rows: Dict[tuple, dict] = dataclasses.field(default_factory=dict)
+    upto: int = 0  # producers merged
+    frame: Optional[DataFrame] = None  # served frame, until the next merge
 
 
 class NoProviderException(Exception):
@@ -88,17 +128,11 @@ class ChannelCatalog:
         self._dynamic_keys: Dict[str, List[str]] = {}
         self._mirrors: Dict[str, List[str]] = {}  # target -> source channels
         self._validators: Dict[str, Callable] = {}
-        # (channel, state keys or None for last) -> (fold, producers folded)
-        self._folds: Dict[tuple, Tuple[DataFrame, int]] = {}
-        self._locks: Dict[str, threading.Lock] = {}
+        # channel -> state keys or None for last -> snapshot
+        self._snapshots: Dict[str, Dict[Optional[tuple], _Snapshot]] = {}
+        self._locks: Dict[str, threading.RLock] = {}
         self._id_lock = threading.Lock()
         self._id_counter = day_epoch_seed()
-        # replaced folds wait in _retired until no read that began
-        # before their replacement is still running (see ``reading``)
-        self._gc_lock = threading.Lock()
-        self._epoch = 0
-        self._readers: Dict[object, int] = {}
-        self._retired: List[Tuple[int, DataFrame]] = []
 
     # --- declaration -------------------------------------------------
     def declare(
@@ -114,6 +148,7 @@ class ChannelCatalog:
         return a (possibly modified) row."""
         self._schemas.setdefault(name, schema)
         self._producers.setdefault(name, [])
+        self._snapshot(name, None)
         if required:
             self._required.add(name)
         if validator is not None:
@@ -124,6 +159,7 @@ class ChannelCatalog:
         (reference naming convention `channels.py:191-194`)."""
         keys = [keyby] if isinstance(keyby, str) else list(keyby)
         self._state_keys[name] = keys
+        self._snapshot(name, tuple(keys))
 
     def add_dynamic_keys(self, name: str, keys: List[str]) -> None:
         """Dict-basket key registration (`factory.py:46-55`)."""
@@ -137,7 +173,8 @@ class ChannelCatalog:
         self.declare(name)
         if name in self._block_until and TIMESTAMP_FIELD in df.columns:
             df = df.filter(F.col(TIMESTAMP_FIELD) >= F.lit(self._block_until[name]))
-        self._producers[name].append(df)
+        with self._lock(name):
+            self._producers[name].append(df)
 
     def mirror(self, src: str, dst: str) -> None:
         """Live link: ``dst`` resolves to its own producers ∪ ``src``'s
@@ -191,7 +228,7 @@ class ChannelCatalog:
     # --- state / query path ------------------------------------------
     def state(self, name: str) -> DataFrame:
         """``s_<name>``: last record per key group, ordered by key ASC
-        NULLS FIRST (`state.py:165-225`) — the channel's fold."""
+        NULLS FIRST (`state.py:165-225`) — the channel's snapshot."""
         keys = self._state_keys.get(name)
         if keys is None:
             raise KeyError(f"channel {name!r} has no state declared")
@@ -211,73 +248,73 @@ class ChannelCatalog:
         return self.get_channel(name).filter(F.col("id") == F.lit(record_id))
 
     def _served(self, name: str, keys: Optional[Tuple[str, ...]]) -> DataFrame:
-        view = self._view(name, keys)
-        if view is None:
-            raise NoProviderException(f"channel {name!r} has no provider (finalize() binds null streams)")
-        return view
+        """The snapshot as an Arrow-built local relation: collecting it,
+        filtered or limited, runs on the driver with no Spark job."""
+        with self._lock(name):
+            snap = self._view(name, keys)
+            if snap.schema is None:
+                raise NoProviderException(f"channel {name!r} has no provider (finalize() binds null streams)")
+            if snap.frame is None:  # keys ASC NULLS FIRST (`state.py:193`)
+                rows = [snap.rows[k] for k in sorted(snap.rows)]
+                snap.frame = self.spark.createDataFrame(_arrow_table(rows, snap.schema), snap.schema)
+            return snap.frame
 
-    def _view(self, name: str, keys: Optional[Tuple[str, ...]]) -> Optional[DataFrame]:
-        """The channel's fold; a mirror composes its sources' views with
-        its own fold (`_reduce` over already-reduced frames)."""
-        parts = [self._view(src, keys) for src in self._mirrors.get(name, [])]
-        parts = [p for p in parts + [self._fold(name, keys)] if p is not None]
-        if len(parts) > 1:
-            return _reduce(self._union(parts), keys)
-        return parts[0] if parts else None
+    def _lock(self, name: str) -> threading.RLock:
+        return self._locks.setdefault(name, threading.RLock())
 
-    def _fold(self, name: str, keys: Optional[Tuple[str, ...]]) -> Optional[DataFrame]:
-        """Fold the producers added since the last fold into the
-        channel's materialized frame: previous fold ∪ new producers,
-        reduced on one partition (no exchange) and saved with
-        ``run_bounded``.  None when the channel has no stream at all."""
-        from csp_gateway_spark.session import run_bounded
+    def _snapshot(self, name: str, keys: Optional[Tuple[str, ...]]) -> _Snapshot:
+        return self._snapshots.setdefault(name, {}).setdefault(keys, _Snapshot(keys))
 
-        with self._locks.setdefault(name, threading.Lock()):
-            prev, upto = self._folds.get((name, keys), (None, 0))
-            producers = list(self._producers.get(name, []))  # sends append concurrently
-            fresh = producers[upto:]
-            if prev is None and not fresh and name in self._finalized:
-                fresh = [self._finalized[name]]  # the null-bound empty stream
-            if not fresh:
-                return prev
-            parts = ([prev] if prev is not None else []) + fresh
-            fold = run_bounded(_reduce(self._union(parts).coalesce(1), keys))
-            self._folds[(name, keys)] = (fold, len(producers))
-        if prev is not None:
-            self._retire(prev)
-        return fold
+    def _view(self, name: str, keys: Optional[Tuple[str, ...]]) -> _Snapshot:
+        """The channel's snapshot, first merging the producers added
+        since its last merge, reduced and collected (a snapshot created
+        after producers exist catches up from all of them once).  A
+        mirror's is a new snapshot: its sources' views, then its own.
+        The caller holds the channel lock."""
+        snap = self._snapshot(name, keys)
+        producers = self._producers.get(name, [])
+        if producers[snap.upto :]:
+            reduced = _reduce(self._union(producers[snap.upto :]).coalesce(1), keys)
+            self._merge_into(snap, reduced.schema, [r.asDict() for r in reduced.collect()])
+            snap.upto = len(producers)
+        elif snap.schema is None and name in self._finalized:  # the null-bound empty stream
+            snap.schema = _reduced_schema(self._finalized[name].schema, keys)
+        if name not in self._mirrors:
+            return snap
+        out = _Snapshot(keys)
+        for src in self._mirrors[name]:
+            with self._lock(src):
+                part = self._view(src, keys)
+                self._merge_into(out, part.schema, part.rows.values())
+        self._merge_into(out, snap.schema, snap.rows.values())
+        return out
 
-    @contextlib.contextmanager
-    def reading(self):
-        """Scope a read of ``state``/``last`` frames: a fold replaced
-        while the read runs is unpersisted only after the read ends.
-        Outside this scope a frame is readable until the channel's next
-        fold."""
-        token = object()
-        with self._gc_lock:
-            self._readers[token] = self._epoch
-        try:
-            yield
-        finally:
-            with self._gc_lock:
-                del self._readers[token]
-            self._reclaim()
+    def _merge_into(self, snap: _Snapshot, schema: Optional[T.StructType], rows: Iterable[dict]) -> None:
+        """Merge ``rows`` of ``schema`` into ``snap``; its schema becomes
+        that of ``unionByName(allowMissingColumns=True)`` of the two."""
+        if schema is None:
+            return
+        schema = _reduced_schema(schema, snap.keys)
+        if snap.schema is not None and schema != snap.schema:
+            empty = [self.spark.createDataFrame(_arrow_table([], s), s) for s in (snap.schema, schema)]
+            schema = _reduced_schema(self._union(empty).schema, snap.keys)
+        snap.schema = schema
+        _merge(snap.rows, rows, snap.keys)
+        snap.frame = None
 
-    def _retire(self, fold: DataFrame) -> None:
-        with self._gc_lock:
-            self._epoch += 1
-            self._retired.append((self._epoch, fold))
-        self._reclaim()
-
-    def _reclaim(self) -> None:
-        """Unpersist every retired fold no running read can hold: one
-        retired at epoch e is visible only to reads that began before e."""
-        with self._gc_lock:
-            oldest = min(self._readers.values(), default=self._epoch)
-            free = [f for e, f in self._retired if e <= oldest]
-            self._retired = [(e, f) for e, f in self._retired if e > oldest]
-        for fold in free:
-            _unpersist(fold)
+    def stats(self) -> Dict[str, dict]:
+        """Producers and held snapshot rows per channel (``state_rows``
+        is None without declared state)."""
+        return {
+            name: {
+                "producers": len(self._producers[name]),
+                "state_rows": len(self._snapshot(name, tuple(self._state_keys[name])).rows)
+                if name in self._state_keys
+                else None,
+                "last_rows": len(self._snapshot(name, None).rows),
+            }
+            for name in sorted(self._producers)
+        }
 
     def send(self, name: str, rows: List[dict], schema: Optional[T.StructType] = None) -> DataFrame:
         """Inject records (REST POST path, `channels.py:950-962`) and
@@ -289,8 +326,8 @@ class ChannelCatalog:
     ) -> Tuple[List[Row], DataFrame]:
         """validate → assign id/timestamp → check against the schema
         (PySpark's own verifier, so a bad payload raises as
-        ``createDataFrame`` would) → append as a producer.  Returns the
-        rows exactly as stored — what collecting the delta would give,
+        ``createDataFrame`` would) → append as a producer and merge into
+        the channel's snapshots.  Returns the rows exactly as stored — what collecting the delta would give,
         without a Spark job — and the delta frame.
 
         Ids come from a catalog-level atomic counter seeded at
@@ -298,8 +335,8 @@ class ChannelCatalog:
         (`utils/id_generator.py:8-25`).  Driver-side rows are few (REST
         payloads), so enumerating them here is not a scale concern.
         """
-        from pyspark.sql.conversion import ArrowTableToRowsConversion, LocalDataToArrowConversion
-        from pyspark.sql.pandas.types import to_arrow_schema
+        import pyarrow as pa
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
         from pyspark.sql.types import _create_converter, _make_type_verifier
 
         schema = schema or self._schemas.get(name)
@@ -327,15 +364,35 @@ class ChannelCatalog:
         verify = _make_type_verifier(schema)
         for row in stamped:
             verify(row)
-        if stamped:
-            tupled = _round_decimals_half_up(list(map(_create_converter(schema), stamped)), schema)
-            table = LocalDataToArrowConversion.convert(tupled, schema, False)
-        else:
-            table = to_arrow_schema(schema).empty_table()
+        table = _arrow_table(_round_decimals_half_up(list(map(_create_converter(schema), stamped)), schema), schema)
+        stored = ArrowTableToRowsConversion.convert(table, schema)
+        kept = [row.asDict() for row in stored]
+        when = self._block_until.get(name)
+        if when is not None and TIMESTAMP_FIELD in schema.fieldNames():  # as ``set_channel`` filters
+            micros = T.TimestampType().toInternal
+            admit = [row[TIMESTAMP_FIELD] is not None and micros(row[TIMESTAMP_FIELD]) >= micros(when) for row in kept]
+            table = table.filter(pa.array(admit, pa.bool_()))
+            kept = [row for row, ok in zip(kept, admit) if ok]
         delta = self.spark.createDataFrame(table, schema)
-        self.set_channel(name, delta)
+        self.declare(name)
+        with self._lock(name):
+            producers = self._producers[name]
+            current = [s for s in self._snapshots[name].values() if s.upto == len(producers)]
+            producers.append(delta)
+            for snap in current:  # a lagging snapshot collects the delta when it catches up
+                self._merge_into(snap, schema, kept)
+                snap.upto = len(producers)
         self._finalized.pop(name, None)
-        return ArrowTableToRowsConversion.convert(table, schema), delta
+        return stored, delta
+
+
+def _arrow_table(rows: list, schema: T.StructType):
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not rows:
+        return to_arrow_schema(schema).empty_table()
+    return LocalDataToArrowConversion.convert(rows, schema, False)
 
 
 _WIDE = decimal.Context(prec=100)  # wide enough that quantize never traps

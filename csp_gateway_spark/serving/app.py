@@ -267,8 +267,7 @@ class GatewayApi:
 
     def _collect_or_404(self, channel: str, df_fn) -> List[Row]:
         try:
-            with self.catalog.reading():
-                return df_fn().collect()
+            return df_fn().collect()
         except ApiError:
             raise
         except Exception as e:  # noqa: BLE001 — unwired: no ticks yet
@@ -443,7 +442,8 @@ class GatewayApi:
     def stats(self) -> dict:
         """Engine + host stats (reference `controls/controls.py:40-90`:
         hostname/user/pid/cpu/memory, psutil-gated with a stdlib
-        resource/os fallback)."""
+        resource/os fallback), and ``catalog``: producers and snapshot
+        rows per channel, which show the serving state is bounded."""
         import getpass
         import os
         import socket
@@ -451,6 +451,7 @@ class GatewayApi:
         sc = self.catalog.spark.sparkContext
         out = {
             "channels": sorted(self.catalog._producers.keys()),
+            "catalog": self.catalog.stats(),
             "spark": {"appName": sc.appName, "parallelism": sc.defaultParallelism},
             "hostname": socket.gethostname(),
             "user": getpass.getuser(),

@@ -76,3 +76,57 @@ def test_bench_reruns_on_gross_time_including_first_build(monkeypatch):
     took = bench.time_query(run, lambda: clock["built"])
     assert len(calls) == 2
     assert took == 0.2
+
+
+def _overlapping(spark, builds):
+    """Call ``_shared`` for each (name, value) on its own thread, each
+    thread started while the previous one's build runs; return the
+    results and the builds that ran."""
+    import threading
+    import time
+
+    import __spark_entry__ as entry
+
+    started, calls = threading.Event(), []
+
+    def build(value):
+        def run():
+            calls.append(value)
+            started.set()
+            time.sleep(0.3)
+            return value
+
+        return run
+
+    results, threads = [None] * len(builds), []
+    for i, (name, value) in enumerate(builds):
+        call = lambda i=i, name=name, value=value: results.__setitem__(  # noqa: E731
+            i, entry._shared(spark, "concurrent", name, build(value))
+        )
+        threads.append(threading.Thread(target=call))
+        threads[-1].start()
+        assert started.wait(10)
+    for t in threads:
+        t.join(30)
+    assert not any(t.is_alive() for t in threads)
+    for name, _ in builds:
+        entry._SHARED_MEMO.pop((spark.sparkContext.applicationId, "concurrent", name), None)
+    return results, calls
+
+
+def test_concurrent_callers_build_a_shared_key_once(spark):
+    import __spark_entry__ as entry
+
+    got, calls = _overlapping(spark, [("probe_once", "first"), ("probe_once", "second")])
+    assert calls == ["first"] and got == ["first", "first"]
+    assert [n for n, _ in entry._SHARED_BUILD_LOG].count("probe_once") == 1
+
+
+def test_build_depth_is_per_thread(spark):
+    """An outermost build is logged even while another thread is inside
+    a build of its own."""
+    import __spark_entry__ as entry
+
+    _overlapping(spark, [("probe_slow", "slow"), ("probe_fast", "fast")])
+    names = [n for n, _ in entry._SHARED_BUILD_LOG]
+    assert names.count("probe_slow") == 1 and names.count("probe_fast") == 1

@@ -1,6 +1,7 @@
-"""Serving folds: the catalog keeps one materialized keyed-last frame and
-one last-tick frame per channel, folded as ticks arrive, instead of
-re-aggregating every send on each read."""
+"""Serving snapshots: the catalog holds one keyed-last snapshot and one
+last-tick snapshot per channel on the driver, merged as ticks arrive,
+and serves them as local relations instead of re-aggregating every send
+on each read."""
 
 import datetime
 import decimal
@@ -24,50 +25,77 @@ def _rows(df):
     return [tuple(r) for r in df.collect()]
 
 
+def _nulls_first(value):
+    return (value is not None, value)
+
+
 def _model(sent, keyed):
-    """Client-side keyed-last: the latest row by (timestamp, id)."""
-    order = sorted(sent, key=lambda r: (r["timestamp"], r["id"]))
+    """Client-side keyed-last: the latest row by (timestamp, id), a null
+    timestamp lowest; keys ascending, null first."""
+    order = sorted(sent, key=lambda r: (_nulls_first(r["timestamp"]), r["id"]))
     if not keyed:
         return [tuple(order[-1].values())]
     by_key = {}
     for r in order:
         by_key[r["k"]] = r
-    return [tuple(by_key[k].values()) for k in sorted(by_key)]
+    return [tuple(by_key[k].values()) for k in sorted(by_key, key=_nulls_first)]
+
+
+ABSENT = object()
 
 
 @st.composite
 def sends(draw):
-    """Up to 4 sends of up to 6 rows: keys from a small space (duplicates
-    within a send), timestamps stamped by the catalog or given from a few
-    instants (ties, and ticks older than earlier sends), and some rows
-    with their own unique id, drawn out of send order."""
-    pool = iter(draw(st.permutations(range(24))))
-    stamps = st.sampled_from([None, T0, T0 + datetime.timedelta(seconds=1), T0 - datetime.timedelta(days=1)])
+    """Up to 5 steps.  A send is up to 6 rows: keys from a small space
+    with nulls (duplicates within a send), timestamps stamped by the
+    catalog, given as null, or given from a few instants (ties, and ticks
+    older than earlier sends), and some rows with their own unique id,
+    drawn out of send order.  Between sends, a ``set_channel`` producer of
+    up to 3 rows that carry their own id and timestamp."""
+    pool = iter(draw(st.permutations(range(40))))
+    instants = [T0, T0 + datetime.timedelta(seconds=1), T0 - datetime.timedelta(days=1)]
+    keys = st.none() | st.integers(0, 3)
     out = []
-    for _ in range(draw(st.integers(1, 4))):
+    for step in range(draw(st.integers(1, 5))):
+        if step and draw(st.integers(0, 3)) == 0:
+            rows = [
+                {
+                    "k": draw(keys),
+                    "v": draw(st.integers(0, 99)),
+                    "id": f"u{next(pool):02d}",
+                    "timestamp": draw(st.sampled_from([None] + instants)),
+                }
+                for _ in range(draw(st.integers(1, 3)))
+            ]
+            out.append(("set", rows))
+            continue
         batch = []
         for _ in range(draw(st.integers(1, 6))):
-            row = {"k": draw(st.integers(0, 3)), "v": draw(st.integers(0, 99))}
-            ts = draw(stamps)
-            if ts is not None:
+            row = {"k": draw(keys), "v": draw(st.integers(0, 99))}
+            ts = draw(st.sampled_from([ABSENT, None] + instants))
+            if ts is not ABSENT:
                 row["timestamp"] = ts
             if draw(st.booleans()):
                 row["id"] = f"u{next(pool):02d}"
             batch.append(row)
-        out.append(batch)
+        out.append(("send", batch))
     return out
 
 
 @given(sends())
 @settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_fold_equals_full_recompute(spark, batches):
+def test_fold_equals_full_recompute(spark, steps):
     cat = ChannelCatalog(spark)
     cat.declare("c", KV)
     cat.declare_state("c", "k")
     sent = []
-    for batch in batches:
-        echoed, _ = cat.send_rows("c", batch)
-        sent += [r.asDict() for r in echoed]
+    for kind, rows in steps:
+        if kind == "set":
+            cat.set_channel("c", spark.createDataFrame([tuple(r.values()) for r in rows], "k long, v long, id string, timestamp timestamp"))
+            sent += rows
+        else:
+            echoed, _ = cat.send_rows("c", rows)
+            sent += [r.asDict() for r in echoed]
         history = cat.get_channel("c")
         state, last = _rows(cat.state("c")), _rows(cat.last("c"))
         assert state == _rows(keyed_last(history, ["k"], order_by=FOLD_ORDER)) == _model(sent, True)
@@ -83,19 +111,47 @@ def test_later_row_of_one_send_wins(spark):
     assert cat.last("c").collect()[0].v == 7
 
 
+def _served_rows(df):
+    """Rows of the one LocalRelation a served frame's plan reads."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    assert leaves.size() == 1 and leaves.apply(0).nodeName() == "LocalRelation"
+    return leaves.apply(0).data().size()
+
+
 def test_reads_use_the_fold_not_history(spark):
     cat = ChannelCatalog(spark)
     cat.declare("c", KV)
     cat.declare_state("c", "k")
-    for i in range(3):
-        cat.send("c", [{"k": i, "v": i}])
+    for i in range(6):
+        cat.send("c", [{"k": i % 3, "v": i}])
     state, last = cat.state("c"), cat.last("c")
-    assert cat.state("c") is state and cat.last("c") is last  # nothing new: no re-fold
-    plan = state._jdf.queryExecution().optimizedPlan().toString()
-    assert "LocalRelation" not in plan  # the sends are not in the served plan
+    assert cat.state("c") is state and cat.last("c") is last  # nothing new: same frame
+    assert _served_rows(state) == 3 and _served_rows(last) == 1  # not the 6 sends
     # the per-send deltas are JVM-local relations: no Python worker on re-read
     history = cat.get_channel("c")._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in history and "LocalTableScan" in history
+
+
+def test_reads_after_a_send_launch_no_job(spark):
+    cat = ChannelCatalog(spark)
+    cat.declare("c", KV)
+    cat.declare_state("c", "k")
+    api = GatewayApi(cat)
+    sc = spark.sparkContext
+    for i in range(4):
+        api.send("c", [{"k": k, "v": i} for k in range(5)])
+        sc.setJobGroup("served-reads", "reads")
+        try:
+            state = api.state("c")
+            queried = api.state("c", query_json='{"filters": [{"attr": "k", "op": "<=", "value": 2}]}')
+            last = api.last("c")
+            assert not sc.statusTracker().getJobIdsForGroup("served-reads")  # no job to read
+        finally:
+            sc.setJobGroup("", "")
+        assert [(r["k"], r["v"]) for r in state] == [(k, i) for k in range(5)]
+        assert [r["k"] for r in queried] == [0, 1, 2]
+        assert (last[0]["k"], last[0]["v"]) == (4, i)
+    assert _served_rows(cat.state("c")) == 5 and _served_rows(cat.last("c")) == 1
 
 
 def test_set_channel_producers_join_the_fold(spark):
@@ -178,13 +234,13 @@ def test_replaced_folds_are_unpersisted(spark):
     cat.declare("c", KV)
     cat.declare_state("c", "k")
     api = GatewayApi(cat)
-    counts = {}
+    before = _persisted(spark)
     for i in range(1, 51):
         api.send("c", [{"k": i % 7, "v": i}])
         api.state("c")
         api.last("c")
-        counts[i] = _persisted(spark)
-    assert counts[50] <= counts[5]
+        assert _persisted(spark) == before  # served frames hold no blocks
+    assert cat.stats()["c"] == {"producers": 50, "state_rows": 7, "last_rows": 1}
 
 
 def test_fold_held_by_a_read_outlives_its_replacement(spark):
@@ -192,14 +248,23 @@ def test_fold_held_by_a_read_outlives_its_replacement(spark):
     cat.declare("c", KV)
     cat.declare_state("c", "k")
     cat.send("c", [{"k": 1, "v": 1}])
-    with cat.reading():
-        held = cat.state("c")
-        before = _persisted(spark)
-        cat.send("c", [{"k": 1, "v": 2}])
-        assert cat.state("c").collect()[0].v == 2
-        assert _persisted(spark) == before + 1
-        assert held.collect()[0].v == 1  # replaced, still readable
-    assert _persisted(spark) == before  # released when the read ended
+    held, held_last = cat.state("c"), cat.last("c")
+    cat.send("c", [{"k": 1, "v": 2}])
+    assert cat.state("c").collect()[0].v == 2
+    assert held.collect()[0].v == 1 and held_last.collect()[0].v == 1  # replaced, still readable
+
+
+def test_stats_report_bounded_snapshots(spark):
+    cat = ChannelCatalog(spark)
+    cat.declare("c", KV)
+    cat.declare_state("c", "k")
+    cat.declare("plain", KV)
+    api = GatewayApi(cat)
+    for i in range(40):
+        api.send("c", [{"k": (i * 3 + j) % 6, "v": i} for j in range(4)])
+    stats = api.stats()["catalog"]
+    assert stats["c"] == {"producers": 40, "state_rows": 6, "last_rows": 1}
+    assert stats["plain"] == {"producers": 0, "state_rows": None, "last_rows": 0}
 
 
 # --- echo fidelity: the echo and the stored row are what the old

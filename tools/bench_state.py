@@ -1,15 +1,16 @@
 """State insert/query microbenchmark on the serving path, mirroring the
 reference's asv grid (`benchmarks/benchmarks/server/gateway/csp/state.py:57-193`):
 
-- insert N rows (N ∈ {1_000, 10_000}) through ``GatewayApi.send`` in
-  50-row batches, with keyby unique and keyby mod 100;
-- the first (cold) ``GatewayApi.state`` query-all — it folds every
-  send made since the last read;
+- insert N rows (N ∈ {1_000, 10_000, 100_000}) through
+  ``GatewayApi.send`` in 50-row batches, with keyby unique and keyby
+  mod 100;
+- the first (cold) ``GatewayApi.state`` query-all — it builds the
+  served frame from the snapshot the sends merged into;
 - warm repeated query-all, and the 2-filter conjunctive query.
 
 Prints one JSON line: {"metric": "state_microbench", "cases": {...}},
-and exits non-zero when a warm ``/state`` at 10k is more than 2x its
-1k case with the same keyby (state size held fixed: mod 100).
+and exits non-zero when a warm ``/state`` at the largest N is more than
+2x its 1k case with the same keyby (state size held fixed: mod 100).
 
     SPARK_GRAFT_CPUS=4 python tools/bench_state.py
 """
@@ -24,7 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BATCH = 50
-SIZES = (1_000, 10_000)
+SIZES = (1_000, 10_000, 100_000)
 WARM = 3
 
 
@@ -43,7 +44,7 @@ def run_case(spark, schema, n: int, key_mode: str) -> dict:
         api.send(name, rows[i : i + BATCH])
     send_ms = (time.perf_counter() - t0) * 1e3 / (n // BATCH)
     t0 = time.perf_counter()
-    api.state(name)  # cold: folds every send so far
+    api.state(name)  # cold: builds the served frame
     cold_ms = (time.perf_counter() - t0) * 1e3
     t0 = time.perf_counter()
     for _ in range(WARM):
