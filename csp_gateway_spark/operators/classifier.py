@@ -119,12 +119,16 @@ def lr_train(
             )
         # one action per round: the bias gradient rides along as a
         # synthetic bucket −1 with x=1 (floor(r·1·s) ≡ floor(r·s)),
-        # so the feature and bias sums share a single aggregation
-        with_bias = features.select(id_col, "bucket", F.col("x").cast("double").alias("_x")).unionByName(
-            resid.select(id_col, F.lit(-1).alias("bucket"), F.lit(1.0).alias("_x"))
+        # so the feature and bias sums share a single aggregation.  The
+        # bias rows are the label rows themselves, unioned AFTER the
+        # feature join: an id labelled k times adds k bias rows, not k².
+        feature_rows = features.join(resid, id_col).select(
+            "bucket", F.col("x").cast("double").alias("_x"), "_r"
         )
         gint = (
-            with_bias.join(resid, id_col)
+            feature_rows.unionByName(
+                resid.select(F.lit(-1).alias("bucket"), F.lit(1.0).alias("_x"), "_r")
+            )
             .groupBy("bucket")
             .agg(
                 F.sum(

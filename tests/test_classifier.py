@@ -58,6 +58,50 @@ def test_lr_score_featureless_doc_gets_bias(spark, labeled_corpus, feats):
     assert scores[999] == pytest.approx(expect, abs=1e-12)
 
 
+def _rowwise_lr(features, labels, dim, iters, lr=0.5):
+    """Row-wise reference: every label row is one example, with the
+    same fixed-point gradients and bucket-ordered margins."""
+    import math
+
+    from csp_gateway_spark.operators.classifier import _SCALE
+
+    w, bias = [0.0] * dim, 0.0
+    for it in range(iters):
+        g, gb = [0] * dim, 0
+        for doc, y in labels:
+            xs = sorted(features.get(doc, []))
+            if it == 0:
+                r = 0.5 - y
+            else:
+                m = sum(x * w[b] for b, x in xs) + bias
+                r = round(1.0 / (1.0 + math.exp(-m)) - y, 12)
+            gb += math.floor(r * _SCALE)
+            for b, x in xs:
+                g[b] += math.floor(r * x * _SCALE)
+        n = len(labels)
+        w = [w[b] - lr * (g[b] / (n * _SCALE)) for b in range(dim)]
+        bias -= lr * (gb / (n * _SCALE))
+    return w + [bias]
+
+
+@pytest.mark.parametrize("iters", [1, 2])
+def test_lr_train_repeated_label_ids(spark, iters):
+    """An id labelled twice is two examples: its bias rows are not
+    multiplied by its own label count (n = 4 label rows, not 6)."""
+    features = {1: [(0, 1)], 2: [(1, 2)], 3: [(0, 1)]}
+    labels = [(1, 1), (1, 1), (2, 0), (3, 0)]
+    fdf = spark.createDataFrame(
+        [(d, b, x) for d, xs in features.items() for b, x in xs],
+        "doc_id long, bucket int, x long",
+    )
+    ldf = spark.createDataFrame(labels, "doc_id long, y int")
+    got = lr_train(fdf, ldf, dim=2, iters=iters)
+    want = _rowwise_lr(features, labels, dim=2, iters=iters)
+    assert got == pytest.approx(want, abs=1e-12)
+    if iters == 1:
+        assert got == pytest.approx([0.0625, -0.125, 0.0], abs=1e-12)
+
+
 def test_lr_empty_labels_raise(spark, feats):
     empty = spark.createDataFrame([], "doc_id long, y int")
     with pytest.raises(ValueError, match="empty"):

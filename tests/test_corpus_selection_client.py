@@ -11,11 +11,14 @@ import urllib.error
 import urllib.request
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from csp_gateway_spark.catalog import ChannelCatalog
 from csp_gateway_spark.client import GatewayClient
+from csp_gateway_spark.operators import corpus
 from csp_gateway_spark.operators.corpus import (
     connected_components,
     dedup_keep_representatives,
@@ -41,6 +44,66 @@ def test_connected_components_two_clusters(spark):
     )
     got = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
+def _bfs_components(edges):
+    """Reference: BFS over the non-null endpoints; a null endpoint is
+    one node with a null component."""
+    adj = {}
+    for a, b in edges:
+        for x, y in ((a, b), (b, a)):
+            if x is not None:
+                adj.setdefault(x, set())
+                if y is not None:
+                    adj[x].add(y)
+    out = {None: None} if any(None in e for e in edges) else {}
+    for start in adj:
+        if start in out:
+            continue
+        seen, todo = {start}, [start]
+        while todo:
+            for y in adj[todo.pop()] - seen:
+                seen.add(y)
+                todo.append(y)
+        out.update(dict.fromkeys(seen, min(seen)))
+    return out
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=lambda r: (r[0] is None, r[0]))
+
+
+_IDS = st.one_of(st.none(), st.integers(0, 11))
+
+
+@st.composite
+def _graphs(draw):
+    """Duplicates, reversed duplicates, self-loops and null endpoints
+    come from the small id pool; a long chain is appended in a drawn
+    order and direction."""
+    edges = draw(st.lists(st.tuples(_IDS, _IDS), max_size=20))
+    edges += [(b, a) for a, b in draw(st.lists(st.sampled_from(edges), max_size=5))] if edges else []
+    n = draw(st.integers(0, 24))
+    chain = [(100 + i, 101 + i)[:: draw(st.sampled_from([1, -1]))] for i in range(n)]
+    return edges + draw(st.permutations(chain))
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture])
+@given(edges=_graphs())
+def test_connected_components_paths_agree(spark, monkeypatch, id_type, edges):
+    """The driver union-find, the distributed loop and a BFS reference
+    give the same (node, component) rows and column types."""
+    if id_type == "string":  # string order differs from numeric: "100" < "11"
+        edges = [tuple(None if x is None else str(x) for x in e) for e in edges]
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    driver = connected_components(pairs)
+    with monkeypatch.context() as m:
+        m.setattr(corpus, "DRIVER_EDGES", -1)
+        distributed = connected_components(pairs)
+    want = sorted(_bfs_components(edges).items(), key=lambda r: (r[0] is None, r[0]))
+    assert _rows(driver) == _rows(distributed) == want
+    assert driver.schema == distributed.schema
 
 
 def test_dedup_keep_representatives(spark):

@@ -130,3 +130,21 @@ def test_build_depth_is_per_thread(spark):
     _overlapping(spark, [("probe_slow", "slow"), ("probe_fast", "fast")])
     names = [n for n, _ in entry._SHARED_BUILD_LOG]
     assert names.count("probe_slow") == 1 and names.count("probe_fast") == 1
+
+
+def test_small_connected_components_launch_at_most_three_jobs(spark):
+    """A 64-edge path graph fits on the driver: checkpointing the edge
+    list and collecting it are the only jobs, where the distributed
+    loop runs several rounds of at least two jobs each."""
+    from csp_gateway_spark.operators.corpus import connected_components
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(64)], "id_a bigint, id_b bigint")
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-small", "connected_components")
+    try:
+        rows = connected_components(pairs).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("cc-small")
+    finally:
+        sc.setJobGroup("", "")
+    assert sorted(tuple(r) for r in rows) == [(i, 0) for i in range(65)]
+    assert len(jobs) <= 3, jobs
