@@ -26,10 +26,13 @@ row for ``last``), key → stored row.  ``send`` merges the rows it stored
 into it, under the channel lock, by ``max_by``'s rule over
 ``FOLD_ORDER``; a ``set_channel`` producer is reduced with
 ``keyed_last``/``last_tick`` once, collected at the next read, and
-merged by the same rule.  A read serves the snapshot as an Arrow-built
-local relation, rebuilt only when the snapshot changed, so the serving
-filters run on the driver and ``/state``, ``/state?query=`` and
-``/last`` launch no Spark job.  Snapshot memory is O(keys).
+merged by the same rule.  ``held`` returns the snapshot's rows in key
+order, kept until the next merge: the REST routes ``/state``,
+``/state?query=`` and ``/last`` filter them in Python
+(``Query.calculate``) with no Spark plan or JVM call.  ``state``/``last``
+serve the same rows as an Arrow-built local relation for DataFrame
+callers (Perspective routes, tests), whose filters run on the driver
+with no Spark job.  Snapshot memory is O(keys).
 ``lookup``/``get_channel`` still read the per-send deltas.
 """
 
@@ -46,7 +49,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from csp_gateway_spark.query import Query, apply_query
+from csp_gateway_spark.query import Query, _rank, apply_query
 from csp_gateway_spark.structs import TIMESTAMP_FIELD, day_epoch_seed
 
 # Recency of the serving snapshots: engine time, then the catalog id.  Rows
@@ -62,18 +65,6 @@ def _reduce(df: DataFrame, keys: Optional[Tuple[str, ...]]) -> DataFrame:
     if keys is None:
         return ops.last_tick(df, FOLD_ORDER)
     return ops.keyed_last(df, keys, order_by=FOLD_ORDER)
-
-
-def _rank(value):
-    """Spark's ascending order of one value as a hashable sort key: null
-    lowest, NaN highest, structs and arrays field by field."""
-    if value is None:
-        return (0,)
-    if isinstance(value, float) and value != value:
-        return (2,)
-    if isinstance(value, (tuple, list)):  # a struct ``Row`` is a tuple
-        return (1, tuple(map(_rank, value)))
-    return (1, value)
 
 
 def _recency(row: dict) -> tuple:
@@ -106,7 +97,9 @@ class _Snapshot:
     schema: Optional[T.StructType] = None  # None: no stream yet
     rows: Dict[tuple, dict] = dataclasses.field(default_factory=dict)
     upto: int = 0  # producers merged
-    frame: Optional[DataFrame] = None  # served frame, until the next merge
+    # served rows, keys ASC NULLS FIRST (`state.py:193`), and their frame, until the next merge
+    ordered: Optional[List[dict]] = None
+    frame: Optional[DataFrame] = None
 
 
 class NoProviderException(Exception):
@@ -229,10 +222,7 @@ class ChannelCatalog:
     def state(self, name: str) -> DataFrame:
         """``s_<name>``: last record per key group, ordered by key ASC
         NULLS FIRST (`state.py:165-225`) — the channel's snapshot."""
-        keys = self._state_keys.get(name)
-        if keys is None:
-            raise KeyError(f"channel {name!r} has no state declared")
-        return self._served(name, tuple(keys))
+        return self._served(name, self._keys(name))
 
     def query(self, name: str, query: Optional[Query] = None) -> DataFrame:
         """`GET /state/<ch>?query=` semantics (`state.py:614-621`)."""
@@ -247,16 +237,36 @@ class ChannelCatalog:
         the reference's unbounded in-memory registry (`base.py:26-46`)."""
         return self.get_channel(name).filter(F.col("id") == F.lit(record_id))
 
-    def _served(self, name: str, keys: Optional[Tuple[str, ...]]) -> DataFrame:
-        """The snapshot as an Arrow-built local relation: collecting it,
-        filtered or limited, runs on the driver with no Spark job."""
+    def held(self, name: str, keyed: bool) -> Tuple[T.StructType, List[dict]]:
+        """What ``state`` (``keyed``) or ``last`` serves, as the driver
+        holds it: the snapshot's schema and rows (dicts of its columns,
+        keys ASC NULLS FIRST).  No Spark job or JVM call once the
+        producers are merged; treat the rows as read-only."""
+        snap = self._held(name, self._keys(name) if keyed else None)
+        return snap.schema, snap.ordered
+
+    def _keys(self, name: str) -> Tuple[str, ...]:
+        if name not in self._state_keys:
+            raise KeyError(f"channel {name!r} has no state declared")
+        return tuple(self._state_keys[name])
+
+    def _held(self, name: str, keys: Optional[Tuple[str, ...]]) -> _Snapshot:
         with self._lock(name):
             snap = self._view(name, keys)
             if snap.schema is None:
                 raise NoProviderException(f"channel {name!r} has no provider (finalize() binds null streams)")
-            if snap.frame is None:  # keys ASC NULLS FIRST (`state.py:193`)
-                rows = [snap.rows[k] for k in sorted(snap.rows)]
-                snap.frame = self.spark.createDataFrame(_arrow_table(rows, snap.schema), snap.schema)
+            if snap.ordered is None:
+                names = snap.schema.names
+                snap.ordered = [{c: snap.rows[k].get(c) for c in names} for k in sorted(snap.rows)]
+            return snap
+
+    def _served(self, name: str, keys: Optional[Tuple[str, ...]]) -> DataFrame:
+        """The held rows as an Arrow-built local relation: collecting
+        it, filtered or limited, runs on the driver with no Spark job."""
+        with self._lock(name):
+            snap = self._held(name, keys)
+            if snap.frame is None:
+                snap.frame = self.spark.createDataFrame(_arrow_table(snap.ordered, snap.schema), snap.schema)
             return snap.frame
 
     def _lock(self, name: str) -> threading.RLock:
@@ -300,7 +310,7 @@ class ChannelCatalog:
             schema = _reduced_schema(self._union(empty).schema, snap.keys)
         snap.schema = schema
         _merge(snap.rows, rows, snap.keys)
-        snap.frame = None
+        snap.ordered = snap.frame = None
 
     def stats(self) -> Dict[str, dict]:
         """Producers and held snapshot rows per channel (``state_rows``

@@ -11489,8 +11489,12 @@ def _cox_newton(
             .localCheckpoint(eager=True)
         )
     # fused mode: the by-time collapse row count, counted ONCE on the
-    # checkpointed cells (invariant across steps — same groupBy keys)
+    # checkpointed cells (invariant across steps — same groupBy keys).
+    # Above the small-path threshold the bucketed rank would replay the
+    # whole lazy chain per job, so those fits take the eager steps.
     n_t = cells.select("_t").distinct().count() if fused else None
+    if fused and n_t > TARGET_ROWS_PER_BUCKET:
+        fused, n_t = False, None
 
     beta = cells.sparkSession.range(1).select(F.lit(0.0).alias("_beta"))
 

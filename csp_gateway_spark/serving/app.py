@@ -29,8 +29,8 @@ from typing import Any, Dict, List, Optional, Union
 
 from pyspark.sql import Row
 
-from csp_gateway_spark.catalog import ChannelCatalog
-from csp_gateway_spark.query import Filter, Query
+from csp_gateway_spark.catalog import ChannelCatalog, NoProviderException
+from csp_gateway_spark.query import Filter, Query, as_string
 
 
 def _jsonable(value: Any) -> Any:
@@ -220,10 +220,9 @@ class GatewayApi:
 
     # --- helpers -----------------------------------------------------
     def _auth_rows(self, rows: List[Row]) -> List[dict]:
-        """Identity filter over already-materialized rows — only for
-        broker-delivered tick payloads (/next, WS), which are in-memory
-        dicts bounded by one tick.  DataFrame-backed routes must use
-        ``_plan_filters`` instead so the predicate runs engine-side."""
+        """Identity filter over broker-delivered tick payloads (/next,
+        WS), in-memory dicts bounded by one tick.  DataFrame-backed
+        routes use ``_plan_filters``; the snapshot routes ``_held_rows``."""
         out = []
         for row in rows:
             d = row.asDict() if isinstance(row, Row) else dict(row)
@@ -233,18 +232,18 @@ class GatewayApi:
 
     def _plan_filters(self, channel: str, df, key: Optional[str] = None, limit: Optional[int] = None):
         """Push per-request predicates INTO the DataFrame plan before
-        collect (reference `auth_filter.py:533-571` filters each
-        response's rows; SURVEY §2.2 P4 maps that to ``df.filter``):
+        collect, for the DataFrame-backed routes (`/lookup`, Perspective)
+        (reference `auth_filter.py:533-571` filters each response's
+        rows; SURVEY §2.2 P4 maps that to ``df.filter``):
 
         - row-level identity filter (only on columns the channel has —
           rows without the field pass, matching the dict-side rule);
         - dict-basket key selection (reference `last.py:18-157`);
-        - optional ``limit`` so `/state` never materializes more rows
+        - optional ``limit`` so a route never materializes more rows
           than the client asked for.
 
-        At 100× state size this is the difference between collecting
-        the full table to drop most of it in Python and a filtered
-        (often partition-pruned) scan returning only matching rows."""
+        ``_held_rows`` applies the same steps, in the same order and
+        with the same answers, to the snapshot's Python rows."""
         from pyspark.sql import functions as F
 
         for field, value in self.identity_filter.items():
@@ -283,15 +282,48 @@ class GatewayApi:
                 ) from e
             raise ApiError(404, f"no ticks yet on {channel!r}: {e}") from e
 
-    # --- routes ------------------------------------------------------
-    def last(self, channel: str, key: Optional[str] = None) -> List[dict]:
-        self._channel_or_404(channel)
-        rows = self._collect_or_404(
-            channel, lambda: self._plan_filters(channel, self.catalog.last(channel), key=key)
-        )
+    def _held_rows(
+        self,
+        channel: str,
+        keyed: bool,
+        query: Optional[Query] = None,
+        key: Optional[str] = None,
+        limit: Optional[int] = None,
+    ) -> List[dict]:
+        """The rows ``catalog.state`` (``keyed``) or ``catalog.last``
+        serves, through the query, the identity filter (an ``==`` filter
+        per field the channel has), the dict-basket key (reference
+        `last.py:18-157`, ``CAST(field AS STRING) = key``) and ``limit``,
+        each in that order as ``_plan_filters`` would apply them, and
+        evaluated in Python on the rows the catalog holds: no Spark plan
+        or JVM call.  A query Spark cannot evaluate is a 422."""
+        try:
+            schema, rows = self.catalog.held(channel, keyed)
+        except (KeyError, NoProviderException) as e:
+            raise ApiError(404, f"no ticks yet on {channel!r}: {e}") from e
+        try:
+            idents = [Filter(attr=f, value=v) for f, v in self.identity_filter.items() if f in schema.names]
+            steps = [q.resolve(schema) for q in [query or Query()] + [Query(filters=[f]) for f in idents]]
+            steps = [q.calculate for q in steps if q.filters]
+            if key is not None:
+                field = self.key_field(channel)
+                if field is None:
+                    raise ApiError(404, f"channel {channel!r} is not keyed")
+                render = as_string(schema[field].dataType) if field in schema.names else None
+                steps.append(lambda row: row.get(field) is not None and render(row[field]) == key)
+            if steps:  # every row, as Spark filters a local relation before its limit
+                rows = [row for row in rows if all(step(row) for step in steps)]
+        except ValueError as e:
+            raise ApiError(422, f"bad query param: {e}") from e
+        rows = rows[:limit]
         if key is not None and not rows:
             raise ApiError(404, f"key {key!r} not found in {channel!r}")
         return [_jsonable(r) for r in rows]
+
+    # --- routes ------------------------------------------------------
+    def last(self, channel: str, key: Optional[str] = None) -> List[dict]:
+        self._channel_or_404(channel)
+        return self._held_rows(channel, False, key=key)
 
     def state(
         self,
@@ -305,14 +337,7 @@ class GatewayApi:
             query = parse_query(query_json)
         except Exception as e:  # noqa: BLE001
             raise ApiError(422, f"bad query param: {e}") from e
-        limit = parse_limit(limit)
-        rows = self._collect_or_404(
-            channel,
-            lambda: self._plan_filters(channel, self.catalog.query(channel, query), key=key, limit=limit),
-        )
-        if key is not None and not rows:
-            raise ApiError(404, f"key {key!r} not found in {channel!r}")
-        return [_jsonable(r) for r in rows]
+        return self._held_rows(channel, True, query, key, parse_limit(limit))
 
     def lookup(self, channel: str, record_id: str) -> List[dict]:
         self._channel_or_404(channel)

@@ -34,3 +34,28 @@ def test_fused_newton_empty_input_keeps_one_row_beta(spark):
     rows = beta.collect()
     assert len(rows) == 1 and rows[0]["_beta"] == 0.0
     assert final.count() == 0
+
+
+def test_fused_newton_above_the_small_threshold_takes_eager_steps(spark, sf_dir, monkeypatch):
+    """More distinct event times than the small-path threshold: the
+    fused fit must not vouch ``known_count`` for its lazy chain (the
+    bucketed rank would replay the chain per job); it takes the eager
+    per-step path, with the same β and evaluation frame."""
+    import csp_gateway_spark.operators.analytics as analytics
+    import csp_gateway_spark.plans.scale as scale
+
+    df = _cohort(spark, sf_dir)
+    monkeypatch.setattr(analytics, "TARGET_ROWS_PER_BUCKET", 3)
+    vouched, real = [], scale.global_row_number
+
+    def spy(*args, **kwargs):
+        vouched.append(kwargs.get("known_count"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(scale, "global_row_number", spy)
+    f_eager, b_eager = analytics._cox_newton(df, "dur", "event", "x", 2, fused=False)
+    f_fused, b_fused = analytics._cox_newton(df, "dur", "event", "x", 2, fused=True)
+    assert f_fused.select("_t").distinct().count() > 3
+    assert vouched and all(n is None for n in vouched), vouched
+    assert b_fused.collect() == b_eager.collect()
+    assert sorted(tuple(r) for r in f_fused.collect()) == sorted(tuple(r) for r in f_eager.collect())

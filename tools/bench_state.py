@@ -6,7 +6,10 @@ reference's asv grid (`benchmarks/benchmarks/server/gateway/csp/state.py:57-193`
   mod 100;
 - the first (cold) ``GatewayApi.state`` query-all — it builds the
   served frame from the snapshot the sends merged into;
-- warm repeated query-all, and the 2-filter conjunctive query.
+- warm repeated query-all, and the 2-filter conjunctive query;
+- warm repeated ``/last``, and one ``/lookup`` of the first sent id
+  (report-only: ``lookup`` still unions every send, so at 100k it takes
+  minutes).
 
 Prints one JSON line: {"metric": "state_microbench", "cases": {...}},
 and exits non-zero when a warm ``/state`` at the largest N is more than
@@ -40,7 +43,8 @@ def run_case(spark, schema, n: int, key_mode: str) -> dict:
     api.catalog.declare_state(name, "a")
     rows = [{"a": i if key_mode == "unique" else i % 100, "b": f"b{i}", "c": i * 0.5} for i in range(n)]
     t0 = time.perf_counter()
-    for i in range(0, n, BATCH):
+    first = api.send(name, rows[:BATCH])[0]["id"]
+    for i in range(BATCH, n, BATCH):
         api.send(name, rows[i : i + BATCH])
     send_ms = (time.perf_counter() - t0) * 1e3 / (n // BATCH)
     t0 = time.perf_counter()
@@ -53,11 +57,20 @@ def run_case(spark, schema, n: int, key_mode: str) -> dict:
     t0 = time.perf_counter()
     api.state(name, query_json=q2)
     filt_ms = (time.perf_counter() - t0) * 1e3
+    t0 = time.perf_counter()
+    for _ in range(WARM):
+        api.last(name)
+    last_ms = (time.perf_counter() - t0) * 1e3 / WARM
+    t0 = time.perf_counter()
+    api.lookup(name, first)
+    lookup_ms = (time.perf_counter() - t0) * 1e3
     return {
         "send_ms_per_batch": round(send_ms, 1),
         "cold_state_ms": round(cold_ms, 1),
         "warm_state_ms": round(warm_ms, 1),
         "filtered_state_ms": round(filt_ms, 1),
+        "warm_last_ms": round(last_ms, 1),
+        "lookup_ms": round(lookup_ms, 1),
         "state_rows": len(served),
     }
 
