@@ -13,7 +13,7 @@ As in the reference, the model has two forms.  ``apply_query`` compiles
 it to Catalyst expressions for DataFrames (gates, Perspective routes),
 so predicate pushdown / codegen apply; dotted paths map to nested field
 access (``col("a.b")``).  ``Query.resolve(schema)`` binds it to rows of
-a schema and ``calculate(row)`` evaluates one row in Python: how
+a schema and ``calculate(rows)`` filters rows in Python: how
 ``/state`` and ``/last`` filter the rows the catalog holds on the
 driver.  Both drop an unknown attribute's clause by one rule
 (``_unknown_attr``), and the evaluator gives Catalyst's answer under
@@ -39,7 +39,7 @@ import operator
 import re
 import struct
 from functools import reduce
-from typing import Any, Callable, List, Optional, Union
+from typing import Any, Callable, Iterable, List, Optional, Union
 
 from pydantic import BaseModel, PrivateAttr, model_validator
 from pyspark.sql import Column, DataFrame
@@ -132,17 +132,25 @@ class Query(BaseModel):
                 bound.append(flt)
         return Query(filters=bound)
 
-    def calculate(self, row: dict) -> bool:
-        """Whether the row passes: every filter true, in order, stopping
-        at the first false one as Spark's ``AND`` does (a null one goes
-        on, and drops the row)."""
-        kept = True
-        for flt in self.filters:
-            hit = flt.calculate(row)
-            if hit is False:
-                return False
-            kept = kept and hit is True
-        return kept
+    def calculate(self, rows: Iterable[dict]) -> List[dict]:
+        """The rows that pass (the reference filters a list of ticks):
+        every filter true, evaluated in order and stopping at the first
+        false one, as Spark's ``AND`` does (a null one goes on, and
+        drops the row).  The query must be resolved."""
+        calcs = [flt._calc for flt in self.filters]
+        if len(calcs) == 1:
+            return [row for row in rows if calcs[0](row)]
+        return [row for row in rows if _passes(calcs, row)]
+
+
+def _passes(calcs: list, row: dict) -> bool:
+    kept = True
+    for calc in calcs:
+        hit = calc(row)
+        if hit is False:
+            return False
+        kept = kept and hit is True
+    return kept
 
 
 def _unknown_attr(flt: Filter, schema: T.StructType) -> Optional[str]:
@@ -250,51 +258,60 @@ def _getter(attr: str, schema: T.StructType):
     """(family, row → value) of a top-level or one-level dotted attr."""
     head, _, sub = attr.partition(".")
     if not sub or not isinstance(schema[head].dataType if head in schema.names else None, T.StructType):
-        return _kind(schema[attr].dataType), lambda row: row.get(attr)
-    return _kind(schema[head].dataType[sub].dataType), lambda row: None if (v := row.get(head)) is None else v[sub]
+        return _kind(schema[attr].dataType), operator.itemgetter(attr)
+    return _kind(schema[head].dataType[sub].dataType), lambda row: None if (v := row[head]) is None else v[sub]
+
+
+_EXACT = {"int", "decimal", "string", "bool", "timestamp", "date"}  # Python's order is Spark's
 
 
 def _bind(flt: Filter, schema: T.StructType) -> Callable[[dict], Optional[bool]]:
     """``flt`` over rows of ``schema``: both operands cast to the
     comparison type, the literal once; a literal the cast rejects
     raises when the first non-null row reaches it, as in Spark."""
-    op = _OPS[flt.op]
     lkind, left = _getter(flt.attr, schema)
     if flt._other():
         rkind, right = _getter(flt._other(), schema)
     elif flt._literal() is None:
         return lambda row: None  # ``= NULL`` is null on every row
     else:
-        literal, rkind = flt._literal(), _literal_kind(flt._literal())
+        rkind = _literal_kind(flt._literal())
     kind = lkind if lkind == rkind else _COMMON.get((lkind, rkind)) or _COMMON.get((rkind, lkind))
     if kind is None:
         raise ValueError(f"[DATATYPE_MISMATCH] cannot compare {flt.attr!r} ({lkind}) with {rkind}")
+    op = _OPS[flt.op]
+    compare = op if kind in _EXACT else lambda a, b: op(_rank(a), _rank(b))
     lcast, rcast = _cast(lkind, kind), _cast(rkind, kind)
-    if not flt._other():
-        try:
-            value = rcast(literal)
-            right, rcast = (lambda row: value), (lambda v: v)
-        except ValueError as e:
-            err = e
+    if flt._other():
 
-            def right(row):
-                raise err
+        def calc(row: dict) -> Optional[bool]:
+            lhs = left(row)
+            if lhs is None or (rhs := right(row)) is None:
+                return None
+            return compare(lcast(lhs) if lcast else lhs, rcast(rhs) if rcast else rhs)
+
+        return calc
+    err = value = None
+    try:
+        value = rcast(flt._literal()) if rcast else flt._literal()
+    except ValueError as e:
+        err = e
 
     def calc(row: dict) -> Optional[bool]:
         lhs = left(row)
         if lhs is None:
             return None
-        lhs = lcast(lhs)
-        rhs = right(row)
-        return None if rhs is None else op(_rank(lhs), _rank(rcast(rhs)))
+        if err is not None:
+            raise err
+        return compare(lcast(lhs) if lcast else lhs, value)
 
     return calc
 
 
-def _cast(src: str, dst: str) -> Callable[[Any], Any]:
+def _cast(src: str, dst: str) -> Optional[Callable[[Any], Any]]:
     """Spark's cast of a ``src``-family value to family ``dst``, on the
-    Python values rows and literals carry; timestamps become epoch
-    micros and dates epoch days so every family compares as is."""
+    Python values rows and literals carry (None: as is); timestamps
+    become epoch micros and dates epoch days."""
     if dst == "double":
         return _STRING_TO["double"] if src == "string" else float
     if src == "string" and dst in _STRING_TO:
@@ -303,7 +320,7 @@ def _cast(src: str, dst: str) -> Callable[[Any], Any]:
         return T.TimestampType().toInternal if src == "timestamp" else lambda d: _days(d) * _DAY_US
     if dst == "date":
         return _days
-    return lambda v: v
+    return None
 
 
 _DAY_US = 86_400_000_000

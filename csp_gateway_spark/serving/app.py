@@ -310,9 +310,9 @@ class GatewayApi:
                 if field is None:
                     raise ApiError(404, f"channel {channel!r} is not keyed")
                 render = as_string(schema[field].dataType) if field in schema.names else None
-                steps.append(lambda row: row.get(field) is not None and render(row[field]) == key)
-            if steps:  # every row, as Spark filters a local relation before its limit
-                rows = [row for row in rows if all(step(row) for step in steps)]
+                steps.append(lambda rows: [r for r in rows if r.get(field) is not None and render(r[field]) == key])
+            for step in steps:  # one filter at a time over every row, as Spark filters a local relation
+                rows = step(rows)
         except ValueError as e:
             raise ApiError(422, f"bad query param: {e}") from e
         rows = rows[:limit]
