@@ -312,7 +312,7 @@ def _cast(src: str, dst: str) -> Optional[Callable[[Any], Any]]:
     """Spark's cast of a ``src``-family value to family ``dst``, on the
     Python values rows and literals carry (None: as is); timestamps
     become epoch micros and dates epoch days."""
-    if dst == "double":
+    if dst == "double" and src != "double":
         return _STRING_TO["double"] if src == "string" else float
     if src == "string" and dst in _STRING_TO:
         return _STRING_TO[dst]
