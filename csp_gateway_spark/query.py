@@ -418,7 +418,7 @@ def _to_timestamp(s: str) -> int:
             raise ValueError(s)
         local = (days * 86400 + h * 3600 + mi * 60 + sec) * 1_000_000 + int(((m["f"] or "") + "000000")[:6])
         return local - _zone_offset_us(m["z"], local)
-    except (TypeError, ValueError):
+    except (TypeError, ValueError, OverflowError):
         raise _invalid(s, "TIMESTAMP") from None
 
 

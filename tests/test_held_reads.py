@@ -14,7 +14,7 @@ from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from csp_gateway_spark.catalog import ChannelCatalog
-from csp_gateway_spark.query import Query, apply_query
+from csp_gateway_spark.query import apply_query
 from csp_gateway_spark.serving.app import ApiError, GatewayApi, _jsonable, parse_query
 
 KV = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.LongType())])
