@@ -29,7 +29,7 @@ into it, under the channel lock, by ``max_by``'s rule over
 merged by the same rule.  ``held`` returns the snapshot's rows in key
 order, kept until the next merge: the REST routes ``/state``,
 ``/state?query=`` and ``/last`` filter them in Python
-(``Query.calculate``) with no Spark plan or JVM call.  ``state``/``last``
+(``Query.resolve``) with no Spark plan or JVM call.  ``state``/``last``
 serve the same rows as an Arrow-built local relation for DataFrame
 callers (Perspective routes, tests), whose filters run on the driver
 with no Spark job.  Snapshot memory is O(keys).

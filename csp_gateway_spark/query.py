@@ -13,20 +13,19 @@ As in the reference, the model has two forms.  ``apply_query`` compiles
 it to Catalyst expressions for DataFrames (gates, Perspective routes),
 so predicate pushdown / codegen apply; dotted paths map to nested field
 access (``col("a.b")``).  ``Query.resolve(schema)`` binds it to rows of
-a schema and ``calculate(rows)`` filters rows in Python: how
+a schema and returns a function that filters such rows in Python: how
 ``/state`` and ``/last`` filter the rows the catalog holds on the
 driver.  Both drop an unknown attribute's clause by one rule
-(``_unknown_attr``), and the evaluator gives Catalyst's answer under
-ANSI mode: each operand is coerced to the comparison type Spark picks
-(an integral column against ``"2"`` casts the string to bigint, against
-``2.0`` widens to double; a decimal against a string compares as
-doubles); a pair Spark cannot compare, or a literal it cannot build,
-raises ``ValueError`` at resolve time (DATATYPE_MISMATCH); a string the
-cast rejects raises when a row reaches it (CAST_INVALID_INPUT).  Null
-compares as null, NaN equals NaN and sorts above every double, -0.0
-equals 0.0.  String casts follow Spark's parsers in the session time
-zone, UTC (``session.get_spark`` pins it); short zone ids such as
-``PST`` are not parsed.
+(``_unknown_attr``).  The evaluator takes the comparisons whose answer
+needs no Spark parser: two values of one family (integral, decimal,
+double, string, boolean, timestamp, date), an integral widened to
+decimal or double as ANSI coercion widens it, and a string against an integral
+compared as bigint (``a <= "2"`` on a long), whose invalid input raises
+``ValueError`` (CAST_INVALID_INPUT) when a row reaches it, as in Spark.
+Null compares as null, NaN equals NaN and sorts above every double,
+-0.0 equals 0.0.  Any other pair, literal or nested type raises
+``CatalystOnly`` at resolve time; the caller then runs ``apply_query``,
+which answers or rejects it as Spark does.
 """
 
 from __future__ import annotations
@@ -34,14 +33,12 @@ from __future__ import annotations
 import datetime
 import decimal
 import logging
-import math
 import operator
 import re
-import struct
 from functools import reduce
 from typing import Any, Callable, Iterable, List, Optional, Union
 
-from pydantic import BaseModel, PrivateAttr, model_validator
+from pydantic import BaseModel, model_validator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -80,7 +77,6 @@ class Filter(BaseModel):
     value: Optional[Any] = None
     where: Optional[str] = None  # convenience: attr name, same as FilterWhereLambda
     op: str = "=="
-    _calc: Optional[Callable[[dict], Optional[bool]]] = PrivateAttr(default=None)
 
     @model_validator(mode="after")
     def _check(self):
@@ -104,11 +100,6 @@ class Filter(BaseModel):
             rhs = F.lit(self.value)
         return _OPS[self.op](lhs, rhs)
 
-    def calculate(self, row: dict) -> Optional[bool]:
-        """``attr <op> rhs`` on one row of the schema this filter was
-        resolved against (``Query.resolve``); None when it is null."""
-        return self._calc(row)
-
 
 class Query(BaseModel):
     """Conjunction of filters (reference `utils/web/query.py:11-17`)."""
@@ -120,27 +111,18 @@ class Query(BaseModel):
             return None
         return reduce(lambda a, b: a & b, (f.column() for f in self.filters))
 
-    def resolve(self, schema: T.StructType) -> "Query":
-        """This query bound to rows of ``schema``: clauses on unknown
-        attributes dropped, literals coerced once.  Raises ValueError
-        where Spark's analysis would."""
-        bound = []
-        for flt in self.filters:
-            if _unknown_attr(flt, schema) is None:
-                flt = flt.model_copy()
-                flt._calc = _bind(flt, schema)
-                bound.append(flt)
-        return Query(filters=bound)
-
-    def calculate(self, rows: Iterable[dict]) -> List[dict]:
-        """The rows that pass (the reference filters a list of ticks):
-        every filter true, evaluated in order and stopping at the first
-        false one, as Spark's ``AND`` does (a null one goes on, and
-        drops the row).  The query must be resolved."""
-        calcs = [flt._calc for flt in self.filters]
+    def resolve(self, schema: T.StructType) -> Callable[[Iterable[dict]], List[dict]]:
+        """This query bound to rows of ``schema`` (clauses on unknown
+        attributes dropped, literals coerced once): a function returning
+        the rows that pass, in order (the reference filters a list of
+        ticks).  Each row's filters run in order and stop at the first
+        false one, as Spark's ``AND`` does; a null one goes on and drops
+        the row.  Raises ``CatalystOnly`` for what the evaluator leaves
+        to ``apply_query``."""
+        calcs = [_bind(flt, schema) for flt in self.filters if _unknown_attr(flt, schema) is None]
         if len(calcs) == 1:
-            return [row for row in rows if calcs[0](row)]
-        return [row for row in rows if _passes(calcs, row)]
+            return lambda rows: [row for row in rows if calcs[0](row)]
+        return lambda rows: [row for row in rows if _passes(calcs, row)]
 
 
 def _passes(calcs: list, row: dict) -> bool:
@@ -191,6 +173,11 @@ def apply_query(df: DataFrame, query: Optional[Query]) -> DataFrame:
 
 
 # --- the Python evaluator ----------------------------------------------
+class CatalystOnly(Exception):
+    """A comparison, literal or rendering the Python evaluator leaves to
+    Catalyst (``apply_query``)."""
+
+
 def _rank(value):
     """Spark's ascending order of one value as a hashable sort key: null
     lowest, NaN highest, structs and arrays field by field."""
@@ -203,55 +190,36 @@ def _rank(value):
     return (1, value)
 
 
-def _kind(dt: T.DataType) -> str:
-    """The comparison family of a Spark type."""
-    for types, kind in (
-        (T.BooleanType, "bool"),
-        (T.IntegralType, "int"),
-        (T.DecimalType, "decimal"),
-        (T.FractionalType, "double"),
-        ((T.StringType, T.CharType, T.VarcharType), "string"),
-        (T.TimestampType, "timestamp"),
-        (T.DateType, "date"),
-    ):
-        if isinstance(dt, types):
-            return kind
-    return dt.simpleString()  # comparable with its own type only
-
-
-# the type ANSI coercion compares two families as (either order)
+# comparison family of a scalar type, and of the literal ``F.lit`` builds
+_KINDS = (
+    (T.BooleanType, bool, "bool"),
+    (T.IntegralType, int, "int"),
+    (T.DecimalType, decimal.Decimal, "decimal"),
+    (T.FractionalType, float, "double"),
+    ((T.StringType, T.CharType, T.VarcharType), str, "string"),
+    (T.TimestampType, datetime.datetime, "timestamp"),
+    (T.DateType, datetime.date, "date"),
+)
+# the type ANSI coercion compares two families as, where Python has its answer
 _COMMON = {
     ("int", "double"): "double",
     ("int", "decimal"): "decimal",
-    ("decimal", "double"): "double",
     ("string", "int"): "int",
-    ("string", "double"): "double",
-    ("string", "decimal"): "double",
-    ("string", "bool"): "bool",
-    ("string", "timestamp"): "timestamp",
-    ("string", "date"): "date",
-    ("date", "timestamp"): "timestamp",
 }
 
 
-def _literal_kind(value: Any) -> str:
-    """The family of the literal ``F.lit(value)`` builds."""
-    if isinstance(value, bool):
-        return "bool"
-    if isinstance(value, int):
-        if not -(2**63) <= value < 2**63:
-            raise ValueError(f"integer literal {value} is out of the bigint range")
-        return "int"
-    for types, kind in (
-        (float, "double"),
-        (decimal.Decimal, "decimal"),
-        (str, "string"),
-        (datetime.datetime, "timestamp"),
-        (datetime.date, "date"),
-    ):
-        if isinstance(value, types):
+def _kind(dt: T.DataType) -> str:
+    for types, _, kind in _KINDS:
+        if isinstance(dt, types):
             return kind
-    raise ValueError(f"unsupported literal {value!r}")
+    raise CatalystOnly(dt.simpleString())
+
+
+def _literal_kind(value: Any) -> str:
+    for _, types, kind in _KINDS:  # bool before int, datetime before date
+        if isinstance(value, types) and (kind != "int" or -(2**63) <= value < 2**63):
+            return kind
+    raise CatalystOnly(repr(value))
 
 
 def _getter(attr: str, schema: T.StructType):
@@ -260,9 +228,6 @@ def _getter(attr: str, schema: T.StructType):
     if not sub or not isinstance(schema[head].dataType if head in schema.names else None, T.StructType):
         return _kind(schema[attr].dataType), operator.itemgetter(attr)
     return _kind(schema[head].dataType[sub].dataType), lambda row: None if (v := row[head]) is None else v[sub]
-
-
-_EXACT = {"int", "decimal", "string", "bool", "timestamp", "date"}  # Python's order is Spark's
 
 
 def _bind(flt: Filter, schema: T.StructType) -> Callable[[dict], Optional[bool]]:
@@ -278,9 +243,9 @@ def _bind(flt: Filter, schema: T.StructType) -> Callable[[dict], Optional[bool]]
         rkind = _literal_kind(flt._literal())
     kind = lkind if lkind == rkind else _COMMON.get((lkind, rkind)) or _COMMON.get((rkind, lkind))
     if kind is None:
-        raise ValueError(f"[DATATYPE_MISMATCH] cannot compare {flt.attr!r} ({lkind}) with {rkind}")
+        raise CatalystOnly(f"{flt.attr!r} ({lkind}) against {rkind}")
     op = _OPS[flt.op]
-    compare = op if kind in _EXACT else lambda a, b: op(_rank(a), _rank(b))
+    compare = (lambda a, b: op(_rank(a), _rank(b))) if kind == "double" else op  # NaN's order
     lcast, rcast = _cast(lkind, kind), _cast(rkind, kind)
     if flt._other():
 
@@ -311,172 +276,34 @@ def _bind(flt: Filter, schema: T.StructType) -> Callable[[dict], Optional[bool]]
 def _cast(src: str, dst: str) -> Optional[Callable[[Any], Any]]:
     """Spark's cast of a ``src``-family value to family ``dst``, on the
     Python values rows and literals carry (None: as is); timestamps
-    become epoch micros and dates epoch days."""
+    become epoch micros, as ``F.lit`` converts them."""
     if dst == "double" and src != "double":
-        return _STRING_TO["double"] if src == "string" else float
-    if src == "string" and dst in _STRING_TO:
-        return _STRING_TO[dst]
+        return float
+    if src == "string" and dst == "int":
+        return _to_long
     if dst == "timestamp":
-        return T.TimestampType().toInternal if src == "timestamp" else lambda d: _days(d) * _DAY_US
-    if dst == "date":
-        return _days
+        return T.TimestampType().toInternal
     return None
 
 
-_DAY_US = 86_400_000_000
 _TRIM = "".join(map(chr, range(33)))  # Spark's string casts trim every char <= ' '
-
-
-def _invalid(s: str, kind: str) -> ValueError:
-    return ValueError(f"[CAST_INVALID_INPUT] the value {s!r} cannot be cast to {kind}")
-
-
-def _civil_days(year: int, month: int, day: int) -> int:
-    """Days since 1970-01-01 of a proleptic Gregorian date (any year)."""
-    if not 1 <= month <= 12:
-        raise ValueError(month)
-    leap = year % 4 == 0 and (year % 100 != 0 or year % 400 == 0)
-    if not 1 <= day <= (29 if month == 2 and leap else [31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31][month - 1]):
-        raise ValueError(day)
-    y = year - (month <= 2)
-    era = y // 400
-    doy = (153 * (month + (-3 if month > 2 else 9)) + 2) // 5 + day - 1
-    return era * 146097 + (y - era * 400) * 365 + (y - era * 400) // 4 - (y - era * 400) // 100 + doy - 719468
-
-
-def _days(d: datetime.date) -> int:
-    return _civil_days(d.year, d.month, d.day)
 
 
 def _to_long(s: str) -> int:
     t = s.strip(_TRIM)
     if re.fullmatch(r"[+-]?\d+", t, re.A) and -(2**63) <= int(t) < 2**63:
         return int(t)
-    raise _invalid(s, "BIGINT")
-
-
-_SPECIAL_DOUBLES = {"inf": math.inf, "+inf": math.inf, "infinity": math.inf, "+infinity": math.inf,
-                    "-inf": -math.inf, "-infinity": -math.inf, "nan": math.nan}  # fmt: skip
-_JAVA_DOUBLE = re.compile(
-    r"[+-]?(?:NaN|Infinity|(?:(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?"
-    r"|0[xX](?:[0-9a-fA-F]+\.?[0-9a-fA-F]*|\.[0-9a-fA-F]+)[pP][+-]?\d+)[fFdD]?)",
-    re.A,
-)
-
-
-def _to_double(s: str) -> float:
-    t = s.strip(_TRIM)
-    if t.lower() in _SPECIAL_DOUBLES:
-        return _SPECIAL_DOUBLES[t.lower()]
-    if not _JAVA_DOUBLE.fullmatch(t):  # ``Double.parseDouble``'s grammar
-        raise _invalid(s, "DOUBLE")
-    t = t[:-1] if t[-1] in "fFdD" else t
-    return float.fromhex(t) if "x" in t.lower() else float(t)
-
-
-def _to_bool(s: str) -> bool:
-    t = s.strip(_TRIM).lower()
-    if t in ("t", "true", "y", "yes", "1"):
-        return True
-    if t in ("f", "false", "n", "no", "0"):
-        return False
-    raise _invalid(s, "BOOLEAN")
-
-
-def _to_date(s: str) -> int:
-    m = re.fullmatch(r"([+-]?\d{4,7})(?:-(\d{1,2})(?:-(\d{1,2})(?:[ T].*)?)?)?", s.strip(_TRIM), re.A | re.S)
-    try:
-        return _civil_days(int(m[1]), int(m[2] or 1), int(m[3] or 1))
-    except (TypeError, ValueError):
-        raise _invalid(s, "DATE") from None
-
-
-_TIMESTAMP = re.compile(
-    r"(?:(?P<y>[+-]?\d{4,7})(?:-(?P<mo>\d{1,2})(?:-(?P<d>\d{1,2})(?:[ T](?=\d)|(?=\D|$)))?)?|T)?"
-    r"(?:(?P<h>\d{1,2})(?::(?P<mi>\d{1,2})(?::(?P<s>\d{1,2})(?:\.(?P<f>\d*))?)?)?)?"
-    r"\s*(?P<z>Z|(?:UTC|GMT|UT)?[+-]\d{1,2}(?::?\d{2}){0,2}|UTC|GMT|UT|[A-Za-z_]+(?:/[A-Za-z0-9_+-]+)+)?",
-    re.A,
-)
-
-
-def _to_timestamp(s: str) -> int:
-    """Epoch micros of ``[+-]yyyy[-m[m][-d[d]]]``, then after a full
-    date ``[ T]h[h][:m[m][:s[s][.fraction]]]`` and a zone; a time alone
-    (``[T]h[h]:m[m]...``) is on today's date."""
-    m = _TIMESTAMP.fullmatch(s.strip(_TRIM))
-    try:
-        if m["h"] is not None and m["y"] is not None and m["d"] is None:
-            raise ValueError(s)
-        if m["y"] is not None:
-            days = _civil_days(int(m["y"]), int(m["mo"] or 1), int(m["d"] or 1))
-        elif m["mi"] is not None:
-            days = _days(datetime.datetime.now(datetime.timezone.utc).date())
-        else:
-            raise ValueError(s)
-        h, mi, sec = int(m["h"] or 0), int(m["mi"] or 0), int(m["s"] or 0)
-        if h > 23 or mi > 59 or sec > 59:
-            raise ValueError(s)
-        local = (days * 86400 + h * 3600 + mi * 60 + sec) * 1_000_000 + int(((m["f"] or "") + "000000")[:6])
-        return local - _zone_offset_us(m["z"], local)
-    except (TypeError, ValueError, OverflowError):
-        raise _invalid(s, "TIMESTAMP") from None
-
-
-def _zone_offset_us(zone: Optional[str], local_us: int) -> int:
-    if zone is None or zone in ("Z", "UTC", "GMT", "UT"):
-        return 0
-    off = re.fullmatch(r"(?:UTC|GMT|UT)?([+-])(\d{1,2})(?::?(\d{2}))?(?::?(\d{2}))?", zone)
-    if off:
-        sign = -1 if off[1] == "-" else 1
-        return sign * (int(off[2]) * 3600 + int(off[3] or 0) * 60 + int(off[4] or 0)) * 1_000_000
-    import zoneinfo
-
-    try:
-        tz = zoneinfo.ZoneInfo(zone)
-    except (zoneinfo.ZoneInfoNotFoundError, ValueError):
-        raise ValueError(zone) from None
-    wall = datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=local_us)
-    return int(wall.replace(tzinfo=tz).utcoffset() / datetime.timedelta(microseconds=1))
-
-
-_STRING_TO = {"int": _to_long, "double": _to_double, "bool": _to_bool, "date": _to_date, "timestamp": _to_timestamp}
-
-
-def _java_double(v: float) -> str:
-    """``Double.toString``: positional in [1e-3, 1e7), else d.dddEn."""
-    if v != v or v in (math.inf, -math.inf):
-        return "NaN" if v != v else ("Infinity" if v > 0 else "-Infinity")
-    if v == 0 or 1e-3 <= abs(v) < 1e7:
-        return repr(v)
-    sign, digits, exp = decimal.Decimal(repr(v)).normalize().as_tuple()
-    mantissa = f"{digits[0]}." + ("".join(map(str, digits[1:])) or "0")
-    return f"{'-' if sign else ''}{mantissa}E{len(digits) - 1 + exp}"
-
-
-def _java_float(v: float) -> str:
-    """``Float.toString``: the shortest digits that round to the float."""
-    f32 = struct.Struct("f")
-    for p in range(9):
-        short = float(f"{v:.{p}e}")
-        if f32.unpack(f32.pack(short))[0] == v:
-            return _java_double(short)
-    return _java_double(v)
-
-
-def _timestamp_string(v: datetime.datetime) -> str:
-    wall = datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=T.TimestampType().toInternal(v))
-    text = wall.isoformat(sep=" ")
-    return text.rstrip("0") if "." in text else text
+    raise ValueError(f"[CAST_INVALID_INPUT] the value {s!r} cannot be cast to BIGINT")
 
 
 def as_string(dt: T.DataType) -> Callable[[Any], str]:
-    """``CAST(value AS STRING)`` for a non-null value of type ``dt``."""
+    """``CAST(value AS STRING)`` for a non-null value of type ``dt``;
+    ``CatalystOnly`` for types whose rendering is Java's (floating
+    point, timestamps, nested types)."""
     if isinstance(dt, T.BooleanType):
         return lambda v: "true" if v else "false"
-    if isinstance(dt, (T.DoubleType, T.FloatType)):
-        return _java_double if isinstance(dt, T.DoubleType) else _java_float
     if isinstance(dt, T.DecimalType):
         return lambda v: format(v.copy_abs() if v.is_zero() else v, "f")
-    if isinstance(dt, T.TimestampType):
-        return _timestamp_string
-    return str
+    if isinstance(dt, (T.IntegralType, T.StringType, T.DateType)):
+        return str
+    raise CatalystOnly(dt.simpleString())

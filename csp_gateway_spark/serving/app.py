@@ -29,8 +29,8 @@ from typing import Any, Dict, List, Optional, Union
 
 from pyspark.sql import Row
 
-from csp_gateway_spark.catalog import ChannelCatalog, NoProviderException
-from csp_gateway_spark.query import Filter, Query, as_string
+from csp_gateway_spark.catalog import ChannelCatalog
+from csp_gateway_spark.query import CatalystOnly, Filter, Query, as_string
 
 
 def _jsonable(value: Any) -> Any:
@@ -232,8 +232,8 @@ class GatewayApi:
 
     def _plan_filters(self, channel: str, df, key: Optional[str] = None, limit: Optional[int] = None):
         """Push per-request predicates INTO the DataFrame plan before
-        collect, for the DataFrame-backed routes (`/lookup`, Perspective)
-        (reference `auth_filter.py:533-571` filters each response's
+        collect, for the DataFrame-backed routes (`/lookup`, Perspective,
+        queries the Python evaluator leaves to Catalyst) (reference `auth_filter.py:533-571` filters each response's
         rows; SURVEY §2.2 P4 maps that to ``df.filter``):
 
         - row-level identity filter (only on columns the channel has —
@@ -265,8 +265,11 @@ class GatewayApi:
             raise ApiError(404, f"unknown channel {channel!r}")
 
     def _collect_or_404(self, channel: str, df_fn) -> List[Row]:
+        return self._read_or_404(channel, lambda: df_fn().collect())
+
+    def _read_or_404(self, channel: str, read):
         try:
-            return df_fn().collect()
+            return read()
         except ApiError:
             raise
         except Exception as e:  # noqa: BLE001 — unwired: no ticks yet
@@ -296,15 +299,14 @@ class GatewayApi:
         `last.py:18-157`, ``CAST(field AS STRING) = key``) and ``limit``,
         each in that order as ``_plan_filters`` would apply them, and
         evaluated in Python on the rows the catalog holds: no Spark plan
-        or JVM call.  A query Spark cannot evaluate is a 422."""
-        try:
-            schema, rows = self.catalog.held(channel, keyed)
-        except (KeyError, NoProviderException) as e:
-            raise ApiError(404, f"no ticks yet on {channel!r}: {e}") from e
+        or JVM call.  What the evaluator leaves to Catalyst
+        (``CatalystOnly``) runs through ``_plan_filters`` over the same
+        snapshot.  A query Spark cannot evaluate is a 422."""
+        schema, rows = self._read_or_404(channel, lambda: self.catalog.held(channel, keyed))
         try:
             idents = [Filter(attr=f, value=v) for f, v in self.identity_filter.items() if f in schema.names]
-            steps = [q.resolve(schema) for q in [query or Query()] + [Query(filters=[f]) for f in idents]]
-            steps = [q.calculate for q in steps if q.filters]
+            queries = [query or Query()] + [Query(filters=[f]) for f in idents]
+            steps = [q.resolve(schema) for q in queries if q.filters]
             if key is not None:
                 field = self.key_field(channel)
                 if field is None:
@@ -313,9 +315,17 @@ class GatewayApi:
                 steps.append(lambda rows: [r for r in rows if r.get(field) is not None and render(r[field]) == key])
             for step in steps:  # one filter at a time over every row, as Spark filters a local relation
                 rows = step(rows)
+            rows = rows[:limit]
+        except CatalystOnly:
+            try:  # the snapshot is merged and held: what fails here is the query
+                frame = self.catalog.query(channel, query) if keyed else self.catalog.last(channel)
+                rows = self._plan_filters(channel, frame, key=key, limit=limit).collect()
+            except ApiError:
+                raise
+            except Exception as e:  # noqa: BLE001
+                raise ApiError(422, f"bad query param: {e}") from e
         except ValueError as e:
             raise ApiError(422, f"bad query param: {e}") from e
-        rows = rows[:limit]
         if key is not None and not rows:
             raise ApiError(404, f"key {key!r} not found in {channel!r}")
         return [_jsonable(r) for r in rows]

@@ -67,6 +67,39 @@ def test_unevaluable_query_is_422(spark, flt):
     assert e.value.status == 422 and e.value.detail.startswith("bad query param")
 
 
+def test_failing_producer_read_maps_to_422_or_404(spark):
+    """A ``set_channel`` producer whose collect fires a contract guard
+    answers 422 with the operator's message on every held-row route;
+    any other failure is the no-ticks 404, never a 500."""
+    from pyspark.sql import functions as F
+
+    msg = "hodges_lehmann: pair-cell space 4000000 exceeds max_cells=2000000 - quantize the values first"
+    cat = ChannelCatalog(spark)
+    cat.declare("g", KV)
+    cat.declare_state("g", "k")
+    cat.set_channel("g", spark.range(5).select(
+        F.col("id").alias("k"), F.when(F.col("id") > 2, F.raise_error(F.lit(msg))).otherwise(F.col("id")).alias("v")
+    ))  # fmt: skip
+    cat.declare("b", KV)
+    cat.declare_state("b", "k")
+    broken = spark.createDataFrame([(1, 0)], "k long, v long")
+    cat.set_channel("b", broken.select("k", (F.col("v") / 0).cast("long").alias("v")))  # DIVIDE_BY_ZERO
+    api = GatewayApi(cat)
+    reads = [
+        lambda ch: api.state(ch),
+        lambda ch: api.state(ch, query_json='{"attr": "k", "op": "<=", "value": 3}'),
+        lambda ch: api.state(ch, key="1"),
+        lambda ch: api.last(ch),
+    ]
+    for read in reads:
+        with pytest.raises(ApiError) as e:
+            read("g")
+        assert e.value.status == 422 and "contract bound" in e.value.detail and "quantize" in e.value.detail
+        with pytest.raises(ApiError) as e:
+            read("b")
+        assert e.value.status == 404 and e.value.detail.startswith("no ticks yet")
+
+
 # --- the Python path against the Catalyst path --------------------------
 WIDE = T.StructType(
     [
@@ -79,6 +112,7 @@ WIDE = T.StructType(
         T.StructField("t", T.TimestampType()),
         T.StructField("dt", T.DateType()),
         T.StructField("st", T.StructType([T.StructField("x", T.LongType()), T.StructField("y", T.StringType())])),
+        T.StructField("mp", T.MapType(T.StringType(), T.LongType())),
     ]
 )
 KEY_COLUMNS = ("s", "l", "i", "b", "dt", "t", "m")  # one channel keyed by each
@@ -107,6 +141,7 @@ row = st.fixed_dictionaries(
         "t": nullable(stamps),
         "dt": nullable(dates),
         "st": nullable(st.fixed_dictionaries({"x": nullable(ints), "y": nullable(st.sampled_from(STRINGS))})),
+        "mp": nullable(st.dictionaries(st.sampled_from(["a", "b"]), st.integers(-3, 3), max_size=2)),
     }
 )
 literal = (

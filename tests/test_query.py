@@ -4,7 +4,7 @@ import datetime
 
 import pytest
 
-from csp_gateway_spark.query import Filter, FilterWhen, FilterWhereLambda, Query, apply_query
+from csp_gateway_spark.query import CatalystOnly, Filter, FilterWhen, FilterWhereLambda, Query, apply_query
 
 
 @pytest.fixture(scope="module")
@@ -72,17 +72,20 @@ def test_approx_distinct_within_tolerance(spark, events):
         assert abs(r.approx - r.exact) <= max(3, 0.06 * r.exact), (r.event_type, r.approx, r.exact)
 
 
-def test_calculate_on_rows_matches_apply_query(spark, df):
-    """``Query.resolve(schema).calculate(rows)`` keeps the rows
-    ``apply_query`` keeps, in order; ``Filter.calculate`` is three-valued."""
+def test_resolve_on_rows_matches_apply_query(spark, df):
+    """``Query.resolve(schema)`` filters rows as ``apply_query`` filters
+    the frame, in order; a null comparison drops the row; a pair whose
+    cast is Spark's parser is left to Catalyst."""
     rows = [r.asDict() for r in df.collect()] + [{"name": None, "n": None, "x": None, "ts": None}]
     queries = [
         Query(filters=[Filter(attr="n", op=">", value="1"), Filter(attr="x", op="<", value=10)]),
         Query(filters=[Filter(attr="x", op=">", where="n"), Filter(attr="missing", value=1)]),
         Query(filters=[Filter(attr="ts", op=">=", by=FilterWhen(when=datetime.datetime(2024, 1, 2)))]),
+        Query(filters=[Filter(attr="n", op="<=", value=2.5)]),
     ]
     for q in queries:
         want = [r.name for r in apply_query(df, q).collect()]
-        assert [r["name"] for r in q.resolve(df.schema).calculate(rows)] == want
-    flt = Query(filters=[Filter(attr="n", op="<=", value=2.5)]).resolve(df.schema).filters[0]
-    assert [flt.calculate(r) for r in rows] == [True, True, False, None]
+        assert [r["name"] for r in q.resolve(df.schema)(rows)] == want
+    for flt in (Filter(attr="x", op="<", value="10"), Filter(attr="n", value=True), Filter(attr="n", value=2**63)):
+        with pytest.raises(CatalystOnly):
+            Query(filters=[flt]).resolve(df.schema)
