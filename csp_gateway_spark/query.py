@@ -249,11 +249,13 @@ def _bind(flt: Filter, schema: T.StructType) -> Callable[[dict], Optional[bool]]
     lcast, rcast = _cast(lkind, kind), _cast(rkind, kind)
     if flt._other():
 
-        def calc(row: dict) -> Optional[bool]:
+        def calc(row: dict) -> Optional[bool]:  # the left operand, cast, before the right, as Spark evaluates
             lhs = left(row)
-            if lhs is None or (rhs := right(row)) is None:
+            if lhs is None:
                 return None
-            return compare(lcast(lhs) if lcast else lhs, rcast(rhs) if rcast else rhs)
+            lhs = lcast(lhs) if lcast else lhs
+            rhs = right(row)
+            return None if rhs is None else compare(lhs, rcast(rhs) if rcast else rhs)
 
         return calc
     err = value = None
