@@ -19,21 +19,27 @@ Reference semantics reproduced (file:line cites into /root/reference):
 
 Scale: a channel is just a DataFrame; unioning producers is a metadata
 operation (no shuffle).  A ``send`` is checked and stamped in Python and
-lands as a JVM-local Arrow relation, so a later read never starts a
-Python worker.  ``state``/``last`` never re-aggregate the channel: the
-driver holds one keyed-last snapshot per channel and state keys (one
-row for ``last``), key → stored row.  ``send`` merges the rows it stored
-into it, under the channel lock, by ``max_by``'s rule over
-``FOLD_ORDER``; a ``set_channel`` producer is reduced with
+appended to the channel's send log: the Arrow table of the rows it
+stored, with an id → log positions index (explicit ids can repeat).  It
+makes no JVM call.  ``get_channel`` serves the log as one Arrow-built
+local relation per run of same-schema sends, built when first read
+after the log grew, ∪ the ``set_channel`` producers, so a later read
+never starts a Python worker.  ``state``/``last`` never re-aggregate
+the channel: the driver holds one keyed-last snapshot per channel and
+state keys (one row for ``last``), key → stored row.  ``send`` merges
+the rows it stored into it, under the channel lock, by ``max_by``'s
+rule over ``FOLD_ORDER``; a snapshot created after sends catches up from
+the log in Python; a ``set_channel`` producer is reduced with
 ``keyed_last``/``last_tick`` once, collected at the next read, and
 merged by the same rule.  ``held`` returns the snapshot's rows in key
 order, kept until the next merge: the REST routes ``/state``,
 ``/state?query=`` and ``/last`` filter them in Python
-(``Query.resolve``) with no Spark plan or JVM call.  ``state``/``last``
-serve the same rows as an Arrow-built local relation for DataFrame
-callers (Perspective routes, tests), whose filters run on the driver
-with no Spark job.  Snapshot memory is O(keys).
-``lookup``/``get_channel`` still read the per-send deltas.
+(``Query.resolve``) with no Spark plan or JVM call, and ``/lookup``
+reads a log-only channel's rows by id from the index (``logged``).
+``state``/``last`` serve the same rows as an Arrow-built local relation
+for DataFrame callers (Perspective routes, tests), whose filters run on
+the driver with no Spark job.  Snapshot memory is O(keys); the log
+holds every sent row on the driver, as Arrow.
 """
 
 from __future__ import annotations
@@ -41,9 +47,11 @@ from __future__ import annotations
 import dataclasses
 import datetime
 import decimal
+import itertools
 import threading
 from typing import Callable, Dict, Iterable, List, Optional, Sequence, Tuple
 
+import pyarrow as pa
 from pydantic import BaseModel, ConfigDict
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -96,10 +104,37 @@ class _Snapshot:
     keys: Optional[Tuple[str, ...]]
     schema: Optional[T.StructType] = None  # None: no stream yet
     rows: Dict[tuple, dict] = dataclasses.field(default_factory=dict)
-    upto: int = 0  # producers merged
+    upto: Tuple[int, int] = (0, 0)  # log batches and producers merged
     # served rows, keys ASC NULLS FIRST (`state.py:193`), and their frame, until the next merge
     ordered: Optional[List[dict]] = None
     frame: Optional[DataFrame] = None
+
+
+@dataclasses.dataclass
+class _SendLog:
+    """One channel's sends as stored, in send order: (schema, Arrow
+    table) batches, an id → (batch, row) positions index over string
+    ids, and the relations ``get_channel`` serves, until the next send."""
+
+    batches: List[Tuple[T.StructType, pa.Table]] = dataclasses.field(default_factory=list)
+    index: Dict[str, List[Tuple[int, int]]] = dataclasses.field(default_factory=dict)
+    rows: int = 0
+    runs: int = 0  # runs of same-schema batches
+    frames: Optional[List[DataFrame]] = None
+
+    def append(self, schema: T.StructType, table: pa.Table, rows: List[dict]) -> None:
+        if not self.batches or self.batches[-1][0] != schema:
+            self.runs += 1
+        for i, row in enumerate(rows):
+            if isinstance(row.get("id"), str):
+                self.index.setdefault(row["id"], []).append((len(self.batches), i))
+        self.batches.append((schema, table))
+        self.rows += table.num_rows
+        self.frames = None
+
+    def grouped(self, start: int = 0) -> List[Tuple[T.StructType, List[pa.Table]]]:
+        """(schema, tables) per run of same-schema batches from ``start``."""
+        return [(s, [t for _, t in run]) for s, run in itertools.groupby(self.batches[start:], key=lambda b: b[0])]
 
 
 class NoProviderException(Exception):
@@ -113,7 +148,8 @@ class ChannelCatalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._schemas: Dict[str, T.StructType] = {}
-        self._producers: Dict[str, List[DataFrame]] = {}
+        self._producers: Dict[str, List[DataFrame]] = {}  # set_channel producers
+        self._logs: Dict[str, _SendLog] = {}
         self._required: set = set()
         self._state_keys: Dict[str, Sequence[str]] = {}
         self._block_until: Dict[str, datetime.datetime] = {}
@@ -141,6 +177,7 @@ class ChannelCatalog:
         return a (possibly modified) row."""
         self._schemas.setdefault(name, schema)
         self._producers.setdefault(name, [])
+        self._logs.setdefault(name, _SendLog())
         self._snapshot(name, None)
         if required:
             self._required.add(name)
@@ -179,18 +216,21 @@ class ChannelCatalog:
             self.declare_state(dst, list(self._state_keys[src]))
 
     def get_channel(self, name: str) -> DataFrame:
-        """Resolved view of a channel: union of producers (or the
-        finalized empty stream)."""
-        if name in self._mirrors:
-            streams = [self.get_channel(src) for src in self._mirrors[name]]
-            streams += [self._union(p)] if (p := self._producers.get(name)) else []
+        """Resolved view of a channel: its mirrored sources' views, its
+        send log (one relation per run of same-schema sends) and its
+        ``set_channel`` producers, unioned by name; or the finalized
+        empty stream."""
+        streams = [self.get_channel(src) for src in self._mirrors.get(name, [])]
+        with self._lock(name):
+            log = self._logs.get(name)
+            if log is not None and log.frames is None:
+                log.frames = [self.spark.createDataFrame(pa.concat_tables(ts), s) for s, ts in log.grouped()]
+            streams += (log.frames if log is not None else []) + self._producers.get(name, [])
+        if streams:
             return self._union(streams)
         if name in self._finalized:
             return self._finalized[name]
-        producers = self._producers.get(name, [])
-        if not producers:
-            raise NoProviderException(f"channel {name!r} has no provider (finalize() binds null streams)")
-        return self._union(producers)
+        raise NoProviderException(f"channel {name!r} has no provider (finalize() binds null streams)")
 
     def key_view(self, name: str, key_col: str, key: str) -> DataFrame:
         """Dict-basket per-key view (`channels.py:566-598`)."""
@@ -198,16 +238,14 @@ class ChannelCatalog:
 
     # --- finalize ----------------------------------------------------
     def finalize(self) -> None:
-        """Bind every channel: union producers, null-bind unused
-        optional channels, raise for unmet required ones
-        (`channels.py:331-437`)."""
+        """Bind every channel: null-bind unused optional channels, raise
+        for unmet required ones (`channels.py:331-437`)."""
         for name in list(self._producers):
-            producers = self._producers[name]
-            if producers:
-                self._finalized[name] = self._union(producers)
-            elif name in self._required:
+            if self._producers[name] or self._logs[name].batches:
+                continue
+            if name in self._required:
                 raise NoProviderException(f"required channel {name!r} has no provider")
-            elif self._schemas.get(name) is not None:
+            if self._schemas.get(name) is not None:
                 self._finalized[name] = self.spark.createDataFrame([], self._schemas[name])
             # else: untyped unused optional channel stays unbound
 
@@ -236,6 +274,22 @@ class ChannelCatalog:
         """`/lookup/<ch>/<id>` — id point query on the stream, instead of
         the reference's unbounded in-memory registry (`base.py:26-46`)."""
         return self.get_channel(name).filter(F.col("id") == F.lit(record_id))
+
+    def logged(self, name: str, record_id: str) -> Optional[Tuple[T.StructType, List[dict]]]:
+        """What ``lookup`` finds, as the driver holds it, when the channel
+        is only its send log (no ``set_channel`` producer, not a mirror,
+        one schema, a string ``id``): that schema and the rows with the
+        id, in send order, from the id index, with no JVM call.  None for
+        any other channel."""
+        with self._lock(name):
+            log = self._logs.get(name)
+            if log is None or log.runs != 1 or self._producers.get(name) or name in self._mirrors:
+                return None
+            schema = log.batches[0][0]
+            if "id" not in schema.names or not isinstance(schema["id"].dataType, T.StringType):
+                return None
+            hits = [log.batches[b][1].slice(r, 1) for b, r in log.index.get(record_id, ())]
+            return schema, _dicts(hits, schema)
 
     def held(self, name: str, keyed: bool) -> Tuple[T.StructType, List[dict]]:
         """What ``state`` (``keyed``) or ``last`` serves, as the driver
@@ -276,19 +330,23 @@ class ChannelCatalog:
         return self._snapshots.setdefault(name, {}).setdefault(keys, _Snapshot(keys))
 
     def _view(self, name: str, keys: Optional[Tuple[str, ...]]) -> _Snapshot:
-        """The channel's snapshot, first merging the producers added
-        since its last merge, reduced and collected (a snapshot created
-        after producers exist catches up from all of them once).  A
-        mirror's is a new snapshot: its sources' views, then its own.
-        The caller holds the channel lock."""
+        """The channel's snapshot, first merging what was added since its
+        last merge: log batches in Python, ``set_channel`` producers
+        reduced and collected (a snapshot created after sends or
+        producers exist catches up from all of them once).  A mirror's
+        is a new snapshot: its sources' views, then its own.  The caller
+        holds the channel lock."""
         snap = self._snapshot(name, keys)
-        producers = self._producers.get(name, [])
-        if producers[snap.upto :]:
-            reduced = _reduce(self._union(producers[snap.upto :]).coalesce(1), keys)
+        log, producers = self._logs.get(name) or _SendLog(), self._producers.get(name, [])
+        logged, merged = snap.upto
+        for schema, tables in log.grouped(logged):
+            self._merge_into(snap, schema, _dicts(tables, schema))
+        if producers[merged:]:
+            reduced = _reduce(self._union(producers[merged:]).coalesce(1), keys)
             self._merge_into(snap, reduced.schema, [r.asDict() for r in reduced.collect()])
-            snap.upto = len(producers)
         elif snap.schema is None and name in self._finalized:  # the null-bound empty stream
             snap.schema = _reduced_schema(self._finalized[name].schema, keys)
+        snap.upto = (len(log.batches), len(producers))
         if name not in self._mirrors:
             return snap
         out = _Snapshot(keys)
@@ -313,11 +371,14 @@ class ChannelCatalog:
         snap.ordered = snap.frame = None
 
     def stats(self) -> Dict[str, dict]:
-        """Producers and held snapshot rows per channel (``state_rows``
-        is None without declared state)."""
+        """Per channel: ``set_channel`` producers, the send log's rows and
+        batches, and held snapshot rows (``state_rows`` is None without
+        declared state)."""
         return {
             name: {
                 "producers": len(self._producers[name]),
+                "log_rows": self._logs[name].rows,
+                "log_batches": len(self._logs[name].batches),
                 "state_rows": len(self._snapshot(name, tuple(self._state_keys[name])).rows)
                 if name in self._state_keys
                 else None,
@@ -328,24 +389,30 @@ class ChannelCatalog:
 
     def send(self, name: str, rows: List[dict], schema: Optional[T.StructType] = None) -> DataFrame:
         """Inject records (REST POST path, `channels.py:950-962`) and
-        return the appended delta frame; see ``send_rows``."""
-        return self.send_rows(name, rows, schema)[1]
+        return the appended delta, the admitted rows as an Arrow-built
+        local relation; see ``send_rows``."""
+        _, schema, table = self._append(name, rows, schema)
+        return self.spark.createDataFrame(table, schema)
 
-    def send_rows(
-        self, name: str, rows: List[dict], schema: Optional[T.StructType] = None
-    ) -> Tuple[List[Row], DataFrame]:
+    def send_rows(self, name: str, rows: List[dict], schema: Optional[T.StructType] = None) -> List[Row]:
         """validate → assign id/timestamp → check against the schema
         (PySpark's own verifier, so a bad payload raises as
-        ``createDataFrame`` would) → append as a producer and merge into
-        the channel's snapshots.  Returns the rows exactly as stored — what collecting the delta would give,
-        without a Spark job — and the delta frame.
+        ``createDataFrame`` would) → append to the send log and merge
+        into the channel's snapshots.  Returns the rows exactly as
+        stored — what collecting them would give — with no JVM call.
 
         Ids come from a catalog-level atomic counter seeded at
         day-epoch*1e9 — the reference's id semantics
         (`utils/id_generator.py:8-25`).  Driver-side rows are few (REST
         payloads), so enumerating them here is not a scale concern.
         """
-        import pyarrow as pa
+        return self._append(name, rows, schema)[0]
+
+    def _append(
+        self, name: str, rows: List[dict], schema: Optional[T.StructType]
+    ) -> Tuple[List[Row], T.StructType, pa.Table]:
+        """``send_rows``; also returns the schema and the Arrow table of
+        the rows ``block_set_channels_until`` admitted."""
         from pyspark.sql.conversion import ArrowTableToRowsConversion
         from pyspark.sql.types import _create_converter, _make_type_verifier
 
@@ -383,17 +450,23 @@ class ChannelCatalog:
             admit = [row[TIMESTAMP_FIELD] is not None and micros(row[TIMESTAMP_FIELD]) >= micros(when) for row in kept]
             table = table.filter(pa.array(admit, pa.bool_()))
             kept = [row for row, ok in zip(kept, admit) if ok]
-        delta = self.spark.createDataFrame(table, schema)
         self.declare(name)
         with self._lock(name):
-            producers = self._producers[name]
-            current = [s for s in self._snapshots[name].values() if s.upto == len(producers)]
-            producers.append(delta)
-            for snap in current:  # a lagging snapshot collects the delta when it catches up
+            log = self._logs[name]
+            current = [s for s in self._snapshots[name].values() if s.upto[0] == len(log.batches)]
+            log.append(schema, table, kept)
+            for snap in current:  # a lagging snapshot merges the batch when it catches up
                 self._merge_into(snap, schema, kept)
-                snap.upto = len(producers)
-        self._finalized.pop(name, None)
-        return stored, delta
+                snap.upto = (len(log.batches), snap.upto[1])
+        return stored, schema, table
+
+
+def _dicts(tables: List[pa.Table], schema: T.StructType) -> List[dict]:
+    """The rows of Arrow ``tables`` of ``schema`` as ``send_rows`` stores
+    them, as dicts."""
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+    return [r.asDict() for r in ArrowTableToRowsConversion.convert(pa.concat_tables(tables), schema)] if tables else []
 
 
 def _arrow_table(rows: list, schema: T.StructType):

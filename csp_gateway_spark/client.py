@@ -187,7 +187,7 @@ def pipe_stream_to_catalog(ws, catalog, channel_map: Optional[Dict[str, str]] = 
         if schema is not None:
             declared = set(schema.fieldNames())
             data = {k: v for k, v in data.items() if k in declared}
-        catalog.send(target, [data])
+        catalog.send_rows(target, [data])
         forwarded += 1
     return forwarded
 

@@ -222,7 +222,7 @@ class GatewayApi:
     def _auth_rows(self, rows: List[Row]) -> List[dict]:
         """Identity filter over broker-delivered tick payloads (/next,
         WS), in-memory dicts bounded by one tick.  DataFrame-backed
-        routes use ``_plan_filters``; the snapshot routes ``_held_rows``."""
+        routes use ``_plan_filters``; the held-row routes ``_filter_rows``."""
         out = []
         for row in rows:
             d = row.asDict() if isinstance(row, Row) else dict(row)
@@ -232,8 +232,9 @@ class GatewayApi:
 
     def _plan_filters(self, channel: str, df, key: Optional[str] = None, limit: Optional[int] = None):
         """Push per-request predicates INTO the DataFrame plan before
-        collect, for the DataFrame-backed routes (`/lookup`, Perspective,
-        queries the Python evaluator leaves to Catalyst) (reference `auth_filter.py:533-571` filters each response's
+        collect, for the DataFrame-backed routes (`/lookup` on a channel
+        that is more than its send log, Perspective, queries the Python
+        evaluator leaves to Catalyst) (reference `auth_filter.py:533-571` filters each response's
         rows; SURVEY §2.2 P4 maps that to ``df.filter``):
 
         - row-level identity filter (only on columns the channel has —
@@ -242,8 +243,8 @@ class GatewayApi:
         - optional ``limit`` so a route never materializes more rows
           than the client asked for.
 
-        ``_held_rows`` applies the same steps, in the same order and
-        with the same answers, to the snapshot's Python rows."""
+        ``_filter_rows`` applies the same steps, in the same order and
+        with the same answers, to the rows the catalog holds."""
         from pyspark.sql import functions as F
 
         for field, value in self.identity_filter.items():
@@ -285,6 +286,35 @@ class GatewayApi:
                 ) from e
             raise ApiError(404, f"no ticks yet on {channel!r}: {e}") from e
 
+    def _filter_rows(
+        self,
+        channel: str,
+        schema,
+        rows: List[dict],
+        query: Optional[Query] = None,
+        key: Optional[str] = None,
+        limit: Optional[int] = None,
+    ) -> List[dict]:
+        """``rows`` of ``schema`` through the query, the identity filter
+        (an ``==`` filter per field the channel has), the dict-basket key
+        (reference `last.py:18-157`, ``CAST(field AS STRING) = key``) and
+        ``limit``, each in that order as ``_plan_filters`` would apply
+        them, evaluated in Python: no Spark plan or JVM call.  Raises
+        ``CatalystOnly`` for what the evaluator leaves to Catalyst and
+        ValueError for what Spark rejects."""
+        idents = [Filter(attr=f, value=v) for f, v in self.identity_filter.items() if f in schema.names]
+        queries = [query or Query()] + [Query(filters=[f]) for f in idents]
+        steps = [q.resolve(schema) for q in queries if q.filters]
+        if key is not None:
+            field = self.key_field(channel)
+            if field is None:
+                raise ApiError(404, f"channel {channel!r} is not keyed")
+            render = as_string(schema[field].dataType) if field in schema.names else None
+            steps.append(lambda rows: [r for r in rows if r.get(field) is not None and render(r[field]) == key])
+        for step in steps:  # one filter at a time over every row, as Spark filters a local relation
+            rows = step(rows)
+        return rows[:limit]
+
     def _held_rows(
         self,
         channel: str,
@@ -294,28 +324,13 @@ class GatewayApi:
         limit: Optional[int] = None,
     ) -> List[dict]:
         """The rows ``catalog.state`` (``keyed``) or ``catalog.last``
-        serves, through the query, the identity filter (an ``==`` filter
-        per field the channel has), the dict-basket key (reference
-        `last.py:18-157`, ``CAST(field AS STRING) = key``) and ``limit``,
-        each in that order as ``_plan_filters`` would apply them, and
-        evaluated in Python on the rows the catalog holds: no Spark plan
-        or JVM call.  What the evaluator leaves to Catalyst
-        (``CatalystOnly``) runs through ``_plan_filters`` over the same
-        snapshot.  A query Spark cannot evaluate is a 422."""
+        serves, filtered by ``_filter_rows`` on the rows the catalog
+        holds.  What the evaluator leaves to Catalyst (``CatalystOnly``)
+        runs through ``_plan_filters`` over the same snapshot.  A query
+        Spark cannot evaluate is a 422."""
         schema, rows = self._read_or_404(channel, lambda: self.catalog.held(channel, keyed))
         try:
-            idents = [Filter(attr=f, value=v) for f, v in self.identity_filter.items() if f in schema.names]
-            queries = [query or Query()] + [Query(filters=[f]) for f in idents]
-            steps = [q.resolve(schema) for q in queries if q.filters]
-            if key is not None:
-                field = self.key_field(channel)
-                if field is None:
-                    raise ApiError(404, f"channel {channel!r} is not keyed")
-                render = as_string(schema[field].dataType) if field in schema.names else None
-                steps.append(lambda rows: [r for r in rows if r.get(field) is not None and render(r[field]) == key])
-            for step in steps:  # one filter at a time over every row, as Spark filters a local relation
-                rows = step(rows)
-            rows = rows[:limit]
+            rows = self._filter_rows(channel, schema, rows, query, key, limit)
         except CatalystOnly:
             try:  # the snapshot is merged and held: what fails here is the query
                 frame = self.catalog.query(channel, query) if keyed else self.catalog.last(channel)
@@ -329,6 +344,24 @@ class GatewayApi:
         if key is not None and not rows:
             raise ApiError(404, f"key {key!r} not found in {channel!r}")
         return [_jsonable(r) for r in rows]
+
+    def _lookup_rows(self, channel: str, record_id: str) -> List[dict]:
+        """`/lookup/<ch>/<id>`'s rows.  A channel that is only its send
+        log answers from the catalog's id index through the identity
+        filter (``_filter_rows``); any other channel, or a filter left
+        to Catalyst, runs ``_plan_filters`` over ``catalog.lookup``.
+        Failures map as ``_read_or_404`` maps a collect's."""
+
+        def read():
+            logged = self.catalog.logged(channel, record_id)
+            if logged is not None:
+                try:
+                    return self._filter_rows(channel, *logged)
+                except CatalystOnly:
+                    pass
+            return self._plan_filters(channel, self.catalog.lookup(channel, record_id)).collect()
+
+        return [_jsonable(r) for r in self._read_or_404(channel, read)]
 
     # --- routes ------------------------------------------------------
     def last(self, channel: str, key: Optional[str] = None) -> List[dict]:
@@ -351,12 +384,10 @@ class GatewayApi:
 
     def lookup(self, channel: str, record_id: str) -> List[dict]:
         self._channel_or_404(channel)
-        rows = self._collect_or_404(
-            channel, lambda: self._plan_filters(channel, self.catalog.lookup(channel, record_id))
-        )
+        rows = self._lookup_rows(channel, record_id)
         if not rows:
             raise ApiError(404, f"id {record_id!r} not found in {channel!r}")
-        return [_jsonable(r) for r in rows]
+        return rows
 
     def index_html(self) -> str:
         """`GET /` — a minimal dependency-free live view: channel list
@@ -397,37 +428,19 @@ class GatewayApi:
         """`GET /lookup/id/<id>` — global id lookup across every
         channel (reference `web/routes/lookup.py:70-85`:
         ``global_lookup`` on an in-memory registry of every struct ever
-        created).  Spark design: no unbounded registry — ids are
-        globally unique (day-epoch counter, `structs.py`), so the
-        id-filtered probes of every channel — schemas unified as
-        ``(channel, to_json(struct(*)))`` — union into ONE job: a
-        single collect answers the route (and the 404 path) no matter
-        how many channels exist, each branch the same pushed-down
-        point predicate as `/lookup/<ch>/<id>`."""
-        import json as _json
-
-        from pyspark.sql import functions as F
-
-        probes = []
+        created): each channel's `/lookup/<ch>/<id>` rows, in channel
+        order, skipping channels that answer 404 (unbound or tickless).
+        A log-only channel answers from the catalog's id index."""
+        rows: List[dict] = []
         for name in sorted(self.catalog._producers):
             try:
-                df = self._plan_filters(name, self.catalog.lookup(name, record_id))
-            except Exception:  # noqa: BLE001 — unbound/tickless channel
-                continue
-            probes.append(
-                df.select(
-                    F.lit(name).alias("_channel"),
-                    F.to_json(F.struct(*df.columns)).alias("_record"),
-                )
-            )
-        if probes:
-            unioned = probes[0]
-            for p in probes[1:]:
-                unioned = unioned.unionByName(p)
-            rows = [_json.loads(r["_record"]) for r in unioned.collect()]
-            if rows:
-                return [_jsonable(r) for r in rows]
-        raise ApiError(404, f"No record found with id: {record_id}")
+                rows += self._lookup_rows(name, record_id)
+            except ApiError as e:
+                if e.status != 404:
+                    raise
+        if not rows:
+            raise ApiError(404, f"No record found with id: {record_id}")
+        return rows
 
     def send(self, channel: str, payload: Any, key: Optional[str] = None) -> List[dict]:
         rows = payload if isinstance(payload, list) else [payload]
@@ -441,7 +454,7 @@ class GatewayApi:
                 if field in row and row[field] != value:
                     raise ApiError(403, f"identity field {field!r} mismatch")
         try:
-            echoed, _ = self.catalog.send_rows(channel, rows)
+            echoed = self.catalog.send_rows(channel, rows)
         except Exception as e:  # noqa: BLE001
             raise ApiError(422, f"send failed: {e}") from e
         out = [_jsonable(r) for r in echoed]
@@ -477,8 +490,9 @@ class GatewayApi:
     def stats(self) -> dict:
         """Engine + host stats (reference `controls/controls.py:40-90`:
         hostname/user/pid/cpu/memory, psutil-gated with a stdlib
-        resource/os fallback), and ``catalog``: producers and snapshot
-        rows per channel, which show the serving state is bounded."""
+        resource/os fallback), and ``catalog``: per channel, its
+        ``set_channel`` producers, send log rows and batches, and snapshot
+        rows, which show the serving state is bounded."""
         import getpass
         import os
         import socket
@@ -574,8 +588,8 @@ class GatewayApi:
     def channels_graph(self) -> Dict[str, Any]:
         """Channel wiring introspection (reference MountChannelsGraph,
         `web/channels_graph.py:13-50`): {channel: {getters, setters}}
-        built from catalog metadata — producers, mirrors, keyed state,
-        dict baskets."""
+        built from catalog metadata — the send log (``producer[send]``),
+        ``set_channel`` producers, mirrors, keyed state, dict baskets."""
         cat = self.catalog
         mirror_to: Dict[str, List[str]] = {}
         for dst, srcs in cat._mirrors.items():
@@ -583,7 +597,8 @@ class GatewayApi:
                 mirror_to.setdefault(src, []).append(dst)
         out: Dict[str, Any] = {}
         for name in self.channels():
-            setters = [f"producer[{i}]" for i in range(len(cat._producers.get(name, [])))]
+            setters = ["producer[send]"] if cat._logs[name].batches else []
+            setters += [f"producer[{i}]" for i in range(len(cat._producers.get(name, [])))]
             setters += [f"mirror:{src}" for src in cat._mirrors.get(name, [])]
             getters = []
             if name in cat._state_keys:

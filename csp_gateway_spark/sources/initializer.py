@@ -38,7 +38,7 @@ class Initialize(GatewayModule):
             else:
                 rows.append(dict(value, timestamp=t0))
         channels.declare(self.channel, self.schema_struct)
-        channels.send(self.channel, rows, schema=self.schema_struct)
+        channels.send_rows(self.channel, rows, schema=self.schema_struct)
 
 
 class Mirror(GatewayModule):

@@ -40,7 +40,7 @@ class GatewayTestHarness(GatewayModule):
     def send(self, catalog: ChannelCatalog, channel: str, rows: List[dict]) -> List[dict]:
         """Inject rows as one engine cycle; returns the echoed rows
         (with assigned id/timestamp)."""
-        echoed = [r.asDict() for r in catalog.send_rows(channel, rows)[0]]
+        echoed = [r.asDict() for r in catalog.send_rows(channel, rows)]
         self._cycles[channel] = self._cycles.get(channel, 0) + 1
         self._injected[channel] = self._injected.get(channel, 0) + len(rows)
         return echoed

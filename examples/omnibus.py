@@ -72,7 +72,7 @@ def tick_quotes(cat: ChannelCatalog, rounds: int = 3) -> None:
                 "symbol", (F.col("ask") - F.col("bid")).alias("spread")
             )
         )
-        cat.send("spreads", [r.asDict() for r in spreads.collect()])
+        cat.send_rows("spreads", [r.asDict() for r in spreads.collect()])
 
 
 def serve(cat: ChannelCatalog, api_key: str = "demo-key") -> GatewayHttpServer:

@@ -58,14 +58,14 @@ class ExampleModule(GatewayModule):
             {"x": i, "y": chr(65 + i % 3), "data": float(i) * 1.5, "name": f"n{i % 5}"}
             for i in range(self.ticks)
         ]
-        channels.send("example", rows)
+        channels.send_rows("example", rows)
 
 
 class ExampleBasketModule(GatewayModule):
     def connect(self, channels: ChannelCatalog) -> None:
         channels.declare("example_list", EXAMPLE)
         channels.declare_state("example_list", "name")
-        channels.send(
+        channels.send_rows(
             "example_list",
             [{"x": i, "y": "B", "data": i / 2.0, "name": f"key{i % 2}"} for i in range(6)],
         )

@@ -34,14 +34,19 @@ def test_reads_after_a_send_issue_no_py4j_command(spark, monkeypatch):
 
     monkeypatch.setattr(client, "send_command", counted)
     for i in range(3):
-        api.send("c", [{"k": k, "v": 1} for k in range(5)])
-        sent = len(commands)
+        echoed = api.send("c", [{"k": k, "v": 1} for k in range(5)])
         assert [r["k"] for r in api.state("c")] == list(range(5))
         assert [r["k"] for r in api.state("c", query_json='{"attr": "k", "op": "<=", "value": "2"}')] == [0, 1, 2]
         assert [r["k"] for r in api.state("c", key="3")] == [3]
         assert api.last("c")[0]["k"] == 4
-        assert len(commands) == sent, commands[sent:]
-    assert commands  # the counter sees the sends' JVM calls
+        assert api.lookup("c", echoed[2]["id"]) == [echoed[2]]
+        assert api.lookup_id(echoed[4]["id"]) == [echoed[4]]
+        with pytest.raises(ApiError) as e:
+            api.lookup("c", "absent")
+        assert e.value.status == 404
+        assert not commands, commands
+    cat.send("c", [{"k": 9, "v": 1}])  # a DataFrame caller's delta frame
+    assert commands  # the counter sees the frame's JVM calls
 
 
 MIXED = T.StructType(

@@ -94,7 +94,7 @@ def test_fold_equals_full_recompute(spark, steps):
             cat.set_channel("c", spark.createDataFrame([tuple(r.values()) for r in rows], "k long, v long, id string, timestamp timestamp"))
             sent += rows
         else:
-            echoed, _ = cat.send_rows("c", rows)
+            echoed = cat.send_rows("c", rows)
             sent += [r.asDict() for r in echoed]
         history = cat.get_channel("c")
         state, last = _rows(cat.state("c")), _rows(cat.last("c"))
@@ -240,7 +240,7 @@ def test_replaced_folds_are_unpersisted(spark):
         api.state("c")
         api.last("c")
         assert _persisted(spark) == before  # served frames hold no blocks
-    assert cat.stats()["c"] == {"producers": 50, "state_rows": 7, "last_rows": 1}
+    assert cat.stats()["c"] == {"producers": 0, "log_rows": 50, "log_batches": 50, "state_rows": 7, "last_rows": 1}
 
 
 def test_fold_held_by_a_read_outlives_its_replacement(spark):
@@ -263,8 +263,8 @@ def test_stats_report_bounded_snapshots(spark):
     for i in range(40):
         api.send("c", [{"k": (i * 3 + j) % 6, "v": i} for j in range(4)])
     stats = api.stats()["catalog"]
-    assert stats["c"] == {"producers": 40, "state_rows": 6, "last_rows": 1}
-    assert stats["plain"] == {"producers": 0, "state_rows": None, "last_rows": 0}
+    assert stats["c"] == {"producers": 0, "log_rows": 160, "log_batches": 40, "state_rows": 6, "last_rows": 1}
+    assert stats["plain"] == {"producers": 0, "log_rows": 0, "log_batches": 0, "state_rows": None, "last_rows": 0}
 
 
 # --- echo fidelity: the echo and the stored row are what the old
