@@ -118,7 +118,6 @@ class _SendLog:
 
     batches: List[Tuple[T.StructType, pa.Table]] = dataclasses.field(default_factory=list)
     index: Dict[str, List[Tuple[int, int]]] = dataclasses.field(default_factory=dict)
-    rows: int = 0
     runs: int = 0  # runs of same-schema batches
     frames: Optional[List[DataFrame]] = None
 
@@ -129,7 +128,6 @@ class _SendLog:
             if isinstance(row.get("id"), str):
                 self.index.setdefault(row["id"], []).append((len(self.batches), i))
         self.batches.append((schema, table))
-        self.rows += table.num_rows
         self.frames = None
 
     def grouped(self, start: int = 0) -> List[Tuple[T.StructType, List[pa.Table]]]:
@@ -222,10 +220,10 @@ class ChannelCatalog:
         empty stream."""
         streams = [self.get_channel(src) for src in self._mirrors.get(name, [])]
         with self._lock(name):
-            log = self._logs.get(name)
-            if log is not None and log.frames is None:
+            log = self._logs.get(name) or _SendLog()
+            if log.frames is None:
                 log.frames = [self.spark.createDataFrame(pa.concat_tables(ts), s) for s, ts in log.grouped()]
-            streams += (log.frames if log is not None else []) + self._producers.get(name, [])
+            streams += log.frames + self._producers.get(name, [])
         if streams:
             return self._union(streams)
         if name in self._finalized:
@@ -377,7 +375,7 @@ class ChannelCatalog:
         return {
             name: {
                 "producers": len(self._producers[name]),
-                "log_rows": self._logs[name].rows,
+                "log_rows": sum(t.num_rows for _, t in self._logs[name].batches),
                 "log_batches": len(self._logs[name].batches),
                 "state_rows": len(self._snapshot(name, tuple(self._state_keys[name])).rows)
                 if name in self._state_keys

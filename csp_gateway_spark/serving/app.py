@@ -491,8 +491,8 @@ class GatewayApi:
         """Engine + host stats (reference `controls/controls.py:40-90`:
         hostname/user/pid/cpu/memory, psutil-gated with a stdlib
         resource/os fallback), and ``catalog``: per channel, its
-        ``set_channel`` producers, send log rows and batches, and snapshot
-        rows, which show the serving state is bounded."""
+        ``set_channel`` producers, send log rows and batches, and
+        snapshot rows (O(keys))."""
         import getpass
         import os
         import socket
