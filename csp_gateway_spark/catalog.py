@@ -20,13 +20,14 @@ Reference semantics reproduced (file:line cites into /root/reference):
 Scale: a channel is just a DataFrame; unioning producers is a metadata
 operation (no shuffle).  A ``send`` is checked and stamped in Python and
 appended to the channel's send log: the Arrow table of the rows it
-stored, with an id → log positions index (explicit ids can repeat).  It
-makes no JVM call.  ``get_channel`` serves the log as one Arrow-built
-local relation per run of same-schema sends, built when first read
-after the log grew, ∪ the ``set_channel`` producers, so a later read
-never starts a Python worker.  ``state``/``last`` never re-aggregate
-the channel: the driver holds one keyed-last snapshot per channel and
-state keys (one row for ``last``), key → stored row.  ``send`` merges
+stored, with an id → log positions index (explicit ids can repeat).
+With a declared schema it makes no JVM call.  ``get_channel`` serves
+the log as one Arrow-built local relation per run of same-schema sends,
+built when first read after the log grew, ∪ the ``set_channel``
+producers, so a later read never starts a Python worker.
+``state``/``last`` never re-aggregate the channel: the driver holds one
+keyed-last snapshot per channel and state keys (one row for ``last``),
+key → stored row.  ``send`` merges
 the rows it stored into it, under the channel lock, by ``max_by``'s
 rule over ``FOLD_ORDER``; a snapshot created after sends catches up from
 the log in Python; a ``set_channel`` producer is reduced with
@@ -294,8 +295,9 @@ class ChannelCatalog:
         holds it: the snapshot's schema and rows (dicts of its columns,
         keys ASC NULLS FIRST).  No Spark job or JVM call once the
         producers are merged; treat the rows as read-only."""
-        snap = self._held(name, self._keys(name) if keyed else None)
-        return snap.schema, snap.ordered
+        with self._lock(name):  # a send may reset ``ordered`` once the lock is free
+            snap = self._held(name, self._keys(name) if keyed else None)
+            return snap.schema, snap.ordered
 
     def _keys(self, name: str) -> Tuple[str, ...]:
         if name not in self._state_keys:
@@ -397,7 +399,8 @@ class ChannelCatalog:
         (PySpark's own verifier, so a bad payload raises as
         ``createDataFrame`` would) → append to the send log and merge
         into the channel's snapshots.  Returns the rows exactly as
-        stored — what collecting them would give — with no JVM call.
+        stored — what collecting them would give — with no JVM call
+        when the schema is declared (inferring one reads session confs).
 
         Ids come from a catalog-level atomic counter seeded at
         day-epoch*1e9 — the reference's id semantics
