@@ -215,11 +215,16 @@ class ChannelCatalog:
             self.declare_state(dst, list(self._state_keys[src]))
 
     def get_channel(self, name: str) -> DataFrame:
-        """Resolved view of a channel: its mirrored sources' views, its
-        send log (one relation per run of same-schema sends) and its
-        ``set_channel`` producers, unioned by name; or the finalized
-        empty stream."""
-        streams = [self.get_channel(src) for src in self._mirrors.get(name, [])]
+        """Resolved view of a channel: its mirrored sources' views (a
+        source with no provider adds nothing), its send log (one
+        relation per run of same-schema sends) and its ``set_channel``
+        producers, unioned by name; or the finalized empty stream."""
+        streams = []
+        for src in self._mirrors.get(name, []):
+            try:
+                streams.append(self.get_channel(src))
+            except NoProviderException:
+                pass
         with self._lock(name):
             log = self._logs.get(name) or _SendLog()
             if log.frames is None:
