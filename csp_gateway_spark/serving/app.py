@@ -1,18 +1,12 @@
 """REST serving surface (SURVEY §2.8).
 
-Routes reproduced from the reference (`web/routes/*`):
-  GET  /api/v1/last/<channel>            last tick, list-wrapped
-  GET  /api/v1/state/<channel>?query=…   keyed-state snapshot + Query filter
-  GET  /api/v1/lookup/<channel>/<id>     record by id
-  POST /api/v1/send/<channel>            validate + inject, echo with id/ts
-  GET  /api/v1/controls/heartbeat        liveness
-  GET  /api/v1/controls/stats            engine stats
-  GET  /api/v1/channels                  discovery (≙ GET /stream list)
-
-Two transports, one handler core (`GatewayApi`):
-- FastAPI router when fastapi is installed (production path);
-- a stdlib ThreadingHTTPServer fallback (this container has no
-  fastapi/uvicorn) — same URLs, same JSON shapes, fully testable.
+The routes (reference `web/routes/*`: `/last`, `/state?query=`,
+`/lookup`, `/send`, `/next`, `/controls/*`, `/channels`, the
+Perspective and auth routes) are one table, ``ROUTES``, of (method, path
+template, handler, auth) entries over one handler core, ``GatewayApi``.
+One transport serves it: ``GatewayHttpServer``, a stdlib
+ThreadingHTTPServer (`/api/v1/stream` upgrades to a websocket), and
+``GatewayApi.openapi`` is generated from the same table.
 
 Row-level auth filtering (reference `auth_filter.py:533-571`) is a
 serving-layer predicate: pass ``identity_filter={"field": value}`` and
@@ -23,14 +17,18 @@ field mismatches are rejected 403 (`auth_filter.py:280-354`).
 from __future__ import annotations
 
 import datetime
+import decimal
 import json
 import threading
-from typing import Any, Dict, List, Optional, Union
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import Any, Dict, List, NamedTuple, Optional, Union
+from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import Row
 
 from csp_gateway_spark.catalog import ChannelCatalog
 from csp_gateway_spark.query import CatalystOnly, Filter, Query, as_string
+from csp_gateway_spark.serving.auth import ApiKeyAuth, OAuth2Auth, SimpleAuth, _cookie_dict
 
 
 def _jsonable(value: Any) -> Any:
@@ -44,13 +42,8 @@ def _jsonable(value: Any) -> Any:
         return value.isoformat()
     if isinstance(value, bytes):
         return value.hex()
-    try:
-        import decimal
-
-        if isinstance(value, decimal.Decimal):
-            return float(value)
-    except ImportError:  # pragma: no cover
-        pass
+    if isinstance(value, decimal.Decimal):
+        return float(value)
     return value
 
 
@@ -93,22 +86,11 @@ def _user_raised_detail(e: Exception):
     is anything else.  Works from the typed error class when PySpark
     surfaces one and falls back to the wire format
     ``[USER_RAISED_EXCEPTION] <msg> SQLSTATE: ...``."""
-    try:
-        from pyspark.errors.exceptions.base import PySparkException
+    from pyspark.errors.exceptions.base import PySparkException
 
-        if isinstance(e, PySparkException):
-            cls = None
-            try:
-                cls = e.getErrorClass()
-            except Exception:  # noqa: BLE001
-                pass
-            if cls == "USER_RAISED_EXCEPTION":
-                params = {}
-                try:
-                    params = e.getMessageParameters() or {}
-                except Exception:  # noqa: BLE001
-                    pass
-                return params.get("errorMessage") or str(e)[:500]
+    try:
+        if isinstance(e, PySparkException) and e.getErrorClass() == "USER_RAISED_EXCEPTION":
+            return (e.getMessageParameters() or {}).get("errorMessage") or str(e)[:500]
     except Exception:  # noqa: BLE001 — never let detection itself fail
         pass
     s = str(e)
@@ -191,8 +173,6 @@ class GatewayApi:
         # auth middleware (serving/auth.py): explicit instance wins; a bare
         # api_keys list keeps working as an implicit ApiKeyAuth
         if auth is None and self.api_keys:
-            from csp_gateway_spark.serving.auth import ApiKeyAuth
-
             auth = ApiKeyAuth(self.api_keys)
         self.auth = auth
 
@@ -418,12 +398,6 @@ class GatewayApi:
             "tick();setInterval(tick,2000);</script></body></html>"
         )
 
-    def lookup_channels(self) -> List[str]:
-        """`GET /lookup` — the channels addressable under the lookup
-        route (reference `web/routes/lookup.py:57-69`
-        ``add_lookup_available_channels``)."""
-        return sorted(self.catalog._producers)
-
     def lookup_id(self, record_id: str) -> List[dict]:
         """`GET /lookup/id/<id>` — global id lookup across every
         channel (reference `web/routes/lookup.py:70-85`:
@@ -539,17 +513,20 @@ class GatewayApi:
             raise ApiError(404, f"unknown field {name!r}")
         return _jsonable(self.fields[name])
 
-    def perspective_tables(self) -> Dict[str, Any]:
-        """Table discovery (reference `perspective.py:541-627`): one
-        entry per channel with its column:type map."""
+    def _schemas(self) -> Dict[str, Any]:
+        """Each channel's schema, skipping channels declared but unwired."""
         out = {}
         for name in self.channels():
             try:
-                schema = self.catalog.get_channel(name).schema
+                out[name] = self.catalog.get_channel(name).schema
             except Exception:  # noqa: BLE001 — declared but unwired
                 continue
-            out[name] = {f.name: f.dataType.simpleString() for f in schema.fields}
         return out
+
+    def perspective_tables(self) -> Dict[str, Any]:
+        """Table discovery (reference `perspective.py:541-627`): one
+        entry per channel with its column:type map."""
+        return {name: {f.name: f.dataType.simpleString() for f in s.fields} for name, s in self._schemas().items()}
 
     def perspective_meta(self) -> Dict[str, Any]:
         """Index/limit metadata per table (reference `perspective.py:606-627`);
@@ -644,8 +621,7 @@ class GatewayApi:
         self._channel_or_404(channel)
         lim = parse_limit(limit)
         rows = self._collect_or_404(
-            channel,
-            lambda: self._plan_filters(channel, self.catalog.query(channel, None), limit=lim),
+            channel, lambda: self._plan_filters(channel, self.catalog.query(channel, None), limit=lim)
         )
         table = pa.Table.from_pylist([_jsonable(r) for r in rows])
         sink = io.BytesIO()
@@ -730,9 +706,7 @@ class GatewayApi:
         lim = 1000 if lim is None else lim
         rows = self._collect_or_404(
             channel,
-            lambda: perspective_view(
-                self._plan_filters(channel, self.catalog.query(channel, None)), cfg
-            ).limit(lim),
+            lambda: perspective_view(self._plan_filters(channel, self.catalog.query(channel, None)), cfg).limit(lim),
         )
         return [_jsonable(r) for r in rows]
 
@@ -794,27 +768,23 @@ class GatewayApi:
         )
 
     def openapi(self) -> Dict[str, Any]:
-        """Minimal OpenAPI document with the reference's `type_` extra
-        (fully-qualified type name per route → client `as_struct`,
-        reference `routes/shared.py:15-37`)."""
+        """OpenAPI document of ``ROUTES``.  A route with a ``<channel>``
+        segment is listed once per channel whose schema resolves, with
+        the reference's `type_` extra (fully-qualified type name per
+        route → client `as_struct`, reference `routes/shared.py:15-37`)."""
+        schemas = {name: json.loads(schema.json()) for name, schema in self._schemas().items()}
         paths: Dict[str, Any] = {}
-        schemas: Dict[str, Any] = {}
-        for name in self.channels():
-            try:
-                schema = self.catalog.get_channel(name).schema
-            except Exception:  # noqa: BLE001
-                continue
-            schemas[name] = json.loads(schema.json())
-            for verb, route in (
-                ("get", f"/api/v1/last/{name}"),
-                ("get", f"/api/v1/state/{name}"),
-                ("get", f"/api/v1/next/{name}"),
-                ("post", f"/api/v1/send/{name}"),
-            ):
-                paths.setdefault(route, {})[verb] = {
-                    "responses": {"200": {"description": "rows"}},
-                    "type_": f"csp_gateway_spark.channels.{name}",
-                }
+        for method, template, _, _ in ROUTES:
+            path = template.replace("*>", ">").replace("<", "{").replace(">", "}")
+            op = {"responses": {"200": {"description": "OK"}}}
+            if "{channel}" in path:
+                for name in schemas:
+                    paths.setdefault(path.replace("{channel}", name), {})[method.lower()] = {
+                        **op,
+                        "type_": f"csp_gateway_spark.channels.{name}",
+                    }
+            else:
+                paths.setdefault(path, {})[method.lower()] = op
         return {
             "openapi": "3.1.0",
             "info": {"title": "csp-gateway-spark", "version": "1.0"},
@@ -829,53 +799,45 @@ class GatewayApi:
             threading.Thread(target=server.stop, daemon=True).start()
         return {"status": "shutting down"}
 
-    # --- auth routes (shared by both transports; reference simple.py
-    # /login, oauth.py /login /callback /logout /userinfo) --------------
+    # --- auth routes (reference simple.py /login, oauth.py /login
+    # /callback /logout /userinfo) ---------------------------------------
     def auth_login_simple(self, username: str, password: str) -> tuple:
         """Form login → (body, Set-Cookie value); 404 when the configured
         middleware is not SimpleAuth."""
-        from csp_gateway_spark.serving.auth import SimpleAuth
-
-        if not isinstance(self.auth, SimpleAuth):
-            raise ApiError(404, "not found")
-        sid = self.auth.login(username, password)
+        sid = self._middleware(SimpleAuth).login(username, password)
         if sid is None:
             raise ApiError(401, "unauthorized")
-        return (
-            {"status": "ok", "session": sid},
-            # Path=/ — RFC 6265 defaults the path to /api/v1/auth,
-            # which would hide the cookie from the protected /api/v1/*
-            f"{self.auth.cookie_name}={sid}; Path=/; HttpOnly; SameSite=Lax",
-        )
+        return self._session(sid)
+
+    def _session(self, sid: str) -> tuple:
+        """(body, Set-Cookie value) of a new session.  Path=/: RFC 6265
+        defaults the path to /api/v1/auth, which would hide the cookie
+        from the protected /api/v1/*."""
+        return {"status": "ok", "session": sid}, f"{self.auth.cookie_name}={sid}; Path=/; HttpOnly; SameSite=Lax"
+
+    def _middleware(self, kind: type):
+        """The auth middleware when it is a ``kind``; 404 otherwise."""
+        if not isinstance(self.auth, kind):
+            raise ApiError(404, "not found")
+        return self.auth
 
     def auth_login_redirect(self, host: str) -> dict:
-        from csp_gateway_spark.serving.auth import OAuth2Auth
-
-        if not isinstance(self.auth, OAuth2Auth):
-            raise ApiError(404, "not found")
         redirect_uri = f"http://{host}/api/v1/auth/callback"
-        return {"redirect": self.auth.authorize_redirect(redirect_uri)}
+        return {"redirect": self._middleware(OAuth2Auth).authorize_redirect(redirect_uri)}
 
     def auth_callback(self, code: Optional[str], error: Optional[str], host: str) -> tuple:
-        from csp_gateway_spark.serving.auth import OAuth2Auth
-
-        if not isinstance(self.auth, OAuth2Auth):
-            raise ApiError(404, "not found")
+        self._middleware(OAuth2Auth)
         if error:
             raise ApiError(400, error)
         if not code:
             raise ApiError(400, "No authorization code provided")
-        sid = self.auth.handle_callback(code, f"http://{host}/api/v1/auth/callback")
-        return (
-            {"status": "ok", "session": sid},
-            # Path=/ — RFC 6265 defaults the path to /api/v1/auth,
-            # which would hide the cookie from the protected /api/v1/*
-            f"{self.auth.cookie_name}={sid}; Path=/; HttpOnly; SameSite=Lax",
-        )
+        return self._session(self.auth.handle_callback(code, f"http://{host}/api/v1/auth/callback"))
 
     def auth_logout(self, cookies: Optional[Dict[str, str]]) -> dict:
-        if self.auth is not None:
-            self.auth.drop_session((cookies or {}).get(self.auth.cookie_name))
+        """Drop the session; 404 when no auth middleware is configured."""
+        if self.auth is None:
+            raise ApiError(404, "not found")
+        self.auth.drop_session((cookies or {}).get(self.auth.cookie_name))
         return {"status": "ok"}
 
 
@@ -915,7 +877,7 @@ def stream_into_gateway(
 
 
 # ---------------------------------------------------------------------------
-# WebSocket session (shared protocol core; stdlib transport drives it)
+# WebSocket session (`/api/v1/stream` after the upgrade)
 # ---------------------------------------------------------------------------
 
 class WsSession:
@@ -1023,428 +985,205 @@ class WsSession:
 
 
 # ---------------------------------------------------------------------------
-# FastAPI transport (preferred when installed)
+# Routes: one table for the HTTP server and openapi()
 # ---------------------------------------------------------------------------
 
-def fastapi_auth_dependency(api: GatewayApi):
-    """The per-request auth check every protected FastAPI route depends
-    on — the FastAPI analogue of the stdlib transport's ``_check``
-    (reference mounts auth dependencies on every route; without this a
-    fastapi deployment would silently skip configured auth).  Returns
-    an async callable suitable for ``Depends``; raises ApiError (mapped
-    to HTTP status by the app's exception handler) on missing/invalid
-    credentials.  Kept fastapi-import-free so it is unit-testable in
-    containers without fastapi."""
-
-    async def dep(request) -> Optional[Dict[str, Any]]:
-        return api.check_request(
-            headers=dict(request.headers),
-            cookies=dict(request.cookies),
-            query_params=dict(request.query_params),
-        )
-
-    return dep
+_JSON = "application/json"
+_HTML = "text/html; charset=utf-8"
+_HANDLED = object()  # the handler wrote its own answer (a websocket upgrade)
 
 
-def build_fastapi_app(api: GatewayApi):
-    """Return a FastAPI app mounting the routes, or raise ImportError.
+class Reply(NamedTuple):
+    """An answer other than a bare JSON body: text or bytes of
+    ``content_type``, or JSON with extra headers."""
 
-    Every /api/v1 route carries the auth dependency (identity resolved
-    via ``api.check_request``); the /api/v1/auth login/callback/logout
-    routes are public, mirroring the stdlib transport."""
-    from fastapi import APIRouter, Depends, FastAPI, Request, Response
-    from fastapi.responses import JSONResponse
+    body: Any
+    content_type: str = _JSON
+    headers: Optional[Dict[str, str]] = None
 
-    app = FastAPI(title="csp-gateway-spark")
 
-    @app.exception_handler(ApiError)
-    async def api_error_handler(request, exc: ApiError):
-        return JSONResponse(status_code=exc.status, content={"detail": exc.detail})
+def _state(api: GatewayApi, req, channel: str, *key: str):
+    return api.state(channel, req.query.get("query"), *key, limit=req.query.get("limit"))
 
-    auth_dep = fastapi_auth_dependency(api)
-    protected = APIRouter(prefix="/api/v1", dependencies=[Depends(auth_dep)])
-    public = APIRouter(prefix="/api/v1")
 
-    # --- public auth endpoints (login/callback/logout) ---------------
-    @public.post("/auth/login")
-    async def auth_login(request: Request):
-        payload = await request.json()
-        body, cookie = api.auth_login_simple(
-            payload.get("username", ""), payload.get("password", "")
-        )
-        resp = JSONResponse(content=body)
-        resp.headers["Set-Cookie"] = cookie
-        return resp
+def _next(api: GatewayApi, req, channel: str, *key: str):
+    t = req.query.get("timeout")
+    try:
+        timeout = float(t) if t else 30.0
+    except ValueError:
+        raise ApiError(422, f"timeout must be a number, got {t!r}") from None
+    return api.next(channel, timeout, *key)
 
-    @public.get("/auth/login")
-    def auth_login_redirect(request: Request):
-        return api.auth_login_redirect(request.headers.get("host", "localhost"))
 
-    @public.get("/auth/callback")
-    def auth_callback(request: Request, code: Optional[str] = None, error: Optional[str] = None):
-        body, cookie = api.auth_callback(code, error, request.headers.get("host", "localhost"))
-        resp = JSONResponse(content=body)
-        resp.headers["Set-Cookie"] = cookie
-        return resp
+def _send(api: GatewayApi, req, channel: str, *key: str):
+    return api.send(channel, req.json_body(), *key)
 
-    @public.get("/auth/logout")
-    def auth_logout(request: Request):
-        return api.auth_logout(dict(request.cookies))
 
-    @protected.get("/auth/userinfo")
-    def auth_userinfo(identity: Optional[Dict[str, Any]] = Depends(auth_dep)):
-        return _jsonable(identity or {})
+def _outputs(api: GatewayApi, req, *path: str):
+    kind, payload = api.outputs_entry("/".join(path))
+    return payload if kind == "dir" else Reply(payload, "application/octet-stream")
 
-    # --- protected routes --------------------------------------------
-    @protected.get("/last/{channel}")
-    def last(channel: str):
-        return api.last(channel)
 
-    @protected.get("/last/{channel}/{key}")
-    def last_key(channel: str, key: str):
-        return api.last(channel, key)
+def _arrow(api: GatewayApi, req, channel: str):
+    return Reply(api.perspective_arrow(channel, req.query.get("limit")), "application/vnd.apache.arrow.stream")
 
-    @protected.get("/state/{channel}")
-    def state(channel: str, query: Optional[str] = None, limit: Optional[int] = None):
-        return api.state(channel, query, limit=limit)
 
-    @protected.get("/state/{channel}/{key}")
-    def state_key(channel: str, key: str, query: Optional[str] = None, limit: Optional[int] = None):
-        return api.state(channel, query, key, limit=limit)
+def _view(api: GatewayApi, req, channel: str):
+    return api.perspective_view_compute(channel, req.json_body(), req.query.get("limit"))
 
-    @protected.get("/next/{channel}/{key}")
-    def next_key(channel: str, key: str, timeout: float = 30.0):
-        return api.next(channel, timeout, key)
 
-    @protected.post("/send/{channel}/{key}")
-    async def send_key(channel: str, key: str, request: Request):
-        payload = await request.json()
-        return api.send(channel, payload, key)
+def _login(api: GatewayApi, req):
+    payload = req.json_body(b"{}")
+    body, cookie = api.auth_login_simple(payload.get("username", ""), payload.get("password", ""))
+    return Reply(body, headers={"Set-Cookie": cookie})
 
-    @protected.get("/lookup")
-    def lookup_channels():
-        return api.lookup_channels()
 
-    @protected.get("/lookup/id/{record_id}")
-    def lookup_id(record_id: str):
-        return api.lookup_id(record_id)
+def _callback(api: GatewayApi, req):
+    body, cookie = api.auth_callback(req.query.get("code"), req.query.get("error"), req.host)
+    return Reply(body, headers={"Set-Cookie": cookie})
 
-    @protected.get("/lookup/{channel}/{record_id}")
-    def lookup(channel: str, record_id: str):
-        return api.lookup(channel, record_id)
 
-    @protected.get("/next/{channel}")
-    def next_tick(channel: str, timeout: float = 30.0):
-        return api.next(channel, timeout)
+# (method, path template, handler, auth).  ``<name>`` matches one path
+# segment and ``<name*>`` the rest of the path, none or more segments.
+# The handler is called as ``handler(api, request, *segments)`` and
+# looks its ``GatewayApi`` method up when called.  ``auth``: the request
+# must pass ``api.check_request``.  The first entry that matches
+# answers, so ``/lookup/id/<id>`` comes before ``/lookup/<channel>/<id>``.
+ROUTES = (
+    ("GET", "/", lambda api, req: Reply(api.index_html(), _HTML), False),
+    ("GET", "/openapi.json", lambda api, req: api.openapi(), True),
+    ("POST", "/api/v1/auth/login", _login, False),
+    ("GET", "/api/v1/auth/login", lambda api, req: api.auth_login_redirect(req.host), False),
+    ("GET", "/api/v1/auth/callback", _callback, False),
+    ("GET", "/api/v1/auth/logout", lambda api, req: api.auth_logout(req.cookies), False),
+    ("GET", "/api/v1/auth/userinfo", lambda api, req: _jsonable(req.identity or {}), True),
+    ("GET", "/api/v1/stream", lambda api, req: _HANDLED if req.websocket() else api.stream_channels(), True),
+    ("GET", "/api/v1/last/<channel>", lambda api, req, channel: api.last(channel), True),
+    ("GET", "/api/v1/last/<channel>/<key>", lambda api, req, channel, key: api.last(channel, key), True),
+    ("GET", "/api/v1/state/<channel>", _state, True),
+    ("GET", "/api/v1/state/<channel>/<key>", _state, True),
+    ("GET", "/api/v1/lookup", lambda api, req: api.channels(), True),  # reference `lookup.py:57-69`
+    ("GET", "/api/v1/lookup/id/<id>", lambda api, req, rid: api.lookup_id(rid), True),
+    ("GET", "/api/v1/lookup/<channel>/<id>", lambda api, req, channel, rid: api.lookup(channel, rid), True),
+    ("GET", "/api/v1/next/<channel>", _next, True),
+    ("GET", "/api/v1/next/<channel>/<key>", _next, True),
+    ("POST", "/api/v1/send/<channel>", _send, True),
+    ("POST", "/api/v1/send/<channel>/<key>", _send, True),
+    ("GET", "/api/v1/controls/heartbeat", lambda api, req: api.heartbeat(), True),
+    ("GET", "/api/v1/controls/stats", lambda api, req: api.stats(), True),
+    ("POST", "/api/v1/controls/shutdown", lambda api, req: api.shutdown(), True),
+    ("GET", "/api/v1/channels", lambda api, req: api.channels(), True),
+    ("GET", "/api/v1/channels_graph", lambda api, req: api.channels_graph(), True),
+    ("GET", "/api/v1/field/<name>", lambda api, req, name: api.field(name), True),
+    ("GET", "/api/v1/outputs/<path*>", _outputs, True),
+    ("GET", "/api/v1/perspective/tables", lambda api, req: api.perspective_tables(), True),
+    ("GET", "/api/v1/perspective/meta", lambda api, req: api.perspective_meta(), True),
+    ("GET", "/api/v1/perspective/layouts", lambda api, req: api.perspective_layouts(), True),
+    ("POST", "/api/v1/perspective/layouts/<name>", lambda api, req, name: api.perspective_layout_save(name, req.json_body()), True),
+    ("DELETE", "/api/v1/perspective/layouts/<name>", lambda api, req, name: api.perspective_layout_delete(name), True),
+    ("GET", "/api/v1/perspective/arrow/<channel>", _arrow, True),
+    ("POST", "/api/v1/perspective/view/<channel>", _view, True),
+    ("GET", "/api/v1/perspective/ui", lambda api, req: Reply(api.perspective_ui_html(), _HTML), True),
+)
 
-    @protected.post("/send/{channel}")
-    async def send(channel: str, request: Request):
-        payload = await request.json()
-        return api.send(channel, payload)
 
-    @protected.get("/controls/heartbeat")
-    def heartbeat():
-        return api.heartbeat()
+def _match(template: str, parts: List[str]) -> Optional[List[str]]:
+    """The path segments the template's parameters take, or None when
+    ``parts`` does not match it."""
+    want = [w for w in template.split("/") if w]
+    rest = bool(want) and want[-1].endswith("*>")
+    head = want[:-1] if rest else want
+    if len(parts) < len(head) or (len(parts) > len(head) and not rest):
+        return None
+    params = []
+    for w, p in zip(head, parts):
+        if w.startswith("<"):
+            params.append(p)
+        elif w != p:
+            return None
+    return params + parts[len(head) :]
 
-    @protected.get("/controls/stats")
-    def stats():
-        return api.stats()
 
-    @protected.get("/channels")
-    def channels():
-        return api.channels()
+class _Handler(BaseHTTPRequestHandler):
+    """One request: the first ``ROUTES`` entry that matches answers, an
+    ``ApiError`` its status with ``{"detail": ...}``."""
 
-    @protected.get("/field/{name}")
-    def field(name: str):
-        return api.field(name)
+    api: GatewayApi
 
-    @protected.get("/perspective/tables")
-    def perspective_tables():
-        return api.perspective_tables()
+    def log_message(self, *args):  # quiet
+        pass
 
-    @protected.get("/perspective/meta")
-    def perspective_meta():
-        return api.perspective_meta()
-
-    @protected.get("/channels_graph")
-    def channels_graph():
-        return api.channels_graph()
-
-    @protected.get("/outputs/{full_path:path}")
-    def outputs(full_path: str = ""):
-        kind, payload = api.outputs_entry(full_path)
-        if kind == "dir":
-            return payload
-        return Response(content=payload, media_type="application/octet-stream")
-
-    @protected.get("/perspective/layouts")
-    def perspective_layouts():
-        return api.perspective_layouts()
-
-    @protected.post("/perspective/layouts/{name}")
-    def perspective_layout_save(name: str, layout: Any):
-        return api.perspective_layout_save(name, layout)
-
-    @protected.delete("/perspective/layouts/{name}")
-    def perspective_layout_delete(name: str):
-        return api.perspective_layout_delete(name)
-
-    @protected.get("/perspective/arrow/{name}")
-    def perspective_arrow(name: str, limit: Optional[int] = None):
-        return Response(
-            content=api.perspective_arrow(name, limit),
-            media_type="application/vnd.apache.arrow.stream",
-        )
-
-    @protected.post("/perspective/view/{name}")
-    async def perspective_view(name: str, request: Request, limit: Optional[int] = None):
-        # FastAPI treats an `Any`-annotated param as a scalar query param,
-        # so the JSON view config must be read from the request body
-        # explicitly (same pattern as the send routes above).
+    def _dispatch(self) -> None:
+        parsed = urlparse(self.path)
+        parts = [p for p in parsed.path.split("/") if p]
+        self.query = {k: v[0] for k, v in parse_qs(parsed.query).items()}
+        self.cookies = _cookie_dict(self.headers.get("Cookie", ""))
+        self.host = self.headers.get("Host", "localhost")
         try:
-            config = await request.json()
-        except Exception:
-            config = None
-        return api.perspective_view_compute(name, config, limit)
+            for method, template, handler, auth in ROUTES:
+                params = _match(template, parts) if method == self.command else None
+                if params is not None:
+                    self.identity = self._check() if auth else None
+                    return self._answer(200, handler(self.api, self, *params))
+            if parts[:2] == ["api", "v1"] and parts[2:3] != ["auth"]:
+                self._check()  # an anonymous caller learns no route: 401 before 404
+            raise ApiError(404, "not found")
+        except ApiError as e:
+            return self._answer(e.status, {"detail": e.detail})
+        except Exception as e:  # noqa: BLE001
+            return self._answer(500, {"detail": str(e)})
 
-    @protected.get("/perspective/ui")
-    def perspective_ui():
-        from fastapi.responses import HTMLResponse
+    do_GET = do_POST = do_DELETE = _dispatch
 
-        return HTMLResponse(content=api.perspective_ui_html())
+    def _check(self) -> Optional[Dict[str, Any]]:
+        return self.api.check_request(headers=dict(self.headers.items()), cookies=self.cookies, query_params=self.query)
 
-    @protected.post("/controls/shutdown")
-    def shutdown():
-        return api.shutdown()
+    def _answer(self, status: int, out: Any) -> None:
+        if out is _HANDLED:
+            return
+        out = out if isinstance(out, Reply) else Reply(out)
+        body = json.dumps(out.body) if out.content_type == _JSON else out.body
+        data = body.encode() if isinstance(body, str) else body
+        self.send_response(status)
+        self.send_header("Content-Type", out.content_type)
+        self.send_header("Content-Length", str(len(data)))
+        for k, v in (out.headers or {}).items():
+            self.send_header(k, v)
+        self.end_headers()
+        self.wfile.write(data)
 
-    @app.get("/")
-    def index():
-        from fastapi.responses import HTMLResponse
+    def json_body(self, empty: bytes = b"null") -> Any:
+        """The request body as JSON (``empty`` when there is none); a
+        malformed Content-Length or body is a 422."""
+        length = self.headers.get("Content-Length", "0")
+        if not length.isdecimal():
+            raise ApiError(422, f"malformed Content-Length: {length!r}")
+        try:
+            return json.loads(self.rfile.read(int(length)) or empty)
+        except ValueError as e:
+            raise ApiError(422, f"malformed JSON body: {e}") from e
 
-        return HTMLResponse(content=api.index_html())
+    def websocket(self) -> bool:
+        """Serve a ``WsSession`` when the request asks for a websocket."""
+        if self.headers.get("Upgrade", "").lower() != "websocket":
+            return False
+        from csp_gateway_spark.serving.ws import accept_key
 
-    app.include_router(public)
-    app.include_router(protected)
-    return app
+        self.send_response(101, "Switching Protocols")
+        self.send_header("Upgrade", "websocket")
+        self.send_header("Connection", "Upgrade")
+        self.send_header("Sec-WebSocket-Accept", accept_key(self.headers["Sec-WebSocket-Key"]))
+        self.end_headers()
+        WsSession(self.api, self.rfile, self.wfile).run()
+        return True
 
-
-# ---------------------------------------------------------------------------
-# stdlib transport (fallback; used by tests in this container)
-# ---------------------------------------------------------------------------
 
 class GatewayHttpServer:
-    """Minimal threaded HTTP server exposing GatewayApi."""
+    """Threaded stdlib HTTP server answering ``ROUTES`` over a GatewayApi."""
 
     def __init__(self, api: GatewayApi, host: str = "127.0.0.1", port: int = 0):
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        outer = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *args):  # quiet
-                pass
-
-            def _reply(self, status: int, body: Any, extra_headers: Optional[Dict[str, str]] = None) -> None:
-                data = json.dumps(body).encode()
-                self.send_response(status)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(data)))
-                for k, v in (extra_headers or {}).items():
-                    self.send_header(k, v)
-                self.end_headers()
-                self.wfile.write(data)
-
-            def _reply_html(self, html: str) -> None:
-                data = html.encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "text/html; charset=utf-8")
-                self.send_header("Content-Length", str(len(data)))
-                self.end_headers()
-                self.wfile.write(data)
-
-            def _req_ctx(self, qs):
-                from csp_gateway_spark.serving.auth import _cookie_dict
-
-                headers = {k: v for k, v in self.headers.items()}
-                cookies = _cookie_dict(self.headers.get("Cookie", ""))
-                query = {k: v[0] for k, v in qs.items()}
-                return headers, cookies, query
-
-            def _check(self, qs):
-                headers, cookies, query = self._req_ctx(qs)
-                return outer.api.check_request(
-                    headers=headers, cookies=cookies, query_params=query
-                )
-
-            def _auth_route(self, method: str, rest, qs):
-                """Public auth endpoints (login/callback/logout) + userinfo.
-                Mirrors the reference's auth routers (simple.py /login,
-                oauth.py /login /callback /logout /userinfo)."""
-                headers, cookies, query = self._req_ctx(qs)
-                host = self.headers.get("Host", "localhost")
-                if method == "POST" and rest == ["login"]:
-                    length = int(self.headers.get("Content-Length", 0))
-                    try:
-                        payload = json.loads(self.rfile.read(length) or b"{}")
-                    except json.JSONDecodeError as e:
-                        raise ApiError(422, f"malformed JSON body: {e}") from e
-                    body, cookie = outer.api.auth_login_simple(
-                        payload.get("username", ""), payload.get("password", "")
-                    )
-                    return self._reply(200, body, {"Set-Cookie": cookie})
-                if method == "GET" and rest == ["login"]:
-                    return self._reply(200, outer.api.auth_login_redirect(host))
-                if method == "GET" and rest == ["callback"]:
-                    body, cookie = outer.api.auth_callback(
-                        query.get("code"), query.get("error"), host
-                    )
-                    return self._reply(200, body, {"Set-Cookie": cookie})
-                if method == "GET" and rest == ["logout"] and outer.api.auth is not None:
-                    return self._reply(200, outer.api.auth_logout(cookies))
-                if method == "GET" and rest == ["userinfo"]:
-                    identity = self._check(qs)
-                    return self._reply(200, _jsonable(identity or {}))
-                raise ApiError(404, "not found")
-
-            def _maybe_websocket(self) -> bool:
-                if self.headers.get("Upgrade", "").lower() != "websocket":
-                    return False
-                from csp_gateway_spark.serving.ws import accept_key
-
-                self.send_response(101, "Switching Protocols")
-                self.send_header("Upgrade", "websocket")
-                self.send_header("Connection", "Upgrade")
-                self.send_header(
-                    "Sec-WebSocket-Accept", accept_key(self.headers["Sec-WebSocket-Key"])
-                )
-                self.end_headers()
-                WsSession(outer.api, self.rfile, self.wfile).run()
-                return True
-
-            def _route(self, method: str):
-                from urllib.parse import parse_qs, urlparse
-
-                parsed = urlparse(self.path)
-                parts = [p for p in parsed.path.split("/") if p]
-                qs = parse_qs(parsed.query)
-                try:
-                    if parsed.path == "/" and method == "GET":
-                        return self._reply_html(outer.api.index_html())
-                    if parsed.path == "/openapi.json" and method == "GET":
-                        self._check(qs)
-                        return self._reply(200, outer.api.openapi())
-                    if parts[:2] != ["api", "v1"]:
-                        raise ApiError(404, "not found")
-                    rest = parts[2:]
-                    if rest[:1] == ["auth"]:
-                        return self._auth_route(method, rest[1:], qs)
-                    self._check(qs)
-                    if method == "GET" and rest == ["stream"]:
-                        if self._maybe_websocket():
-                            return None
-                        return self._reply(200, outer.api.stream_channels())
-                    if method == "GET" and rest[0] == "last" and len(rest) in (2, 3):
-                        return self._reply(200, outer.api.last(rest[1], *rest[2:]))
-                    if method == "GET" and rest[0] == "state" and len(rest) in (2, 3):
-                        q = qs.get("query", [None])[0]
-                        lim = qs.get("limit", [None])[0]
-                        return self._reply(200, outer.api.state(rest[1], q, *rest[2:], limit=lim))
-                    if method == "GET" and rest == ["lookup"]:
-                        return self._reply(200, outer.api.lookup_channels())
-                    if method == "GET" and rest[:2] == ["lookup", "id"] and len(rest) == 3:
-                        return self._reply(200, outer.api.lookup_id(rest[2]))
-                    if method == "GET" and rest[0] == "lookup" and len(rest) == 3:
-                        return self._reply(200, outer.api.lookup(rest[1], rest[2]))
-                    if method == "GET" and rest[0] == "next" and len(rest) in (2, 3):
-                        t = qs.get("timeout", [None])[0]
-                        try:
-                            timeout = float(t) if t else 30.0
-                        except ValueError:
-                            raise ApiError(422, f"timeout must be a number, got {t!r}")
-                        return self._reply(200, outer.api.next(rest[1], timeout, *rest[2:]))
-                    if method == "POST" and rest[0] == "send" and len(rest) in (2, 3):
-                        length = int(self.headers.get("Content-Length", 0))
-                        try:
-                            payload = json.loads(self.rfile.read(length) or b"null")
-                        except json.JSONDecodeError as e:
-                            raise ApiError(422, f"malformed JSON body: {e}") from e
-                        return self._reply(200, outer.api.send(rest[1], payload, *rest[2:]))
-                    if method == "GET" and rest == ["controls", "heartbeat"]:
-                        return self._reply(200, outer.api.heartbeat())
-                    if method == "GET" and rest == ["controls", "stats"]:
-                        return self._reply(200, outer.api.stats())
-                    if method == "POST" and rest == ["controls", "shutdown"]:
-                        return self._reply(200, outer.api.shutdown())
-                    if method == "GET" and rest == ["channels"]:
-                        return self._reply(200, outer.api.channels())
-                    if method == "GET" and rest[0] == "field" and len(rest) == 2:
-                        return self._reply(200, outer.api.field(rest[1]))
-                    if method == "GET" and rest == ["perspective", "tables"]:
-                        return self._reply(200, outer.api.perspective_tables())
-                    if method == "GET" and rest == ["perspective", "meta"]:
-                        return self._reply(200, outer.api.perspective_meta())
-                    if method == "GET" and rest == ["channels_graph"]:
-                        return self._reply(200, outer.api.channels_graph())
-                    if method == "GET" and rest[:1] == ["outputs"]:
-                        kind, payload = outer.api.outputs_entry("/".join(rest[1:]))
-                        if kind == "dir":
-                            return self._reply(200, payload)
-                        self.send_response(200)
-                        self.send_header("Content-Type", "application/octet-stream")
-                        self.send_header("Content-Length", str(len(payload)))
-                        self.end_headers()
-                        self.wfile.write(payload)
-                        return None
-                    if method == "GET" and rest == ["perspective", "layouts"]:
-                        return self._reply(200, outer.api.perspective_layouts())
-                    if method == "POST" and rest[:2] == ["perspective", "layouts"] and len(rest) == 3:
-                        length = int(self.headers.get("Content-Length", 0))
-                        try:
-                            payload = json.loads(self.rfile.read(length) or b"null")
-                        except json.JSONDecodeError as e:
-                            raise ApiError(422, f"malformed JSON body: {e}") from e
-                        return self._reply(200, outer.api.perspective_layout_save(rest[2], payload))
-                    if method == "DELETE" and rest[:2] == ["perspective", "layouts"] and len(rest) == 3:
-                        return self._reply(200, outer.api.perspective_layout_delete(rest[2]))
-                    if method == "GET" and rest[:2] == ["perspective", "arrow"] and len(rest) == 3:
-                        lim = qs.get("limit", [None])[0]
-                        data = outer.api.perspective_arrow(rest[2], lim)
-                        self.send_response(200)
-                        self.send_header("Content-Type", "application/vnd.apache.arrow.stream")
-                        self.send_header("Content-Length", str(len(data)))
-                        self.end_headers()
-                        self.wfile.write(data)
-                        return None
-                    if method == "POST" and rest[:2] == ["perspective", "view"] and len(rest) == 3:
-                        length = int(self.headers.get("Content-Length", 0))
-                        try:
-                            payload = json.loads(self.rfile.read(length) or b"null")
-                        except json.JSONDecodeError as e:
-                            raise ApiError(422, f"malformed JSON body: {e}") from e
-                        lim = qs.get("limit", [None])[0]
-                        return self._reply(
-                            200,
-                            outer.api.perspective_view_compute(rest[2], payload, lim),
-                        )
-                    if method == "GET" and rest == ["perspective", "ui"]:
-                        return self._reply_html(outer.api.perspective_ui_html())
-                    raise ApiError(404, "not found")
-                except ApiError as e:
-                    return self._reply(e.status, {"detail": e.detail})
-                except Exception as e:  # noqa: BLE001
-                    return self._reply(500, {"detail": str(e)})
-
-            def do_GET(self):
-                self._route("GET")
-
-            def do_POST(self):
-                self._route("POST")
-
-            def do_DELETE(self):
-                self._route("DELETE")
-
         self.api = api
-        self._server = ThreadingHTTPServer((host, port), Handler)
+        self._server = ThreadingHTTPServer((host, port), type("Handler", (_Handler,), {"api": api}))
         self._thread: Optional[threading.Thread] = None
 
     @property

@@ -5,13 +5,13 @@ Reference parity:
 - Simple (basic/PAM)  — `csp_gateway/server/middleware/simple.py:135-459`
 - OAuth2/OIDC         — `csp_gateway/server/middleware/oauth.py:23-358`
 
-The reference mounts FastAPI dependencies; this container has no
-fastapi, so the middlewares here are transport-agnostic: each exposes
+The reference mounts FastAPI dependencies; here the one transport is
+the stdlib server in ``serving/app.py``.  Each middleware exposes
 ``identity_from_request(headers, cookies, query_params)`` returning an
 identity dict or None, plus the session machinery the reference keeps
 in ``IdentityAwareMiddlewareMixin`` (uuid session cookie → identity
-dict, with expiry).  ``GatewayApi`` calls them before routing; both the
-stdlib transport and a FastAPI mount share the same objects.
+dict, with expiry).  ``GatewayApi.check_request`` calls it for every
+route the route table marks as protected.
 
 Network calls (OIDC discovery / token exchange / introspection /
 userinfo) go through injectable ``http_get_json`` / ``http_post_form``

@@ -13,7 +13,7 @@ import urllib.request
 
 import pytest
 
-from csp_gateway_spark.serving.app import GatewayApi, GatewayHttpServer
+from csp_gateway_spark.serving.app import ROUTES, GatewayApi, GatewayHttpServer
 from csp_gateway_spark.serving.auth import ApiKeyAuth, OAuth2Auth, SimpleAuth
 
 
@@ -260,61 +260,9 @@ def test_oauth_discovery_unreachable_falls_back_to_convention():
     assert auth.identity_from_request(headers={"Authorization": "Bearer x"}) is None
 
 
-# ---------------------------------------------------------------------------
-# FastAPI transport auth dependency (unit-level: fastapi not installed
-# in this container, so drive the dependency callable directly)
-# ---------------------------------------------------------------------------
-
-class _FakeRequest:
-    """Duck-typed fastapi.Request: the dependency only reads
-    .headers/.cookies/.query_params as mappings."""
-
-    def __init__(self, headers=None, cookies=None, query_params=None):
-        self.headers = headers or {}
-        self.cookies = cookies or {}
-        self.query_params = query_params or {}
-
-
-def _run(coro):
-    import asyncio
-
-    return asyncio.new_event_loop().run_until_complete(coro)
-
-
-def test_fastapi_auth_dependency_rejects_without_credentials(catalog):
-    from csp_gateway_spark.serving.app import ApiError, fastapi_auth_dependency
-
-    api = GatewayApi(catalog, auth=ApiKeyAuth(["sekret"]))
-    dep = fastapi_auth_dependency(api)
-    with pytest.raises(ApiError) as ei:
-        _run(dep(_FakeRequest()))
-    assert ei.value.status == 401
-
-
-def test_fastapi_auth_dependency_accepts_each_credential_source(catalog):
-    from csp_gateway_spark.serving.app import fastapi_auth_dependency
-
-    api = GatewayApi(catalog, auth=ApiKeyAuth(["sekret"]))
-    dep = fastapi_auth_dependency(api)
-    for req in (
-        _FakeRequest(headers={"X-API-Key": "sekret"}),
-        _FakeRequest(query_params={"token": "sekret"}),
-        _FakeRequest(cookies={"token": "sekret"}),
-    ):
-        identity = _run(dep(req))
-        assert identity == {"user": "api-key", "key": "sekret"}
-
-
-def test_fastapi_auth_dependency_noop_when_auth_disabled(catalog):
-    from csp_gateway_spark.serving.app import fastapi_auth_dependency
-
-    api = GatewayApi(catalog)
-    assert _run(fastapi_auth_dependency(api)(_FakeRequest())) is None
-
-
 def test_shared_auth_route_helpers(catalog):
-    """The transport-shared auth-route methods (used by both stdlib and
-    FastAPI transports) return (body, Set-Cookie) pairs."""
+    """The auth-route methods the route table calls return (body,
+    Set-Cookie) pairs."""
     from csp_gateway_spark.serving.app import ApiError
 
     api = GatewayApi(catalog, auth=SimpleAuth(external_validator=_validator))
@@ -335,36 +283,30 @@ def test_shared_auth_route_helpers(catalog):
 
 
 def test_every_protected_route_requires_auth(catalog):
-    """Regression net for the advisor's FastAPI-auth finding, applied to
-    the stdlib transport: with auth configured, EVERY /api/v1 route
-    (including the late-added outputs/layouts/arrow/channels_graph
-    routes) must 401 without credentials — new routes that forget the
-    check fail here."""
+    """With auth configured, EVERY route the table marks as protected
+    must 401 without credentials and answer something else with them;
+    only the index page and the login/callback/logout routes are public."""
+    public = {(m, t) for m, t, _, auth in ROUTES if not auth}
+    assert public == {
+        ("GET", "/"),
+        ("POST", "/api/v1/auth/login"),
+        ("GET", "/api/v1/auth/login"),
+        ("GET", "/api/v1/auth/callback"),
+        ("GET", "/api/v1/auth/logout"),
+    }
     api = GatewayApi(catalog, auth=ApiKeyAuth(["k"]))
     srv = GatewayHttpServer(api).start()
     base = f"http://127.0.0.1:{srv.port}"
-    routes = [
-        ("GET", "/api/v1/channels"),
-        ("GET", "/api/v1/last/quotes"),
-        ("GET", "/api/v1/state/quotes"),
-        ("GET", "/api/v1/lookup/quotes/1"),
-        ("GET", "/api/v1/controls/heartbeat"),
-        ("GET", "/api/v1/controls/stats"),
-        ("POST", "/api/v1/send/quotes"),
-        ("GET", "/api/v1/stream"),
-        ("GET", "/api/v1/field/x"),
-        ("GET", "/api/v1/perspective/tables"),
-        ("GET", "/api/v1/perspective/meta"),
-        ("GET", "/api/v1/perspective/layouts"),
-        ("POST", "/api/v1/perspective/layouts/l1"),
-        ("DELETE", "/api/v1/perspective/layouts/l1"),
-        ("GET", "/api/v1/perspective/arrow/quotes"),
-        ("GET", "/api/v1/channels_graph"),
-        ("GET", "/api/v1/outputs"),
-        ("GET", "/openapi.json"),
-        # must stay LAST: the authed replay actually shuts the server down
-        ("POST", "/api/v1/controls/shutdown"),
-    ]
+    args = {"<channel>": "quotes", "<key>": "AA", "<id>": "1", "<name>": "l1", "/<path*>": ""}
+    routes = []
+    for method, template, _, auth in ROUTES:
+        if auth:
+            for param, value in args.items():
+                template = template.replace(param, value)
+            routes.append((method, template + "?timeout=0"))  # /next answers 408 at once
+    # must stay LAST: the authed replay actually shuts the server down
+    routes.sort(key=lambda route: route[1].startswith("/api/v1/controls/shutdown"))
+    assert "<" not in str(routes)
     try:
         for method, path in routes:
             req = urllib.request.Request(

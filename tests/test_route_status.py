@@ -11,6 +11,7 @@ malformed bodies and parameters."""
 import datetime
 import http.client
 import json
+import re
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -21,6 +22,7 @@ import pytest
 from pyspark.sql import types as T
 
 from csp_gateway_spark.catalog import ChannelCatalog
+from csp_gateway_spark.serving import app
 from csp_gateway_spark.serving.app import GatewayApi, GatewayHttpServer
 from csp_gateway_spark.serving.auth import ApiKeyAuth, SimpleAuth
 
@@ -160,6 +162,8 @@ ROUTES = {
     (None, "GET", "/openapi.json", None): (200, ANY),
     (None, "GET", "/nosuch", None): NOT_FOUND,
     (None, "GET", "/api/v1/nosuch", None): NOT_FOUND,
+    (None, "GET", "/api/v1", None): NOT_FOUND,
+    (None, "GET", "/api/v1/", None): NOT_FOUND,
     (None, "GET", "/api/v2/channels", None): NOT_FOUND,
     (None, "GET", "/api/v1/channels", None): (200, CHANNELS),
     (None, "POST", "/api/v1/channels", None): NOT_FOUND,
@@ -347,3 +351,34 @@ def test_route_status_and_body(spark, outputs, gateways, auth, method, path, bod
         finally:
             srv.stop()
     assert got == ROUTES[(auth, method, path, body)]
+
+
+@pytest.mark.parametrize("length", ["x", "-1", "1.5"])
+def test_malformed_content_length_is_422(gateways, length):
+    headers = {"Content-Length": length}
+    got = _request(gateways[None].port, "POST", "/api/v1/send/nosuch", "{}", headers)
+    assert got == (422, {"detail": f"malformed Content-Length: {length!r}"})
+
+
+def test_openapi_lists_every_route(gateways):
+    """Each table entry once, a ``<channel>`` entry once per channel with
+    a schema (``type_`` names it), and nothing else."""
+    status, spec = _request(gateways[None].port, "GET", "/openapi.json")
+    assert status == 200 and sorted(spec["components"]["schemas"]) == ["keyed", "plain"]
+    want = {}
+    for method, template, _, _ in app.ROUTES:
+        for name in ("keyed", "plain") if "<channel>" in template else (None,):
+            path = re.sub(r"<(\w+)\*?>", r"{\1}", template.replace("<channel>", name or "<channel>"))
+            want[(path, method.lower())] = name and f"csp_gateway_spark.channels.{name}"
+    got = {(path, verb): op.get("type_") for path, ops in spec["paths"].items() for verb, op in ops.items()}
+    assert got == want
+
+
+def test_mirror_of_an_unprovided_channel_serves_its_own_rows(spark):
+    cat = ChannelCatalog(spark)
+    cat.declare("src", SCHEMA)
+    cat.mirror("src", "m")
+    cat.send_rows("m", [dict(R1, timestamp=datetime.datetime.fromisoformat(R1["timestamp"]))])
+    api = GatewayApi(cat)
+    assert api.lookup("m", "1") == [R1]
+    assert "/api/v1/state/m" in api.openapi()["paths"]
