@@ -19,30 +19,10 @@ signatures, partitioning) is identical either way.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, Optional
+from typing import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_META = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("codec", T.StringType()),
-    ]
-)
-
-
-def media_schema(extra_fields: Optional[list] = None) -> T.StructType:
-    fields = [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("meta", MEDIA_META),
-    ]
-    return T.StructType(fields + (extra_fields or []))
 
 
 def with_content_meta(

@@ -1,4 +1,4 @@
-"""Sinks: SQL/JDBC, console/log, graph-output capture, monitoring.
+"""Sinks: SQL/JDBC, graph-output capture, monitoring.
 
 Reference mapping (SURVEY §2.1):
 - S8  PublishSQLA (`modules/sql.py:61-185`): per-tick INSERT with field
@@ -6,20 +6,16 @@ Reference mapping (SURVEY §2.1):
   ``foreachBatch`` JDBC write (bulk, not per-row — the reference
   itself warns row-by-row is slow).
 - S9  AddChannelsToGraphOutput (`modules/io/graph_output.py:14-27`).
-- S11 Print/LogChannels (`modules/logging/stdlib.py:366`,
-  `printing.py:9-21`) + monitoring publishers — foreachBatch hooks.
+- S11 monitoring publishers — foreachBatch hooks.
 """
 
 from __future__ import annotations
 
-import logging
 from typing import Callable, Dict, List, Optional
 
 from pydantic import BaseModel, ConfigDict
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-log = logging.getLogger(__name__)
 
 
 def project_for_sink(
@@ -69,21 +65,6 @@ def graph_output(channels: Dict[str, DataFrame], selection: Optional[List[str]] 
     (`graph_output.py:14-27`) — batch collect per channel."""
     names = selection or list(channels)
     return {name: channels[name].collect() for name in names}
-
-
-def print_channels(channels: Dict[str, DataFrame], n: int = 20) -> None:
-    """PrintChannels (`printing.py:9-21`) — console sink."""
-    for name, df in channels.items():
-        print(f"== {name}")
-        df.show(n, truncate=False)
-
-
-def log_channels(channels: Dict[str, DataFrame], logger: Optional[logging.Logger] = None, n: int = 100) -> None:
-    """LogChannels (`stdlib.py:366`)."""
-    logger = logger or log
-    for name, df in channels.items():
-        for row in df.limit(n).collect():
-            logger.info("%s: %s", name, row.asDict())
 
 
 class MonitoringEvent(BaseModel):

@@ -18,7 +18,7 @@ from __future__ import annotations
 import threading
 from typing import Dict, List, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -99,9 +99,3 @@ def streaming_keyed_last(
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
     return writer.start()
-
-
-def run_one_cycle(spark: SparkSession, query) -> None:
-    """Test helper: process whatever is available now, then return
-    (trigger(availableNow) semantics for send→last round-trips)."""
-    query.processAllAvailable()

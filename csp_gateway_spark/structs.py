@@ -107,14 +107,3 @@ def _to_spark_type(spec) -> T.DataType:
         if spec in _PY_TO_SPARK:
             return _PY_TO_SPARK[spec]
     raise TypeError(f"cannot map {spec!r} to a Spark type")
-
-
-def gateway_schema(fields: dict, include_identity: bool = True) -> T.StructType:
-    base = struct_type(fields)
-    if not include_identity:
-        return base
-    extra = [
-        T.StructField(ID_FIELD, T.StringType(), True),
-        T.StructField(TIMESTAMP_FIELD, T.TimestampType(), True),
-    ]
-    return T.StructType(list(base.fields) + extra)
