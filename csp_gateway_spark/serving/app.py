@@ -86,11 +86,22 @@ def _user_raised_detail(e: Exception):
     is anything else.  Works from the typed error class when PySpark
     surfaces one and falls back to the wire format
     ``[USER_RAISED_EXCEPTION] <msg> SQLSTATE: ...``."""
-    from pyspark.errors.exceptions.base import PySparkException
-
     try:
-        if isinstance(e, PySparkException) and e.getErrorClass() == "USER_RAISED_EXCEPTION":
-            return (e.getMessageParameters() or {}).get("errorMessage") or str(e)[:500]
+        from pyspark.errors.exceptions.base import PySparkException
+
+        if isinstance(e, PySparkException):
+            cls = None
+            try:
+                cls = e.getErrorClass()
+            except Exception:  # noqa: BLE001
+                pass
+            if cls == "USER_RAISED_EXCEPTION":
+                params = {}
+                try:
+                    params = e.getMessageParameters() or {}
+                except Exception:  # noqa: BLE001
+                    pass
+                return params.get("errorMessage") or str(e)[:500]
     except Exception:  # noqa: BLE001 — never let detection itself fail
         pass
     s = str(e)
@@ -201,7 +212,7 @@ class GatewayApi:
     # --- helpers -----------------------------------------------------
     def _auth_rows(self, rows: List[Row]) -> List[dict]:
         """Identity filter over broker-delivered tick payloads (/next,
-        WS), in-memory dicts bounded by one tick.  DataFrame-backed
+        WS pushes), in-memory dicts bounded by one tick.  DataFrame-backed
         routes use ``_plan_filters``; the held-row routes ``_filter_rows``."""
         out = []
         for row in rows:
@@ -621,7 +632,8 @@ class GatewayApi:
         self._channel_or_404(channel)
         lim = parse_limit(limit)
         rows = self._collect_or_404(
-            channel, lambda: self._plan_filters(channel, self.catalog.query(channel, None), limit=lim)
+            channel,
+            lambda: self._plan_filters(channel, self.catalog.query(channel, None), limit=lim),
         )
         table = pa.Table.from_pylist([_jsonable(r) for r in rows])
         sink = io.BytesIO()
@@ -706,7 +718,9 @@ class GatewayApi:
         lim = 1000 if lim is None else lim
         rows = self._collect_or_404(
             channel,
-            lambda: perspective_view(self._plan_filters(channel, self.catalog.query(channel, None)), cfg).limit(lim),
+            lambda: perspective_view(
+                self._plan_filters(channel, self.catalog.query(channel, None)), cfg
+            ).limit(lim),
         )
         return [_jsonable(r) for r in rows]
 
@@ -904,16 +918,13 @@ class WsSession:
             self.ws.write_frame(self.wfile, json.dumps(obj).encode())
 
     def _drain(self, channel: str, sub) -> None:
-        ident = self.api.identity_filter
         while self._alive:
             row = sub.queue.get()
             if row is None:  # poison pill from unsubscribe/close
                 return
             # row-level auth on the push path too (reference applies the
             # identity filter to websocket frames, auth_filter.py:654+)
-            if ident and isinstance(row, dict) and not all(
-                row.get(k) == v for k, v in ident.items() if k in row
-            ):
+            if not self.api._auth_rows([row]):
                 continue
             try:
                 self._send_json({"channel": channel, "data": row})

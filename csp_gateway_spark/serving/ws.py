@@ -9,8 +9,8 @@ The reference serves `WS /api/v1/stream` with a JSON message protocol
   server → {"channel": c, "data": row}   one message per tick row
            heartbeat channel ticks every interval while connected
 
-fastapi/websockets aren't installed in this container, so the frame
-codec is implemented directly: server frames unmasked, client frames
+The package depends on no web framework or websocket library, so the
+frame codec is implemented directly: server frames unmasked, client frames
 masked, close/ping handled.  The same codec backs the test client and
 `GatewayClient.stream()`.
 """
