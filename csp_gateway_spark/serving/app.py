@@ -840,12 +840,12 @@ class GatewayApi:
         return {"redirect": self._middleware(OAuth2Auth).authorize_redirect(redirect_uri)}
 
     def auth_callback(self, code: Optional[str], error: Optional[str], host: str) -> tuple:
-        self._middleware(OAuth2Auth)
+        auth = self._middleware(OAuth2Auth)
         if error:
             raise ApiError(400, error)
         if not code:
             raise ApiError(400, "No authorization code provided")
-        return self._session(self.auth.handle_callback(code, f"http://{host}/api/v1/auth/callback"))
+        return self._session(auth.handle_callback(code, f"http://{host}/api/v1/auth/callback"))
 
     def auth_logout(self, cookies: Optional[Dict[str, str]]) -> dict:
         """Drop the session; 404 when no auth middleware is configured."""

@@ -156,7 +156,7 @@ def _sent(**row):
 # of a body that is not JSON).  auth: None (off), "key" (api key, the
 # request carries none), "key+" (api key, the request carries it),
 # "simple" (form login).  body: None sends no body.
-ROUTES = {
+CASES = {
     (None, "GET", "/", None): (200, HTML),
     (None, "POST", "/", None): NOT_FOUND,
     (None, "GET", "/openapi.json", None): (200, ANY),
@@ -339,7 +339,7 @@ def gateways(spark, outputs):
         srvs[kind].stop()
 
 
-@pytest.mark.parametrize("auth,method,path,body", sorted(ROUTES, key=str), ids=lambda v: str(v))
+@pytest.mark.parametrize("auth,method,path,body", sorted(CASES, key=str), ids=lambda v: str(v))
 def test_route_status_and_body(spark, outputs, gateways, auth, method, path, body):
     headers = {"X-API-Key": "k"} if auth == "key+" else {}
     if method == "GET":
@@ -350,7 +350,7 @@ def test_route_status_and_body(spark, outputs, gateways, auth, method, path, bod
             got = _request(srv.port, method, path, body, headers)
         finally:
             srv.stop()
-    assert got == ROUTES[(auth, method, path, body)]
+    assert got == CASES[(auth, method, path, body)]
 
 
 @pytest.mark.parametrize("length", ["x", "-1", "1.5"])
