@@ -48,7 +48,7 @@ def _jsonable(value: Any) -> Any:
 
 
 def parse_query(query_json: Optional[str]) -> Optional[Query]:
-    """`query_json` REST param → Query (reference `utils/fastapi.py:10-32`)."""
+    """`query_json` REST param → Query (reference FastAPI query helper, `utils` lines 10-32)."""
     if not query_json:
         return None
     data = json.loads(query_json)
