@@ -202,37 +202,23 @@ def _survival_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ra_price_cells(spark: SparkSession, sf_dir: str):
-    """ONE checkpointed distinct-price collapse — (decimal(15,2)
-    price, R-count, A-count) over returned/acknowledged lineitem rows
-    — shared by the whole two-cohort R/A-price family (ks_test,
-    mann_whitney, cvm_test, brunner_munzel, ansari_bradley,
-    wasserstein, energy_distance, yuen_trimmed_t, conover), whose
-    operators build the IDENTICAL frame when not injected (same
-    filter; the decimal(15,2) cast is exact for 2-dp prices and
-    round-trips to the same double, so grouping keys and downstream
-    values are bit-identical; r14).  Returns (cells, n_cells, n_a,
-    n_b) — the totals come off the checkpointed blocks in one tiny
-    aggregate, collected once per process."""
+    """ONE ranked distinct-price collapse over returned ('R') and
+    acknowledged ('A') lineitem rows — ``analytics._rank_cells`` of
+    ``l_extendedprice`` cast to decimal(15,2), shared by the whole
+    two-cohort R/A-price family (ks_test, mann_whitney, wasserstein,
+    energy_distance, yuen_trimmed_t, conover).  The decimal(15,2) cast
+    is exact for 2-dp prices and round-trips to the same double, so
+    grouping keys and downstream values are bit-identical (r14).
+    Returns ``(cells, n_cells, (n_r, n_a))``, built once per
+    process."""
+    from csp_gateway_spark.operators.analytics import _rank_cells
 
     def build():
         li = _t(spark, sf_dir, "lineitem")
-        g = F.col("l_returnflag")
-        v = F.col("l_extendedprice").cast("decimal(15,2)")
-        cells = (
-            li.filter(g.isin(["R", "A"]) & v.isNotNull())
-            .groupBy(v.alias("_v"))
-            .agg(
-                F.sum(F.when(g == "R", 1).otherwise(0)).cast("long").alias("_ca"),
-                F.sum(F.when(g == "A", 1).otherwise(0)).cast("long").alias("_cb"),
-            )
-            .localCheckpoint(eager=True)
+        return _rank_cells(
+            li, "l_returnflag",
+            F.col("l_extendedprice").cast("decimal(15,2)"), ["R", "A"],
         )
-        head = cells.agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("_ca").cast("long").alias("_na"),
-            F.sum("_cb").cast("long").alias("_nb"),
-        ).collect()[0]
-        return cells, int(head["_n"]), int(head["_na"]), int(head["_nb"])
 
     return _shared(spark, sf_dir, "ra_price_cells15", build)
 
@@ -10048,13 +10034,12 @@ FROM scored ORDER BY fano DESC, u ASC LIMIT 20
 
 def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample KS statistic between returned ('R') and
-    acknowledged ('A') line prices — packed two-cohort cumulative via
-    the range-bucketed two-phase rank, no unpartitioned window, no
-    binning."""
+    acknowledged ('A') line prices over the shared ranked price cells
+    (`_ra_price_cells`) — no unpartitioned window, no binning."""
     from csp_gateway_spark.operators.analytics import ks_test
 
     li = _t(spark, sf_dir, "lineitem")
-    cells, n_cells, _, _ = _ra_price_cells(spark, sf_dir)
+    cells, n_cells, _ = _ra_price_cells(spark, sf_dir)
     out = ks_test(
         li, "l_returnflag", "l_extendedprice", "R", "A",
         cells=cells, cells_count=n_cells,
@@ -10136,12 +10121,11 @@ ORDER BY h
 def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U (midrank ties, tie-corrected z) between returned
     and acknowledged line prices — the non-parametric twin of
-    `welch_ttest` on the same packed two-phase cumulative as
-    `ks_test`."""
+    `welch_ttest` on the same ranked price cells as `ks_test`."""
     from csp_gateway_spark.operators.analytics import mann_whitney_u
 
     li = _t(spark, sf_dir, "lineitem")
-    cells, n_cells, _, _ = _ra_price_cells(spark, sf_dir)
+    cells, n_cells, _ = _ra_price_cells(spark, sf_dir)
     out = mann_whitney_u(
         li, "l_returnflag", "l_extendedprice", "R", "A",
         cells=cells, cells_count=n_cells,
@@ -10253,7 +10237,8 @@ _KW_GROUPS = (
 def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kruskal-Wallis H across the five order priorities on order
     value — the k-sample generalization of `mann_whitney` on the same
-    packed two-phase midrank cumulative, exact-integer rank sums."""
+    doubled midranks (`analytics._rank_cells`), exact-integer rank
+    sums."""
     from csp_gateway_spark.operators.analytics import kruskal_wallis
 
     orders = _t(spark, sf_dir, "orders")
@@ -14141,10 +14126,10 @@ def q_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     from csp_gateway_spark.operators.analytics import wasserstein_distance
 
     li = _t(spark, sf_dir, "lineitem")
-    cells, n_cells, n_a, n_b = _ra_price_cells(spark, sf_dir)
+    cells, n_cells, totals = _ra_price_cells(spark, sf_dir)
     out = wasserstein_distance(
         li, "l_returnflag", "l_extendedprice", "R", "A",
-        cells=cells, cells_count=n_cells, cells_totals=(n_a, n_b),
+        cells=cells, cells_count=n_cells, cells_totals=totals,
     )
     return out.select(
         "n_a", "n_b", (F.round("w1", 6) + F.lit(0.0)).alias("w1")
@@ -17243,7 +17228,7 @@ def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from csp_gateway_spark.operators.analytics import energy_distance
 
     li = _t(spark, sf_dir, "lineitem")
-    cells, n_cells, _, _ = _ra_price_cells(spark, sf_dir)
+    cells, n_cells, _ = _ra_price_cells(spark, sf_dir)
     out = energy_distance(
         li, "l_returnflag", "l_extendedprice", "R", "A",
         cells=cells, cells_count=n_cells,
@@ -17325,7 +17310,7 @@ def q_conover_squared_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from csp_gateway_spark.operators.analytics import conover_squared_ranks
 
     li = _t(spark, sf_dir, "lineitem")
-    cells, _, _, _ = _ra_price_cells(spark, sf_dir)
+    cells, _, _ = _ra_price_cells(spark, sf_dir)
     out = conover_squared_ranks(
         li, "l_returnflag", "l_extendedprice", "R", "A", cells=cells
     )
@@ -17408,7 +17393,7 @@ def q_yuen_trimmed_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     from csp_gateway_spark.operators.analytics import yuen_trimmed_t
 
     li = _t(spark, sf_dir, "lineitem")
-    cells, n_cells, _, _ = _ra_price_cells(spark, sf_dir)
+    cells, n_cells, _ = _ra_price_cells(spark, sf_dir)
     out = yuen_trimmed_t(
         li, "l_returnflag", "l_extendedprice", "R", "A", trim=_YUEN_TRIM,
         cells=cells, cells_count=n_cells,

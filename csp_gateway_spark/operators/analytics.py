@@ -3877,6 +3877,85 @@ def burstiness(
     return scored.orderBy(F.desc("fano"), F.asc(user_col)).limit(top_k)
 
 
+def _rank_cells(
+    df: DataFrame,
+    group_col,
+    value,
+    groups: Sequence,
+    cells: Optional[DataFrame] = None,
+    cells_count: Optional[int] = None,
+    totals: Optional[tuple] = None,
+    weight: Optional[str] = None,
+):
+    """The distinct-value rank cells every cohort rank test shares.
+
+    Rows whose group or value is NULL are dropped (a NULL is not an
+    observation).  The rest collapse to one row per distinct ``value``
+    (``_v``) carrying the per-cohort counts ``_c0.._c{k-1}`` of
+    ``groups`` (``weight`` names a count column to sum instead of
+    counting rows).  The collapse is ``localCheckpoint``ed and ONE
+    head aggregate collects its cell count and per-cohort totals.
+    ONE :func:`plans.scale.global_row_number` then adds the inclusive
+    per-cohort running counts ``_m0.._m{k-1}`` as plain longs (a
+    single-bucket window up to ``TARGET_ROWS_PER_BUCKET`` cells, the
+    range-bucketed two-phase plan above it — never an unpartitioned
+    window), and each cell gets
+
+    - ``_t``: the tie count Σc_i;
+    - ``_r2``: the DOUBLED combined midrank 2·Σm − t + 1;
+    - ``_n0.._n{k-1}``: the cohort totals, as long literals.
+
+    Doubled midranks are exact.  The t tied rows of a cell hold ranks
+    below+1 .. below+t (below = Σm − t rows strictly smaller), whose
+    mean below + (t+1)/2 is a half-integer; doubling gives the integer
+    2·below + t + 1.  Every rank sum a caller builds from ``_r2`` (or
+    from a within-cohort 2·m_i − c_i + 1) is therefore an exact
+    long/decimal, no floating point accumulates across rows, and the
+    caller halves once in its final double formula — the same
+    expression the oracle evaluates.
+
+    Returns ``(ranked, cells_count, totals)``.  ``cells`` injects a
+    ``ranked`` frame an earlier call returned (shared across
+    operators); it is used as is and ``cells_count``/``totals`` pass
+    through, so injection launches no job."""
+    from csp_gateway_spark.plans.scale import global_row_number
+
+    if cells is not None:
+        return cells, cells_count, totals
+    k = len(groups)
+    g = F.col(group_col) if isinstance(group_col, str) else group_col
+    v = F.col(value) if isinstance(value, str) else value
+    w = F.lit(1) if weight is None else F.col(weight)
+    collapsed = (
+        df.filter(g.isin(list(groups)) & v.isNotNull())
+        .groupBy(v.alias("_v"))
+        .agg(*[
+            F.sum(F.when(g == F.lit(grp), w).otherwise(0)).cast("long").alias(f"_c{i}")
+            for i, grp in enumerate(groups)
+        ])
+        .localCheckpoint(eager=True)
+    )
+    head = collapsed.agg(
+        F.count(F.lit(1)).alias("_n"),
+        *[F.sum(f"_c{i}").alias(f"_n{i}") for i in range(k)],
+    ).collect()[0]
+    cells_count = int(head["_n"])
+    totals = tuple(int(head[f"_n{i}"] or 0) for i in range(k))
+    ranked = global_row_number(
+        collapsed, "_v", [], rn_col="_rn",
+        cum_values=[(f"_c{i}", f"_m{i}") for i in range(k)],
+        small_threshold=TARGET_ROWS_PER_BUCKET, known_count=cells_count,
+    )
+    t = sum(F.col(f"_c{i}") for i in range(k))
+    ranked = ranked.select(
+        "*",
+        t.alias("_t"),
+        (F.lit(2) * sum(F.col(f"_m{i}") for i in range(k)) - t + F.lit(1)).alias("_r2"),
+        *[F.lit(n).cast("long").alias(f"_n{i}") for i, n in enumerate(totals)],
+    )
+    return ranked, cells_count, totals
+
+
 def ks_test(
     df: DataFrame,
     group_col,
@@ -3891,66 +3970,31 @@ def ks_test(
     |F̂_a(v) − F̂_b(v)| — the distribution-drift test that, unlike
     ``psi_drift``, needs no binning choice.
 
-    The column collapses to one row per DISTINCT value with both
-    cohort counts (one hash aggregate); both empirical CDFs then need
-    one cumulative sum in value order — two plain LONG running totals
-    riding ONE ``plans.scale.global_row_number(cum_values=...)``
-    range-bucketed two-phase cumulative (round 14: the former single
-    packed-decimal word ``ca·10¹⁵ + cb`` paid BigDecimal pmod/divide
-    per row to unpack — long addition stays in whole-stage codegen
-    and has no 10¹⁵ per-cohort ceiling).  D and its argmax value
+    Both empirical CDFs are the per-cohort running counts of
+    :func:`_rank_cells` over the cohort totals; D and its argmax value
     are exact-integer ratios compared as identical doubles on both
     engines; ties on D resolve to the smallest value.  Output: one
     row (n_a, n_b, d_stat, at_value).
 
-    ``cells``/``cells_count`` optionally inject a prebuilt
-    (_v, _ca, _cb) distinct-value collapse (checkpointed; the caller
-    vouches it equals this operator's own collapse of ``df``) so the
-    whole two-cohort rank family shares ONE collapse per process
-    (r14)."""
-    from csp_gateway_spark.plans.scale import global_row_number
-
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col)
-    if cells is None:
-        per_val = (
-            df.filter(g.isin([group_a, group_b]))
-            .groupBy(v.alias("_v"))
-            .agg(
-                F.sum(F.when(g == group_a, 1).otherwise(0)).cast("long").alias("_ca"),
-                F.sum(F.when(g == group_b, 1).otherwise(0)).cast("long").alias("_cb"),
-            )
-        )
-    else:
-        per_val = cells.select("_v", "_ca", "_cb")
-    ranked = global_row_number(
-        per_val, "_v", [], rn_col="_rn",
-        cum_values=[("_ca", "_ma"), ("_cb", "_mb")],
-        small_threshold=TARGET_ROWS_PER_BUCKET, known_count=cells_count,
+    ``cells``/``cells_count`` optionally inject a :func:`_rank_cells`
+    frame (the caller vouches it ranks this operator's own cells of
+    ``df``), so the whole two-cohort rank family shares ONE collapse
+    per process (r14)."""
+    ranked, _, _ = _rank_cells(
+        df, group_col, value_col, [group_a, group_b], cells, cells_count
     )
-    # inclusive per-cohort cumulatives as exact longs (< 2⁵³, so the
-    # double casts below are value-identical to the decimal path)
-    cum_a = F.col("_ma")
-    cum_b = F.col("_mb")
-    # totals from the RANKED frame (already checkpointed inside
-    # global_row_number) — aggregating per_val again would re-run the
-    # whole scan+collapse a second time (the r10 ks_test regression)
-    totals = ranked.agg(
-        F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb")
+    # the running counts are exact longs (< 2⁵³), so the double casts
+    # are value-identical to the oracle's
+    d = F.abs(
+        F.col("_m0").cast("double") / F.col("_n0").cast("double")
+        - F.col("_m1").cast("double") / F.col("_n1").cast("double")
     )
-    scored = ranked.crossJoin(F.broadcast(totals)).select(
-        "_v",
-        "_na",
-        "_nb",
-        F.abs(
-            cum_a.cast("double") / F.col("_na").cast("double")
-            - cum_b.cast("double") / F.col("_nb").cast("double")
-        ).alias("_d"),
-    )
-    top = scored.orderBy(F.desc("_d"), F.asc("_v")).limit(1)
+    top = ranked.select("_v", "_n0", "_n1", d.alias("_d")).orderBy(
+        F.desc("_d"), F.asc("_v")
+    ).limit(1)
     return _finalize_bounded(top.select(
-        F.col("_na").alias("n_a"),
-        F.col("_nb").alias("n_b"),
+        F.col("_n0").alias("n_a"),
+        F.col("_n1").alias("n_b"),
         F.col("_d").alias("d_stat"),
         F.col("_v").cast("double").alias("at_value"),
     ))
@@ -4035,55 +4079,25 @@ def mann_whitney_u(
     with midrank ties and the normal approximation's tie-corrected
     z — the non-parametric twin of :func:`welch_ttest`.
 
-    Same machinery as :func:`ks_test`: one distinct-value collapse
-    with both cohort counts, the two per-cohort running counts riding
-    ONE two-phase cumulative as plain LONG columns (round 14 — no
-    packed-decimal unpack, no unpartitioned window).  Doubled rank
-    sums keep every intermediate
-    an exact integer (midranks are halves, so 2·R_a = Σ ca·(2·(#rows
-    below v) + t_v + 1) is integer-exact in decimal), and the tie
-    term Σ(t³−t) aggregates exactly too; only the final U/z are
-    doubles, from identical expressions on both engines.  Output: one
-    row (n_a, n_b, u_stat, z).
+    The doubled rank sum 2·R_a = Σ c_a·r2 over :func:`_rank_cells`
+    and the tie term Σ(t³−t) aggregate as exact decimals; only the
+    final U/z are doubles, from identical expressions on both engines.
+    Output: one row (n_a, n_b, u_stat, z).
 
     ``cells``/``cells_count``: see :func:`ks_test` — the shared
     two-cohort collapse injection (r14)."""
-    from csp_gateway_spark.plans.scale import global_row_number
-
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col)
-    if cells is None:
-        per_val = (
-            df.filter(g.isin([group_a, group_b]))
-            .groupBy(v.alias("_v"))
-            .agg(
-                F.sum(F.when(g == group_a, 1).otherwise(0)).cast("long").alias("_ca"),
-                F.sum(F.when(g == group_b, 1).otherwise(0)).cast("long").alias("_cb"),
-            )
-        )
-    else:
-        per_val = cells.select("_v", "_ca", "_cb")
-    ranked = global_row_number(
-        per_val, "_v", [], rn_col="_rn",
-        cum_values=[("_ca", "_ma"), ("_cb", "_mb")],
-        small_threshold=TARGET_ROWS_PER_BUCKET, known_count=cells_count,
+    ranked, _, _ = _rank_cells(
+        df, group_col, value_col, [group_a, group_b], cells, cells_count
     )
-    # additive rank terms in plain longs (exact to 2⁶³; the packed
-    # path's own bound was 10¹⁵/cohort), ONE decimal product where
-    # Σ exceeds int64: cnt_l = tie multiplicity, below = rows strictly
-    # below v, 2R_a term = ca·(2·below + cnt + 1)
-    cnt_l = F.col("_ca") + F.col("_cb")
-    cnt = cnt_l.cast("decimal(20,0)")
-    two_ra_term = F.col("_ca").cast("decimal(16,0)") * (
-        F.lit(2) * (F.col("_ma") + F.col("_mb")) - cnt_l + F.lit(1)
-    ).cast("decimal(20,0)")
+    # ONE decimal product where Σ exceeds int64
+    two_ra_term = F.col("_c0").cast("decimal(16,0)") * F.col("_r2").cast("decimal(20,0)")
     # cube at (12,0): 12+12+1=25 then 25+12+1=38 — exactly the cap, no
     # precision adjustment on either engine (tie groups ≤ 1e12 rows)
-    cnt12 = cnt.cast("decimal(12,0)")
+    cnt12 = F.col("_t").cast("decimal(12,0)")
     tie_term = (cnt12 * cnt12 * cnt12 - cnt12).cast("decimal(38,0)")
     sums = ranked.agg(
-        F.sum("_ca").cast("long").alias("_na"),
-        F.sum("_cb").cast("long").alias("_nb"),
+        F.sum("_c0").cast("long").alias("_na"),
+        F.sum("_c1").cast("long").alias("_nb"),
         F.sum(two_ra_term.cast("decimal(38,0)")).alias("_s2ra"),
         F.sum(tie_term).alias("_ties"),
     )
@@ -4173,41 +4187,16 @@ def kruskal_wallis(
     on midranks; reference parity: the rank-based hypothesis tests the
     gateway's perspective layer exposes over state tables).
 
-    The column collapses to one row per DISTINCT value carrying all k
-    cohort counts (one hash aggregate); the total-count cumulative
-    runs through ``plans.scale.global_row_number``'s range-bucketed
-    two-phase plan ONCE (no unpartitioned window), and each per-group
-    rank sum accumulates the EXACT integer 2·R_g = Σ c_g·(2·before +
-    t + 1) in decimal(38,0) — midranks are half-integers, so doubling
-    keeps every term integral; no FP accumulates across rows.  Ties
-    correct H by C = 1 − Σ(t³−t)/(N³−N) with the cubes exact in
-    decimal (same (12,0)³ headroom contract as ``mann_whitney_u``).
-    Output one row per group: (grp, n_g, mean_rank, h, h_adj) with
-    the shared statistic repeated."""
-    from csp_gateway_spark.plans.scale import global_row_number
-
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col)
+    Each per-group rank sum accumulates the EXACT integer
+    2·R_g = Σ c_g·r2 over :func:`_rank_cells` in decimal(38,0); no FP
+    accumulates across rows.  Ties correct H by
+    C = 1 − Σ(t³−t)/(N³−N) with the cubes exact in decimal (same
+    (12,0)³ headroom contract as ``mann_whitney_u``).  Output one row
+    per group: (grp, n_g, mean_rank, h, h_adj) with the shared
+    statistic repeated."""
     ks = list(groups)
-    per_val = (
-        df.filter(g.isin(ks))
-        .groupBy(v.alias("_v"))
-        .agg(
-            *[
-                F.sum(F.when(g == gr, 1).otherwise(0)).cast("long").alias(f"_c{i}")
-                for i, gr in enumerate(ks)
-            ],
-            F.count(F.lit(1)).alias("_ct"),
-        )
-    )
-    ranked = global_row_number(
-        per_val, "_v", [], rn_col="_rn", cum_value="_ct", cum_col="_cum",
-        small_threshold=TARGET_ROWS_PER_BUCKET,
-    )
-    # 2·(midrank of the tie block) = 2·before + t + 1, an exact integer
-    two_mid = (
-        2 * (F.col("_cum") - F.col("_ct")) + F.col("_ct") + 1
-    ).cast("decimal(20,0)")
+    ranked, _, _ = _rank_cells(df, group_col, value_col, ks)
+    two_mid = F.col("_r2").cast("decimal(20,0)")
     aggs = []
     for i in range(len(ks)):
         aggs.append(F.sum(F.col(f"_c{i}")).alias(f"_n{i}"))
@@ -4218,7 +4207,7 @@ def kruskal_wallis(
                 )
             ).alias(f"_r2{i}")
         )
-    ct12 = F.col("_ct").cast("decimal(12,0)")
+    ct12 = F.col("_t").cast("decimal(12,0)")
     aggs.append(
         F.sum((ct12 * ct12 * ct12 - ct12).cast("decimal(38,0)")).alias("_ties")
     )
@@ -5662,33 +5651,17 @@ def roc_auc(
     (AUC = U⁺/(n⁺·n⁻) with midrank ties, the probability a random
     positive outscores a random negative).
 
-    Same scale discipline: ONE distinct-score collapse carrying both
-    class counts as plain LONG running totals on one two-phase
-    cumulative (``plans.scale.global_row_number(cum_values=...)`` —
-    round 14, no packed-decimal unpack, no unpartitioned window),
-    doubled rank sums so every intermediate is an exact integer;
-    only the final ratio is a double, from identical expressions on
-    both engines.  Output: one row (n_pos, n_neg, auc)."""
-    from csp_gateway_spark.plans.scale import global_row_number
-
+    The label (cast to int) splits :func:`_rank_cells` into the
+    cohorts 1 and 0; the doubled positive rank sum Σ c⁺·r2 is an
+    exact decimal and only the final ratio is a double, from identical
+    expressions on both engines.  Output: one row (n_pos, n_neg,
+    auc)."""
     y = F.col(label_col) if isinstance(label_col, str) else label_col
-    v = F.col(score_col)
-    per_val = df.groupBy(v.alias("_v")).agg(
-        F.sum(y.cast("int")).cast("long").alias("_cp"),
-        F.sum(F.lit(1) - y.cast("int")).cast("long").alias("_cn"),
-    )
-    ranked = global_row_number(
-        per_val, "_v", [], rn_col="_rn",
-        cum_values=[("_cp", "_mp"), ("_cn", "_mn")],
-        small_threshold=TARGET_ROWS_PER_BUCKET,
-    )
-    cnt_l = F.col("_cp") + F.col("_cn")
-    two_rp_term = F.col("_cp").cast("decimal(16,0)") * (
-        F.lit(2) * (F.col("_mp") + F.col("_mn")) - cnt_l + F.lit(1)
-    ).cast("decimal(20,0)")
+    ranked, _, _ = _rank_cells(df, y.cast("int"), score_col, [1, 0])
+    two_rp_term = F.col("_c0").cast("decimal(16,0)") * F.col("_r2").cast("decimal(20,0)")
     sums = ranked.agg(
-        F.sum("_cp").cast("long").alias("_np"),
-        F.sum("_cn").cast("long").alias("_nn"),
+        F.sum("_c0").cast("long").alias("_np"),
+        F.sum("_c1").cast("long").alias("_nn"),
         F.sum(two_rp_term.cast("decimal(38,0)")).alias("_s2rp"),
     )
     np_ = F.col("_np").cast("double")
@@ -7621,51 +7594,31 @@ def cvm_test(
     single worst gap; CvM integrates every gap, so it sees broad
     small shifts KS misses).
 
-    Same scale shape as ``ks_test``: ONE distinct-value collapse
-    carrying both cohort counts, the two per-cohort running counts as
-    plain LONG columns on ONE range-bucketed two-phase cumulative
-    (round 14 — no packed-decimal unpack).  The gap sum FACTORS
-    through three exact integer moments — Σh·c₁², Σh·c₁c₂, Σh·c₂²
-    (order-free decimal(38,0) sums, bounded for cohorts ≤ 10¹¹ rows)
-    — so Σh·(c₁n₂−c₂n₁)² = n₂²A − 2n₁n₂B + n₁²C is ONE double
-    expression over exact sums and T divides once by n₁n₂N².
+    Over the running counts of :func:`_rank_cells`, the gap sum
+    FACTORS through three exact integer moments — Σh·c₁², Σh·c₁c₂,
+    Σh·c₂² (order-free decimal(38,0) sums, bounded for cohorts
+    ≤ 10¹¹ rows) — so Σh·(c₁n₂−c₂n₁)² = n₂²A − 2n₁n₂B + n₁²C is ONE
+    double expression over exact sums and T divides once by n₁n₂N².
     Output: one row (n_a, n_b, t_stat).
 
     ``cells``/``cells_count``: see :func:`ks_test` — the shared
     two-cohort collapse injection (r14)."""
-    from csp_gateway_spark.plans.scale import global_row_number
-
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col)
-    if cells is None:
-        per_val = (
-            df.filter(g.isin([group_a, group_b]))
-            .groupBy(v.alias("_v"))
-            .agg(
-                F.sum(F.when(g == group_a, 1).otherwise(0)).cast("long").alias("_ca"),
-                F.sum(F.when(g == group_b, 1).otherwise(0)).cast("long").alias("_cb"),
-            )
-        )
-    else:
-        per_val = cells.select("_v", "_ca", "_cb")
-    ranked = global_row_number(
-        per_val, "_v", [], rn_col="_rn",
-        cum_values=[("_ca", "_ma"), ("_cb", "_mb")],
-        small_threshold=TARGET_ROWS_PER_BUCKET, known_count=cells_count,
+    ranked, _, _ = _rank_cells(
+        df, group_col, value_col, [group_a, group_b], cells, cells_count
     )
     # exact typed products: c ≤ 10¹¹ as (12,0), c·c′ → (23,0) cast,
     # h ≤ 2·10¹¹ as (12,0), h·(c·c′) → (36,0) — every intermediate
     # stays under the 38-digit cap on BOTH engines with no precision
     # loss (the DuckDB mirror runs the same ladder in HUGEINT)
-    ca12 = F.col("_ma").cast("decimal(12,0)")
-    cb12 = F.col("_mb").cast("decimal(12,0)")
-    h12 = (F.col("_ca") + F.col("_cb")).cast("decimal(12,0)")
+    ca12 = F.col("_m0").cast("decimal(12,0)")
+    cb12 = F.col("_m1").cast("decimal(12,0)")
+    h12 = F.col("_t").cast("decimal(12,0)")
     summed = ranked.agg(
         F.sum((h12 * (ca12 * ca12).cast("decimal(23,0)")).cast("decimal(38,0)")).alias("_A"),
         F.sum((h12 * (ca12 * cb12).cast("decimal(23,0)")).cast("decimal(38,0)")).alias("_B"),
         F.sum((h12 * (cb12 * cb12).cast("decimal(23,0)")).cast("decimal(38,0)")).alias("_C"),
-        F.sum("_ca").alias("_na"),
-        F.sum("_cb").alias("_nb"),
+        F.sum("_c0").alias("_na"),
+        F.sum("_c1").alias("_nb"),
     )
     na = F.col("_na").cast("double")
     nb = F.col("_nb").cast("double")
@@ -8108,38 +8061,24 @@ def hodges_lehmann(
     (which only says whether one exists).
 
     The pair space never materializes per-row: both samples collapse
-    to distinct-value counts, the difference distribution is their
-    O(cells²) convolution (bounded by the ``max_cells`` contract —
-    quantize unbounded doubles upstream), and the median comes from
-    ONE diff-sorted fold over the convolved cells: lower/upper
-    medians at the ⌈T/2⌉ and ⌊T/2⌋+1 cumulative thresholds, averaged
-    exactly in decimal before ONE double cast.  Output: one row
-    (n_a, n_b, n_pairs, hl_shift)."""
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col).cast("decimal(18,2)")
-    cells = (
-        df.filter(g.isin([group_a, group_b]))
-        .groupBy(v.alias("_v"))
-        .agg(
-            F.sum(F.when(g == group_a, 1).otherwise(0)).cast("long").alias("_ca"),
-            F.sum(F.when(g == group_b, 1).otherwise(0)).cast("long").alias("_cb"),
+    to the distinct-value counts of :func:`_rank_cells` (values as
+    decimal(18,2)), the difference distribution is their O(cells²)
+    convolution (bounded by the ``max_cells`` contract — quantize
+    unbounded doubles upstream), and the median comes from ONE
+    diff-sorted fold over the convolved cells: lower/upper medians at
+    the ⌈T/2⌉ and ⌊T/2⌋+1 cumulative thresholds, averaged exactly in
+    decimal before ONE double cast.  Output: one row (n_a, n_b,
+    n_pairs, hl_shift)."""
+    ranked, n_cells, (n_a, n_b) = _rank_cells(
+        df, group_col, F.col(value_col).cast("decimal(18,2)"), [group_a, group_b]
+    )
+    if n_cells > max_cells:
+        raise ValueError(
+            f"hodges_lehmann: distinct-value table exceeds max_cells={max_cells} "
+            f"(got {n_cells}) — the convolution is only valid for "
+            "distinct-bounded values; quantize first"
         )
-    )
-    ncells = cells.agg(F.count(F.lit(1)).alias("_nc"))
-    guard_msg = F.concat(
-        F.lit(
-            f"hodges_lehmann: distinct-value table exceeds max_cells={max_cells} (got "
-        ),
-        F.col("_nc").cast("string"),
-        F.lit(") — the convolution is only valid for distinct-bounded values; quantize first"),
-    )
-    cells = cells.crossJoin(F.broadcast(ncells)).select(
-        "_v",
-        F.when(F.col("_nc") > F.lit(max_cells), F.raise_error(guard_msg))
-        .otherwise(F.col("_ca"))
-        .alias("_ca"),
-        "_cb",
-    )
+    cells = ranked.select("_v", F.col("_c0").alias("_ca"), F.col("_c1").alias("_cb"))
     right = cells.select(F.col("_v").alias("_v2"), F.col("_cb").alias("_cb2"))
     conv = (
         cells.filter(F.col("_ca") > 0)
@@ -8192,17 +8131,13 @@ def hodges_lehmann(
             ),
         )["med"]
 
-    counts = cells.agg(
-        F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb")
-    )
-    out = packed.crossJoin(F.broadcast(counts))
     hl = (
         (median_at(lo_t) + median_at(hi_t))
         / F.lit(2).cast("decimal(2,0)")
     ).cast("double")
-    return out.select(
-        F.col("_na").cast("long").alias("n_a"),
-        F.col("_nb").cast("long").alias("n_b"),
+    return packed.select(
+        F.lit(n_a).cast("long").alias("n_a"),
+        F.lit(n_b).cast("long").alias("n_b"),
         total.cast("long").alias("n_pairs"),
         hl.alias("hl_shift"),
     )
@@ -8488,65 +8423,31 @@ def wasserstein_distance(
     squared gap): W₁ is in the VALUE's units, so "the distributions
     are $312 apart" reads directly.
 
-    Same collapsed-ECDF shape: one distinct-value collapse with both
-    cohort counts and one packed decimal cumulative
-    (``global_row_number``).  The step integral is TELESCOPED
-    (round 14, VERDICT r13 ask #4): with D_i = |c₁ᵢn₂ − c₂ᵢn₁| the
-    classic Σ D_i·(v_{i+1} − v_i) equals Σ v_i·(D_{i−1} − D_i)
-    exactly (D_0 = D_n = 0 kills the boundary terms), and D_{i−1}
-    is derivable PER ROW from the inclusive cumulative minus the
-    row's own counts — so the "next distinct value" rn+1 self-join
-    (which ran single-task over the collapsed frame and dominated
-    the query) disappears; one aggregate over the ranked cells
-    finishes the job.  Every term is an exact decimal (per-cell
-    bound: (ca·n₂ + cb·n₁)·v must fit decimal(38,2) — cohorts to
-    ~10⁹ rows at 10⁹-unit values); divides once by n₁n₂.
-    Output: one row (n_a, n_b, w1).
+    Collapsed-ECDF shape over :func:`_rank_cells` (values as
+    decimal(18,2)).  The step integral is TELESCOPED (round 14,
+    VERDICT r13 ask #4): with D_i = |c₁ᵢn₂ − c₂ᵢn₁| the classic
+    Σ D_i·(v_{i+1} − v_i) equals Σ v_i·(D_{i−1} − D_i) exactly
+    (D_0 = D_n = 0 kills the boundary terms), and D_{i−1} is
+    derivable PER ROW from the inclusive cumulative minus the row's
+    own counts — so there is no "next distinct value" self-join; one
+    aggregate over the ranked cells finishes the job.  Every term is
+    an exact decimal (per-cell bound: (ca·n₂ + cb·n₁)·v must fit
+    decimal(38,2) — cohorts to ~10⁹ rows at 10⁹-unit values); divides
+    once by n₁n₂.  Output: one row (n_a, n_b, w1).
 
-    ``cells``/``cells_count``/``cells_totals``: optionally inject the
-    prebuilt (_v, _ca, _cb) collapse plus its (n_a, n_b) totals (see
-    :func:`ks_test`) — skips both the collapse and the head-collect
-    job (r14)."""
-    from csp_gateway_spark.plans.scale import global_row_number
-
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col)
-    if cells is None:
-        per_val = (
-            df.filter(g.isin([group_a, group_b]))
-            .groupBy(v.cast("decimal(18,2)").alias("_v"))
-            .agg(
-                F.sum(F.when(g == group_a, 1).otherwise(0)).cast("long").alias("_ca"),
-                F.sum(F.when(g == group_b, 1).otherwise(0)).cast("long").alias("_cb"),
-            )
-        )
-        per_val = per_val.localCheckpoint(eager=True)
-        head = per_val.agg(
-            F.count(F.lit(1)).cast("long").alias("_ncells"),
-            F.sum("_ca").cast("long").alias("_na"),
-            F.sum("_cb").cast("long").alias("_nb"),
-        ).collect()[0]
-        n_a, n_b = int(head["_na"]), int(head["_nb"])
-        n_cells = int(head["_ncells"])
-    else:
-        per_val = cells.select("_v", "_ca", "_cb")
-        n_a, n_b = int(cells_totals[0]), int(cells_totals[1])
-        n_cells = cells_count
+    ``cells``/``cells_count``/``cells_totals``: optionally inject a
+    :func:`_rank_cells` frame plus its count and (n_a, n_b) totals
+    (see :func:`ks_test`) — skips both the collapse and the
+    head-collect job (r14)."""
+    ranked, _, (n_a, n_b) = _rank_cells(
+        df, group_col, F.col(value_col).cast("decimal(18,2)"),
+        [group_a, group_b], cells, cells_count, cells_totals,
+    )
     spark = df.sparkSession
     if n_a == 0 or n_b == 0:
         return spark.createDataFrame(
             [(n_a, n_b, None)], "n_a long, n_b long, w1 double"
         )
-    # cohort totals ride as LITERALS (the head aggregate above already
-    # paid for them), so there is no broadcast-totals sub-job; the two
-    # per-group running counts ride the cumulative as plain longs —
-    # no decimal packing, no pmod/divide unpack
-    ranked = global_row_number(
-        per_val, "_v", [], rn_col="_rn",
-        cum_values=[("_ca", "_ma"), ("_cb", "_mb")],
-        small_threshold=TARGET_ROWS_PER_BUCKET,
-        known_count=n_cells,
-    )
     na12 = F.lit(n_a).cast("decimal(12,0)")
     nb12 = F.lit(n_b).cast("decimal(12,0)")
 
@@ -8555,8 +8456,8 @@ def wasserstein_distance(
             c1.cast("decimal(19,0)") * nb12 - c2.cast("decimal(19,0)") * na12
         ).cast("decimal(25,0)")
 
-    d_cur = _d(F.col("_ma"), F.col("_mb"))
-    d_prev = _d(F.col("_ma") - F.col("_ca"), F.col("_mb") - F.col("_cb"))
+    d_cur = _d(F.col("_m0"), F.col("_m1"))
+    d_prev = _d(F.col("_m0") - F.col("_c0"), F.col("_m1") - F.col("_c1"))
     term = (
         F.col("_v").cast("decimal(19,2)")
         * (d_prev - d_cur).cast("decimal(18,0)")
@@ -9120,54 +9021,31 @@ def brunner_munzel(
     effect p̂ = P(X_a < X_b) + ½P(X_a = X_b), the studentized W, and
     the Satterthwaite df — scipy.stats.brunnermunzel's formulas.
 
-    Same machinery as :func:`mann_whitney_u`: ONE distinct-value
-    collapse carrying both cohort counts, the two running counts as
-    plain LONG columns on one two-phase cumulative (round 14 — no
-    packed-decimal unpack, no unpartitioned window) yielding the
-    combined AND the within-cohort midranks per cell, and every
-    moment — Σ2R per cohort and the rank-variance terms
-    Σc·d, Σc·d² with d = 2R − 2R^(within) — accumulates as an exact
-    decimal integer (doubled midranks stay integral).  Only the final
-    p̂/W/df are doubles, identical expressions on both engines.
-    Output: one row (n_a, n_b, p_hat, w, df).
+    Over :func:`_rank_cells`, each cell has its combined doubled
+    midrank r2 and its within-cohort doubled midranks 2·m − c + 1;
+    every moment — Σ2R per cohort and the rank-variance terms Σc·d,
+    Σc·d² with d = 2R − 2R^(within) — accumulates as an exact decimal
+    integer.  Only the final p̂/W/df are doubles, identical
+    expressions on both engines.  Output: one row (n_a, n_b, p_hat,
+    w, df).
 
     ``cells``/``cells_count``: see :func:`ks_test` — the shared
     two-cohort collapse injection (r14)."""
-    from csp_gateway_spark.plans.scale import global_row_number
-
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col)
-    if cells is None:
-        per_val = (
-            df.filter(g.isin([group_a, group_b]))
-            .groupBy(v.alias("_v"))
-            .agg(
-                F.sum(F.when(g == group_a, 1).otherwise(0)).cast("long").alias("_ca"),
-                F.sum(F.when(g == group_b, 1).otherwise(0)).cast("long").alias("_cb"),
-            )
-        )
-    else:
-        per_val = cells.select("_v", "_ca", "_cb")
-    ranked = global_row_number(
-        per_val, "_v", [], rn_col="_rn",
-        cum_values=[("_ca", "_ma"), ("_cb", "_mb")],
-        small_threshold=TARGET_ROWS_PER_BUCKET, known_count=cells_count,
+    ranked, _, _ = _rank_cells(
+        df, group_col, value_col, [group_a, group_b], cells, cells_count
     )
-    # doubled midranks in plain longs: combined and within-cohort
-    # (the within rank of a cell is only meaningful where that cohort
-    # has rows there); the decimal(13,0) casts below bound the SAME
-    # exact integers the packed path produced
-    cnt_l = F.col("_ca") + F.col("_cb")
-    r2 = F.lit(2) * (F.col("_ma") + F.col("_mb")) - cnt_l + F.lit(1)
-    r2a = F.lit(2) * F.col("_ma") - F.col("_ca") + F.lit(1)
-    r2b = F.lit(2) * F.col("_mb") - F.col("_cb") + F.lit(1)
+    # the within rank of a cell is only meaningful where that cohort
+    # has rows there
+    r2 = F.col("_r2")
+    r2a = F.lit(2) * F.col("_m0") - F.col("_c0") + F.lit(1)
+    r2b = F.lit(2) * F.col("_m1") - F.col("_c1") + F.lit(1)
     da = (r2 - r2a).cast("decimal(13,0)")  # ≤ 2N: 13 digits at N ≤ 1e12
     db = (r2 - r2b).cast("decimal(13,0)")
-    ca13 = F.col("_ca").cast("decimal(13,0)")
-    cb13 = F.col("_cb").cast("decimal(13,0)")
+    ca13 = F.col("_c0").cast("decimal(13,0)")
+    cb13 = F.col("_c1").cast("decimal(13,0)")
     sums = ranked.agg(
-        F.sum("_ca").cast("long").alias("_na"),
-        F.sum("_cb").cast("long").alias("_nb"),
+        F.sum("_c0").cast("long").alias("_na"),
+        F.sum("_c1").cast("long").alias("_nb"),
         F.sum((ca13 * r2.cast("decimal(20,0)")).cast("decimal(38,0)")).alias("_s2ra"),
         F.sum((cb13 * r2.cast("decimal(20,0)")).cast("decimal(38,0)")).alias("_s2rb"),
         F.sum((ca13 * da).cast("decimal(38,0)")).alias("_sda"),
@@ -9689,56 +9567,24 @@ def ansari_bradley(
     multiset via sampling-without-replacement moments, so ties need no
     special casing.
 
-    Same machinery as :func:`mann_whitney_u`: one distinct-value
-    collapse with both cohort counts as plain LONG running totals on
-    one two-phase cumulative (round 14 — no packed-decimal unpack),
-    and every moment an exact decimal integer on DOUBLED scores
-    s₂(v) = min(2R, 2(N+1) − 2R) (midranks are halves, so doubling
-    keeps scores integral).  Only the final A/z are doubles, identical
-    expressions on both engines.  Output: one row (n_a, n_b, ab_stat,
-    z).
+    Every moment is an exact decimal integer on the DOUBLED scores
+    s₂(v) = min(r2, 2(N+1) − r2) over :func:`_rank_cells`.  Only the
+    final A/z are doubles, identical expressions on both engines.
+    Output: one row (n_a, n_b, ab_stat, z).
 
     ``cells``/``cells_count``: see :func:`ks_test` — the shared
     two-cohort collapse injection (r14)."""
-    from csp_gateway_spark.plans.scale import global_row_number
-
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col)
-    if cells is None:
-        per_val = (
-            df.filter(g.isin([group_a, group_b]))
-            .groupBy(v.alias("_v"))
-            .agg(
-                F.sum(F.when(g == group_a, 1).otherwise(0)).cast("long").alias("_ca"),
-                F.sum(F.when(g == group_b, 1).otherwise(0)).cast("long").alias("_cb"),
-            )
-        )
-    else:
-        per_val = cells.select("_v", "_ca", "_cb")
-    ranked = global_row_number(
-        per_val, "_v", [], rn_col="_rn",
-        cum_values=[("_ca", "_ma"), ("_cb", "_mb")],
-        small_threshold=TARGET_ROWS_PER_BUCKET, known_count=cells_count,
+    ranked, _, _ = _rank_cells(
+        df, group_col, value_col, [group_a, group_b], cells, cells_count
     )
-    # doubled combined midrank in plain longs (same exact integers as
-    # the former packed-decimal path)
-    cnt_l = F.col("_ca") + F.col("_cb")
-    r2 = F.lit(2) * (F.col("_ma") + F.col("_mb")) - cnt_l + F.lit(1)
-    # the score needs N before the aggregate: totals ride a 1-row
-    # broadcast (exact integer sums) — from the RANKED frame, which
-    # global_row_number already checkpointed (aggregating per_val
-    # again would re-run the scan+collapse; round 14)
-    totals = ranked.agg(
-        F.sum("_ca").cast("long").alias("_na"),
-        F.sum("_cb").cast("long").alias("_nb"),
-    )
-    j = ranked.crossJoin(F.broadcast(totals))
-    s2 = F.least(r2, F.lit(2) * (F.col("_na") + F.col("_nb") + F.lit(1)) - r2)
-    ca13 = F.col("_ca").cast("decimal(13,0)")
-    cb13 = F.col("_cb").cast("decimal(13,0)")
-    cc13 = cnt_l.cast("decimal(13,0)")
+    r2 = F.col("_r2")
+    s2 = F.least(r2, F.lit(2) * (F.col("_n0") + F.col("_n1") + F.lit(1)) - r2)
+    ca13 = F.col("_c0").cast("decimal(13,0)")
+    cc13 = F.col("_t").cast("decimal(13,0)")
     s13 = s2.cast("decimal(13,0)")
-    sums = j.groupBy("_na", "_nb").agg(
+    sums = ranked.groupBy(
+        F.col("_n0").alias("_na"), F.col("_n1").alias("_nb")
+    ).agg(
         F.sum((ca13 * s13).cast("decimal(38,0)")).alias("_a2"),
         F.sum((cc13 * s13).cast("decimal(38,0)")).alias("_t2"),
         F.sum((cc13 * (s13 * s13).cast("decimal(27,0)")).cast("decimal(38,0)")).alias("_t2q"),
@@ -9786,53 +9632,39 @@ def jonckheere_terpstra(
     null moments.
 
     Plan: U is additive over the lower cohort, so J = Σ_j U(pooled
-    groups < j, group j) over ONE shared distinct-value collapse
-    (localCheckpointed).  ALL pooled passes ride a SINGLE
-    :func:`global_row_number` two-phase cumulative carrying the k
-    per-group running counts as k plain LONG columns
-    (``cum_values``) + one aggregate — three actions total (collapse,
-    moments, pass sums), no unpartitioned window, no pack-capacity
-    ceiling.  ``ordered_groups`` is
-    an explicit bounded contract (the ordering IS the hypothesis;
-    ≤ ``max_groups`` keeps the pass count bounded).  2J and every null-moment term are
-    exact integers (2U = 2R_a − n_a(n_a+1); 4E[J] = N² − Σn_j² is
-    always even, so 2E is integral too); only the final z divides, in
-    the same expression shape on both engines.  Output: one row
-    (n, k, jt2, z) with jt2 = 2J (exact; J itself may be a half).
+    groups < j, group j) over the k per-group running counts of ONE
+    :func:`_rank_cells` — one aggregate sums every pooled pass and the
+    tie moments (three jobs: collapse, head, sums).
+    ``ordered_groups`` is an explicit bounded contract (the ordering
+    IS the hypothesis; ≤ ``max_groups`` keeps the pass count bounded).
+    2J and every null-moment term are exact integers
+    (2U = 2R_a − n_a(n_a+1); 4E[J] = N² − Σn_j² is always even, so 2E
+    is integral too); only the final z divides, in the same
+    expression shape on both engines.  Output: one row (n, k, jt2, z)
+    with jt2 = 2J (exact; J itself may be a half).
     """
-    from csp_gateway_spark.plans.scale import global_row_number
-
     groups = list(ordered_groups)
     k = len(groups)
     if k < 2 or k > max_groups:
         raise ValueError(
             f"jonckheere_terpstra: need 2..{max_groups} ordered groups, got {k}"
         )
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col)
-    cells = (
-        df.filter(g.isin(groups) & v.isNotNull())
-        .groupBy(v.alias("_v"))
-        .agg(
-            *[
-                F.sum(F.when(g == F.lit(grp), 1).otherwise(0))
-                .cast("long")
-                .alias(f"_c{i}")
-                for i, grp in enumerate(groups)
-            ]
+    ranked, n_cells, n_j = _rank_cells(df, group_col, value_col, groups)
+    spark = df.sparkSession
+    if n_cells == 0:
+        # empty after filtering (no rows in the ordered groups / all
+        # values NULL): return the degenerate row (ADVICE r13)
+        return spark.createDataFrame(
+            [(0, k, 0, None)], "n long, k long, jt2 long, z double"
         )
-        .localCheckpoint(eager=True)
-    )
-    t = sum(F.col(f"_c{i}") for i in range(k)).cast("decimal(19,0)")
+    t = F.col("_t").cast("decimal(19,0)")
     one = F.lit(1).cast("decimal(2,0)")
     # tie-moment products at (12,0)·(12,0)→(25,0), ·(12,0)→(38,0) —
     # exactly the decimal cap, no precision adjustment on either
     # engine (tie groups ≤ 1e12 rows; the mann_whitney cube pattern)
     t12 = t.cast("decimal(12,0)")
     tt1 = (t12 * (t - one).cast("decimal(12,0)")).cast("decimal(25,0)")
-    mom = cells.agg(
-        F.count(F.lit(1)).cast("long").alias("_ncells"),
-        *[F.sum(f"_c{i}").cast("long").alias(f"_n{i}") for i in range(k)],
+    ties = [
         F.sum(
             tt1
             * (F.lit(2).cast("decimal(2,0)") * t + F.lit(5).cast("decimal(2,0)")).cast(
@@ -9847,38 +9679,12 @@ def jonckheere_terpstra(
                 "decimal(37,0)"
             )
         ).cast("decimal(38,0)").alias("_t2"),
-    ).collect()[0]
-    spark = df.sparkSession
-    if int(mom["_ncells"]) == 0:
-        # empty after filtering (no rows in the ordered groups / all
-        # values NULL): the driver-side sums come back NULL and would
-        # crash as int(None) — return the degenerate row instead
-        # (ADVICE r13)
-        return spark.createDataFrame(
-            [(0, k, 0, None)], "n long, k long, jt2 long, z double"
-        )
-    n_j = [int(mom[f"_n{i}"]) for i in range(k)]
+    ]
     two_j = 0
-    # ALL k per-group inclusive cumulative counts ride ONE two-phase
-    # cumulative as k plain LONG running totals (global_row_number's
-    # cum_values, added round 14).  The previous form packed the k
-    # counts into one decimal(38) and unpacked with pmod/divide chains
-    # — ~10 BigDecimal ops per row that measured 1.3 s of this
-    # query's 2.6 s final aggregate at sf0.1 AND imposed a k·digits
-    # ≤ 38 capacity ceiling with a k-pass fallback.  k long columns
-    # stay inside whole-stage codegen and have no capacity limit, so
-    # the fallback is gone.  known_count: the moments aggregate above
-    # already counted the checkpointed cells — skip global_row_number's
-    # redundant re-checkpoint + count pair (VERDICT r13 ask #4).
-    ranked = global_row_number(
-        cells, "_v", [], rn_col="_rn",
-        cum_values=[(f"_c{i}", f"_m{i}") for i in range(k)],
-        small_threshold=TARGET_ROWS_PER_BUCKET,
-        known_count=int(mom["_ncells"]),
-    )
     # pooled-pass terms: 2R_a(pass j) = Σ_cells ca_j·(2·below + cnt + 1)
-    # with below = cum_pool − cnt; counts/cums are longs, products are
-    # cast to exact decimals only where they can exceed int64
+    # with below = cum_pool − cnt over groups 0..j; counts/cums are
+    # longs, products are cast to exact decimals only where they can
+    # exceed int64
     pass_sums = []
     for j in range(1, k):
         ca = sum(F.col(f"_c{i}") for i in range(j)).cast("decimal(16,0)")
@@ -9893,7 +9699,7 @@ def jonckheere_terpstra(
         pass_sums.append(
             F.sum(term.cast("decimal(38,0)")).alias(f"_s2ra{j}")
         )
-    got = ranked.agg(*pass_sums).collect()[0]
+    got = ranked.agg(*pass_sums, *ties).collect()[0]
     for j in range(1, k):
         na, nb = sum(n_j[:j]), n_j[j]
         two_u = int(got[f"_s2ra{j}"]) - na * (na + 1)  # 2·U_a
@@ -9905,10 +9711,10 @@ def jonckheere_terpstra(
     a_term = (
         big_n * (big_n - 1) * (2 * big_n + 5)
         - sum(nj * (nj - 1) * (2 * nj + 5) for nj in n_j)
-        - int(mom["_t25"])
+        - int(got["_t25"])
     )
-    b_term = sum(nj * (nj - 1) * (nj - 2) for nj in n_j) * int(mom["_t3"])
-    c_term = sum(nj * (nj - 1) for nj in n_j) * int(mom["_t2"])
+    b_term = sum(nj * (nj - 1) * (nj - 2) for nj in n_j) * int(got["_t3"])
+    c_term = sum(nj * (nj - 1) for nj in n_j) * int(got["_t2"])
     z = None
     if big_n >= 3:
         var = (
@@ -10298,13 +10104,10 @@ def anderson_ksamp(
     Kolmogorov-Smirnov and :func:`cvm_test` in the tails — the
     standard distribution-drift gate.
 
-    Plan (the :func:`jonckheere_terpstra` shape): one distinct-value
-    collapse to per-group cell counts (localCheckpointed), one
-    1-row moments aggregate, and ONE shared
-    :func:`global_row_number` two-phase cumulative carrying the k
-    per-group running counts as plain longs — no unpartitioned
-    window.  Doubling clears the midrank halves: with P_i = 2F_ij −
-    f_ij and Q = 2H_j − h_j (exact longs from the cumulative),
+    Plan (the :func:`jonckheere_terpstra` shape): the k per-group
+    running counts of ONE :func:`_rank_cells`.  Doubling clears the
+    midrank halves: with P_i = 2F_ij − f_ij and Q = 2H_j − h_j = r2 − 1
+    (exact longs from the cumulative),
 
       A² = (N−1)/N² · Σ_i (1/n_i) Σ_j h_j·X²/Y,
       X = N·P_i − n_i·Q (exact decimal), Y = 2NQ − Q² − N·h_j,
@@ -10329,45 +10132,19 @@ def anderson_ksamp(
         raise ValueError(
             f"anderson_ksamp: need 2..{max_groups} groups, got {k}"
         )
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col)
-    cells = (
-        df.filter(g.isin(groups) & v.isNotNull())
-        .groupBy(v.alias("_v"))
-        .agg(
-            *[
-                F.sum(F.when(g == F.lit(grp), 1).otherwise(0))
-                .cast("long")
-                .alias(f"_c{i}")
-                for i, grp in enumerate(groups)
-            ]
-        )
-        .localCheckpoint(eager=True)
-    )
-    mom = cells.agg(
-        F.count(F.lit(1)).cast("long").alias("_ncells"),
-        *[F.sum(f"_c{i}").cast("long").alias(f"_n{i}") for i in range(k)],
-    ).collect()[0]
+    ranked, n_cells, n_j = _rank_cells(df, group_col, value_col, groups)
     spark = df.sparkSession
-    if int(mom["_ncells"]) == 0:
+    if n_cells == 0:
         return spark.createDataFrame(
             [(0, k, None, None)], "n long, k long, a2 double, z double"
         )
-    n_j = [int(mom[f"_n{i}"]) for i in range(k)]
     big_n = sum(n_j)
     if min(n_j) == 0:
         raise ValueError(
             "anderson_ksamp: every group needs at least one observation"
         )
-    ranked = global_row_number(
-        cells, "_v", [], rn_col="_rn",
-        cum_values=[(f"_c{i}", f"_m{i}") for i in range(k)],
-        small_threshold=TARGET_ROWS_PER_BUCKET,
-        known_count=int(mom["_ncells"]),
-    )
-    h = sum(F.col(f"_c{i}") for i in range(k))
-    bigh = sum(F.col(f"_m{i}") for i in range(k))
-    q = (F.lit(2).cast("long") * bigh - h).cast("decimal(20,0)")
+    h = F.col("_t")
+    q = (F.col("_r2") - F.lit(1)).cast("decimal(20,0)")
     nlit = F.lit(big_n).cast("decimal(20,0)")
     y_den = (
         F.lit(2).cast("decimal(2,0)") * nlit * q
@@ -12208,98 +11985,50 @@ def energy_distance(
     convention), E = n₁n₂/(n₁+n₂)·D².  Sensitive to ANY
     distributional difference, not just location.
 
-    Never the O(n²) pair expansion: over the value-sorted distinct
-    cells, every pairwise |·| sum factors through cumulative
-    counts/sums — Σ|x−y| = Σ_cells c_a·(v·B₍<₎ − S₍<₎ + S₍>₎ −
-    v·B₍>₎) — so ONE distinct-value collapse + ONE four-column
-    :func:`global_row_number` cumulative + one aggregate.  Every
-    numerator is an EXACT decimal (value × count products); only the
-    final normalizations divide as doubles, so the statistic is
-    engine-exact.  Output: one row (n_a, n_b, d2, e_stat)."""
-    from csp_gateway_spark.plans.scale import global_row_number
+    Never the O(n²) pair expansion: over the value-sorted cells of
+    :func:`_rank_cells`, every pairwise |·| sum factors through the
+    running COUNTS alone.  Each observation x contributes +x once per
+    partner below it and −x once per partner above, so with
+    d = 2m − c − n (#below − #above within a cohort)
+    Σ|x−y| = Σ_cells v·(c_a·d_b + c_b·d_a) and
+    Σ_{x<x′∈A}(x′−x) = Σ_cells v·c_a·d_a — one aggregate over the
+    ranked cells.  Every numerator is an EXACT decimal (value × count
+    products); only the final normalizations divide as doubles, so
+    the statistic is engine-exact.  Output: one row (n_a, n_b, d2,
+    e_stat).
 
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col).cast("decimal(15,2)")
-    if cells is None:
-        # ONE materialization of the collapse: `ranked` and `tot` both
-        # consume it, and the count doubles as the small-path's
-        # known_count (without this the totals aggregate re-ran the
-        # full collapse shuffle — measured 5.4 s → ~3 s at sf0.1).
-        # The checkpointed frame is the same (value, count_a, count_b)
-        # collapse :func:`yuen_trimmed_t` uses, so callers may build
-        # it once and inject it into both.
-        cells = (
-            df.filter(g.isin([group_a, group_b]) & v.isNotNull())
-            .groupBy(v.alias("_v"))
-            .agg(
-                F.sum(F.when(g == group_a, 1).otherwise(0)).cast("long").alias("_ca"),
-                F.sum(F.when(g == group_b, 1).otherwise(0)).cast("long").alias("_cb"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        cells_count = cells.count()
-    n_cells = cells_count
-    cells = cells.select(
-        "_v", "_ca", "_cb",
-        (F.col("_v") * F.col("_ca").cast("decimal(10,0)"))
-        .cast("decimal(38,2)").alias("_sa"),
-        (F.col("_v") * F.col("_cb").cast("decimal(10,0)"))
-        .cast("decimal(38,2)").alias("_sb"),
+    ``cells``/``cells_count``: see :func:`ks_test` (values as
+    decimal(15,2))."""
+    ranked, _, _ = _rank_cells(
+        df, group_col, F.col(value_col).cast("decimal(15,2)"),
+        [group_a, group_b], cells, cells_count,
     )
-    ranked = global_row_number(
-        cells, "_v", [], rn_col="_rn",
-        cum_values=[("_ca", "_cca"), ("_cb", "_ccb"),
-                    ("_sa", "_csa"), ("_sb", "_csb")],
-        small_threshold=TARGET_ROWS_PER_BUCKET, known_count=n_cells,
+    ca = F.col("_c0").cast("decimal(10,0)")
+    cb = F.col("_c1").cast("decimal(10,0)")
+    da = (F.lit(2) * F.col("_m0") - F.col("_c0") - F.col("_n0")).cast("decimal(11,0)")
+    db = (F.lit(2) * F.col("_m1") - F.col("_c1") - F.col("_n1")).cast("decimal(11,0)")
+
+    def vsum(x):  # Σ v·x over the cells, exact
+        return F.sum((F.col("_v") * x.cast("decimal(23,0)")).cast("decimal(38,2)"))
+
+    agg = ranked.agg(
+        F.first("_n0").alias("_na"),
+        F.first("_n1").alias("_nb"),
+        vsum(ca * db + cb * da).alias("_cr"),
+        vsum(ca * da).alias("_wa"),
+        vsum(cb * db).alias("_wb"),
     )
-    tot = cells.agg(
-        F.sum("_ca").cast("long").alias("_na"),
-        F.sum("_cb").cast("long").alias("_nb"),
-        F.sum("_sa").cast("decimal(38,2)").alias("_ta"),
-        F.sum("_sb").cast("decimal(38,2)").alias("_tb"),
-    )
-    w = ranked.crossJoin(F.broadcast(tot))
-    ca10 = F.col("_ca").cast("decimal(10,0)")
-    cb10 = F.col("_cb").cast("decimal(10,0)")
-    b_blw = (F.col("_ccb") - F.col("_cb")).cast("decimal(10,0)")
-    b_abv = (F.col("_nb").cast("decimal(10,0)") - F.col("_ccb").cast("decimal(10,0)"))
-    sb_blw = (F.col("_csb") - F.col("_sb")).cast("decimal(38,2)")
-    sb_abv = (F.col("_tb") - F.col("_csb")).cast("decimal(38,2)")
-    a_blw = (F.col("_cca") - F.col("_ca")).cast("decimal(10,0)")
-    sa_blw = (F.col("_csa") - F.col("_sa")).cast("decimal(38,2)")
-    b_blw_s = (F.col("_v") * b_blw).cast("decimal(38,2)")
-    b_abv_s = (F.col("_v") * b_abv).cast("decimal(38,2)")
-    a_blw_s = (F.col("_v") * a_blw).cast("decimal(38,2)")
-    cross = (
-        ca10.cast("decimal(12,0)")
-        * (b_blw_s - sb_blw + sb_abv - b_abv_s).cast("decimal(25,2)")
-    ).cast("decimal(38,2)")
-    wa = (ca10.cast("decimal(12,0)") * (a_blw_s - sa_blw).cast("decimal(25,2)")).cast("decimal(38,2)")
-    # within-B mirrors within-A with the roles swapped
-    bb_blw = (F.col("_ccb") - F.col("_cb")).cast("decimal(10,0)")
-    sbb_blw = (F.col("_csb") - F.col("_sb")).cast("decimal(38,2)")
-    wb = (
-        cb10.cast("decimal(12,0)")
-        * ((F.col("_v") * bb_blw).cast("decimal(38,2)") - sbb_blw).cast("decimal(25,2)")
-    ).cast("decimal(38,2)")
-    agg = w.agg(
-        F.first("_na").alias("_n1"),
-        F.first("_nb").alias("_n2"),
-        F.sum(cross).alias("_cr"),
-        F.sum(wa).alias("_wa"),
-        F.sum(wb).alias("_wb"),
-    )
-    na = F.col("_n1").cast("double")
-    nb = F.col("_n2").cast("double")
+    na = F.col("_na").cast("double")
+    nb = F.col("_nb").cast("double")
     d2 = (
         F.lit(2.0) * F.col("_cr").cast("double") / (na * nb)
         - F.lit(2.0) * F.col("_wa").cast("double") / (na * na)
         - F.lit(2.0) * F.col("_wb").cast("double") / (nb * nb)
     )
-    ok = (F.col("_n1") > 0) & (F.col("_n2") > 0)
+    ok = (F.col("_na") > 0) & (F.col("_nb") > 0)
     lay = agg.select(
-        F.col("_n1").alias("n_a"),
-        F.col("_n2").alias("n_b"),
+        F.col("_na").alias("n_a"),
+        F.col("_nb").alias("n_b"),
         F.when(ok, d2).alias("d2"),
     )
     e_stat = (
@@ -12328,44 +12057,33 @@ def conover_squared_ranks(
     to :func:`bartlett_test` (normality-sensitive) and
     :func:`levene_test` (mean-based F).
 
-    Plan (r14): EVERYTHING derives from the distinct-value collapse
-    (_v, count_a, count_b) — per-group means as exact Σ(v·c)/Σc off
-    the collapsed frame, then each cell emits its |v − mean_g|
-    deviation PER GROUP with its count (two stacked legs, not two
-    full fact scans), one distinct-u collapse over those
-    cells-bounded legs + ONE two-column cumulative.  DOUBLED
-    midranks keep q = (2R)² and its first two moments exact decimals
-    (order-free sums); the fourth moment feeds only the z
-    denominator and sums as double (see inline note).  The u values
+    Plan (r14): EVERYTHING derives from the :func:`_rank_cells`
+    value cells — per-group means as exact Σ(v·c)/Σc, then each cell
+    emits its |v − mean_g| deviation PER GROUP with its count (two
+    stacked legs, not two full fact scans), and a second
+    :func:`_rank_cells` over those legs (weighted by their counts)
+    ranks the distinct u.  q = r2² and its first two moments are
+    exact decimals (order-free sums); the fourth moment feeds only the
+    z denominator and sums as double (see inline note).  The u values
     are the same doubles as the former per-row path (v round-trips
     decimal→double, mean is the same exact-decimal ratio).  Output:
     one row (n_a, n_b, t_stat, z).
 
-    ``cells``: optionally inject the prebuilt (_v, _ca, _cb)
-    collapse shared with :func:`ks_test` et al."""
-    from csp_gateway_spark.plans.scale import global_row_number
-
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col).cast("decimal(19,2)")
-    if cells is None:
-        cells = (
-            df.filter(g.isin([group_a, group_b]) & v.isNotNull())
-            .groupBy(v.alias("_v"))
-            .agg(
-                F.sum(F.when(g == group_a, 1).otherwise(0)).cast("long").alias("_ca"),
-                F.sum(F.when(g == group_b, 1).otherwise(0)).cast("long").alias("_cb"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    ``cells``: optionally inject the :func:`_rank_cells` frame shared
+    with :func:`ks_test` et al."""
+    cells, _, _ = _rank_cells(
+        df, group_col, F.col(value_col).cast("decimal(19,2)"),
+        [group_a, group_b], cells,
+    )
     st1 = cells.agg(
-        F.sum("_ca").cast("long").alias("_na"),
-        F.sum("_cb").cast("long").alias("_nb"),
+        F.sum("_c0").cast("long").alias("_na"),
+        F.sum("_c1").cast("long").alias("_nb"),
         F.sum(
-            (F.col("_v").cast("decimal(25,2)") * F.col("_ca").cast("decimal(12,0)"))
+            (F.col("_v").cast("decimal(25,2)") * F.col("_c0").cast("decimal(12,0)"))
             .cast("decimal(38,2)")
         ).alias("_sa"),
         F.sum(
-            (F.col("_v").cast("decimal(25,2)") * F.col("_cb").cast("decimal(12,0)"))
+            (F.col("_v").cast("decimal(25,2)") * F.col("_c1").cast("decimal(12,0)"))
             .cast("decimal(38,2)")
         ).alias("_sb"),
     )
@@ -12381,12 +12099,12 @@ def conover_squared_ranks(
                 F.array(
                     F.struct(
                         F.abs(vd - F.col("_ma")).alias("_u"),
-                        F.col("_ca").alias("_c"),
+                        F.col("_c0").alias("_c"),
                         F.lit(1).alias("_isa"),
                     ),
                     F.struct(
                         F.abs(vd - F.col("_mb")).alias("_u"),
-                        F.col("_cb").alias("_c"),
+                        F.col("_c1").alias("_c"),
                         F.lit(0).alias("_isa"),
                     ),
                 )
@@ -12397,24 +12115,9 @@ def conover_squared_ranks(
         # per-row formulation — drop it so the distinct-u set matches
         .filter(F.col("_c") > 0)
     )
-    cells_u = stacked.groupBy("_u").agg(
-        F.sum(F.when(F.col("_isa") == 1, F.col("_c")).otherwise(0))
-        .cast("long").alias("_ca"),
-        F.sum(F.when(F.col("_isa") == 0, F.col("_c")).otherwise(0))
-        .cast("long").alias("_cb"),
-    )
-    ranked = global_row_number(
-        cells_u, "_u", [], rn_col="_rn",
-        cum_values=[("_ca", "_cca"), ("_cb", "_ccb")],
-        small_threshold=TARGET_ROWS_PER_BUCKET, checkpoint=True,
-    )
-    t = (F.col("_ca") + F.col("_cb")).cast("decimal(20,0)")
-    below = (
-        F.col("_cca").cast("decimal(20,0)") + F.col("_ccb").cast("decimal(20,0)")
-        - t
-    )
-    two_r = (F.lit(2).cast("decimal(20,0)") * below + t
-             + F.lit(1).cast("decimal(20,0)")).cast("decimal(20,0)")
+    ranked, _, _ = _rank_cells(stacked, "_isa", "_u", [1, 0], weight="_c")
+    t = F.col("_t").cast("decimal(20,0)")
+    two_r = F.col("_r2").cast("decimal(20,0)")
     q = (two_r * two_r).cast("decimal(38,0)")
     # first two moments exact decimals (fit to N ≈ 10⁹); the FOURTH
     # moment q² = (2R)⁴ would overflow decimal(38) near N ≈ 10⁷, so
@@ -12423,11 +12126,11 @@ def conover_squared_ranks(
     # drift (the engle_granger residual-sum precedent)
     qd = q.cast("double")
     sums = ranked.agg(
-        F.sum(F.col("_ca").cast("decimal(10,0)") * q.cast("decimal(27,0)")).alias("_qa"),
+        F.sum(F.col("_c0").cast("decimal(10,0)") * q.cast("decimal(27,0)")).alias("_qa"),
         F.sum(t.cast("decimal(10,0)") * q.cast("decimal(27,0)")).alias("_qt"),
         F.sum(t.cast("double") * (qd * qd)).alias("_q4"),
-        F.sum(F.col("_ca")).cast("long").alias("_n1"),
-        F.sum(F.col("_cb")).cast("long").alias("_n2"),
+        F.sum(F.col("_c0")).cast("long").alias("_n1"),
+        F.sum(F.col("_c1")).cast("long").alias("_n2"),
     )
     na = F.col("_n1").cast("double")
     nb = F.col("_n2").cast("double")
@@ -12472,77 +12175,51 @@ def yuen_trimmed_t(
     d_j = (n_j−1)·s²_{w,j} / (h_j·(h_j−1)), h_j = n_j − 2g_j,
     g_j = ⌊trim·n_j⌋.
 
-    Plan: ONE distinct-value collapse carrying both cohort counts +
-    ONE two-column exact cumulative; every order statistic (the trim
-    cut values) and every trimmed/winsorized sum comes from exact
-    per-cell rank-overlap arithmetic — Σv·overlap with
+    Plan: over the running counts of :func:`_rank_cells` (values as
+    decimal(15,2)), every order statistic (the trim cut values) and
+    every trimmed/winsorized sum comes from exact per-cell
+    rank-overlap arithmetic — Σv·overlap with
     overlap = clamp(min(cum, n−g) − max(cum−c, g)) — so the trimmed
     means are EXACT decimal ratios and only the final t divides as
     doubles.  ONE bounded aggregate — the trimmed sums, the SQUARED
     sums and the cut-value order statistics all come off the same
-    ranked pass (the r14 merge: the squared sums never actually
-    needed the cut values, only the final scalar winsorization does,
-    so the former second pass + its checkpoint/crossJoin are gone).
-    Output: one row (h_a, h_b, mean_trim_a, mean_trim_b, t_stat).
+    ranked pass (r14).  Output: one row (h_a, h_b, mean_trim_a,
+    mean_trim_b, t_stat).
 
-    ``cells``/``cells_count`` optionally inject a prebuilt
-    (value, count_a, count_b) collapse (decimal(15,2) values,
-    checkpointed) shared with :func:`energy_distance` — same collapse,
-    computed once per process."""
-    from csp_gateway_spark.plans.scale import global_row_number
-
+    ``cells``/``cells_count``: see :func:`ks_test` — shared with
+    :func:`energy_distance`, computed once per process."""
     trim = float(trim)
     if not (0.0 <= trim < 0.5):
         raise ValueError("yuen_trimmed_t: trim must be in [0, 0.5)")
-    g = F.col(group_col) if isinstance(group_col, str) else group_col
-    v = F.col(value_col).cast("decimal(15,2)")
-    if cells is None:
-        cells = (
-            df.filter(g.isin([group_a, group_b]) & v.isNotNull())
-            .groupBy(v.alias("_v"))
-            .agg(
-                F.sum(F.when(g == group_a, 1).otherwise(0)).cast("long").alias("_ca"),
-                F.sum(F.when(g == group_b, 1).otherwise(0)).cast("long").alias("_cb"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        cells_count = cells.count()
-    n_cells = cells_count
-    ranked = global_row_number(
-        cells, "_v", [], rn_col="_rn",
-        cum_values=[("_ca", "_cca"), ("_cb", "_ccb")],
-        small_threshold=TARGET_ROWS_PER_BUCKET, known_count=n_cells,
+    ranked, _, _ = _rank_cells(
+        df, group_col, F.col(value_col).cast("decimal(15,2)"),
+        [group_a, group_b], cells, cells_count,
     )
-    tot = cells.agg(
-        F.sum("_ca").cast("long").alias("_na"),
-        F.sum("_cb").cast("long").alias("_nb"),
-    )
-    w = ranked.crossJoin(F.broadcast(tot))
-    ga = F.floor(F.lit(trim) * F.col("_na")).cast("long")
-    gb = F.floor(F.lit(trim) * F.col("_nb")).cast("long")
+    ga = F.floor(F.lit(trim) * F.col("_n0")).cast("long")
+    gb = F.floor(F.lit(trim) * F.col("_n1")).cast("long")
 
     def overlap(cum, cnt, n, gcut):
         lo = F.greatest(cum - cnt, gcut)
         hi = F.least(cum, n - gcut)
         return F.greatest(hi - lo, F.lit(0).cast("long"))
 
-    ov_a = overlap(F.col("_cca"), F.col("_ca"), F.col("_na"), ga)
-    ov_b = overlap(F.col("_ccb"), F.col("_cb"), F.col("_nb"), gb)
+    ov_a = overlap(F.col("_m0"), F.col("_c0"), F.col("_n0"), ga)
+    ov_b = overlap(F.col("_m1"), F.col("_c1"), F.col("_n1"), gb)
     v2 = (F.col("_v") * F.col("_v")).cast("decimal(31,4)")
-    out = w.agg(
-        F.first("_na").alias("_n1"),
-        F.first("_nb").alias("_n2"),
+    out = ranked.agg(
+        F.first("_n0").alias("_na"),
+        F.first("_n1").alias("_nb"),
         F.sum((F.col("_v") * ov_a.cast("decimal(12,0)")).cast("decimal(38,2)")).alias("_tsa"),
         F.sum((F.col("_v") * ov_b.cast("decimal(12,0)")).cast("decimal(38,2)")).alias("_tsb"),
         F.sum((v2 * ov_a.cast("decimal(12,0)")).cast("decimal(38,4)")).alias("_qa"),
         F.sum((v2 * ov_b.cast("decimal(12,0)")).cast("decimal(38,4)")).alias("_qb"),
         # cut values: the order statistics at ranks g+1 and n−g
-        F.min(F.when(F.col("_cca") >= ga + 1, F.col("_v"))).alias("_loa"),
-        F.min(F.when(F.col("_cca") >= F.col("_na") - ga, F.col("_v"))).alias("_hia"),
-        F.min(F.when(F.col("_ccb") >= gb + 1, F.col("_v"))).alias("_lob"),
-        F.min(F.when(F.col("_ccb") >= F.col("_nb") - gb, F.col("_v"))).alias("_hib"),
+        F.min(F.when(F.col("_m0") >= ga + 1, F.col("_v"))).alias("_loa"),
+        F.min(F.when(F.col("_m0") >= F.col("_n0") - ga, F.col("_v"))).alias("_hia"),
+        F.min(F.when(F.col("_m1") >= gb + 1, F.col("_v"))).alias("_lob"),
+        F.min(F.when(F.col("_m1") >= F.col("_n1") - gb, F.col("_v"))).alias("_hib"),
     )
-    n1, n2 = F.col("_n1"), F.col("_n2")
+    n1, n2 = F.col("_na"), F.col("_nb")
     g1 = F.floor(F.lit(trim) * n1).cast("long")
     g2 = F.floor(F.lit(trim) * n2).cast("long")
     h1 = (n1 - 2 * g1).cast("double")

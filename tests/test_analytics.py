@@ -7,6 +7,8 @@ semantic invariants at sf0.001.
 """
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from csp_gateway_spark.operators import analytics as A
@@ -1607,3 +1609,90 @@ def test_levene_test_hand_computed(spark):
     )
     r2 = levene_test(same, "g", "y").collect()[0]
     assert abs(r2.f) < 1e-12  # identical spreads -> zero between-group SS
+
+
+# --- the distinct-value rank family: one null rule, one midrank ---------
+
+_RANK_TWO = [
+    "ks_test", "mann_whitney_u", "cvm_test", "wasserstein_distance",
+    "brunner_munzel", "ansari_bradley", "energy_distance",
+    "conover_squared_ranks", "yuen_trimmed_t",
+]
+_RANK_K = ["kruskal_wallis", "jonckheere_terpstra", "anderson_ksamp"]
+_RANK_A = [1.0, 2.0, 2.0, 5.0, 7.0, 7.0]
+_RANK_B = [3.0, 4.0, 2.0, 6.0, 6.0, 8.0]
+_RANK_C = [0.5, 4.0, 9.0, 2.0]
+
+
+def _rank_op(name, df):
+    op = getattr(A, name)
+    if name == "roc_auc":
+        label = F.when(F.col("g") == "a", 1).when(F.col("g") == "b", 0)
+        return op(df.select(F.col("v").alias("score"), label.alias("label")), "score", "label")
+    if name in _RANK_K:
+        return op(df, "g", "v", ["a", "b", "c"])
+    return op(df, "g", "v", "a", "b")
+
+
+@pytest.mark.parametrize("name", _RANK_TWO + _RANK_K + ["roc_auc"])
+def test_rank_tests_ignore_null_rows(spark, name):
+    """A row with a NULL value or a NULL group is not an observation:
+    adding one of each leaves every rank test's result unchanged."""
+    rows = [("a", v) for v in _RANK_A] + [("b", v) for v in _RANK_B]
+    if name in _RANK_K:
+        rows += [("c", v) for v in _RANK_C]
+    schema = "g string, v double"
+    clean = _rank_op(name, spark.createDataFrame(rows, schema)).collect()
+    noisy = _rank_op(
+        name, spark.createDataFrame(rows + [("a", None), (None, 5.0)], schema)
+    ).collect()
+    assert noisy == clean
+
+
+def _check_rank_cells(spark, rows, groups):
+    df = spark.createDataFrame(rows, "g string, v long")
+    ranked, n_cells, totals = A._rank_cells(df, "g", "v", groups)
+    obs = [(g, v) for g, v in rows if g in groups and v is not None]
+    ordered = sorted(v for _g, v in obs)
+    # brute force: the midrank of v is the mean of its 1-based positions
+    pos = {}
+    for i, v in enumerate(ordered, start=1):
+        pos.setdefault(v, []).append(i)
+    assert totals == tuple(sum(g == grp for g, _v in obs) for grp in groups)
+    assert n_cells == len(pos)
+    got = sorted(ranked.collect(), key=lambda r: r["_v"])
+    assert [r["_v"] for r in got] == sorted(pos)
+    for r in got:
+        v = r["_v"]
+        assert 2 * sum(pos[v]) == r["_r2"] * len(pos[v])
+        assert r["_t"] == len(pos[v])
+        for i, grp in enumerate(groups):
+            assert r[f"_c{i}"] == sum(g == grp and x == v for g, x in obs)
+            assert r[f"_m{i}"] == sum(g == grp and x <= v for g, x in obs)
+            assert r[f"_n{i}"] == totals[i]
+
+
+_LABELS = ["g0", "g1", "g2", "g3"]
+
+
+@st.composite
+def _tie_heavy(draw):
+    k = draw(st.integers(2, 4))
+    row = st.tuples(
+        st.one_of(st.none(), st.sampled_from(_LABELS + ["zz"])),
+        st.one_of(st.none(), st.integers(0, 5)),
+    )
+    return _LABELS[:k], draw(st.lists(row, min_size=1, max_size=25))
+
+
+@pytest.mark.parametrize("path", ["small", "bucketed"])
+@given(case=_tie_heavy())
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_rank_cells_matches_brute_force(spark, monkeypatch, path, case):
+    """``_r2`` is twice the brute-force midrank and the counts, running
+    counts and totals match plain Python, on both rank paths (a
+    threshold of -1 sends every collapse down the bucketed one)."""
+    if path == "bucketed":
+        monkeypatch.setattr(A, "TARGET_ROWS_PER_BUCKET", -1)
+    groups, rows = case
+    _check_rank_cells(spark, rows, groups)

@@ -161,6 +161,14 @@ def test_hodges_lehmann_odd_pairs(spark):
     assert abs(r.hl_shift - 15.0) < 1e-12
 
 
+def test_hodges_lehmann_max_cells_guard(spark):
+    from csp_gateway_spark.operators.analytics import hodges_lehmann
+
+    df = spark.createDataFrame([("a", 1.0), ("a", 2.0), ("b", 3.0)], "g string, v double")
+    with pytest.raises(ValueError, match="max_cells=2 \\(got 3\\)"):
+        hodges_lehmann(df, "g", "v", "a", "b", max_cells=2)
+
+
 def test_assortativity_star_is_minus_one(spark):
     from csp_gateway_spark.operators.corpus import degree_assortativity
 
