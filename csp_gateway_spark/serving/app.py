@@ -1002,6 +1002,7 @@ class WsSession:
 _JSON = "application/json"
 _HTML = "text/html; charset=utf-8"
 _HANDLED = object()  # the handler wrote its own answer (a websocket upgrade)
+_POLL_S = 0.05  # serve_forever's shutdown poll: the most stop() waits
 
 
 class Reply(NamedTuple):
@@ -1045,6 +1046,8 @@ def _view(api: GatewayApi, req, channel: str):
 
 def _login(api: GatewayApi, req):
     payload = req.json_body(b"{}")
+    if not isinstance(payload, dict):
+        raise ApiError(422, "login body must be a JSON object")
     body, cookie = api.auth_login_simple(payload.get("username", ""), payload.get("password", ""))
     return Reply(body, headers={"Set-Cookie": cookie})
 
@@ -1203,7 +1206,7 @@ class GatewayHttpServer:
 
     def start(self) -> "GatewayHttpServer":
         self.api._http_server = self  # enables POST /controls/shutdown
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
+        self._thread = threading.Thread(target=self._server.serve_forever, args=(_POLL_S,), daemon=True)
         self._thread.start()
         return self
 

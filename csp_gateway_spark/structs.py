@@ -17,11 +17,10 @@ counter provides in one process.
 from __future__ import annotations
 
 import datetime
-from typing import Iterable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 ID_FIELD = "id"
 TIMESTAMP_FIELD = "timestamp"
@@ -64,46 +63,3 @@ def reassign_identity(df: DataFrame, force_new_id: bool = True, force_new_timest
     if force_new_timestamp:
         out = out.drop(TIMESTAMP_FIELD)
     return with_identity(out)
-
-
-_PY_TO_SPARK = {
-    int: T.LongType(),
-    float: T.DoubleType(),
-    bool: T.BooleanType(),
-    str: T.StringType(),
-    bytes: T.BinaryType(),
-    datetime.datetime: T.TimestampType(),
-    datetime.date: T.DateType(),
-    datetime.timedelta: T.DayTimeIntervalType(),
-}
-
-
-def struct_type(fields: dict) -> T.StructType:
-    """Build a StructType from {name: python type | DataType | nested dict}.
-
-    Enums map to strings, nested dicts to nested structs, lists to
-    ArrayType — mirroring the reference's schema derivation
-    (`state.py:502-587`) but without the VARCHAR degradation for
-    lists/dicts/timedelta: Spark has native Array/Map/Interval types.
-    """
-    out = []
-    for name, spec in fields.items():
-        out.append(T.StructField(name, _to_spark_type(spec), True))
-    return T.StructType(out)
-
-
-def _to_spark_type(spec) -> T.DataType:
-    if isinstance(spec, T.DataType):
-        return spec
-    if isinstance(spec, dict):
-        return struct_type(spec)
-    if isinstance(spec, (list, tuple)) and len(spec) == 1:
-        return T.ArrayType(_to_spark_type(spec[0]))
-    if isinstance(spec, type):
-        import enum
-
-        if issubclass(spec, enum.Enum):
-            return T.StringType()
-        if spec in _PY_TO_SPARK:
-            return _PY_TO_SPARK[spec]
-    raise TypeError(f"cannot map {spec!r} to a Spark type")

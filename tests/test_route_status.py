@@ -275,6 +275,7 @@ CASES = {
     ("simple", "POST", "/api/v1/auth/login", '{"username": "alice", "password": "no"}'): UNAUTHORIZED,
     ("simple", "POST", "/api/v1/auth/login", None): UNAUTHORIZED,
     ("simple", "POST", "/api/v1/auth/login", "{"): _malformed("{"),
+    ("simple", "POST", "/api/v1/auth/login", "[]"): (422, {"detail": "login body must be a JSON object"}),
     ("simple", "GET", "/api/v1/auth/login", None): NOT_FOUND,
     ("simple", "GET", "/api/v1/channels", None): UNAUTHORIZED,
 }
