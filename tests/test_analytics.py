@@ -1649,29 +1649,6 @@ def test_rank_tests_ignore_null_rows(spark, name):
     assert noisy == clean
 
 
-def _check_rank_cells(spark, rows, groups):
-    df = spark.createDataFrame(rows, "g string, v long")
-    ranked, n_cells, totals = A._rank_cells(df, "g", "v", groups)
-    obs = [(g, v) for g, v in rows if g in groups and v is not None]
-    ordered = sorted(v for _g, v in obs)
-    # brute force: the midrank of v is the mean of its 1-based positions
-    pos = {}
-    for i, v in enumerate(ordered, start=1):
-        pos.setdefault(v, []).append(i)
-    assert totals == tuple(sum(g == grp for g, _v in obs) for grp in groups)
-    assert n_cells == len(pos)
-    got = sorted(ranked.collect(), key=lambda r: r["_v"])
-    assert [r["_v"] for r in got] == sorted(pos)
-    for r in got:
-        v = r["_v"]
-        assert 2 * sum(pos[v]) == r["_r2"] * len(pos[v])
-        assert r["_t"] == len(pos[v])
-        for i, grp in enumerate(groups):
-            assert r[f"_c{i}"] == sum(g == grp and x == v for g, x in obs)
-            assert r[f"_m{i}"] == sum(g == grp and x <= v for g, x in obs)
-            assert r[f"_n{i}"] == totals[i]
-
-
 _LABELS = ["g0", "g1", "g2", "g3"]
 
 
@@ -1695,4 +1672,23 @@ def test_rank_cells_matches_brute_force(spark, monkeypatch, path, case):
     if path == "bucketed":
         monkeypatch.setattr(A, "TARGET_ROWS_PER_BUCKET", -1)
     groups, rows = case
-    _check_rank_cells(spark, rows, groups)
+    df = spark.createDataFrame(rows, "g string, v long")
+    ranked, n_cells, totals = A._rank_cells(df, "g", "v", groups)
+    obs = [(g, v) for g, v in rows if g in groups and v is not None]
+    ordered = sorted(v for _g, v in obs)
+    # brute force: the midrank of v is the mean of its 1-based positions
+    pos = {}
+    for i, v in enumerate(ordered, start=1):
+        pos.setdefault(v, []).append(i)
+    assert totals == tuple(sum(g == grp for g, _v in obs) for grp in groups)
+    assert n_cells == len(pos)
+    got = sorted(ranked.collect(), key=lambda r: r["_v"])
+    assert [r["_v"] for r in got] == sorted(pos)
+    for r in got:
+        v = r["_v"]
+        assert 2 * sum(pos[v]) == r["_r2"] * len(pos[v])
+        assert r["_t"] == len(pos[v])
+        for i, grp in enumerate(groups):
+            assert r[f"_c{i}"] == sum(g == grp and x == v for g, x in obs)
+            assert r[f"_m{i}"] == sum(g == grp and x <= v for g, x in obs)
+            assert r[f"_n{i}"] == totals[i]
