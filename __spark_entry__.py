@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csp_gateway_spark import sinks
 from csp_gateway_spark.session import read_table, rebind_session, replay_session
 from csp_gateway_spark.operators.state import keyed_last
 from csp_gateway_spark.query import Filter, Query, apply_query
@@ -348,53 +349,61 @@ def _stream_replay(
     ``stage(root)`` writes ``source``'s rows as replay files; a
     ``maxFilesPerTrigger=1`` stream over them (on
     ``session.replay_session``, with each ``static`` frame rebound
-    there) goes through ``build(stream, *static)`` into a memory sink
-    under ``availableNow``.  The sink table is rebound to ``spark``,
-    shaped by ``finish`` and landed as parquet, so the returned frame
-    is a clean scan of ``spark`` (the sink lineage chains back through
-    every micro-batch to the replay source, which is removed here).
-    Nothing sets conf on ``spark``."""
-    root = _gate_tmpdir(prefix=f"csp_gw_{name}_{os.getpid()}_")
-    table = f"gate_{name}_{os.getpid()}"
-    out = os.path.join(root, "state_out")
+    there) goes through ``build(stream, *static)`` under
+    ``availableNow``, and each micro-batch lands as parquet through
+    ``sinks.land_batch`` in ``mode`` (append: one directory per batch
+    id; complete: the landing replaced), so a restart from the
+    checkpoint re-lands a batch in place.  Returns ``finish`` over a
+    scan of the landing on ``spark``.  Nothing sets conf on ``spark``."""
     replay = replay_session(spark)
-    q, landed = None, False
-    try:
-        stream = _replay_stream(replay, stage(root), source.schema)
+
+    def start(root: str, src: str):
         statics = [rebind_session(df, replay) for df in static]
-        q = (
-            build(stream, *statics)
+        return (
+            build(_replay_stream(replay, src, source.schema), *statics)
             .writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(table)
+            .foreachBatch(
+                lambda df, batch_id: sinks.land_batch(df, batch_id, os.path.join(root, "landing"), mode)
+            )
+            .queryName(f"gate_{name}_{os.getpid()}")
             .option("checkpointLocation", os.path.join(root, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
+
+    return finish(spark.read.parquet(_replay(name, stage, start, "landing")))
+
+
+def _replay(
+    name: str,
+    stage: Callable[[str], str],
+    start: Callable[[str, str], object],
+    landing: str,
+) -> str:
+    """Scratch for one replay: in a fresh ``root``, ``stage(root)``
+    writes the source files, ``start(root, src)`` starts the query
+    and it runs to its end.  Returns ``<root>/<landing>``, where the
+    query's output landed (which the returned frame scans), and removes
+    the rest of ``root``, or all of it when the replay fails."""
+    import shutil
+
+    root = _gate_tmpdir(prefix=f"csp_gw_{name}_{os.getpid()}_")
+    q, keep = None, None
+    try:
+        q = start(root, stage(root))
         q.awaitTermination()
-        sink = rebind_session(replay.table(table), spark)
-        finish(sink).write.mode("overwrite").parquet(out)
-        landed = True
+        keep = landing
     finally:
         if q is not None:
             q.stop()
-        replay.catalog.dropTempView(table)
-        _drop_replay_dirs(root, landed)
-    return spark.read.parquet(out)
-
-
-def _drop_replay_dirs(root: str, landed: bool) -> None:
-    """Remove a replay's scratch: everything but the landed
-    ``state_out`` (which the returned frame scans), or all of it when
-    the replay did not land."""
-    import shutil
-
-    if not landed:
-        shutil.rmtree(root, ignore_errors=True)
-        return
-    for d in os.listdir(root):
-        if d != "state_out":
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        if keep is None:
+            shutil.rmtree(root, ignore_errors=True)
+        else:
+            for d in os.listdir(root):
+                path = os.path.join(root, d)
+                if d != keep:
+                    shutil.rmtree(path, ignore_errors=True) if os.path.isdir(path) else os.remove(path)
+    return os.path.join(root, landing)
 
 
 def _time_split(ev: DataFrame, n: int, sentinels_ns: tuple[int, ...] = ()):
@@ -553,42 +562,32 @@ def q_state_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream over an 8-file split with maxFilesPerTrigger=1, so
     trigger(availableNow) executes 8 micro-batches whose keyed-last
     states MERGE incrementally through the foreachBatch upsert
-    (streaming/state_stream.py) — and the final queryable state table
+    (streaming/state_stream.py) — and the state the last batch landed
     must hash-equal the batch window oracle."""
     from csp_gateway_spark.streaming.state_stream import streaming_keyed_last
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    root = _gate_tmpdir(prefix=f"csp_gw_stream_replay_{os.getpid()}_")
     table = f"gate_state_replay_{os.getpid()}"
-    state_out = os.path.join(root, "state_out")
-    q, landed = None, False
-    try:
-        # deterministic 8-way split -> 8 source files -> 8 engine cycles
-        src = _hash_split(ev, 8)(root)
-        q = streaming_keyed_last(
+
+    def start(root: str, src: str):
+        # the replay's root is the checkpoint, so the landed states are
+        # the one directory <root>/keyed_last
+        return streaming_keyed_last(
             _replay_stream(replay_session(spark), src, ev.schema),
             ["user_id"],
-            state_table=table,
+            table,
+            root,
             order_by=["ts", "event_id"],
-            checkpoint=os.path.join(root, "ckpt"),
             trigger_available_now=True,
         )
-        q.awaitTermination()
-        # land the final state in its own parquet so the returned frame
-        # is a clean scan (the global-temp lineage chains back through
-        # every micro-batch to the replay source, removed below)
-        spark.table(f"global_temp.{table}").write.mode("overwrite").parquet(
-            state_out
-        )
-        landed = True
-    finally:
-        if q is not None:
-            q.stop()
-        spark.catalog.dropGlobalTempView(table)
-        _drop_replay_dirs(root, landed)
-    return spark.read.parquet(state_out).select(
+
+    # deterministic 8-way split -> 8 source files -> 8 engine cycles
+    _replay("stream_replay", _hash_split(ev, 8), start, "keyed_last")
+    state = spark.table(f"global_temp.{table}")  # the last batch's landed state
+    spark.catalog.dropGlobalTempView(table)
+    return state.select(
         "user_id",
         "event_id",
         "event_type",
@@ -606,7 +605,7 @@ def q_enrich_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     per file); each micro-batch inner-joins the STATIC customer dim
     (broadcast — the stream side never shuffles for the join) and the
     running (segment × event_type) totals re-emit in COMPLETE output
-    mode; the final memory-sink table must hash-equal the batch
+    mode; the table the last batch landed must hash-equal the batch
     join+groupBy oracle."""
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -4996,8 +4995,8 @@ def q_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming windowed aggregation — readStream over a 6-file split
     (maxFilesPerTrigger=1 -> 6 micro-batches), event-time
     `F.window(1 hour)` groupBy with an incremental state store,
-    outputMode(complete) into a memory sink — whose final table must
-    hash-equal the batch tumbling SQL."""
+    outputMode(complete), each batch's table replacing the landing —
+    whose final table must hash-equal the batch tumbling SQL."""
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
 
     def build(stream):
@@ -5033,9 +5032,9 @@ FROM events GROUP BY 1, 2 ORDER BY 1, 2
 def q_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING stateful dedup on the oracle gate: documents replay
     through `dropDuplicates` on (source, md5(text)) — the streaming
-    state-store dedup — with each first-seen row appended to a memory
-    sink; per-source unique counts over the landed table must equal
-    the batch COUNT(DISTINCT) oracle."""
+    state-store dedup — with each batch's first-seen rows landed in
+    the batch's own directory; per-source unique counts over the landed
+    rows must equal the batch COUNT(DISTINCT) oracle."""
     docs = _ts(spark, sf_dir, "documents").select("doc_id", "text", "source")
 
     def build(stream):
@@ -5066,9 +5065,9 @@ def q_session_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming SESSION-window aggregation — readStream over a 6-file
     split (maxFilesPerTrigger=1 -> 6 micro-batches), per-user
     `F.session_window(30 min)` with the state store MERGING sessions
-    as late micro-batches bridge gaps, outputMode(complete) into a
-    memory sink — whose final table must hash-equal the batch
-    gaps-and-islands SQL."""
+    as late micro-batches bridge gaps, outputMode(complete), each
+    batch's table replacing the landing — whose final table must
+    hash-equal the batch gaps-and-islands SQL."""
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
 
     def build(stream):
@@ -9639,8 +9638,8 @@ def q_join_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, `maxFilesPerTrigger=1` → monotone watermark), inner-joined
     on user within [click, click + 1 h] under REAL 2-hour watermarks
     on both sides (bounded join state — the production shape, unlike
-    an unbounded no-watermark join), appended to a memory sink; the
-    landed attribution pairs must hash-equal the batch self-join
+    an unbounded no-watermark join), each batch's pairs landed in the
+    batch's own directory; the landed attribution pairs must hash-equal the batch self-join
     oracle.  Timestamps run at micros (ns div 1000 — mirrored by the
     oracle's `// 1000`)."""
     ev = _click_purchase_events(spark, sf_dir)
@@ -9767,7 +9766,7 @@ def q_join_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sentinel₁ advances the nodes during sentinel₂'s batch, and
     # sentinel₃'s batch finally EXECUTES with watermark ≥ sentinel₁
     # − 2 h > every real window end.  Sentinel self-pairs land in
-    # their own far-future windows and are filtered post-sink.
+    # their own far-future windows and are filtered after landing.
     _DAY_NS = 24 * 3600 * 1_000_000_000
 
     def build(stream):
@@ -9777,7 +9776,7 @@ def q_join_window_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # collector and the windows would never close (measured:
         # watermark frozen at real_max − 2 h with the predicate in
         # place).  Sentinel self-pairs flow through and are dropped
-        # POST-SINK, the outer gate's idiom.
+        # after landing, the outer gate's idiom.
         return (
             _interval_join(stream, "inner")
             .groupBy(
@@ -12153,7 +12152,8 @@ def q_argmax_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIXTH streaming gate shape: windowed ARGMAX — a REAL streaming
     replay (6 micro-batches) maintaining per-(1-hour window,
     event_type) max(value) AND its max_by event id in the state store,
-    complete-mode memory sink; hash-equal to the batch row_number
+    complete mode, each batch's table replacing the landing;
+    hash-equal to the batch row_number
     oracle.  max/max_by are order-independent aggregates, so the
     replay is engine-exact with no decimal detour."""
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")

@@ -45,6 +45,7 @@ holds every sent row on the driver, as Arrow.
 
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import datetime
 import decimal
@@ -115,10 +116,13 @@ class _Snapshot:
 class _SendLog:
     """One channel's sends as stored, in send order: (schema, Arrow
     table) batches, an id → (batch, row) positions index over string
-    ids, and the relations ``get_channel`` serves, until the next send."""
+    ids, the relations ``get_channel`` serves, until the next send, and
+    per streaming source (its checkpoint) the last micro-batch id whose
+    rows were stored."""
 
     batches: List[Tuple[T.StructType, pa.Table]] = dataclasses.field(default_factory=list)
     index: Dict[str, List[Tuple[int, int]]] = dataclasses.field(default_factory=dict)
+    applied: Dict[str, int] = dataclasses.field(default_factory=dict)
     runs: int = 0  # runs of same-schema batches
     frames: Optional[List[DataFrame]] = None
 
@@ -413,6 +417,25 @@ class ChannelCatalog:
         payloads), so enumerating them here is not a scale concern.
         """
         return self._append(name, rows, schema)[0]
+
+    @contextlib.contextmanager
+    def applying(self, name: str, source: Optional[str], batch_id: int):
+        """Apply micro-batch ``batch_id`` of the stream checkpointed at
+        ``source`` to channel ``name`` at most once.  Yields False when
+        the channel already stored that batch or a later one, else True;
+        the batch counts as stored once a send inside the block stored
+        rows, even if the block then raises.  The channel lock is held
+        throughout, so the record and the rows are written together.  A
+        stream with no checkpoint (``source`` None) starts its batch ids
+        again with every query: each of its batches is applied."""
+        with self._lock(name):
+            log = self._logs.setdefault(name, _SendLog())
+            stored = len(log.batches)
+            try:
+                yield source is None or log.applied.get(source, -1) < batch_id
+            finally:
+                if source is not None and len(log.batches) > stored:
+                    log.applied[source] = batch_id
 
     def _append(
         self, name: str, rows: List[dict], schema: Optional[T.StructType]

@@ -871,21 +871,26 @@ def stream_into_gateway(
     Scale note: only the micro-batch's OWN rows are collected (the
     serving edge is row-scale by definition — the same place the
     reference crosses from csp into asyncio); the heavy aggregation
-    stays distributed (`streaming/state_stream.py`)."""
+    stays distributed (`streaming/state_stream.py`).
+
+    With a ``checkpoint``, a micro-batch Spark re-runs after a restart
+    is sent only if its rows were not stored before
+    (``ChannelCatalog.applying``)."""
 
     def on_batch(batch_df, batch_id: int) -> None:
         # PERMISSIVE-mode sources emit all-null rows for corrupt
         # records — drop them before they become ticks
         rows = [r.asDict() for r in batch_df.na.drop("all").collect()]
-        if rows:
-            api.send(channel, rows)
+        with api.catalog.applying(channel, checkpoint, batch_id) as fresh:
+            if fresh and rows:
+                api.send(channel, rows)
 
     writer = (
         stream.writeStream.foreachBatch(on_batch)
         .outputMode("append")
         .trigger(processingTime=f"{trigger_seconds} seconds")
     )
-    if checkpoint:
+    if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
     return writer.start()
 

@@ -3,10 +3,16 @@
 Reference mapping (SURVEY §2.1):
 - S8  PublishSQLA (`modules/sql.py:61-185`): per-tick INSERT with field
   selection/renames/constant augmentation → here a projection +
-  ``foreachBatch`` JDBC write (bulk, not per-row — the reference
-  itself warns row-by-row is slow).
+  bulk JDBC write (not per-row — the reference itself warns row-by-row
+  is slow); a stream calls ``write_jdbc`` from its own foreachBatch.
 - S9  AddChannelsToGraphOutput (`modules/io/graph_output.py:14-27`).
 - S11 monitoring publishers — foreachBatch hooks.
+
+``land_batch`` is the one landing every streaming writer of the
+replay gates and ``streaming_keyed_last`` uses: a micro-batch's output
+lives at a path named by its batch id, so a batch that Spark re-runs
+from the checkpoint after a failure overwrites what it wrote before
+(the idempotent sink of Structured Streaming's exactly-once recipe).
 """
 
 from __future__ import annotations
@@ -49,15 +55,19 @@ def write_jdbc(
     )
 
 
-def jdbc_foreach_batch(url: str, table: str, properties: Optional[Dict[str, str]] = None, **project_kwargs) -> Callable:
-    """foreachBatch hook for writeStream (retry left to Spark's
-    micro-batch replay semantics — at-least-once like the reference's
-    retry loop, `sql.py:165-185`)."""
+def batch_path(path: str, batch_id: int) -> str:
+    """Where ``land_batch`` puts an append-mode micro-batch."""
+    return f"{path}/batch={batch_id}"
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        write_jdbc(batch_df, url, table, properties=properties, **project_kwargs)
 
-    return _write
+def land_batch(df: DataFrame, batch_id: int, path: str, mode: str = "append") -> None:
+    """foreachBatch body: write micro-batch ``batch_id``'s output as
+    parquet, replacing what an earlier run of the same batch wrote.  In
+    ``append`` mode it goes to ``batch_path(path, batch_id)``, so
+    ``path`` reads back as every batch (partition column ``batch``); in
+    ``complete`` mode, where each batch is the whole result, it
+    replaces ``path``."""
+    df.write.mode("overwrite").parquet(path if mode == "complete" else batch_path(path, batch_id))
 
 
 def graph_output(channels: Dict[str, DataFrame], selection: Optional[List[str]] = None) -> Dict[str, list]:

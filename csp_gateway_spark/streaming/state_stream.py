@@ -1,16 +1,18 @@
 """Streaming form of the keyed-last state (reference state tracker,
 `state.py:649-660`, wired per channel at `channels.py:696-739`).
 
-Batch and streaming share semantics: last record per key group.
-Streaming uses ``dropDuplicates`` within watermark + ``foreachBatch``
-upsert into an in-memory "state table" (the queryable sink the REST
-layer reads), or outputMode("update") aggregation when the sink
-supports upserts.
+Batch and streaming share semantics: last record per key group.  Each
+micro-batch (one engine cycle) is reduced to last-per-key together
+with the state the previous batch landed; the merged state lands as
+parquet under the query's checkpoint through ``sinks.land_batch``,
+at a path named by the batch id, and a global temp view is repointed
+at it (the queryable state table).  Spark's state store is not used,
+and a batch re-run after a restart rebuilds the same state from the
+same inputs.
 
-Scale: state lives in the state store (RocksDB provider configured in
-session.py) partitioned by key — the 100 TB design is the same plan
-with more shuffle partitions; watermark bounds state size for
-event-time dedup.
+Scale: the merge is an ordinary distributed ``keyed_last`` over the
+landed state and the batch, partitioned by key; the view is always
+one parquet scan, however many batches ran.
 """
 
 from __future__ import annotations
@@ -20,6 +22,8 @@ from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from csp_gateway_spark import sinks
 
 
 class LastValueCache:
@@ -46,19 +50,23 @@ def streaming_keyed_last(
     stream: DataFrame,
     keys: Sequence[str],
     state_table: str,
+    checkpoint: str,
     order_by: Sequence[str] = ("timestamp",),
     trigger_seconds: float = 1.0,
-    checkpoint: Optional[str] = None,
     cache: Optional[LastValueCache] = None,
     channel: Optional[str] = None,
     trigger_available_now: bool = False,
 ):
-    """Run the keyed-last aggregation as a streaming query writing an
-    in-memory queryable state table.
+    """Run the keyed-last aggregation as a streaming query whose state
+    is the global temp view ``global_temp.<state_table>``.
 
     One micro-batch ≙ one engine cycle (SURVEY §3.3): foreachBatch
-    reduces the batch to last-per-key (map-side combine), then merges
-    into the global state table with last-write-wins.
+    reduces the state batch ``b - 1`` landed ∪ batch ``b``'s rows to
+    last-per-key (last write wins) and lands the result at
+    ``sinks.batch_path(<checkpoint>/keyed_last, b)``; the view is
+    repointed at that scan.  A frame read from the view stays
+    readable until two more batches have landed (older states are
+    deleted).
 
     ``trigger_available_now``: replay everything currently available
     (respecting source rate limits like ``maxFilesPerTrigger``, so a
@@ -67,35 +75,24 @@ def streaming_keyed_last(
     """
     from csp_gateway_spark.operators.state import keyed_last
 
-    spark = stream.sparkSession
     keys = list(keys)
+    states = f"{checkpoint}/keyed_last"
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch executes in a cloned session: use global temp
-        # views (shared across sessions) for the queryable state table.
         session = batch_df.sparkSession
-        if len(batch_df.take(1)) == 0:
-            return
-        batch_last = keyed_last(batch_df, keys, order_by=order_by, sort_output=False)
-        try:
-            current = session.table(f"global_temp.{state_table}")
-            merged = keyed_last(
-                current.unionByName(batch_last, allowMissingColumns=True),
-                keys,
-                order_by=order_by,
-                sort_output=False,
-            )
-        except Exception:  # first batch: table does not exist yet
-            merged = batch_last
-        merged.cache().createOrReplaceGlobalTempView(state_table)
+        rows = batch_df
+        if batch_id > 0:
+            previous = session.read.parquet(sinks.batch_path(states, batch_id - 1))
+            rows = previous.unionByName(batch_df, allowMissingColumns=True)
+        sinks.land_batch(keyed_last(rows, keys, order_by=order_by, sort_output=False), batch_id, states)
+        # foreachBatch executes in a cloned session: global temp views
+        # are shared across sessions
+        session.read.parquet(sinks.batch_path(states, batch_id)).createOrReplaceGlobalTempView(state_table)
+        # a re-run of this batch still reads batch_id - 1
+        stale = session._jvm.org.apache.hadoop.fs.Path(sinks.batch_path(states, batch_id - 2))
+        stale.getFileSystem(session._jsc.hadoopConfiguration()).delete(stale, True)
         if cache is not None and channel is not None:
             cache.update(channel, batch_df.orderBy(*[F.asc(c) for c in order_by]).tail(1))
 
-    writer = stream.writeStream.foreachBatch(upsert).outputMode("append")
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    trigger = {"availableNow": True} if trigger_available_now else {"processingTime": f"{trigger_seconds} seconds"}
+    return stream.writeStream.foreachBatch(upsert).option("checkpointLocation", checkpoint).trigger(**trigger).start()

@@ -510,3 +510,38 @@ def test_replay_gate_matches_oracle(spark, sf_dir, gate):
     want = duck_connect(sf_dir).execute(entry.oracle_sql()[gate]).fetchdf()
     assert len(got) > 0
     assert compare(gate, got, want)
+
+
+@pytest.mark.parametrize("gate", [g for g in entry.GATES if g.endswith("_stream_replay")])
+def test_replay_gate_restarts_from_its_checkpoint(spark, sf_dir, monkeypatch, gate):
+    """Batch 1 lands and then raises, once; the query restarts on the
+    same staged source and checkpoint, re-runs batch 1, and what it
+    lands still equals the DuckDB oracle."""
+    from csp_gateway_spark import sinks
+
+    land, replay, failed = sinks.land_batch, entry._replay, []
+
+    def land_then_fail_once(df, batch_id, path, mode="append"):
+        land(df, batch_id, path, mode)
+        if batch_id == 1 and not failed:
+            failed.append(path)
+            raise RuntimeError("landing failed")
+
+    def replay_with_restart(name, stage, start, landing):
+        def start_twice(root, src):
+            q = start(root, src)
+            try:
+                with pytest.raises(Exception, match="landing failed"):
+                    q.awaitTermination()
+            finally:
+                q.stop()
+            return start(root, src)
+
+        return replay(name, stage, start_twice, landing)
+
+    monkeypatch.setattr(sinks, "land_batch", land_then_fail_once)
+    monkeypatch.setattr(entry, "_replay", replay_with_restart)
+    got = entry.queries()[gate](spark, sf_dir).toPandas()
+    want = duck_connect(sf_dir).execute(entry.oracle_sql()[gate]).fetchdf()
+    assert len(failed) == 1
+    assert compare(gate, got, want)

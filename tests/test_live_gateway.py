@@ -69,3 +69,42 @@ def test_filedrop_tick_reaches_rest_ws_and_next(live):
     q.processAllAvailable()
     assert {r["sym"]: r["px"] for r in cli.state("quotes")} == {"A": 9.0, "B": 2.5}
     ws.close()
+
+
+def test_restart_sends_each_micro_batch_once(spark, tmp_path, monkeypatch):
+    """A micro-batch whose rows were stored before its query failed is
+    not sent again when the query restarts on the same checkpoint."""
+    from pyspark.errors import StreamingQueryException
+
+    src = tmp_path / "drop"
+    src.mkdir()
+    cat = ChannelCatalog(spark)
+    cat.declare("quotes", T.StructType([T.StructField("sym", T.StringType()), T.StructField("px", T.DoubleType())]))
+    api = GatewayApi(cat)
+    send, raised = api.send, []
+
+    def store_then_raise(channel, rows):
+        out = send(channel, rows)
+        if not raised:
+            raised.append(len(rows))
+            raise RuntimeError("failed after the rows were stored")
+        return out
+
+    monkeypatch.setattr(api, "send", store_then_raise)
+    ckpt = str(tmp_path / "ckpt")
+    (src / "t1.json").write_text('{"sym":"A","px":1.0}\n{"sym":"B","px":2.0}\n')
+    q = stream_into_gateway(api, "quotes", spark.readStream.schema(SCHEMA).json(str(src)), 0.1, ckpt)
+    try:
+        with pytest.raises(StreamingQueryException):
+            q.awaitTermination(60)
+    finally:
+        q.stop()
+    q = stream_into_gateway(api, "quotes", spark.readStream.schema(SCHEMA).json(str(src)), 0.1, ckpt)
+    try:
+        q.processAllAvailable()
+        (src / "t2.json").write_text('{"sym":"C","px":3.0}\n')
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert raised == [2]
+    assert sorted(r.sym for r in cat.get_channel("quotes").collect()) == ["A", "B", "C"]

@@ -177,6 +177,32 @@ def test_streaming_keyed_last(spark, tmp_path):
         q.stop()
 
 
+def test_streaming_keyed_last_plan_stays_flat(spark, tmp_path):
+    """40 one-row micro-batches over 3 keys: the state reads after every
+    batch, and its analyzed plan is no longer at batch 40 than at 5."""
+    from csp_gateway_spark.streaming.state_stream import streaming_keyed_last
+
+    src = tmp_path / "stream_src"
+    src.mkdir()
+    stream = spark.readStream.schema("sym string, px double, seq long").json(str(src))
+    q = streaming_keyed_last(
+        stream, ["sym"], "s_long", checkpoint=str(tmp_path / "ckpt"), order_by=["seq"], trigger_seconds=0.05
+    )
+    want, plan_lines = {}, {}
+    try:
+        for seq in range(1, 41):
+            sym = "ABC"[seq % 3]
+            (src / f"b{seq:02d}.json").write_text(f'{{"sym":"{sym}","px":{seq}.0,"seq":{seq}}}\n')
+            q.processAllAvailable()
+            want[sym] = float(seq)
+            state = spark.table("global_temp.s_long")
+            assert {r.sym: r.px for r in state.collect()} == want
+            plan_lines[seq] = len(state._jdf.queryExecution().analyzed().toString().splitlines())
+    finally:
+        q.stop()
+    assert plan_lines[40] == plan_lines[5]
+
+
 # --- stateful nodes (U2/W10) -----------------------------------------------
 
 def test_stateful_counter_and_ewma(spark):
