@@ -28,8 +28,8 @@ from csp_gateway_spark.query import Filter, Query, apply_query
 def _gate_tmpdir(prefix: str) -> str:
     """RAM-backed scratch for the gate/bench harness when available.
     The streaming replays and changelog round-trips are deliberately
-    I/O-real (checkpoints, RocksDB state stores, bucketed source
-    files), but their SCRATCH device should not be the sandbox's
+    I/O-real (checkpoints, state stores, per-batch landings, bucketed
+    source files), but their SCRATCH device should not be the sandbox's
     throttled block store (measured ~5 MB/s sustained writes vs
     740 MB/s on /dev/shm) — a production deployment keeps stream
     state on executor-local SSD/NVMe, which tmpfs models here."""
