@@ -10,8 +10,10 @@ Adding a gate: define ``q_<name>`` and its oracle (``ORACLE_<NAME>`` or
 
 from __future__ import annotations
 
+import atexit
 import datetime as _dt
 import os
+import shutil
 import threading
 
 from collections.abc import Callable
@@ -374,6 +376,16 @@ def _stream_replay(
     return finish(spark.read.parquet(_replay(name, stage, start, "landing")))
 
 
+_KEPT: dict[str, str] = {}  # gate name -> the root its last replay kept
+_KEPT_LOCK = threading.Lock()
+
+
+@atexit.register
+def _drop_kept() -> None:
+    for root in _KEPT.values():
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def _replay(
     name: str,
     stage: Callable[[str], str],
@@ -384,9 +396,12 @@ def _replay(
     writes the source files, ``start(root, src)`` starts the query
     and it runs to its end.  Returns ``<root>/<landing>``, where the
     query's output landed (which the returned frame scans), and removes
-    the rest of ``root``, or all of it when the replay fails."""
-    import shutil
+    the rest of ``root``, or all of it when the replay fails.
 
+    A process keeps one landing per gate ``name``: a replay that
+    succeeds removes the root of the gate's previous one, so a frame
+    from an earlier call of the same gate is then invalid, and the
+    last is removed at interpreter exit."""
     root = _gate_tmpdir(prefix=f"csp_gw_{name}_{os.getpid()}_")
     q, keep = None, None
     try:
@@ -403,6 +418,10 @@ def _replay(
                 path = os.path.join(root, d)
                 if d != keep:
                     shutil.rmtree(path, ignore_errors=True) if os.path.isdir(path) else os.remove(path)
+    with _KEPT_LOCK:
+        previous, _KEPT[name] = _KEPT.get(name), root
+    if previous is not None:
+        shutil.rmtree(previous, ignore_errors=True)
     return os.path.join(root, landing)
 
 

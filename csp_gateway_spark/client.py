@@ -3,16 +3,23 @@ sync+async clients generated from OpenAPI with raw/pandas/polars/struct
 return types, `client.py:397-1150`; async variant `client.py:334-381`;
 WS→graph adapter `client/csp_stream.py:35-100`).
 
-This client is dependency-light (stdlib urllib; httpx used when
-present) and returns raw dicts, pandas, polars, or Spark DataFrames.
+This client is dependency-light (stdlib ``http.client``; httpx used by
+the async client when present) and returns raw dicts, pandas, polars,
+or Spark DataFrames.  Each thread keeps one HTTP/1.1 connection to the
+server across calls.
 """
 
 from __future__ import annotations
 
 import asyncio
+import http.client
+import io
 import json
+import select
+import threading
+import urllib.error
 import urllib.parse
-import urllib.request
+import weakref
 from typing import Any, Dict, List, Optional
 
 from csp_gateway_spark.query import Filter, Query
@@ -38,11 +45,26 @@ def _wrap_rows(rows: List[dict], return_type: str) -> Any:
     return rows
 
 
+def _readable(sock) -> bool:
+    """Whether ``sock`` has data, its end or an error to read now
+    (``poll``: a descriptor above ``select``'s FD_SETSIZE works too)."""
+    poller = select.poll()
+    poller.register(sock, select.POLLIN)
+    return bool(poller.poll(0))
+
+
 class GatewayClient:
     """Sync client: ``last/state/send/lookup/next/heartbeat/stats``.
 
     ``api_key`` is sent as `X-API-Key`; arbitrary extra ``headers``
     (e.g. a Bearer token or session cookie) ride every request.
+
+    Each thread keeps one connection (``http.client``).  A kept
+    connection the server has closed is replaced before a request is
+    sent; a GET that fails on a kept connection is sent once more on a
+    new one, a POST never is, so a send is never applied twice.  A 4xx
+    or 5xx answer raises ``urllib.error.HTTPError`` with its body.
+    ``close()`` closes the kept connections.
     """
 
     def __init__(
@@ -61,25 +83,50 @@ class GatewayClient:
         self.headers = dict(headers or {})
         if api_key:
             self.headers["X-API-Key"] = api_key
+        self._url = urllib.parse.urlsplit(self.base_url)
+        self._local = threading.local()
+        self._conns: weakref.WeakSet = weakref.WeakSet()  # each thread's, for close()
+
+    def close(self) -> None:
+        """Close the connections the client keeps; a later call opens a new one."""
+        for conn in list(self._conns):
+            conn.close()
 
     # --- transport ---------------------------------------------------
-    def _get(self, path: str, params: Optional[Dict[str, str]] = None) -> Any:
-        url = f"{self.base_url}{path}"
-        if params:
-            url += "?" + urllib.parse.urlencode(params)
-        req = urllib.request.Request(url, headers=self.headers)
-        with urllib.request.urlopen(req, timeout=self.timeout) as r:
-            return json.loads(r.read())
+    def _connection(self) -> http.client.HTTPConnection:
+        """This thread's connection.  Its kept socket is closed, so the
+        request opens a new one, when it is readable: between answers
+        that means the server closed it."""
+        conn = getattr(self._local, "conn", None)
+        if conn is not None and conn.sock is not None and _readable(conn.sock):
+            conn.close()
+        if conn is None:
+            kind = http.client.HTTPSConnection if self._url.scheme == "https" else http.client.HTTPConnection
+            conn = self._local.conn = kind(self._url.hostname, self._url.port, timeout=self.timeout)
+            self._conns.add(conn)
+        return conn
 
-    def _post(self, path: str, payload: Any) -> Any:
-        req = urllib.request.Request(
-            f"{self.base_url}{path}",
-            data=json.dumps(payload).encode(),
-            headers={"Content-Type": "application/json", **self.headers},
-            method="POST",
-        )
-        with urllib.request.urlopen(req, timeout=self.timeout) as r:
-            return json.loads(r.read())
+    def _request(self, method: str, path: str, params: Optional[Dict[str, str]] = None, payload: Any = None) -> Any:
+        target = self._url.path + path + ("?" + urllib.parse.urlencode(params) if params else "")
+        headers, body = self.headers, None
+        if method == "POST":
+            headers, body = {"Content-Type": "application/json", **self.headers}, json.dumps(payload).encode()
+        while True:
+            conn = self._connection()
+            kept = conn.sock is not None
+            try:
+                conn.request(method, target, body=body, headers=headers)
+                resp = conn.getresponse()
+                data = resp.read()
+                break
+            except BaseException as e:
+                conn.close()  # in an unknown state: the next request opens a new one
+                if not (kept and method == "GET" and isinstance(e, ConnectionError)):
+                    raise
+        if resp.status >= 400:
+            url = f"{self._url.scheme}://{self._url.netloc}{target}"
+            raise urllib.error.HTTPError(url, resp.status, resp.reason, resp.headers, io.BytesIO(data))
+        return json.loads(data)
 
     def _wrap(self, rows: List[dict]) -> Any:
         return _wrap_rows(rows, self.return_type)
@@ -90,7 +137,7 @@ class GatewayClient:
 
     # --- api ---------------------------------------------------------
     def last(self, channel: str, key: Optional[str] = None) -> Any:
-        return self._wrap(self._get(self._k(f"/api/v1/last/{channel}", key)))
+        return self._wrap(self._request("GET", self._k(f"/api/v1/last/{channel}", key)))
 
     def state(
         self, channel: str, query: Optional[Query] = None, key: Optional[str] = None, **filter_kwargs
@@ -102,26 +149,26 @@ class GatewayClient:
             )
         if query is not None:
             params = {"query": query.model_dump_json(exclude_none=True)}
-        return self._wrap(self._get(self._k(f"/api/v1/state/{channel}", key), params))
+        return self._wrap(self._request("GET", self._k(f"/api/v1/state/{channel}", key), params))
 
     def send(self, channel: str, payload: Any, key: Optional[str] = None) -> Any:
-        return self._wrap(self._post(self._k(f"/api/v1/send/{channel}", key), payload))
+        return self._wrap(self._request("POST", self._k(f"/api/v1/send/{channel}", key), payload=payload))
 
     def lookup(self, channel: str, record_id: str) -> Any:
-        return self._wrap(self._get(f"/api/v1/lookup/{channel}/{record_id}"))
+        return self._wrap(self._request("GET", f"/api/v1/lookup/{channel}/{record_id}"))
 
     def next(self, channel: str, timeout: Optional[float] = None, key: Optional[str] = None) -> Any:
         params = {"timeout": str(timeout)} if timeout is not None else None
-        return self._wrap(self._get(self._k(f"/api/v1/next/{channel}", key), params))
+        return self._wrap(self._request("GET", self._k(f"/api/v1/next/{channel}", key), params))
 
     def heartbeat(self) -> dict:
-        return self._get("/api/v1/controls/heartbeat")
+        return self._request("GET", "/api/v1/controls/heartbeat")
 
     def stats(self) -> dict:
-        return self._get("/api/v1/controls/stats")
+        return self._request("GET", "/api/v1/controls/stats")
 
     def channels(self) -> List[str]:
-        return self._get("/api/v1/channels")
+        return self._request("GET", "/api/v1/channels")
 
     def stream(self, channels: List[str], key: Optional[str] = None):
         """Open `WS /api/v1/stream` subscribed to ``channels``; returns
@@ -220,6 +267,7 @@ class AsyncGatewayClient:
             self._httpx = None
 
     async def aclose(self) -> None:
+        self._sync.close()
         if self._httpx is not None:
             await self._httpx.aclose()
 
@@ -237,7 +285,7 @@ class AsyncGatewayClient:
             )
             r.raise_for_status()
             return r.json()
-        return await asyncio.to_thread(self._sync._get, path, params)
+        return await asyncio.to_thread(self._sync._request, "GET", path, params)
 
     async def _post(self, path: str, payload: Any) -> Any:
         if self._httpx is not None:
@@ -246,7 +294,7 @@ class AsyncGatewayClient:
             )
             r.raise_for_status()
             return r.json()
-        return await asyncio.to_thread(self._sync._post, path, payload)
+        return await asyncio.to_thread(self._sync._request, "POST", path, payload=payload)
 
     def _wrap(self, rows: List[dict]) -> Any:
         return self._sync._wrap(rows)

@@ -5,8 +5,12 @@ The routes (reference `web/routes/*`: `/last`, `/state?query=`,
 Perspective and auth routes) are one table, ``ROUTES``, of (method, path
 template, handler, auth) entries over one handler core, ``GatewayApi``.
 One transport serves it: ``GatewayHttpServer``, a stdlib
-ThreadingHTTPServer (`/api/v1/stream` upgrades to a websocket), and
-``GatewayApi.openapi`` is generated from the same table.
+ThreadingHTTPServer speaking HTTP/1.1, where a client keeps its
+connection across requests (`/api/v1/stream` upgrades to a websocket),
+and ``GatewayApi.openapi`` is generated from the same table.  The
+routes answer rows as JSON through a renderer compiled once per schema
+(``_renderer``); ``_jsonable`` renders nested values and rows without a
+known schema.
 
 Row-level auth filtering (reference `auth_filter.py:533-571`) is a
 serving-layer predicate: pass ``identity_filter={"field": value}`` and
@@ -18,13 +22,17 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import functools
 import json
+import socket
+import sys
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Dict, List, NamedTuple, Optional, Union
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import Row
+from pyspark.sql import types as T
 
 from csp_gateway_spark.catalog import ChannelCatalog
 from csp_gateway_spark.query import CatalystOnly, Filter, Query, as_string
@@ -40,11 +48,43 @@ def _jsonable(value: Any) -> Any:
         return [_jsonable(v) for v in value]
     if isinstance(value, (datetime.datetime, datetime.date)):
         return value.isoformat()
-    if isinstance(value, bytes):
+    if isinstance(value, (bytes, bytearray)):
         return value.hex()
     if isinstance(value, decimal.Decimal):
         return float(value)
     return value
+
+
+_COPIED = (T.IntegralType, T.StringType, T.FloatType, T.DoubleType, T.BooleanType)
+
+
+def _field_render(dtype: T.DataType):
+    """What ``_jsonable`` does to a non-null value of ``dtype``."""
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+        return lambda v: v.isoformat()
+    if isinstance(dtype, T.DecimalType):
+        return float
+    if isinstance(dtype, T.BinaryType):
+        return lambda v: v.hex()
+    return _jsonable  # arrays, maps, nested structs and the rest
+
+
+@functools.lru_cache(maxsize=256)
+def _renderer(schema: T.StructType):
+    """``_jsonable`` for a row (dict or ``Row``) of ``schema``, compiled
+    once per schema: the row is copied and only its fields whose type
+    ``_COPIED`` does not cover are rendered."""
+    fields = tuple((f.name, _field_render(f.dataType)) for f in schema.fields if not isinstance(f.dataType, _COPIED))
+
+    def render(row) -> dict:
+        out = dict(row) if isinstance(row, dict) else row.asDict()
+        for name, conv in fields:
+            value = out.get(name)
+            if value is not None:
+                out[name] = conv(value)
+        return out
+
+    return render
 
 
 def parse_query(query_json: Optional[str]) -> Optional[Query]:
@@ -321,11 +361,11 @@ class GatewayApi:
         Spark cannot evaluate is a 422."""
         schema, rows = self._read_or_404(channel, lambda: self.catalog.held(channel, keyed))
         try:
-            rows = self._filter_rows(channel, schema, rows, query, key, limit)
+            rows = list(map(_renderer(schema), self._filter_rows(channel, schema, rows, query, key, limit)))
         except CatalystOnly:
             try:  # the snapshot is merged and held: what fails here is the query
                 frame = self.catalog.query(channel, query) if keyed else self.catalog.last(channel)
-                rows = self._plan_filters(channel, frame, key=key, limit=limit).collect()
+                rows = [_jsonable(r) for r in self._plan_filters(channel, frame, key=key, limit=limit).collect()]
             except ApiError:
                 raise
             except Exception as e:  # noqa: BLE001
@@ -334,7 +374,7 @@ class GatewayApi:
             raise ApiError(422, f"bad query param: {e}") from e
         if key is not None and not rows:
             raise ApiError(404, f"key {key!r} not found in {channel!r}")
-        return [_jsonable(r) for r in rows]
+        return rows
 
     def _lookup_rows(self, channel: str, record_id: str) -> List[dict]:
         """`/lookup/<ch>/<id>`'s rows.  A channel that is only its send
@@ -347,12 +387,12 @@ class GatewayApi:
             logged = self.catalog.logged(channel, record_id)
             if logged is not None:
                 try:
-                    return self._filter_rows(channel, *logged)
+                    return list(map(_renderer(logged[0]), self._filter_rows(channel, *logged)))
                 except CatalystOnly:
                     pass
-            return self._plan_filters(channel, self.catalog.lookup(channel, record_id)).collect()
+            return [_jsonable(r) for r in self._plan_filters(channel, self.catalog.lookup(channel, record_id)).collect()]
 
-        return [_jsonable(r) for r in self._read_or_404(channel, read)]
+        return self._read_or_404(channel, read)
 
     # --- routes ------------------------------------------------------
     def last(self, channel: str, key: Optional[str] = None) -> List[dict]:
@@ -439,10 +479,10 @@ class GatewayApi:
                 if field in row and row[field] != value:
                     raise ApiError(403, f"identity field {field!r} mismatch")
         try:
-            echoed = self.catalog.send_rows(channel, rows)
+            echoed, schema, _ = self.catalog._append(channel, rows, None)
         except Exception as e:  # noqa: BLE001
             raise ApiError(422, f"send failed: {e}") from e
-        out = [_jsonable(r) for r in echoed]
+        out = list(map(_renderer(schema), echoed))
         self.broker.publish(channel, out)
         self.subs.publish(channel, out, key_field=self.key_field(channel))
         return out
@@ -1124,15 +1164,23 @@ def _match(template: str, parts: List[str]) -> Optional[List[str]]:
 
 
 class _Handler(BaseHTTPRequestHandler):
-    """One request: the first ``ROUTES`` entry that matches answers, an
-    ``ApiError`` its status with ``{"detail": ...}``."""
+    """The requests of one kept HTTP/1.1 connection: for each, the first
+    ``ROUTES`` entry that matches answers, an ``ApiError`` its status
+    with ``{"detail": ...}``.  TCP_NODELAY is set, or each answer's body
+    would wait out the client's delayed ACK of its headers."""
 
     api: GatewayApi
+    protocol_version = "HTTP/1.1"
+    disable_nagle_algorithm = True
 
     def log_message(self, *args):  # quiet
         pass
 
     def _dispatch(self) -> None:
+        if self.server.closed:  # read after stop(): not answered
+            self.close_connection = True
+            return
+        self._raw: Optional[bytes] = None
         parsed = urlparse(self.path)
         parts = [p for p in parsed.path.split("/") if p]
         self.query = {k: v[0] for k, v in parse_qs(parsed.query).items()}
@@ -1160,6 +1208,11 @@ class _Handler(BaseHTTPRequestHandler):
     def _answer(self, status: int, out: Any) -> None:
         if out is _HANDLED:
             return
+        if self._raw is None:  # the next request starts after this one's body
+            try:
+                self._body()
+            except ApiError:  # its length is unknown: the connection closes
+                pass
         out = out if isinstance(out, Reply) else Reply(out)
         body = json.dumps(out.body) if out.content_type == _JSON else out.body
         data = body.encode() if isinstance(body, str) else body
@@ -1168,17 +1221,28 @@ class _Handler(BaseHTTPRequestHandler):
         self.send_header("Content-Length", str(len(data)))
         for k, v in (out.headers or {}).items():
             self.send_header(k, v)
+        if self.close_connection:
+            self.send_header("Connection", "close")
         self.end_headers()
         self.wfile.write(data)
+
+    def _body(self) -> bytes:
+        """The request body, read once.  A malformed Content-Length is a
+        422 and closes the connection: where the next request starts is
+        unknown."""
+        if self._raw is None:
+            length = self.headers.get("Content-Length", "0")
+            if not length.isdecimal():
+                self.close_connection = True
+                raise ApiError(422, f"malformed Content-Length: {length!r}")
+            self._raw = self.rfile.read(int(length))
+        return self._raw
 
     def json_body(self, empty: bytes = b"null") -> Any:
         """The request body as JSON (``empty`` when there is none); a
         malformed Content-Length or body is a 422."""
-        length = self.headers.get("Content-Length", "0")
-        if not length.isdecimal():
-            raise ApiError(422, f"malformed Content-Length: {length!r}")
         try:
-            return json.loads(self.rfile.read(int(length)) or empty)
+            return json.loads(self._body() or empty)
         except ValueError as e:
             raise ApiError(422, f"malformed JSON body: {e}") from e
 
@@ -1194,15 +1258,58 @@ class _Handler(BaseHTTPRequestHandler):
         self.send_header("Sec-WebSocket-Accept", accept_key(self.headers["Sec-WebSocket-Key"]))
         self.end_headers()
         WsSession(self.api, self.rfile, self.wfile).run()
+        self.close_connection = True  # the socket was the session's
         return True
 
 
+class _Server(ThreadingHTTPServer):
+    """``ThreadingHTTPServer`` that keeps its open connections, so that
+    ``server_close`` ends the kept ones, and that does not report a
+    connection its client dropped."""
+
+    def __init__(self, *args):
+        self.closed = False
+        self._conns: set = set()
+        self._conns_lock = threading.Lock()
+        super().__init__(*args)
+
+    def get_request(self):
+        conn, addr = super().get_request()
+        with self._conns_lock:
+            self._conns.add(conn)
+        return conn, addr
+
+    def shutdown_request(self, request) -> None:
+        with self._conns_lock:
+            self._conns.discard(request)
+        super().shutdown_request(request)
+
+    def server_close(self) -> None:
+        """Close the listener and end every connection's reads: a
+        handler waiting for the next request wakes to its end, one
+        answering a request still writes its answer."""
+        self.closed = True
+        super().server_close()
+        with self._conns_lock:
+            for conn in self._conns:
+                try:
+                    conn.shutdown(socket.SHUT_RD)
+                except OSError:
+                    pass
+
+    def handle_error(self, request, client_address) -> None:
+        if not isinstance(sys.exc_info()[1], (ConnectionResetError, BrokenPipeError)):
+            super().handle_error(request, client_address)
+
+
 class GatewayHttpServer:
-    """Threaded stdlib HTTP server answering ``ROUTES`` over a GatewayApi."""
+    """Threaded stdlib HTTP/1.1 server answering ``ROUTES`` over a
+    GatewayApi; a client keeps its connection across requests, and
+    ``stop()`` ends the kept connections."""
 
     def __init__(self, api: GatewayApi, host: str = "127.0.0.1", port: int = 0):
         self.api = api
-        self._server = ThreadingHTTPServer((host, port), type("Handler", (_Handler,), {"api": api}))
+        self._server = _Server((host, port), type("Handler", (_Handler,), {"api": api}))
         self._thread: Optional[threading.Thread] = None
 
     @property

@@ -3,9 +3,13 @@ codec round-trips and hash-family invariants.  The reference has no
 property tests (SURVEY §5); these cover the code the DuckDB oracle
 can't reach."""
 
+import math
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import Row
+from pyspark.sql import types as T
 
 from csp_gateway_spark.operators.dedup import _AFFINE_P, _affine_coeffs
 from csp_gateway_spark.operators.multimodal import (
@@ -253,3 +257,86 @@ def test_fk_audit_null_fk_accounting(spark, case):
     assert (r.n_child, r.n_orphans, r.n_null_fk) == (
         len(child_vals), n_orph, n_null,
     )
+
+
+# ---------------------------------------------------------------------------
+# The serving routes render a row with the renderer compiled for its
+# schema; it must answer what the per-value ``_jsonable`` walk answers,
+# for rows given as dicts and as ``Row``s.
+# ---------------------------------------------------------------------------
+
+_SPECIAL_FLOATS = st.sampled_from([math.nan, math.inf, -math.inf, -0.0])
+_LEAVES = [
+    (T.ByteType(), st.integers(-(2**7), 2**7 - 1)),
+    (T.ShortType(), st.integers(-(2**15), 2**15 - 1)),
+    (T.IntegerType(), st.integers(-(2**31), 2**31 - 1)),
+    (T.LongType(), st.integers(-(2**63), 2**63 - 1)),
+    (T.StringType(), st.text(max_size=6)),
+    (T.FloatType(), st.floats(width=32) | _SPECIAL_FLOATS),
+    (T.DoubleType(), st.floats() | _SPECIAL_FLOATS),
+    (T.BooleanType(), st.booleans()),
+    (T.DecimalType(12, 3), st.decimals(min_value=-(10**8), max_value=10**8, places=3)),
+    (T.DateType(), st.dates()),
+    (T.TimestampType(), st.datetimes()),
+    (T.TimestampNTZType(), st.datetimes()),
+    (T.BinaryType(), st.binary(max_size=6) | st.binary(max_size=6).map(bytearray)),
+]
+
+
+def _nullable(values):
+    return st.none() | values
+
+
+def _struct(fields):
+    names = [f"f{i}" for i in range(len(fields))]
+    dtype = T.StructType([T.StructField(n, t) for n, (t, _) in zip(names, fields)])
+    return dtype, st.tuples(*[_nullable(v) for _, v in fields]).map(lambda vs: Row(*names)(*vs))
+
+
+def _types(depth):
+    """(data type, its values) pairs, nested ``depth`` levels deep."""
+    leaf = st.sampled_from(_LEAVES)
+    if depth == 0:
+        return leaf
+    inner = _types(depth - 1)
+    return (
+        leaf
+        | inner.map(lambda t: (T.ArrayType(t[0]), st.lists(_nullable(t[1]), max_size=3)))
+        | inner.map(lambda t: (T.MapType(T.StringType(), t[0]), st.dictionaries(st.text(max_size=3), _nullable(t[1]), max_size=3)))
+        | st.lists(inner, min_size=1, max_size=3).map(_struct)
+    )
+
+
+@st.composite
+def schema_rows(draw):
+    fields = draw(st.lists(_types(2), min_size=1, max_size=6))
+    schema = _struct(fields)[0]
+    rows = draw(st.lists(st.tuples(*[_nullable(v) for _, v in fields]), min_size=1, max_size=4))
+    return schema, rows
+
+
+def _same(a, b) -> bool:
+    """Equal, of the same types all the way down, NaN equal to NaN."""
+    if type(a) is not type(b):
+        return False
+    if isinstance(a, dict):
+        return list(a) == list(b) and all(_same(a[k], b[k]) for k in a)
+    if isinstance(a, list):
+        return len(a) == len(b) and all(map(_same, a, b))
+    if isinstance(a, float) and math.isnan(a):
+        return math.isnan(b)
+    return a == b
+
+
+@given(schema_rows())
+@settings(max_examples=300, deadline=None)
+def test_schema_renderer_equals_jsonable(case):
+    from csp_gateway_spark.serving.app import _jsonable, _renderer
+
+    schema, rows = case
+    render = _renderer(schema)
+    for values in rows:
+        as_dict = dict(zip(schema.names, values))
+        for row in (as_dict, Row(*schema.names)(*values)):
+            assert _same(render(row), _jsonable(row))
+        assert all(as_dict[n] is v for n, v in zip(schema.names, values))  # the row is not changed

@@ -2,14 +2,19 @@
 clone whose conf is fixed at creation: no replay gate writes conf on
 the caller's (shared) session, not even when the replay fails."""
 
+import glob
 import os
+import subprocess
+import sys
 import time
+import uuid
 
 import pytest
 
 import __spark_entry__ as entry
 from csp_gateway_spark.session import bounded_session, replay_session
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 STREAM_GATES = [g for g in entry.GATES if g.endswith("_stream_replay")]
 REPLAY_CONFS = (
     "spark.sql.shuffle.partitions",
@@ -119,3 +124,57 @@ def test_caller_listeners_see_replay_progress(spark, sf_dir):
         spark.streams.removeListener(listener)
         replay_session(spark).streams.removeListener(listener)
     assert any(name and name.startswith("gate_dstream_") for name in seen)
+
+
+def test_replay_checkpoints_use_the_file_system_manager(spark, tmp_path):
+    """A replay's checkpoint renames and creates files through Hadoop's
+    FileSystem API, which forks no process per file when native IO is
+    missing (the FileContext-based default forks `readlink`/`chmod`)."""
+    jvm = spark._jvm
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+
+    def manager(session):
+        conf = session._jsparkSession.sessionState().newHadoopConf()
+        return managers.create(jvm.org.apache.hadoop.fs.Path(str(tmp_path)), conf).getClass().getSimpleName()
+
+    assert manager(replay_session(spark)) == "FileSystemBasedCheckpointFileManager"
+    assert manager(spark) == "FileContextBasedCheckpointFileManager"
+
+
+class _Done:
+    """A query that has run to its end."""
+
+    def awaitTermination(self):
+        pass
+
+    def stop(self):
+        pass
+
+
+def _landed(root, src):
+    os.makedirs(os.path.join(root, "landing"))
+    return _Done()
+
+
+def test_replay_keeps_one_landing_per_gate():
+    """Three calls of one gate leave one scratch root: the last."""
+    name = f"keep_{uuid.uuid4().hex}"
+    landings = [entry._replay(name, lambda root: root, _landed, "landing") for _ in range(3)]
+    root = os.path.dirname(landings[-1])
+    assert glob.glob(os.path.join(os.path.dirname(root), f"csp_gw_{name}_{os.getpid()}_*")) == [root]
+    assert os.listdir(root) == ["landing"]
+
+
+def test_replay_landings_go_at_exit():
+    """A process that exits leaves no landing behind."""
+    code = (
+        "import sys, __spark_entry__ as e\n"
+        "from tests.test_replay_session import _landed\n"
+        "for name in ('a', 'b'):\n"
+        "    print(e._replay(f'exit_{name}_' + sys.argv[1], lambda root: root, _landed, 'landing'))\n"
+    )
+    tag = uuid.uuid4().hex
+    out = subprocess.run(
+        [sys.executable, "-c", code, tag], capture_output=True, text=True, check=True, cwd=ROOT
+    ).stdout.split()
+    assert len(out) == 2 and not any(os.path.exists(os.path.dirname(p)) for p in out)
