@@ -65,22 +65,11 @@ _CLONE_INHERIT = (
 
 _BOUNDED_OVERLAY = (("spark.sql.adaptive.enabled", "false"),)
 
-# A replay's checkpoint is a fresh local scratch directory with one
-# writer, where a POSIX rename is atomic, so the FileSystem-based
-# manager's plain rename suffices.  The default FileContext-based one
-# checks each renamed file's link status, which Hadoop's local file
-# system does by forking `readlink` when its native IO is not loaded:
-# about 300 processes per dedup_stream_replay call at sf0.01, against
-# 109 with this manager (each create's `chmod` remains under both).
 _REPLAY_OVERLAY = (
     ("spark.sql.shuffle.partitions", "2"),
     (
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    ),
-    (
-        "spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
     ),
 )
 
@@ -114,8 +103,7 @@ def bounded_session(sess: SparkSession) -> SparkSession:
 
 def replay_session(sess: SparkSession) -> SparkSession:
     """The streaming-replay clone for ``sess``'s SparkContext (two
-    shuffle partitions, HDFS-backed state store, FileSystem-based
-    checkpoint manager).  Streaming listeners
+    shuffle partitions, HDFS-backed state store).  Streaming listeners
     are per session, so every listener registered on ``sess`` is also
     added to the clone: queries started there report their progress to
     the listeners of each session that asked for the clone."""

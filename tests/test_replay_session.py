@@ -126,21 +126,6 @@ def test_caller_listeners_see_replay_progress(spark, sf_dir):
     assert any(name and name.startswith("gate_dstream_") for name in seen)
 
 
-def test_replay_checkpoints_use_the_file_system_manager(spark, tmp_path):
-    """A replay's checkpoint renames and creates files through Hadoop's
-    FileSystem API, which forks no process per file when native IO is
-    missing (the FileContext-based default forks `readlink`/`chmod`)."""
-    jvm = spark._jvm
-    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
-
-    def manager(session):
-        conf = session._jsparkSession.sessionState().newHadoopConf()
-        return managers.create(jvm.org.apache.hadoop.fs.Path(str(tmp_path)), conf).getClass().getSimpleName()
-
-    assert manager(replay_session(spark)) == "FileSystemBasedCheckpointFileManager"
-    assert manager(spark) == "FileContextBasedCheckpointFileManager"
-
-
 class _Done:
     """A query that has run to its end."""
 
