@@ -18,18 +18,22 @@ Reference semantics reproduced (file:line cites into /root/reference):
   `channels.py:474-545`); see FeedbackChannel.
 
 Scale: a channel is just a DataFrame; unioning producers is a metadata
-operation (no shuffle).  A ``send`` is checked and stamped in Python and
-appended to the channel's send log: the Arrow table of the rows it
-stored, with an id → log positions index (explicit ids can repeat).
-With a declared schema it makes no JVM call.  ``get_channel`` serves
-the log as one Arrow-built local relation per run of same-schema sends,
-built when first read after the log grew, ∪ the ``set_channel``
-producers, so a later read never starts a Python worker.
+operation (no shuffle).  A ``send`` is stamped, checked by PySpark's
+verifier and converted once in Python, then appended to the channel's
+send log: the Arrow table of the rows it stored, with an id → log
+positions index (explicit ids can repeat).  The stored rows are the
+values the send converted, read from Arrow only for the types Arrow
+changes (timestamps, dates, float, decimals, binary, nested), so they
+equal an Arrow read-back of the table.  With a declared schema it makes
+no JVM call.  ``get_channel`` serves the log as one Arrow-built local
+relation per run of same-schema sends, built when first read after the
+log grew, ∪ the ``set_channel`` producers, so a later read never starts
+a Python worker.
 ``state``/``last`` never re-aggregate the channel: the driver holds one
 keyed-last snapshot per channel and state keys (one row for ``last``),
-key → stored row.  ``send`` merges
-the rows it stored into it, under the channel lock, by ``max_by``'s
-rule over ``FOLD_ORDER``; a snapshot created after sends catches up from
+key → stored row beside its recency, computed once per row.  ``send``
+merges the rows it stored into it, under the channel lock, by
+``max_by``'s rule over ``FOLD_ORDER``; a snapshot created after sends catches up from
 the log in Python; a ``set_channel`` producer is reduced with
 ``keyed_last``/``last_tick`` once, collected at the next read, and
 merged by the same rule.  ``held`` returns the snapshot's rows in key
@@ -49,6 +53,7 @@ import contextlib
 import dataclasses
 import datetime
 import decimal
+import functools
 import itertools
 import threading
 from typing import Callable, Dict, Iterable, List, Optional, Sequence, Tuple
@@ -77,18 +82,22 @@ def _reduce(df: DataFrame, keys: Optional[Tuple[str, ...]]) -> DataFrame:
     return ops.keyed_last(df, keys, order_by=FOLD_ORDER)
 
 
-def _recency(row: dict) -> tuple:
-    return tuple(_rank(row.get(c)) for c in FOLD_ORDER)
+def _ranked(rows: Iterable[dict]) -> List[Tuple[tuple, dict]]:
+    """Each row beside its recency: its FOLD_ORDER values' ranks."""
+    return [(tuple(_rank(row.get(c)) for c in FOLD_ORDER), row) for row in rows]
 
 
-def _merge(held: Dict[tuple, dict], rows: Iterable[dict], keys: Optional[Tuple[str, ...]]) -> None:
+def _merge(
+    held: Dict[tuple, Tuple[tuple, dict]], ranked: Iterable[Tuple[tuple, dict]], keys: Optional[Tuple[str, ...]]
+) -> None:
     """``max_by``'s rule over FOLD_ORDER: a row replaces its key's held
     row only when strictly more recent, so on an exact tie the earlier
-    row stays.  ``held`` maps the key values' ranks to a row."""
-    for row in rows:
+    row stays.  ``held`` maps the key values' ranks to a (recency, row)
+    pair of ``_ranked``."""
+    for recency, row in ranked:
         key = tuple(_rank(row.get(k)) for k in keys or ())
-        if key not in held or _recency(row) > _recency(held[key]):
-            held[key] = row
+        if key not in held or recency > held[key][0]:
+            held[key] = (recency, row)
 
 
 def _reduced_schema(schema: T.StructType, keys: Optional[Tuple[str, ...]]) -> T.StructType:
@@ -105,7 +114,7 @@ class _Snapshot:
 
     keys: Optional[Tuple[str, ...]]
     schema: Optional[T.StructType] = None  # None: no stream yet
-    rows: Dict[tuple, dict] = dataclasses.field(default_factory=dict)
+    rows: Dict[tuple, Tuple[tuple, dict]] = dataclasses.field(default_factory=dict)  # key → (recency, row)
     upto: Tuple[int, int] = (0, 0)  # log batches and producers merged
     # served rows, keys ASC NULLS FIRST (`state.py:193`), and their frame, until the next merge
     ordered: Optional[List[dict]] = None
@@ -320,7 +329,7 @@ class ChannelCatalog:
                 raise NoProviderException(f"channel {name!r} has no provider (finalize() binds null streams)")
             if snap.ordered is None:
                 names = snap.schema.names
-                snap.ordered = [{c: snap.rows[k].get(c) for c in names} for k in sorted(snap.rows)]
+                snap.ordered = [{c: snap.rows[k][1].get(c) for c in names} for k in sorted(snap.rows)]
             return snap
 
     def _served(self, name: str, keys: Optional[Tuple[str, ...]]) -> DataFrame:
@@ -349,10 +358,10 @@ class ChannelCatalog:
         log, producers = self._logs.get(name) or _SendLog(), self._producers.get(name, [])
         logged, merged = snap.upto
         for schema, tables in log.grouped(logged):
-            self._merge_into(snap, schema, _dicts(tables, schema))
+            self._merge_into(snap, schema, _ranked(_dicts(tables, schema)))
         if producers[merged:]:
             reduced = _reduce(self._union(producers[merged:]).coalesce(1), keys)
-            self._merge_into(snap, reduced.schema, [r.asDict() for r in reduced.collect()])
+            self._merge_into(snap, reduced.schema, _ranked(r.asDict() for r in reduced.collect()))
         elif snap.schema is None and name in self._finalized:  # the null-bound empty stream
             snap.schema = _reduced_schema(self._finalized[name].schema, keys)
         snap.upto = (len(log.batches), len(producers))
@@ -366,9 +375,12 @@ class ChannelCatalog:
         self._merge_into(out, snap.schema, snap.rows.values())
         return out
 
-    def _merge_into(self, snap: _Snapshot, schema: Optional[T.StructType], rows: Iterable[dict]) -> None:
-        """Merge ``rows`` of ``schema`` into ``snap``; its schema becomes
-        that of ``unionByName(allowMissingColumns=True)`` of the two."""
+    def _merge_into(
+        self, snap: _Snapshot, schema: Optional[T.StructType], ranked: Iterable[Tuple[tuple, dict]]
+    ) -> None:
+        """Merge the ``_ranked`` rows of ``schema`` into ``snap``; its
+        schema becomes that of ``unionByName(allowMissingColumns=True)``
+        of the two."""
         if schema is None:
             return
         schema = _reduced_schema(schema, snap.keys)
@@ -376,7 +388,7 @@ class ChannelCatalog:
             empty = [self.spark.createDataFrame(_arrow_table([], s), s) for s in (snap.schema, schema)]
             schema = _reduced_schema(self._union(empty).schema, snap.keys)
         snap.schema = schema
-        _merge(snap.rows, rows, snap.keys)
+        _merge(snap.rows, ranked, snap.keys)
         snap.ordered = snap.frame = None
 
     def stats(self) -> Dict[str, dict]:
@@ -416,7 +428,9 @@ class ChannelCatalog:
         (`utils/id_generator.py:8-25`).  Driver-side rows are few (REST
         payloads), so enumerating them here is not a scale concern.
         """
-        return self._append(name, rows, schema)[0]
+        stored, schema, _ = self._append(name, rows, schema)
+        make = Row(*schema.names)
+        return [make(*row.values()) for row in stored]
 
     @contextlib.contextmanager
     def applying(self, name: str, source: Optional[str], batch_id: int):
@@ -439,12 +453,18 @@ class ChannelCatalog:
 
     def _append(
         self, name: str, rows: List[dict], schema: Optional[T.StructType]
-    ) -> Tuple[List[Row], T.StructType, pa.Table]:
-        """``send_rows``; also returns the schema and the Arrow table of
-        the rows ``block_set_channels_until`` admitted."""
-        from pyspark.sql.conversion import ArrowTableToRowsConversion
-        from pyspark.sql.types import _create_converter, _make_type_verifier
+    ) -> Tuple[List[dict], T.StructType, pa.Table]:
+        """``send_rows``, its rows as dicts; also returns the schema and the
+        Arrow table of the rows ``block_set_channels_until`` admitted.
 
+        Each row is verified and converted to a tuple once, by PySpark's
+        verifier and converter for the schema (built once per schema,
+        ``_compiled``), and the table is built from the tuples.  The
+        stored rows take those tuples' values where Arrow hands them back
+        unchanged and read the other columns from the table
+        (``_stored_rows``), so they equal the table's Arrow read-back.  Each
+        stored row's recency is computed once and shared by the channel's
+        snapshots."""
         schema = schema or self._schemas.get(name)
         validator = self._validators.get(name)
         stamped = [dict(row) for row in rows]
@@ -457,45 +477,101 @@ class ChannelCatalog:
                     self._id_counter += 1
                     row["id"] = str(self._id_counter)
                 row.setdefault("timestamp", now)
-        if schema is None:
-            schema = self.spark._inferSchemaFromList(stamped)
-        elif "id" not in schema.fieldNames():
-            schema = T.StructType(
-                list(schema.fields)
-                + [
-                    T.StructField("id", T.StringType(), True),
-                    T.StructField("timestamp", T.TimestampType(), True),
-                ]
-            )
-        verify = _make_type_verifier(schema)
+        schema, verify, to_tuple = _compiled(self.spark._inferSchemaFromList(stamped) if schema is None else schema)
         for row in stamped:
             verify(row)
-        table = _arrow_table(_round_decimals_half_up(list(map(_create_converter(schema), stamped)), schema), schema)
-        stored = ArrowTableToRowsConversion.convert(table, schema)
-        kept = [row.asDict() for row in stored]
+        sent = _round_decimals_half_up(list(map(to_tuple, stamped)), schema)
+        table = _arrow_table(sent, schema)
+        stored = kept = _stored_rows(table, schema, sent)
         when = self._block_until.get(name)
-        if when is not None and TIMESTAMP_FIELD in schema.fieldNames():  # as ``set_channel`` filters
+        if when is not None and TIMESTAMP_FIELD in schema.names:  # as ``set_channel`` filters
             micros = T.TimestampType().toInternal
-            admit = [row[TIMESTAMP_FIELD] is not None and micros(row[TIMESTAMP_FIELD]) >= micros(when) for row in kept]
+            cutoff = micros(when)
+            admit = [row[TIMESTAMP_FIELD] is not None and micros(row[TIMESTAMP_FIELD]) >= cutoff for row in kept]
             table = table.filter(pa.array(admit, pa.bool_()))
             kept = [row for row, ok in zip(kept, admit) if ok]
+        ranked = _ranked(kept)
         self.declare(name)
         with self._lock(name):
             log = self._logs[name]
             current = [s for s in self._snapshots[name].values() if s.upto[0] == len(log.batches)]
             log.append(schema, table, kept)
             for snap in current:  # a lagging snapshot merges the batch when it catches up
-                self._merge_into(snap, schema, kept)
+                self._merge_into(snap, schema, ranked)
                 snap.upto = (len(log.batches), snap.upto[1])
         return stored, schema, table
 
 
-def _dicts(tables: List[pa.Table], schema: T.StructType) -> List[dict]:
-    """The rows of Arrow ``tables`` of ``schema`` as ``send_rows`` stores
-    them, as dicts."""
+@functools.lru_cache(maxsize=256)
+def _compiled(schema: T.StructType) -> Tuple[T.StructType, Callable, Callable]:
+    """What every send of ``schema`` needs, built once: the stamped
+    schema (``schema`` with ``id`` and ``timestamp`` appended when it has
+    no ``id``), PySpark's verifier of a row and its converter of a row to
+    a tuple of the stamped schema's fields."""
+    from pyspark.sql.types import _create_converter, _make_type_verifier
+
+    if "id" not in schema.names:
+        schema = T.StructType(
+            list(schema.fields)
+            + [
+                T.StructField("id", T.StringType(), True),
+                T.StructField("timestamp", T.TimestampType(), True),
+            ]
+        )
+    return schema, _make_type_verifier(schema), _create_converter(schema)
+
+
+# Types whose verified, converted Python value Arrow hands back unchanged.
+_AS_SENT = (T.NullType, T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DoubleType, T.StringType)
+
+
+@functools.lru_cache(maxsize=256)
+def _converters(schema: T.StructType) -> Tuple[Tuple[bool, Optional[Callable]], ...]:
+    """Per field of ``schema``: whether Arrow hands its values back as
+    they were sent (``_AS_SENT``), and PySpark's Arrow → Python converter
+    of its type (None where that is the identity)."""
     from pyspark.sql.conversion import ArrowTableToRowsConversion
 
-    return [r.asDict() for r in ArrowTableToRowsConversion.convert(pa.concat_tables(tables), schema)] if tables else []
+    return tuple(
+        (True, None)
+        if isinstance(f.dataType, _AS_SENT)
+        else (False, ArrowTableToRowsConversion._create_converter(f.dataType, none_on_identity=True))
+        for f in schema.fields
+    )
+
+
+def _stored_rows(table: pa.Table, schema: T.StructType, sent: Optional[List[tuple]] = None) -> List[dict]:
+    """The rows of Arrow ``table`` of ``schema`` as dicts of the values
+    PySpark's Arrow read-back (``ArrowTableToRowsConversion``) gives,
+    read column by column with no ``Row`` built.  ``sent``: the tuples
+    the table was built from, whose values an ``_AS_SENT`` column takes
+    as they are.  A column whose type has a converter is converted once
+    per distinct value (``dictionary_encode``), or per value where Arrow
+    cannot encode the type (nested types)."""
+    by_column = list(zip(*sent)) if sent else None
+    columns: List[Sequence] = []
+    for i, ((as_sent, conv), column) in enumerate(zip(_converters(schema), table.columns)):
+        if as_sent and by_column is not None:
+            columns.append(by_column[i])
+        elif conv is None:
+            columns.append(column.to_pylist())
+        elif pa.types.is_nested(column.type):
+            columns.append([conv(v) for v in column.to_pylist()])
+        else:
+            values: list = []
+            for chunk in column.chunks:
+                codes = chunk.dictionary_encode()
+                distinct = [conv(v) for v in codes.dictionary.to_pylist()]
+                values += [None if c is None else distinct[c] for c in codes.indices.to_pylist()]
+            columns.append(values)
+    names = schema.names
+    return [dict(zip(names, values)) for values in zip(*columns)]
+
+
+def _dicts(tables: List[pa.Table], schema: T.StructType) -> List[dict]:
+    """The rows of Arrow ``tables`` of ``schema`` as ``send_rows`` stores
+    them, as dicts (``_stored_rows``)."""
+    return _stored_rows(pa.concat_tables(tables), schema) if tables else []
 
 
 def _arrow_table(rows: list, schema: T.StructType):

@@ -28,7 +28,7 @@ import socket
 import sys
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Any, Dict, List, NamedTuple, Optional, Union
+from typing import Any, Dict, List, NamedTuple, Optional, Tuple, Union
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import Row
@@ -1146,12 +1146,21 @@ ROUTES = (
 )
 
 
-def _match(template: str, parts: List[str]) -> Optional[List[str]]:
-    """The path segments the template's parameters take, or None when
-    ``parts`` does not match it."""
+def _pattern(template: str) -> Tuple[List[str], bool]:
+    """A template's segments before any ``<name*>``, and whether it ends
+    with one."""
     want = [w for w in template.split("/") if w]
     rest = bool(want) and want[-1].endswith("*>")
-    head = want[:-1] if rest else want
+    return (want[:-1] if rest else want), rest
+
+
+# ``ROUTES`` with each template split once: (method, head, rest, handler, auth)
+_PATTERNS = tuple((method, *_pattern(template), handler, auth) for method, template, handler, auth in ROUTES)
+
+
+def _match(head: List[str], rest: bool, parts: List[str]) -> Optional[List[str]]:
+    """The path segments a ``_pattern``'s parameters take, or None when
+    ``parts`` does not match it."""
     if len(parts) < len(head) or (len(parts) > len(head) and not rest):
         return None
     params = []
@@ -1187,8 +1196,8 @@ class _Handler(BaseHTTPRequestHandler):
         self.cookies = _cookie_dict(self.headers.get("Cookie", ""))
         self.host = self.headers.get("Host", "localhost")
         try:
-            for method, template, handler, auth in ROUTES:
-                params = _match(template, parts) if method == self.command else None
+            for method, head, rest, handler, auth in _PATTERNS:
+                params = _match(head, rest, parts) if method == self.command else None
                 if params is not None:
                     self.identity = self._check() if auth else None
                     return self._answer(200, handler(self.api, self, *params))

@@ -3,7 +3,10 @@ codec round-trips and hash-family invariants.  The reference has no
 property tests (SURVEY §5); these cover the code the DuckDB oracle
 can't reach."""
 
+import datetime
 import math
+import os
+import time
 
 import numpy as np
 from hypothesis import given, settings
@@ -321,7 +324,9 @@ def _same(a, b) -> bool:
         return False
     if isinstance(a, dict):
         return list(a) == list(b) and all(_same(a[k], b[k]) for k in a)
-    if isinstance(a, list):
+    if isinstance(a, Row):
+        return list(a.__fields__) == list(b.__fields__) and len(a) == len(b) and all(map(_same, a, b))
+    if isinstance(a, (list, tuple)):
         return len(a) == len(b) and all(map(_same, a, b))
     if isinstance(a, float) and math.isnan(a):
         return math.isnan(b)
@@ -340,3 +345,115 @@ def test_schema_renderer_equals_jsonable(case):
         for row in (as_dict, Row(*schema.names)(*values)):
             assert _same(render(row), _jsonable(row))
         assert all(as_dict[n] is v for n, v in zip(schema.names, values))  # the row is not changed
+
+
+# ---------------------------------------------------------------------------
+# A send stores the values it converted and reads from its Arrow table
+# only the columns Arrow changes; what it stores, logs and returns must
+# be PySpark's Arrow read-back of that table, and a payload it refuses
+# must fail as the read-back path fails.
+# ---------------------------------------------------------------------------
+
+
+def _stamped(schema):
+    return T.StructType(
+        list(schema.fields) + [T.StructField("id", T.StringType()), T.StructField("timestamp", T.TimestampType())]
+    )
+
+
+def _read_back(payload, schema):
+    """Verify, convert, build the Arrow table, read it back as ``Row``s."""
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+    from pyspark.sql.types import _create_converter, _make_type_verifier
+
+    from csp_gateway_spark.catalog import _arrow_table, _round_decimals_half_up
+
+    verify = _make_type_verifier(schema)
+    for row in payload:
+        verify(row)
+    table = _arrow_table(_round_decimals_half_up(list(map(_create_converter(schema), payload)), schema), schema)
+    return ArrowTableToRowsConversion.convert(table, schema)
+
+
+def _outcome(fn):
+    try:
+        return fn(), None
+    except Exception as e:  # noqa: BLE001
+        return None, (type(e), str(e))
+
+
+def _check_send(spark, schema, payload, when=None):
+    """Send ``payload`` to a fresh channel of ``schema`` (cut over at
+    ``when``) and compare every form of what it stored with the read-back."""
+    from csp_gateway_spark.catalog import ChannelCatalog
+
+    stamped = _stamped(schema)
+    want, error = _outcome(lambda: _read_back(payload, stamped))
+    catalogs = []
+    for _ in range(2):
+        catalogs.append(ChannelCatalog(spark))
+        catalogs[-1].declare("ch", schema)
+        if when is not None:
+            catalogs[-1].block_set_channels_until("ch", when)
+    stored, got_error = _outcome(lambda: catalogs[0]._append("ch", payload, None)[0])
+    assert got_error == error
+    if error is not None:
+        return
+    assert _same(stored, [r.asDict() for r in want])
+    rows, _ = _outcome(lambda: catalogs[1].send_rows("ch", payload))
+    assert _same(rows, want)
+    admitted = [
+        r.asDict() for r in want if when is None or (r["timestamp"] is not None and r["timestamp"] >= when)
+    ]
+    from csp_gateway_spark.query import _rank
+
+    latest = [max(admitted, key=lambda r: (_rank(r["timestamp"]), _rank(r["id"])))] if admitted else []
+    for catalog in catalogs:
+        assert _same(catalog.held("ch", keyed=False)[1], latest)
+        for row in admitted:  # the log's read-back, from the id index
+            assert _same(catalog.logged("ch", row["id"])[1], [row])
+    return admitted
+
+
+@given(schema_rows(), st.lists(_nullable(st.datetimes()), min_size=1, max_size=2))
+@settings(max_examples=200, deadline=None)
+def test_stored_rows_equal_the_arrow_read_back(spark, case, stamps):
+    schema, rows = case
+    payload = [
+        {"id": str(i), "timestamp": stamps[i % len(stamps)], **dict(zip(schema.names, values))}
+        for i, values in enumerate(rows)
+    ]
+    _check_send(spark, schema, payload)
+
+
+def test_stored_rows_equal_the_arrow_read_back_across_dst(spark):
+    """New York wall times in the spring gap and the autumn fold, a
+    float32 column and a ``block_set_channels_until`` cutover."""
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("f", T.FloatType()),
+            T.StructField("at", T.TimestampType()),
+            T.StructField("ntz", T.TimestampNTZType()),
+            T.StructField("tags", T.ArrayType(T.TimestampType())),
+        ]
+    )
+    gap = datetime.datetime(2021, 3, 14, 2, 30)
+    fold = datetime.datetime(2021, 11, 7, 1, 30)
+    stamps = [gap, fold, fold.replace(fold=1), gap, datetime.datetime(2021, 11, 7, 6, 30)]
+    payload = [
+        {"k": i, "f": 0.1 * i, "at": t, "ntz": t, "tags": [t, None, fold.replace(fold=1)], "id": str(i), "timestamp": t}
+        for i, t in enumerate(stamps)
+    ]
+    before = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        admitted = _check_send(spark, schema, payload, when=datetime.datetime(2021, 11, 7, 0, 30))
+        assert [r["k"] for r in admitted] == [1, 2, 4]  # both readings of the fold, not the spring gap
+    finally:
+        if before is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = before
+        time.tzset()
